@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-round benchmark main: runs every catalog query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries are fully
@@ -115,16 +117,26 @@ object Bench {
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val timesByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    // per-repeat codegen cost (side file only): classes Janino compiled
+    // and its compile seconds, read outside the timed region
+    val compilesByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val compileSByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     (0 until repeat).foreach { r =>
       val order = new scala.util.Random(orderSeed.toLong * 1000 + r)
         .shuffle(catalog)
       order.foreach { case (name, fn) =>
+        val (compiles0, compileNs0) = (compiles, CodeGenerator.compileTime)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        compilesByName(name) = compilesByName.getOrElse(name, Vector.empty) :+
+          (compiles - compiles0).toDouble
+        compileSByName(name) = compileSByName.getOrElse(name, Vector.empty) :+
+          (CodeGenerator.compileTime - compileNs0) / 1e9
         resetStorage() // outside the timed region: next run starts clean
         timesByName(name) = timesByName.getOrElse(name, Vector.empty) :+ elapsed
       }
@@ -255,12 +267,17 @@ object Bench {
       noisyJson + slowRepJson + isolatedJson))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // Side file carries the full per-repeat series alongside the
-    // medians ("repeats": {"q": [t1, t2, ...], ...}) — see allTimes.
-    val repeatsJson = allTimes.map { case (k, ts) =>
-      "\"" + k + "\":[" + ts.map(j(_, 9)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
+    // medians ("repeats": {"q": [t1, t2, ...], ...}) — see allTimes —
+    // and each repeat's codegen cost in the same shape.
+    def seriesJson(byName: collection.Map[String, Vector[Double]], prec: Int): String =
+      catalog.map { case (k, _) =>
+        "\"" + k + "\":[" + byName.getOrElse(k, Vector.empty).map(j(_, prec))
+          .mkString(",") + "]"
+      }.mkString("{", ",", "}")
     val sideLine = jsonLine(results, 0, 9, sfDir).dropRight(1) +
-      isolatedJson + s""","repeats":$repeatsJson}"""
+      isolatedJson + s""","repeats":${seriesJson(timesByName, 9)}""" +
+      s""","codegen_compiles":${seriesJson(compilesByName, 0)}""" +
+      s""","codegen_compile_s":${seriesJson(compileSByName, 9)}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       sideLine + "\n")
     catch { case _: Throwable => () }

@@ -85,13 +85,20 @@ object Cleaner {
     * intermediate global sort is a pure throwaway exchange. Every
     * report field is order-insensitive, so the result differs only in
     * row order.
+    *
+    * `now` is the one instant `no_future_dates` compares against (the
+    * reference evaluates `now()` once per validation). A literal, not
+    * `current_timestamp()`: that is re-folded per action, so the stats
+    * probe, the final count and the caller's write could disagree
+    * about a row stamped between two of them.
     */
   def clean(
       df: DataFrame,
       config: CleaningConfig = CleaningConfig.reference,
       thresholdOverride: Option[Double] = None,
       seed: Long = 42L,
-      sort: Boolean = true): CleanResult = {
+      sort: Boolean = true,
+      now: java.time.Instant = java.time.Instant.now()): CleanResult = {
     val cfg = config.withThreshold(thresholdOverride)
     val rules = df.columns.map(c => c -> cfg.matchRule(c)).toMap
 
@@ -197,7 +204,7 @@ object Cleaner {
         val masked = staticFill(boundary)
           .map(f => coalesce(col(boundary), f)).getOrElse(col(boundary))
         val mask = if (rules(boundary).validations.nonEmpty)
-          validationMask(d, boundary, rules(boundary).validations,
+          validationMask(d, boundary, rules(boundary).validations, now,
             valueExpr = Some(masked))
         else None
         (cols.slice(start, j + 1), boundary, mask)
@@ -376,7 +383,7 @@ object Cleaner {
       // columns, data_cleaning.py:406-411).
       val boundary = cols(j)
       if (rules(boundary).validations.nonEmpty && colExists(d, boundary)) {
-        val keep = validationMask(d, boundary, rules(boundary).validations)
+        val keep = validationMask(d, boundary, rules(boundary).validations, now)
         keep.foreach { mask =>
           d = d.filter(mask)
           pendingDrop = Some((boundary, rules(boundary).validations, totalRows))
@@ -519,13 +526,14 @@ object Cleaner {
     * which `filter` drops — matching pandas NaN -> False masks.
     */
   private def validationMask(d: DataFrame, c: String, validations: Seq[String],
+                             now: java.time.Instant,
                              valueExpr: Option[Column] = None): Option[Column] = {
     val v = valueExpr.getOrElse(col(c))
     val masks = validations.flatMap {
       case "positive" => Some(v > 0)
       case "non_negative" => Some(v >= 0)
       case "no_future_dates" => d.schema(c).dataType match {
-        case _: TimestampType | _: DateType => Some(v <= current_timestamp())
+        case _: TimestampType | _: DateType => Some(v <= lit(now))
         case _ => None
       }
       case _ => None // unknown validation: warn-and-skip in reference

@@ -44,6 +44,11 @@ class Pipeline(
     * progress contract (pipeline_service.py:110-259: 10/30 ingest,
     * 40/60 validation, 70/90 transform; the caller owns 100/complete).
     * A run that fails mid-stage never reports later stages as done.
+    *
+    * Every stage runs in a [[RunSession.interpreted]] clone of `spark`:
+    * the run's frames, reports and returned outputs all derive from it,
+    * so they execute without code generation, and so does a caller's
+    * later write of the outputs. `spark` itself is left untouched.
     */
   def run(spark: SparkSession,
           plan: ExecutionPlan,
@@ -56,8 +61,9 @@ class Pipeline(
     // Stage 1: ingest (ingestor.py:45-172) — includes the semantic
     // endpoint check (step 3) fed by the intent keywords the plan
     // artifact itself carries (contracts.py:21-26)
+    val session = RunSession.interpreted(spark)
     onStage(10, "ingestion", "Ingesting data")
-    val ingested = ingestor.process(spark, plan, fetch,
+    val ingested = ingestor.process(session, plan, fetch,
       enrichmentFeatures = dslRecipe.toSeq, keyFeatures = keyFeatures)
     onStage(30, "ingestion", "Ingestion complete")
 
@@ -73,7 +79,7 @@ class Pipeline(
     onStage(90, "transformation", "Transformation complete")
 
     // Stage 4: load (transform/load.py:24-218) — optional like the CLI
-    val loadReport = loader.map(_.loadJdbc(spark, transformed))
+    val loadReport = loader.map(_.loadJdbc(session, transformed))
 
     // K3: report artifacts per run
     reportDir.foreach { dir =>

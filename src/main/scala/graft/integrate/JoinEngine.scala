@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DoubleType, LongType, NumericType}
 
+import graft.core.RunSession
+
 /** One match from the pair-scoring stage. */
 case class PairMatch(rid1: Long, rid2: Long, prob: Double)
 
@@ -166,9 +168,13 @@ class JoinEngine(
       // NaN-pair skipping (join.py:405-409) then threshold pushdown
       .filter(!featureCols.map(c => isnan(col(c))).reduce(_ || _))
       .filter(col("prob") >= config.joinRowThreshold)
-    if (keepFeatures)
-      scored.select((Seq("rid1", "rid2") ++ featureCols :+ "prob").map(col): _*)
-    else scored.select("rid1", "rid2", "prob")
+    val out =
+      if (keepFeatures)
+        scored.select((Seq("rid1", "rid2") ++ featureCols :+ "prob").map(col): _*)
+      else scored.select("rid1", "rid2", "prob")
+    // the one operator of a pipeline run whose work grows with n1·n2:
+    // it runs with code generation even inside an interpreted run
+    RunSession.compiled(out)
   }
 
   /** Public J2-J4 entry: stamps row ids once (cached), then scores.

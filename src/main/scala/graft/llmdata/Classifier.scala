@@ -200,8 +200,9 @@ object Classifier {
     // multiple-of-corpus PersistPolicy class (narrowest possible
     // frame — ~16 B/doc cached). The n divisor rides the plan as a
     // broadcast scalar off the SAME cached frame (no count job, no
-    // corpus rescan — r20: the fit is one lazy plan, so this call
-    // submits NO actions; both caches follow the [[trainScores]]
+    // corpus rescan — the fit is one plan, so this call submits
+    // exactly ONE action, the weight collect at the end of
+    // fitWeightFrame; both caches follow the [[trainScores]]
     // caller-release contract, cleared by the harness between
     // queries).
     val labels = docs.select(col(idCol),
@@ -379,11 +380,12 @@ object Classifier {
                          textCol: String = "text"): DataFrame = {
     val feats = PersistPolicy.persistGated(
       features(docs, idCol, textCol), docs)
-    // r20: the fit is one lazy plan — this call submits NO actions
-    // (the eager spelling ran 1 + epochs sequential driver jobs
-    // here, serializing the enclosing capstone's independent gate
-    // chains behind the fit; now everything runs under the caller's
-    // single action and the scheduler overlaps them — guide §2.6)
+    // The fit is one plan — this call submits exactly ONE action, the
+    // construct-time weight collect in fitWeightFrame (the eager
+    // spelling ran 1 + epochs sequential collects here, serializing
+    // the enclosing capstone's independent gate chains behind the fit;
+    // now the epoch chain runs under that one collect and the scoring
+    // runs under the caller's action)
     val weights = fitWeightFrame(feats, labels, epochs, idCol)
     val margins = feats
       .join(broadcast(weights), Seq("bucket"), "left")

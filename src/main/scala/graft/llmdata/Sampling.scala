@@ -271,7 +271,7 @@ object Sampling {
     // prefix-disambiguated key: a NULL group and the literal string
     // "null" must not collapse into one running total (ADVICE r18 #3)
     def group(r: Row): String =
-      if (r.isNullAt(gIdx)) " " else "v:" + String.valueOf(r.get(gIdx))
+      if (r.isNullAt(gIdx)) "\u0000" else "v:" + String.valueOf(r.get(gIdx))
     val rdd = sorted.rdd
     // pass 1: per-(partition, group) sums, group order preserved
     val partGroupSums: Array[(Int, Seq[(String, Long)])] = rdd

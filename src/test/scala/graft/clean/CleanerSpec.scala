@@ -109,6 +109,21 @@ class CleanerSpec extends SparkSpec {
     assert(res.report.validationRowsDropped("ts").rowsDropped == 1)
   }
 
+  test("no_future_dates compares against one fixed instant") {
+    import spark.implicits._
+    val now = java.time.Instant.parse("2026-08-12T09:30:00Z")
+    val df = Seq(
+      ("A", Timestamp.from(now), 10.0),
+      ("A", Timestamp.from(now.plusSeconds(1)), 11.0))
+      .toDF("ticker", "ts", "close")
+    val res = Cleaner.clean(df, now = now)
+    assert(res.report.finalRows == 1)
+    assert(res.report.validationRowsDropped("ts").rowsDropped == 1)
+    // a later action re-evaluates the plan against the same instant
+    assert(res.df.count() == res.report.finalRows)
+    assert(res.df.collect().map(_.getAs[Double]("close")).toSeq == Seq(10.0))
+  }
+
   test("column deletion above null threshold; protected columns survive") {
     import spark.implicits._
     val df = Seq(

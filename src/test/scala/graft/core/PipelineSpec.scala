@@ -4,8 +4,15 @@ import java.nio.file.Files
 import java.time.LocalDate
 import java.util.Locale
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.internal.SQLConf
+
 import graft.SparkSpec
 import graft.ingest.{ApiRequest, ExecutionPlan}
+import graft.integrate.{JoinEngine, ValidatorConfig}
 import graft.load.Loader
 
 /** End-to-end: two recorded AV payloads -> ingest -> union-collapse ->
@@ -79,5 +86,117 @@ class PipelineSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/reports/validation_report.json")))
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/reports/transformation_report.json")))
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/reports/load_report.json")))
+  }
+
+  // ---- the run session ----
+
+  private val today = LocalDate.of(2026, 8, 12)
+  private val recipe =
+    """{"features": [{"name": "sma", "params": {"on": "close", "window": 5}}]}"""
+  private val keyFeatures = Seq("open", "close", "volume")
+
+  private def econPayload(name: String, n: Int): String = {
+    val data = (0 until n).map { i =>
+      val d = LocalDate.of(2026, 1, 1).plusDays(i.toLong)
+      s"""{"date": "$d", "value": "${f2(2.0 + ((i * 7) % 11) * 0.05)}"}"""
+    }.mkString(", ")
+    s"""{"name": "$name", "interval": "daily", "unit": "percent", "data": [$data]}"""
+  }
+
+  private def daily(sym: String, limit: Int) =
+    ApiRequest("alpha_vantage", "TIME_SERIES_DAILY", Map("ticker" -> sym, "limit" -> limit))
+
+  /** Union-collapsing run: two daily series of one schema. */
+  private val small = ExecutionPlan(Seq(daily("AAPL", 30), daily("MSFT", 30)))
+  /** Join-stage run: two daily series plus an economic indicator. */
+  private val wide = ExecutionPlan(Seq(daily("AAPL", 40), daily("MSFT", 40),
+    ApiRequest("alpha_vantage", "TREASURY_YIELD", Map("interval" -> "daily"))))
+  private val payloads = Map(
+    "TIME_SERIES_DAILY:AAPL" -> tsPayload("AAPL", 0),
+    "TIME_SERIES_DAILY:MSFT" -> tsPayload("MSFT", 5),
+    "TREASURY_YIELD:" -> econPayload("TREASURY_YIELD", 40))
+  private def fetch(req: ApiRequest): Option[String] = payloads.get(
+    s"${req.endpointName}:${req.parameters.get("symbol").map(_.toString).getOrElse("")}")
+
+  private def sortedRows(dfs: Seq[DataFrame]): Seq[Seq[String]] =
+    dfs.map(_.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+
+  private def runOf(plan: ExecutionPlan): PipelineRun =
+    new Pipeline(today = today).run(spark, plan, fetch, Some(recipe), keyFeatures)
+
+  Seq("small" -> small, "wide" -> wide).foreach { case (kind, plan) =>
+    test(s"run session: a $kind run matches its stages called on the caller's session") {
+      val run = runOf(plan)
+      assert(run.outputs.forall(_.sparkSession ne spark))
+
+      val p = new Pipeline(today = today)
+      val ingested = p.ingestor.process(spark, plan, fetch,
+        enrichmentFeatures = Seq(recipe), keyFeatures = keyFeatures)
+      val (validated, valReport) = p.validator.process(ingested.dataframes)
+      val (outputs, transformReport) = p.transformPipeline.run(validated, Some(recipe),
+        Some(ValidatorConfig.balanced.columnDeleteThreshold))
+      assert(outputs.forall(_.sparkSession eq spark))
+
+      if (kind == "wide") assert(valReport.stage1Operations.nonEmpty)
+      else assert(valReport.earlyTermination)
+      // reports agree up to what an enrichment error quotes of its
+      // plan: expression ids and the cleaner's `now` literal
+      def quoted(x: Any): String = x.toString.replaceAll("#\\d+", "#")
+        .replaceAll("<= \\d{4}-\\d\\d-\\d\\d \\d\\d:\\d\\d:[\\d.]+", "<= now")
+      def same(a: Any, b: Any): Unit = assert(quoted(a) == quoted(b))
+      same(run.ingest.copy(dataframes = Nil), ingested.copy(dataframes = Nil))
+      same(run.validation, valReport)
+      same(run.transform, transformReport)
+      assert(run.outputs.map(_.columns.toSeq) == outputs.map(_.columns.toSeq))
+      assert(sortedRows(run.outputs) == sortedRows(outputs))
+    }
+  }
+
+  test("run session: caller confs reach the run, codegen confs stay in it") {
+    val marker = "spark.graft.test.callerMarker"
+    spark.conf.set(marker, "set-by-caller")
+    val wholeStage = spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key)
+    try {
+      val inside = runOf(small).outputs.head.sparkSession
+      assert(inside.conf.get(marker) == "set-by-caller")
+      assert(inside.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == "false")
+      assert(inside.conf.get(SQLConf.CODEGEN_FACTORY_MODE.key) == "NO_CODEGEN")
+      assert(spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key) == wholeStage)
+      assert(spark.conf.get(SQLConf.CODEGEN_FACTORY_MODE.key) != "NO_CODEGEN")
+    } finally spark.conf.unset(marker)
+  }
+
+  test("run session: a repeated run compiles no generated classes") {
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def materialized(run: PipelineRun): Unit = run.outputs.foreach(_.collect())
+    materialized(runOf(small))
+    val before = compiles
+    materialized(runOf(small))
+    assert(compiles - before == 0L)
+  }
+
+  test("run session: pair scoring plans with code generation") {
+    object Plans extends AdaptiveSparkPlanHelper {
+      def codegen(df: DataFrame): Boolean = {
+        df.collect()
+        find(df.queryExecution.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).isDefined
+      }
+    }
+    def frames(s: SparkSession): (DataFrame, DataFrame) = {
+      val rows = (1 to 20).map(i => (i.toDouble, i * 2.0, (i % 3).toDouble))
+      (s.createDataFrame(rows).toDF("x", "y", "z"), s.createDataFrame(rows).toDF("x", "y", "w"))
+    }
+    val engine = new JoinEngine(ValidatorConfig.balanced)
+    val (a, b) = frames(RunSession.interpreted(spark))
+    assert(!Plans.codegen(a.crossJoin(b)))
+    val inRun = engine.scoredPairs(a, b)
+    assert(inRun.sparkSession eq spark)
+    assert(Plans.codegen(inRun))
+    // frames already in a codegen session are left as they are
+    val (c, d) = frames(spark)
+    val inCaller = engine.scoredPairs(c, d)
+    assert(inCaller.sparkSession eq spark)
+    assert(Plans.codegen(inCaller))
+    assert(inRun.collect().toSet == inCaller.collect().toSet)
   }
 }
