@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
@@ -117,16 +118,27 @@ object Bench {
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val timesByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    // per-repeat codegen cost (side file only): classes Janino compiled
-    // and its compile seconds, read outside the timed region
+    // per-repeat codegen cost and Spark jobs (side file only): classes
+    // Janino compiled, its compile seconds and the jobs the query
+    // submitted (adaptive execution runs one per query stage), read
+    // outside the timed region
     val compilesByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val compileSByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val jobsByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobCount = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobCount.incrementAndGet()
+    })
+    def jobs: Long = {
+      org.apache.spark.graftbridge.StorageBridge.drainListeners(spark.sparkContext)
+      jobCount.get
+    }
     (0 until repeat).foreach { r =>
       val order = new scala.util.Random(orderSeed.toLong * 1000 + r)
         .shuffle(catalog)
       order.foreach { case (name, fn) =>
-        val (compiles0, compileNs0) = (compiles, CodeGenerator.compileTime)
+        val (compiles0, compileNs0, jobs0) = (compiles, CodeGenerator.compileTime, jobs)
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -137,6 +149,8 @@ object Bench {
           (compiles - compiles0).toDouble
         compileSByName(name) = compileSByName.getOrElse(name, Vector.empty) :+
           (CodeGenerator.compileTime - compileNs0) / 1e9
+        jobsByName(name) = jobsByName.getOrElse(name, Vector.empty) :+
+          (jobs - jobs0).toDouble
         resetStorage() // outside the timed region: next run starts clean
         timesByName(name) = timesByName.getOrElse(name, Vector.empty) :+ elapsed
       }
@@ -268,7 +282,7 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // Side file carries the full per-repeat series alongside the
     // medians ("repeats": {"q": [t1, t2, ...], ...}) — see allTimes —
-    // and each repeat's codegen cost in the same shape.
+    // and each repeat's codegen cost and Spark jobs in the same shape.
     def seriesJson(byName: collection.Map[String, Vector[Double]], prec: Int): String =
       catalog.map { case (k, _) =>
         "\"" + k + "\":[" + byName.getOrElse(k, Vector.empty).map(j(_, prec))
@@ -277,7 +291,8 @@ object Bench {
     val sideLine = jsonLine(results, 0, 9, sfDir).dropRight(1) +
       isolatedJson + s""","repeats":${seriesJson(timesByName, 9)}""" +
       s""","codegen_compiles":${seriesJson(compilesByName, 0)}""" +
-      s""","codegen_compile_s":${seriesJson(compileSByName, 9)}}"""
+      s""","codegen_compile_s":${seriesJson(compileSByName, 9)}""" +
+      s""","spark_jobs":${seriesJson(jobsByName, 0)}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       sideLine + "\n")
     catch { case _: Throwable => () }

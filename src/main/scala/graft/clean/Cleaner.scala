@@ -64,12 +64,13 @@ case class CleanResult(df: DataFrame, report: CleanReport,
   *  6. sort by [ticker, ts].
   *
   * Scale design: casts are applied in one projection; per-column null
-  * counts and imputation stats are computed in one aggregate pass per
-  * *validation boundary* rather than one job per column — a frame with
-  * V validation-bearing columns costs V+1 scans, not |columns| scans.
-  * Everything else is row-local expressions, so the whole clean is a
-  * handful of narrow stages that survive a 100x scale-up (no collect of
-  * data rows, no per-row driver logic).
+  * counts and imputation stats are computed by one conditional
+  * aggregate probe rather than one job per column. Only a stats-
+  * dependent fill on a validation-bearing column forces one pass per
+  * *validation boundary* (V+1 scans for V such columns). Everything
+  * else is row-local expressions, so the whole clean is a handful of
+  * narrow stages that survive a 100x scale-up (no collect of data
+  * rows, no per-row driver logic).
   *
   * Known divergence from the reference: `normal_distribution`
   * imputation uses a seeded `randn` (deterministic per run) instead of
@@ -120,9 +121,9 @@ object Cleaner {
       (c, colExpr.as(c), DtypeConversion(c, rule.dtype, status, ""))
     }
     d = d.select(conversions.map(_._2).toIndexedSeq: _*)
-    // The post-cast frame feeds every per-boundary stats pass plus the
-    // final count (V+1 scans) — cache it so only the first pass reads
-    // the source (VERDICT r2 §wrong-5).
+    // The post-cast frame feeds the stats probe (or every per-boundary
+    // stats pass) plus the final count — cache it so only the first
+    // pass reads the source (VERDICT r2 §wrong-5).
     val castFrame = d.persist()
     val convReports = conversions.map { case (c, _, r) =>
       r.copy(actualDtype = d.schema(c).dataType.simpleString)
@@ -147,28 +148,43 @@ object Cleaner {
       pendingDrop = None
     }
 
+    // One batch of the output plan, shared by the fast path and the
+    // sequential loop so both build the same lazy plan: the batch's
+    // fills in one projection, then its boundary filter. Returns
+    // whether a filter was applied.
+    def applyBatch(fills: Seq[(String, Column)], boundary: String): Boolean = {
+      if (fills.nonEmpty) {
+        val m = fills.toMap
+        d = d.select(d.columns.map(c => m.getOrElse(c, col(c)).as(c)).toIndexedSeq: _*)
+      }
+      val keep = if (colExists(d, boundary))
+        validationMask(d, boundary, rules(boundary).validations, now) else None
+      keep.foreach(m => d = d.filter(m))
+      keep.isDefined
+    }
+
     // FAST PATH: one conditional-aggregate probe over the whole frame.
     // The V+1 sequential stats passes exist only because imputation at
-    // batch k can change what later batches see (fills feed boundary
-    // filters, and value-RANDOM fills additionally depend on the row
-    // layout of the partially-filtered frame). But most fills are
-    // deterministic: constant and unix-epoch fills are known without
-    // stats (so a boundary mask can be probed as `coalesce(col, fill)`
-    // up front), and a zero-variance normal fill is a plain mean fill —
-    // row-independent, computable from the probe's own conditional
-    // mean. The probe therefore computes every batch's survivor count,
-    // per-column null count, and numeric mean/std, each conditioned on
-    // the conjunction of prior boundary masks, in ONE job; if no
-    // column then needs a genuinely sequential fill (randn with std>0,
-    // a stats-dependent fill on a boundary column, or a deletion that
-    // invalidates a statically-imputed probe mask), the whole loop
-    // collapses into that probe plus one imputation projection and one
-    // fused filter. V+1 scans -> 1 scan; at 100 TB that's one pass
-    // over the corpus instead of eight. Anything else falls back to
-    // the sequential loop below — which reuses the probe's batch-0
-    // aggregates as its first iteration's stats (the probe's batch-0
-    // condition is `true` over the same unfiltered frame), so the
-    // abort costs nothing: V+1 scans either way (advisor r6).
+    // batch k can change what later batches see: a fill of a boundary
+    // column feeds that batch's filter. Constant and unix-epoch fills
+    // are known without stats, so a boundary mask can be probed as
+    // `coalesce(col, fill)` up front; fills of columns that carry no
+    // validation feed no mask at all. The probe therefore computes
+    // every batch's survivor count, per-column null count, and numeric
+    // mean/std, each conditioned on the conjunction of prior boundary
+    // masks, in ONE job — exactly the stats the loop would see at that
+    // batch. Random (`randn`) fills depend on the row layout of the
+    // partially filtered frame, so the output plan is built batch by
+    // batch with [[applyBatch]], as the loop builds it: same values on
+    // the same partitions draw the same numbers. V+1 scans -> 1 scan.
+    // Two decisions the probe cannot honor fall back to the sequential
+    // loop below: a stats-dependent fill on a boundary column (its
+    // later masks would see the unfilled value), and the deletion of a
+    // statically filled boundary column (deletion keeps the raw mask).
+    // The loop reuses the probe's batch-0 aggregates as its first
+    // iteration's stats (the probe's batch-0 condition is `true` over
+    // the same unfiltered frame), so the abort costs nothing: V+1 scans
+    // either way (advisor r6).
     var probeBatch0: Option[org.apache.spark.sql.Row] = None
     val fastDone: Boolean = {
       // batches are static: d's columns don't change during the loop
@@ -239,16 +255,19 @@ object Cleaner {
 
       // Decide delete/impute per column from the probe; abort to the
       // sequential path on the first decision the probe can't honor.
+      // `fills(k)` are batch k's fill expressions.
       case class Plan(deletes: Seq[DeletedColumn],
-                      fills: Seq[(String, Column, ImputationInfo)])
+                      imputed: Seq[ImputationInfo],
+                      fills: Seq[Seq[(String, Column)]])
       val plan: Option[Plan] = {
         val deletes = scala.collection.mutable.ArrayBuffer[DeletedColumn]()
-        val fills = scala.collection.mutable.ArrayBuffer[(String, Column, ImputationInfo)]()
+        val infos = scala.collection.mutable.ArrayBuffer[ImputationInfo]()
         var legal = true
-        batches.zipWithIndex.foreach { case ((bcols, boundary, mask), k) =>
-          bcols.foreach { c =>
+        val fills = batches.zipWithIndex.map { case ((bcols, boundary, mask), k) =>
+          bcols.flatMap { c =>
             val nulls = g(s"__n_${k}_$c")
-            if (legal && nulls > 0) {
+            if (!legal || nulls == 0) None
+            else {
               val rule = rules(c)
               val total = totals(k)
               val ratio = if (total > 0) nulls.toDouble / total else 0.0
@@ -258,30 +277,27 @@ object Cleaner {
                 // into a boundary mask, so that combination lies.
                 if (isBoundary && staticFill(c).isDefined) legal = false
                 else deletes += DeletedColumn(c, ratio, nulls, rule.nullThreshold)
-              } else {
-                val mean = gd(s"__m_${k}_$c")
-                val std = gd(s"__s_${k}_$c")
-                val strategy = resolveStrategy(d.schema(c).dataType, rule)
-                val dynamic = strategy == "normal_distribution"
-                val randomFill = dynamic && std.exists(v => !v.isNaN && v != 0.0)
-                // randn depends on the row layout of the partially
-                // filtered frame; a stats fill on a boundary column
-                // would need its own mask inside the probe — both are
-                // genuinely sequential.
-                if (randomFill || (dynamic && isBoundary)) legal = false
-                else impute(d.schema(c).dataType, rule, c, nulls, mean, std,
-                  seed + c.hashCode) match {
-                  case Some((e, info)) => fills += ((c, e,
-                    info.copy(nullRatio = ratio, threshold = rule.nullThreshold)))
-                  case None => fills += ((c, col(c),
-                    ImputationInfo(c, nulls, "none",
-                      nullRatio = ratio, threshold = rule.nullThreshold)))
-                }
+                None
+              } else if (isBoundary &&
+                  resolveStrategy(d.schema(c).dataType, rule) == "normal_distribution") {
+                // a stats fill on a boundary column would need its own
+                // mask inside the probe — genuinely sequential
+                legal = false
+                None
+              } else impute(d.schema(c).dataType, rule, c, nulls,
+                  gd(s"__m_${k}_$c"), gd(s"__s_${k}_$c"), seed + c.hashCode) match {
+                case Some((e, info)) =>
+                  infos += info.copy(nullRatio = ratio, threshold = rule.nullThreshold)
+                  Some(c -> e)
+                case None =>
+                  infos += ImputationInfo(c, nulls, "none",
+                    nullRatio = ratio, threshold = rule.nullThreshold)
+                  None
               }
             }
           }
         }
-        if (legal) Some(Plan(deletes.toSeq, fills.toSeq)) else None
+        if (legal) Some(Plan(deletes.toSeq, infos.toSeq, fills)) else None
       }
       plan match {
         case None =>
@@ -289,18 +305,14 @@ object Cleaner {
           false
         case Some(p) =>
           deleted ++= p.deletes
-          p.fills.foreach { case (c, _, info) => imputed(c) = info }
-          val fillMap = p.fills.map { case (c, e, _) => c -> e }.toMap
-          if (fillMap.nonEmpty)
-            d = d.select(d.columns.map(c => fillMap.getOrElse(c, col(c)).as(c)).toIndexedSeq: _*)
-          batches.zipWithIndex.foreach { case ((_, boundary, mask), k) =>
-            if (mask.isDefined) {
+          p.imputed.foreach(info => imputed(info.column) = info)
+          batches.zip(p.fills).zipWithIndex.foreach { case (((_, boundary, _), fills), k) =>
+            if (applyBatch(fills, boundary)) {
               val dropped = totals(k) - totals(k + 1)
               if (dropped > 0)
                 valDrops(boundary) = ValidationDrop(rules(boundary).validations, dropped)
             }
           }
-          batches.foreach { case (_, _, mask) => mask.foreach(m => d = d.filter(m)) }
           totalRows = totals.last
           true
       }
@@ -373,22 +385,12 @@ object Cleaner {
           }
         }
       }
-      if (imputeExprs.nonEmpty) {
-        val m = imputeExprs.toMap
-        d = d.select(d.columns.map(c => m.getOrElse(c, col(c)).as(c)).toIndexedSeq: _*)
-      }
-
       // Validation filter for the boundary column (skipped when marked
       // for deletion? No — the reference validates even to-be-deleted
       // columns, data_cleaning.py:406-411).
       val boundary = cols(j)
-      if (rules(boundary).validations.nonEmpty && colExists(d, boundary)) {
-        val keep = validationMask(d, boundary, rules(boundary).validations, now)
-        keep.foreach { mask =>
-          d = d.filter(mask)
-          pendingDrop = Some((boundary, rules(boundary).validations, totalRows))
-        }
-      }
+      if (applyBatch(imputeExprs.toSeq, boundary))
+        pendingDrop = Some((boundary, rules(boundary).validations, totalRows))
       i = j + 1
     }
     // 3. Drop deletion-marked columns.

@@ -47,8 +47,10 @@ class Pipeline(
     *
     * Every stage runs in a [[RunSession.interpreted]] clone of `spark`:
     * the run's frames, reports and returned outputs all derive from it,
-    * so they execute without code generation, and so does a caller's
-    * later write of the outputs. `spark` itself is left untouched.
+    * so they execute without code generation and without adaptive
+    * execution, one Spark job per action on one shuffle partition, and
+    * so does a caller's later write of the outputs. Pair scoring alone
+    * is planned back in `spark`. `spark` itself is left untouched.
     */
   def run(spark: SparkSession,
           plan: ExecutionPlan,

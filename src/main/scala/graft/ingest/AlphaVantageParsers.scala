@@ -242,8 +242,8 @@ object AlphaVantageParsers {
     * timestamp) -> `<= to` -> tail(limit) -> tail(freq window) ->
     * last-30-days -> final tail(30) if everything filtered away.
     * `tail(n)` = order desc, limit n, re-sort. The only driver-side
-    * values are two scalar aggregates (latest timestamp, emptiness),
-    * mirroring the reference's `timestamps.max()`.
+    * values are the latest timestamp, mirroring the reference's
+    * `timestamps.max()`, and, on the date-filter branches, emptiness.
     */
   def applyRequestedWindow(df: DataFrame, spec: WindowSpec): DataFrame = {
     if (!df.columns.contains("timestamp")) return df
@@ -259,23 +259,27 @@ object AlphaVantageParsers {
     def tailN(d: DataFrame, n: Int): DataFrame =
       d.orderBy(col("timestamp").desc).limit(n).orderBy("timestamp")
 
-    val filtered =
+    // A date filter may empty the frame, and then falls back to the
+    // last 30 rows; a positive tail of a frame with a non-null latest
+    // timestamp never is, so it needs no emptiness check.
+    def orFallback(filtered: DataFrame): DataFrame =
+      if (filtered.isEmpty) tailN(sorted, defaultWindowDays) else filtered
+    val result =
       if (start0.isDefined || end0.isDefined) {
         val end = end0.getOrElse(latest)
         val start = start0.getOrElse(end.minusDays(defaultWindowDays))
-        sorted.filter(col("timestamp") >= lit(java.sql.Date.valueOf(start))
-          && col("timestamp") <= lit(java.sql.Date.valueOf(end)))
+        orFallback(sorted.filter(col("timestamp") >= lit(java.sql.Date.valueOf(start))
+          && col("timestamp") <= lit(java.sql.Date.valueOf(end))))
       } else if (explicitWindow && end0.isDefined) {
-        sorted.filter(col("timestamp") <= lit(java.sql.Date.valueOf(end0.get)))
+        orFallback(sorted.filter(col("timestamp") <= lit(java.sql.Date.valueOf(end0.get))))
       } else if (spec.limit.exists(_ > 0)) {
         tailN(sorted, spec.limit.get)
       } else if (spec.frequency.exists(frequencyWindowMap.contains)) {
         tailN(sorted, frequencyWindowMap(spec.frequency.get))
       } else {
         val start = latest.minusDays(defaultWindowDays)
-        sorted.filter(col("timestamp") >= lit(java.sql.Date.valueOf(start)))
+        orFallback(sorted.filter(col("timestamp") >= lit(java.sql.Date.valueOf(start))))
       }
-    val result = if (filtered.isEmpty) tailN(sorted, defaultWindowDays) else filtered
     result.orderBy("timestamp")
   }
 

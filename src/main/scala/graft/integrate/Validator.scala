@@ -1,7 +1,7 @@
 package graft.integrate
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Full validator-stage report (reference: validator.py:241-250,419-444
   * — the JSON-serializable run contract).
@@ -26,7 +26,7 @@ case class ValidatorReport(
   * verbatim (it is orchestration, not dataflow); every distributed
   * operation inside it is the engines' scale-safe Spark work. The
   * shape counts in the report are the only extra actions, mirroring
-  * the reference's `df.shape` logging.
+  * the reference's `df.shape` logging: one job per frame list.
   */
 class Validator(config: ValidatorConfig = ValidatorConfig.balanced) {
 
@@ -59,7 +59,7 @@ class Validator(config: ValidatorConfig = ValidatorConfig.balanced) {
     require(dataframes.nonEmpty, "Input dataframe list is empty")
     require(dataframes.size <= config.maxDataframes,
       s"Too many dataframes: ${dataframes.size} (max: ${config.maxDataframes})")
-    val inputShapes = dataframes.map(shape)
+    val inputShapes = shapes(dataframes)
     inputShapes.zipWithIndex.foreach { case ((rows, _), i) =>
       require(rows > 0, s"DataFrame $i is empty")
     }
@@ -73,11 +73,11 @@ class Validator(config: ValidatorConfig = ValidatorConfig.balanced) {
       return (outputs, ValidatorReport(
         dataframes.size, inputShapes, unionOps, Nil, Nil,
         earlyTermination = true, stage2Skipped = false,
-        outputs.size, outputs.map(shape)))
+        outputs.size, shapes(outputs)))
     }
 
     // JOIN stage: denominator fixed across both stages (validator.py:324)
-    val denominator = unioned.map(_.count()).min
+    val denominator = shapes(unioned).map(_._1).min
     val (stage1Dfs, stage1Ops, stage1Success) = joinEngine.stage1(unioned, denominator)
 
     if (!stage1Success) {
@@ -85,7 +85,7 @@ class Validator(config: ValidatorConfig = ValidatorConfig.balanced) {
       return (outputs, ValidatorReport(
         dataframes.size, inputShapes, unionOps, stage1Ops, Nil,
         earlyTermination = false, stage2Skipped = true,
-        outputs.size, outputs.map(shape)))
+        outputs.size, shapes(outputs)))
     }
 
     val (finalDfs, stage2Ops) = joinEngine.stage2(stage1Dfs, denominator)
@@ -93,8 +93,19 @@ class Validator(config: ValidatorConfig = ValidatorConfig.balanced) {
     (outputs, ValidatorReport(
       dataframes.size, inputShapes, unionOps, stage1Ops, stage2Ops,
       earlyTermination = false, stage2Skipped = false,
-      outputs.size, outputs.map(shape)))
+      outputs.size, shapes(outputs)))
   }
 
-  private def shape(df: DataFrame): (Long, Int) = (df.count(), df.columns.length)
+  /** (rows, columns) of every frame, in order, from one grouped count
+    * over the index-tagged union of the frames — one job instead of one
+    * per frame. A frame without rows has no group and reads as 0.
+    */
+  private def shapes(frames: Seq[DataFrame]): Seq[(Long, Int)] = {
+    val tagged = frames.zipWithIndex.map { case (df, i) =>
+      df.select(lit(i).as("__frame"))
+    }
+    val rows = tagged.reduce(_ union _).groupBy("__frame").agg(count(lit(1)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    frames.zipWithIndex.map { case (df, i) => (rows.getOrElse(i, 0L), df.columns.length) }
+  }
 }

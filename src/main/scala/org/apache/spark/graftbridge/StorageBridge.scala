@@ -20,6 +20,12 @@ import org.apache.spark.SparkContext
   */
 object StorageBridge {
 
+  /** Blocks until every listener event posted so far has been
+    * delivered, so a counting listener can be read without racing the
+    * asynchronous bus.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Synchronously remove one broadcast's blocks everywhere. */
   def removeBroadcast(sc: SparkContext, broadcastId: Long): Unit =
     sc.env.blockManager.master

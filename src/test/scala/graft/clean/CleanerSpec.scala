@@ -2,10 +2,10 @@ package graft.clean
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ActionCount, SparkSpec}
 
 /** ScalaTest port of the asserting reference suite
   * transform/tests/test_data_cleaning.py (pattern matching, dtype
@@ -252,5 +252,64 @@ class CleanerSpec extends SparkSpec {
     assert(rows(0).getAs[String]("ticker") == "AAA")
     assert(rows(0).getAs[Double]("open") == 10.5)
     assert(res.df.schema("ts").dataType.typeName == "timestamp")
+  }
+
+  // ---- the one-probe fast path ----
+
+  /** 30 rows on 3 partitions. `vwap` and the `sma_close_3` feature
+    * carry nulls (leading ones per ticker, as a rolling window leaves).
+    * Rows 1 and 8 fail `open`'s validation before their null `sma` and
+    * `vwap` would be filled, so dropping them first shifts the draws.
+    */
+  private def featureFrame(s: SparkSession): DataFrame = {
+    val id = col("id")
+    val open = when(id === 1 || id === 8, -1.0).otherwise(lit(100.0) + id % 7)
+    s.range(0, 30, 1, 3).select(
+      when(id % 2 === 0, "AAPL").otherwise("MSFT").as("ticker"),
+      timestamp_seconds(lit(1704067200L) + id * 86400).as("ts"),
+      open.as("open"),
+      when(id % 5 === 3, lit(null)).otherwise(open + 0.5).as("vwap"),
+      when(id === 11, -2.0).otherwise(open + 5).as("high"),
+      (open - 5).as("low"),
+      (open + 1).as("close"),
+      (lit(1000.0) + id * 10).as("volume"),
+      when(id < 4, lit(null)).otherwise(lit(100.0) + id % 5 * 0.7).as("sma_close_3"))
+  }
+
+  /** Order-insensitive digest of some lines. */
+  private def digest(lines: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+
+  private def rowsDigest(df: DataFrame): String = digest(df.collect().toSeq.map(
+    _.toSeq.map {
+      case t: Timestamp => t.getTime.toString
+      case v => String.valueOf(v)
+    }.mkString("|")))
+
+  private def reportDigest(r: CleanReport): String = digest(
+    Seq(s"version ${r.configVersion}", s"duplicates ${r.exactDuplicatesDropped}",
+      s"rows ${r.finalRows}", s"columns ${r.finalColumns.mkString(",")}") ++
+      (r.dtypeConversions ++ r.columnsDeleted ++ r.columnsImputed.toSeq ++
+        r.validationRowsDropped.toSeq ++ r.relationshipValidations.toSeq).map(_.toString))
+
+  test("random fills on non-boundary columns stay on the one-probe fast path") {
+    // in a run session, as in a pipeline run: one job per action
+    val (res, count) = ActionCount.of(spark)(
+      Cleaner.clean(featureFrame(graft.core.RunSession.interpreted(spark))))
+    // the stats probe plus the relationship aggregate, where the
+    // sequential loop would scan once per validation boundary
+    assert(count == ActionCount(jobs = 2, executions = 2))
+    Seq("vwap", "sma_close_3").foreach { c =>
+      val info = res.report.columnsImputed(c)
+      assert(info.method == "normal_distribution")
+      assert(info.std.exists(_ > 0))
+    }
+    assert(res.report.validationRowsDropped.keySet == Set("open", "high"))
+    // recorded from the sequential loop, which cleaned this frame before
+    // the fast path covered random fills: same rows, draws included
+    assert(rowsDigest(res.df) == "e9f77e45ce0de692")
+    assert(reportDigest(res.report) == "fa11cb0a7e956888")
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.internal.SQLConf
 
-import graft.SparkSpec
+import graft.{ActionCount, SparkSpec}
 import graft.ingest.{ApiRequest, ExecutionPlan}
 import graft.integrate.{JoinEngine, ValidatorConfig}
 import graft.load.Loader
@@ -166,9 +166,28 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset(marker)
   }
 
+  test("run session: plans without adaptive execution, on one shuffle partition") {
+    val adaptive = spark.conf.get(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key)
+    val partitions = spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key)
+    val inside = runOf(small).outputs.head.sparkSession
+    assert(inside.conf.get(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key) == "false")
+    assert(inside.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "1")
+    assert(spark.conf.get(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key) == adaptive)
+    assert(spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == partitions)
+  }
+
+  private def materialized(run: PipelineRun): Unit = run.outputs.foreach(_.collect())
+
+  test("run session: a repeated run submits one Spark job per action") {
+    materialized(runOf(small))
+    val (_, count) = ActionCount.of(spark)(materialized(runOf(small)))
+    assert(count.jobs <= count.executions)
+    // 11 jobs and 11 actions when this was written
+    assert(count.jobs <= 11)
+  }
+
   test("run session: a repeated run compiles no generated classes") {
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def materialized(run: PipelineRun): Unit = run.outputs.foreach(_.collect())
     materialized(runOf(small))
     val before = compiles
     materialized(runOf(small))

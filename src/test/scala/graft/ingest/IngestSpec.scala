@@ -2,7 +2,7 @@ package graft.ingest
 
 import java.time.LocalDate
 
-import graft.SparkSpec
+import graft.{ActionCount, SparkSpec}
 
 class IngestSpec extends SparkSpec {
 
@@ -113,5 +113,28 @@ class IngestSpec extends SparkSpec {
     // [2024-01-31, 2024-03-01] inclusive
     assert(out.head.getAs[java.sql.Date]("timestamp").toString == "2024-01-31")
     assert(out.last.getAs[java.sql.Date]("timestamp").toString == "2024-03-01")
+  }
+
+  test("applyRequestedWindow checks emptiness only after a date filter") {
+    import spark.implicits._
+    import AlphaVantageParsers.WindowSpec
+    val df = (0 until 50).map { i =>
+      ("T", java.sql.Date.valueOf(LocalDate.of(2024, 1, 1).plusDays(i.toLong)), i.toDouble)
+    }.toDF("ticker", "timestamp", "close")
+    def windowed(spec: WindowSpec): (Seq[Double], ActionCount) = {
+      val (out, count) = ActionCount.of(spark)(AlphaVantageParsers.applyRequestedWindow(df, spec))
+      (out.collect().map(_.getAs[Double]("close")).toSeq, count)
+    }
+    def last(n: Int) = (50 - n until 50).map(_.toDouble)
+    // a tail: the latest timestamp is the one action
+    val (limited, limitCount) = windowed(WindowSpec(limit = Some(35)))
+    assert(limited == last(35) && limitCount.executions == 1)
+    val (weekly, weeklyCount) = windowed(WindowSpec(frequency = Some("weekly")))
+    assert(weekly == last(26) && weeklyCount.executions == 1)
+    // a window outside the data still empties and falls back to tail(30)
+    val (fallback, count) = windowed(WindowSpec(
+      from = Some(LocalDate.of(2000, 1, 1)), to = Some(LocalDate.of(2000, 2, 1))))
+    assert(fallback == last(30))
+    assert(count.executions == 2)
   }
 }

@@ -1,6 +1,9 @@
 package graft.integrate
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
+import graft.{ActionCount, SparkSpec}
 
 class ValidatorSpec extends SparkSpec {
   import spark.implicits._
@@ -101,5 +104,27 @@ class ValidatorSpec extends SparkSpec {
     intercept[IllegalArgumentException](validator.process(Nil))
     val one = Seq((1, 2)).toDF("a", "b")
     intercept[IllegalArgumentException](validator.process(Seq.fill(11)(one)))
+  }
+
+  test("shapes come from one grouped count per frame list") {
+    val f1 = Seq((1L, 1.0, 2.0), (2L, 1.5, 2.5), (3L, 2.0, 3.0)).toDF("id", "v_x", "v_y")
+    val f2 = Seq((4L, 1.0, 2.0), (5L, 1.2, 2.2)).toDF("id", "v_x", "v_y")
+    val f3 = spark.range(6, 10).select(col("id"),
+      (col("id") * 0.5).as("v_x"), (col("id") * 0.7).as("v_y"))
+    val inputs = Seq(f1, f2, f3)
+    val (out, report) = validator.process(inputs)
+    assert(out.size == 2) // one union group, split into its _x/_y versions
+    def counted(dfs: Seq[DataFrame]) = dfs.map(df => (df.count(), df.columns.length))
+    assert(report.inputShapes == Seq((3L, 3), (2L, 3), (4L, 3)))
+    assert(report.inputShapes == counted(inputs))
+    assert(report.outputShapes == Seq((9L, 2), (9L, 2)))
+    assert(report.outputShapes == counted(out))
+
+    // an empty frame is still named, after one action for all three
+    val empty = f2.filter(lit(false))
+    val (e, count) = ActionCount.of(spark)(
+      intercept[IllegalArgumentException](validator.process(Seq(f1, f3, empty))))
+    assert(e.getMessage.contains("DataFrame 2 is empty"))
+    assert(count.executions == 1)
   }
 }
