@@ -51,6 +51,11 @@ class Pipeline(
     * execution, one Spark job per action on one shuffle partition, and
     * so does a caller's later write of the outputs. Pair scoring alone
     * is planned back in `spark`. `spark` itself is left untouched.
+    *
+    * Within a stage, independent frames are worked on side by side
+    * ([[RunSession.parMap]]): each payload's parse, each frame's
+    * transform, each output's load. Fetches, the validator's grouping
+    * and its join stages stay sequential.
     */
   def run(spark: SparkSession,
           plan: ExecutionPlan,

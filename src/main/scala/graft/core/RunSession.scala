@@ -1,5 +1,10 @@
 package graft.core
 
+import java.util.concurrent.{CompletionException, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -20,6 +25,10 @@ import org.apache.spark.sql.internal.SQLConf
   * clone of the caller's session with both code generation paths and
   * adaptive execution off. The caller's session is never mutated: the
   * API service runs pipelines concurrently on one session.
+  *
+  * A run's frames are independent within a stage, and one frame's
+  * actions leave the cores idle: [[parMap]] runs the per-frame work of
+  * a stage side by side.
   */
 object RunSession {
 
@@ -70,4 +79,45 @@ object RunSession {
     */
   def compiled(df: DataFrame): DataFrame =
     Option(callers.get(df.sparkSession)).fold(df)(SessionBridge.rebind(df, _))
+
+  /** Daemon threads made on demand, with no cap: a task that itself
+    * calls [[parMap]] can never wait for a thread that waits on it. A
+    * call's fan-out is its input count: a run's fetched payloads, or
+    * the at most `maxDataframes` frames the validator passes on. Idle
+    * threads exit after a minute.
+    */
+  private val pool = {
+    val ids = new AtomicInteger
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, s"graft-run-${ids.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
+  /** `items.map(f)`, with every item's `f` running at the same time.
+    *
+    * Each task runs with the calling thread's Spark thread-locals and
+    * `session` (read only when tasks start) as its active session, so
+    * it plans under that session's conf and its jobs carry the caller's
+    * job group, description and scheduler pool. A one-item input runs
+    * on the calling thread. Results come back in input order. The call
+    * returns once every task has finished, and then rethrows the first
+    * failure in input order, so no job outlives it. `f` must not touch
+    * state shared between items; the caller updates such state from
+    * the results.
+    */
+  def parMap[A, B](session: => SparkSession, items: Seq[A])(f: A => B): Seq[B] =
+    if (items.sizeIs <= 1) items.map(f)
+    else {
+      val active = session
+      // the body never throws, so the worker's thread-locals are restored
+      val tasks = items.toVector.map { a =>
+        SessionBridge.withThreadLocalCaptured(active, pool)(Try(f(a)))
+      }
+      val outcomes = tasks.map { t =>
+        Try(t.join()).recoverWith { case e: CompletionException => Failure(e.getCause) }.flatten
+      }
+      outcomes.map(_.get)
+    }
 }

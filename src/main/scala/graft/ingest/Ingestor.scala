@@ -6,6 +6,8 @@ import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.RunSession
+
 /** Artifact-driven ingest orchestrator (reference:
   * LLM_Ingestor/ingestor.py:45-298): validate the execution plan's
   * parameters, skip ERROR requests, route each payload to its
@@ -38,8 +40,12 @@ class Ingestor(today: LocalDate = LocalDate.now()) {
   /** Validates the plan — semantic endpoint match first (step 3,
     * ingestor.py:96-110), then parameters (step 4, :112-123) — and
     * executes each non-ERROR request through `fetch`, parses, and
-    * reports. Mirrors ingestor.py:201-298's sequential
-    * execute-and-skip loop. The semantic check reads the intent
+    * reports, skipping failed requests like ingestor.py:201-298's
+    * execute-and-skip loop. Fetches run one at a time in plan order,
+    * as the provider's rate limits and the reference's request order
+    * require; the payloads are then parsed, windowed and checked side
+    * by side ([[RunSession.parMap]]), and frames, reports and failures
+    * come back in plan order. The semantic check reads the intent
     * keywords the plan itself carries ([[ExecutionPlan]], mirroring
     * contracts.py:21-26's LLMResponse bundle); semantic mismatch only
     * WARNs and never skips a request.
@@ -50,32 +56,27 @@ class Ingestor(today: LocalDate = LocalDate.now()) {
               keyFeatures: Seq[String] = Nil): IngestResult = {
     val semValidated = endpointValidator.validatePlan(plan)
     val validated = paramValidator.validatePlan(semValidated)
-    val frames = scala.collection.mutable.ArrayBuffer[(ApiRequest, DataFrame)]()
-    val failed = scala.collection.mutable.ArrayBuffer[FailedRequest]()
-    validated.rankedRequests.foreach { req =>
-      if (req.validationStatus != "ERROR") {
-        // fetch + parse failures skip the frame, like ingestor.py:266-276,
-        // but are RECORDED so the run artifacts can explain them (a
-        // RetryingFetch transport throws here once its attempts are spent)
-        try {
-          fetch(req) match {
-            case Some(payload) => frames += req -> parseResponse(spark, req, payload)
-            case None =>
-              failed += FailedRequest(req.apiName, req.endpointName, "no payload")
-          }
-        } catch {
-          case e: Exception =>
-            failed += FailedRequest(req.apiName, req.endpointName,
-              Option(e.getMessage).getOrElse(e.toString))
-        }
+    // fetch + parse failures skip the frame, like ingestor.py:266-276,
+    // but are RECORDED so the run artifacts can explain them (a
+    // RetryingFetch transport throws here once its attempts are spent)
+    def reason(e: Exception): String = Option(e.getMessage).getOrElse(e.toString)
+    val fetched = validated.rankedRequests.filter(_.validationStatus != "ERROR").map { req =>
+      req -> (try fetch(req).toRight("no payload") catch { case e: Exception => Left(reason(e)) })
+    }
+    val parsed = RunSession.parMap(spark, fetched) { case (req, payload) =>
+      payload.flatMap { p =>
+        try Right(parseResponse(spark, req, p)) catch { case e: Exception => Left(reason(e)) }
+      }.map { df =>
+        df -> outputValidator.validateDataset(df, keyFeatures, req.apiName, req.endpointName,
+          req.parameters.get("ticker").orElse(req.parameters.get("symbol")).map(_.toString))
       }
     }
-    val reports = frames.map { case (req, df) =>
-      outputValidator.validateDataset(df, keyFeatures, req.apiName, req.endpointName,
-        req.parameters.get("ticker").orElse(req.parameters.get("symbol")).map(_.toString))
+    val failed = fetched.zip(parsed).collect { case ((req, _), Left(why)) =>
+      FailedRequest(req.apiName, req.endpointName, why)
     }
-    IngestResult(proceed = true, frames.map(_._2).toSeq, enrichmentFeatures,
-      keyFeatures, reports.toSeq, failed.toSeq)
+    val frames = parsed.collect { case Right(frame) => frame }
+    IngestResult(proceed = true, frames.map(_._1), enrichmentFeatures,
+      keyFeatures, frames.map(_._2), failed)
   }
 
   /** Routes one payload to its parser by provider + endpoint family

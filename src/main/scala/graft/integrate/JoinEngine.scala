@@ -30,9 +30,10 @@ case class JoinOp(
   * scope, SURVEY §7.5).
   *
   * Scale design:
-  *  - `maxPairs` is ENFORCED: both sides are counted (cheap — the
-  *    stamped sides are cached) and an over-budget pair space is
-  *    refused before any cross join is planned;
+  *  - `maxPairs` is ENFORCED: both sides are counted (one aggregate
+  *    per side, which also yields the pad means and fills the side's
+  *    cache) and an over-budget pair space is refused before any cross
+  *    join is planned;
   *  - the cross join broadcasts whichever side fits the broadcast
   *    budget (preferring the right), falling back to a partitioned
   *    cross join when neither does — a large frame is never collected
@@ -96,24 +97,29 @@ class JoinEngine(
     val n2 = numericCols(df2)
     if (n1.isEmpty || n2.isEmpty) return None
     val all = n1 ++ n2.filterNot(n1.contains)
-    Some((all, padToAll(df1, n1, all), padToAll(df2, n2, all)))
+    val Seq((_, p1), (_, p2)) = countAndPad(Seq(df1 -> n1, df2 -> n2), all)
+    Some((all, p1, p2))
   }
 
-  /** Pads the columns of `all` missing from `df` with df's grand mean —
-    * the mean of its numeric column means, matching pandas
-    * `df.mean().mean()` (join.py:77-86). Extra non-member columns (the
-    * row-id stamp) ride along untouched.
+  /** Each side's row count, and the side with the columns of `all` it
+    * lacks padded with its grand mean — the mean of its numeric column
+    * means, matching pandas `df.mean().mean()` (join.py:77-86). One
+    * aggregate per side, both sides at once ([[RunSession.parMap]]).
+    * Extra non-member columns (the row-id stamp) ride along untouched.
     */
-  private def padToAll(df: DataFrame, own: Seq[String], all: Seq[String]): DataFrame = {
-    val missing = all.filterNot(own.contains)
-    if (missing.isEmpty) df else {
-      val means = df.agg(avg(col(own.head)).cast(DoubleType).as(own.head),
-        own.tail.map(c => avg(col(c)).cast(DoubleType).as(c)): _*).collect()(0)
-      // mean-of-means in column order, left-associated like np sum
-      val grand = own.map(c => means.getAs[Double](c)).reduceLeft(_ + _) / own.size
-      missing.foldLeft(df)((d, c) => d.withColumn(c, lit(grand)))
+  private def countAndPad(sides: Seq[(DataFrame, Seq[String])], all: Seq[String])
+      : Seq[(Long, DataFrame)] =
+    RunSession.parMap(sides.head._1.sparkSession, sides) { case (df, own) =>
+      val missing = all.filterNot(own.contains)
+      val means = if (missing.isEmpty) Nil else own.map(c => avg(col(c)).cast(DoubleType))
+      val stats = df.agg(count(lit(1)), means: _*).collect()(0)
+      val padded = if (missing.isEmpty) df else {
+        // mean-of-means in column order, left-associated like np sum
+        val grand = own.indices.map(i => stats.getAs[Double](i + 1)).reduceLeft(_ + _) / own.size
+        missing.foldLeft(df)((d, c) => d.withColumn(c, lit(grand)))
+      }
+      stats.getLong(0) -> padded
     }
-  }
 
   /** J2+J3+J4 over pre-stamped sides: align, cast, cross-join with
     * size-based broadcast selection, 26 features, score, filter to
@@ -130,20 +136,18 @@ class JoinEngine(
     val n = all.size
 
     // maxPairs enforcement + broadcast-side selection need both
-    // cardinalities; the stamped sides are cached, so these are cheap.
-    val n1 = s1.count()
-    val n2 = s2.count()
+    // cardinalities. Each side's one aggregate also fills its cache.
+    val Seq((n1, padded1), (n2, padded2)) = countAndPad(Seq(s1 -> own1, s2 -> own2), all)
     if (n1 * n2 > maxPairs)
       throw new IllegalArgumentException(
         s"refusing cross join: $n1 x $n2 pairs exceeds maxPairs=$maxPairs")
 
-    def packed(stamped: DataFrame, own: Seq[String], rid: String,
-               outRid: String, arr: String): DataFrame =
-      padToAll(stamped, own, all)
+    def packed(padded: DataFrame, rid: String, outRid: String, arr: String): DataFrame =
+      padded
         .select(col(rid).as(outRid) +: all.map(c => col(c).cast(DoubleType).as(c)): _*)
         .select(col(outRid), array(all.map(col): _*).as(arr))
-    val left = packed(s1, own1, RID1, "rid1", "a")
-    val right = packed(s2, own2, RID2, "rid2", "b")
+    val left = packed(padded1, RID1, "rid1", "a")
+    val right = packed(padded2, RID2, "rid2", "b")
 
     val rowBytes = 8L * n + 32L
     // Round-robin the STREAM side across the cluster before the join:
@@ -152,7 +156,7 @@ class JoinEngine(
     // stream side's partitions. Without it, AQE coalesces a small
     // sorted input to ONE partition and the entire pair kernel
     // serializes onto a single core (measured 2.5x on join_pair_kernel
-    // at sf0.1). Applied after packing, so the padToAll aggregation
+    // at sf0.1). Applied after packing, so the pad's mean aggregation
     // order (oracle parity) is untouched.
     def spread(side: DataFrame): DataFrame =
       side.repartition(side.sparkSession.sparkContext.defaultParallelism)
@@ -364,14 +368,14 @@ class JoinEngine(
   }
 
   /** Stamps a row id and caches the stamped frame (it is consumed at
-    * least twice: cardinality count + cross join, and again by the
+    * least twice: count-and-pad aggregate + cross join, and again by the
     * materialization when a join succeeds). One stamp per (frame, id)
     * per engine instance.
     */
   private val stamped = scala.collection.mutable.Map[(DataFrame, String), DataFrame]()
   private def stampCached(df: DataFrame, name: String): DataFrame =
     stamped.getOrElseUpdate((df, name), {
-      // NOT repartitioned here: the grand-mean aggregation in padToAll
+      // NOT repartitioned here: the grand-mean aggregation in countAndPad
       // must accumulate in the frame's own deterministic order (a
       // repartition changes the partial-agg merge order and shifts the
       // pad constant by an ulp, breaking oracle parity). The cross-join

@@ -1,8 +1,14 @@
 package graft.load
 
+import java.sql.Connection
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
+
+import graft.core.RunSession
 
 /** Per-table load result (reference: transform/load.py:111-189). */
 case class LoadResult(
@@ -35,13 +41,18 @@ case class LoadReport(
   * database shipped with Spark), and a production deployment points
   * the same code at any JDBC URL. At scale the JDBC write streams
   * partition-parallel inserts (`numPartitions` on the writer bounds
-  * connection fan-out); the row-count verify is one `COUNT(*)` pushed
-  * down to the database.
+  * connection fan-out). The existence check (the dialect's probe
+  * query) and the row-count verify (`SELECT COUNT(*)`) are plain SQL
+  * over one JDBC connection per table, opened like the writer's: the
+  * database counts, and no row comes back. Frames load side by side,
+  * one task per table.
   */
 class Loader(jdbcUrl: String, props: Properties = new Properties()) {
 
   /** K1 + A5: load each frame into its table with the given existence
-    * policy, verifying each write by reading the table count back.
+    * policy, verifying each write by counting the table's rows. The
+    * frames load side by side ([[RunSession.parMap]]); results keep
+    * input order.
     */
   def loadJdbc(spark: SparkSession, dataframes: Seq[DataFrame],
                tableNames: Option[Seq[String]] = None,
@@ -52,36 +63,8 @@ class Loader(jdbcUrl: String, props: Properties = new Properties()) {
     require(names.size == dataframes.size,
       s"Number of table names (${names.size}) must match number of DataFrames (${dataframes.size})")
 
-    val results = dataframes.zip(names).zipWithIndex.map { case ((df, table), idx) =>
-      val rows = df.count()
-      val nCols = df.columns.length
-      if (rows == 0L) {
-        LoadResult(idx, table, rows, nCols, "skipped_empty", 0L,
-          tableExisted = tableExists(spark, table), action = ifExists)
-      } else {
-        try {
-          val existed = tableExists(spark, table)
-          val before = if (existed) tableCount(spark, table) else 0L
-          val mode = ifExists match {
-            case "replace" => SaveMode.Overwrite
-            case "fail" => SaveMode.ErrorIfExists
-            case _ => SaveMode.Append
-          }
-          df.write.mode(mode).jdbc(jdbcUrl, table, props)
-          // A5: count-based load verification (load.py:163,282-286)
-          val after = tableCount(spark, table)
-          val expected = if (existed && ifExists == "append") before + rows else rows
-          val status = if (after == expected) "success" else "error"
-          LoadResult(idx, table, rows, nCols, status, after, existed,
-            action = if (existed) ifExists else "create",
-            error = if (after == expected) None
-            else Some(s"row-count verify failed: expected $expected, found $after"))
-        } catch {
-          case e: Exception =>
-            LoadResult(idx, table, rows, nCols, "error", 0L,
-              tableExisted = false, action = ifExists, error = Some(e.getMessage))
-        }
-      }
+    val results = RunSession.parMap(spark, dataframes.zip(names).zipWithIndex) {
+      case ((df, table), idx) => load(df, table, idx, ifExists)
     }
 
     val errors = results.count(_.status == "error")
@@ -94,12 +77,50 @@ class Loader(jdbcUrl: String, props: Properties = new Properties()) {
       results.filter(_.status == "success").map(_.rows).sum, errors, results)
   }
 
-  private def tableExists(spark: SparkSession, table: String): Boolean =
-    try { tableCount(spark, table); true }
-    catch { case _: Exception => false }
+  private def load(df: DataFrame, table: String, idx: Int, ifExists: String): LoadResult = {
+    val rows = df.count()
+    val nCols = df.columns.length
+    // the writer's options: driver, user and connection properties
+    val opts = new JdbcOptionsInWrite(jdbcUrl, table, props.asScala.toMap)
+    if (rows == 0L) {
+      val existed = try JdbcUtils.withConnection(opts)(JdbcUtils.tableExists(_, opts))
+        catch { case _: Exception => false }
+      LoadResult(idx, table, rows, nCols, "skipped_empty", 0L,
+        tableExisted = existed, action = ifExists)
+    } else {
+      try JdbcUtils.withConnection(opts) { conn =>
+        val existed = JdbcUtils.tableExists(conn, opts)
+        val before = if (existed) tableCount(conn, table) else 0L
+        val mode = ifExists match {
+          case "replace" => SaveMode.Overwrite
+          case "fail" => SaveMode.ErrorIfExists
+          case _ => SaveMode.Append
+        }
+        df.write.mode(mode).jdbc(jdbcUrl, table, props)
+        // A5: count-based load verification (load.py:163,282-286)
+        val after = tableCount(conn, table)
+        val expected = if (existed && ifExists == "append") before + rows else rows
+        val status = if (after == expected) "success" else "error"
+        LoadResult(idx, table, rows, nCols, status, after, existed,
+          action = if (existed) ifExists else "create",
+          error = if (after == expected) None
+          else Some(s"row-count verify failed: expected $expected, found $after"))
+      } catch {
+        case e: Exception =>
+          LoadResult(idx, table, rows, nCols, "error", 0L,
+            tableExisted = false, action = ifExists, error = Some(e.getMessage))
+      }
+    }
+  }
 
-  private def tableCount(spark: SparkSession, table: String): Long =
-    spark.read.jdbc(jdbcUrl, table, props).count()
+  private def tableCount(conn: Connection, table: String): Long = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
+      rs.next()
+      rs.getLong(1)
+    } finally st.close()
+  }
 }
 
 object Loader {
@@ -108,10 +129,11 @@ object Loader {
     * each like the reference's `df.to_csv` (validator.py:507-566).
     * `coalesce(1)` is the reference-parity single-file contract; lake-
     * scale exports drop it and write partition-parallel part files.
+    * The frames are written side by side ([[RunSession.parMap]]).
     */
   def writeCsv(dataframes: Seq[DataFrame], outDir: String,
                singleFile: Boolean = true): Seq[String] =
-    dataframes.zipWithIndex.map { case (df, i) =>
+    RunSession.parMap(dataframes.head.sparkSession, dataframes.zipWithIndex) { case (df, i) =>
       val path = s"$outDir/result_$i.csv"
       val w = if (singleFile) df.coalesce(1) else df
       w.write.mode("overwrite").option("header", "true").csv(path)

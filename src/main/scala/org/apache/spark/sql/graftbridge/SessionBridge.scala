@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import java.util.concurrent.{CompletableFuture, ExecutorService}
 
-/** Bridge to Spark's private[sql] session cloning and plan rebinding,
-  * for run-scoped sessions (see [[graft.core.RunSession]]).
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Bridge to Spark's private[sql] session cloning, plan rebinding and
+  * thread-local capture, for run-scoped sessions (see
+  * [[graft.core.RunSession]]).
   */
 object SessionBridge {
 
@@ -21,4 +25,13 @@ object SessionBridge {
   def rebind(df: DataFrame, spark: SparkSession): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  /** `body` on `exec` with the calling thread's Spark thread-locals:
+    * `spark` as the active session (and so its SQL conf), and the
+    * caller's local properties (job group, description, scheduler
+    * pool) and artifact state. The worker's own are restored after.
+    */
+  def withThreadLocalCaptured[T](spark: SparkSession, exec: ExecutorService)(body: => T)
+      : CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(spark.asInstanceOf[classic.SparkSession], exec)(body)
 }

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.StorageBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -8,8 +11,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Spark jobs submitted and SQL executions (actions) run. */
-final case class ActionCount(jobs: Int, executions: Int)
+/** SQL executions (actions) run, and the `spark.jobGroup.id` of each
+  * Spark job submitted (None for a job outside any group), in start
+  * order.
+  */
+final case class ActionCount(executions: Int, jobGroups: Seq[Option[String]]) {
+  def jobs: Int = jobGroups.size
+}
 
 object ActionCount {
 
@@ -18,10 +26,11 @@ object ActionCount {
     * sessions cloned from `spark` while `f` runs inherit.
     */
   def of[A](spark: SparkSession)(f: => A): (A, ActionCount) = {
-    val jobs = new AtomicInteger
+    val jobGroups = new ConcurrentLinkedQueue[Option[String]]
     val executions = new AtomicInteger
     val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
     }
     val executionListener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -36,7 +45,7 @@ object ActionCount {
     try {
       val result = f
       StorageBridge.drainListeners(sc)
-      (result, ActionCount(jobs.get, executions.get))
+      (result, ActionCount(executions.get, jobGroups.asScala.toSeq))
     } finally {
       sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(executionListener)

@@ -300,7 +300,7 @@ class CleanerSpec extends SparkSpec {
       Cleaner.clean(featureFrame(graft.core.RunSession.interpreted(spark))))
     // the stats probe plus the relationship aggregate, where the
     // sequential loop would scan once per validation boundary
-    assert(count == ActionCount(jobs = 2, executions = 2))
+    assert(count.jobs == 2 && count.executions == 2)
     Seq("vwap", "sma_close_3").foreach { c =>
       val info = res.report.columnsImputed(c)
       assert(info.method == "normal_distribution")

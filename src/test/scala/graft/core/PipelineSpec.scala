@@ -7,13 +7,15 @@ import java.util.Locale
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions.{col, lit, timestamp_seconds, when}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.{ActionCount, SparkSpec}
-import graft.ingest.{ApiRequest, ExecutionPlan}
+import graft.ingest.{ApiRequest, ExecutionPlan, Ingestor}
 import graft.integrate.{JoinEngine, ValidatorConfig}
 import graft.load.Loader
+import graft.transform.TransformPipeline
 
 /** End-to-end: two recorded AV payloads -> ingest -> union-collapse ->
   * clean+enrich+clean -> Derby load + JSON reports. The reference's
@@ -217,5 +219,72 @@ class PipelineSpec extends SparkSpec {
     assert(inCaller.sparkSession eq spark)
     assert(Plans.codegen(inCaller))
     assert(inRun.collect().toSet == inCaller.collect().toSet)
+  }
+
+  // ---- per-frame work side by side ----
+
+  test("every job of a run, its load and its CSV write carries the caller's job group") {
+    val dir = Files.createTempDirectory("graft_groups").toString
+    val group = "graft-pipeline-spec"
+    spark.sparkContext.setJobGroup(group, "job group attribution", interruptOnCancel = false)
+    try Seq("small" -> small, "wide" -> wide).foreach { case (kind, plan) =>
+      val (outputs, count) = ActionCount.of(spark) {
+        val p = new Pipeline(today = today)
+        val run = p.run(spark, plan, fetch, Some(recipe), keyFeatures,
+          loader = Some(new Loader(s"jdbc:derby:$dir/$kind;create=true")))
+        assert(run.load.get.status == "success")
+        Loader.writeCsv(run.outputs, s"$dir/$kind")
+        p.validator.joinEngine.cleanup()
+        p.transformPipeline.cleanup()
+        run.outputs
+      }
+      if (kind == "wide") assert(outputs.size == 2)
+      assert(count.jobs > 0)
+      assert(count.jobGroups.forall(_.contains(group)), s"$kind run: ${count.jobGroups}")
+    } finally spark.sparkContext.clearJobGroup()
+  }
+
+  test("ingest: a 3-request plan gives the frames, reports and failures of 3 one-request plans") {
+    val session = RunSession.interpreted(spark)
+    val requests = Seq(daily("AAPL", 30), daily("GOOG", 30), // GOOG has no payload
+      ApiRequest("alpha_vantage", "TREASURY_YIELD", Map("interval" -> "daily")))
+    def ingest(rs: Seq[ApiRequest]) =
+      new Ingestor(today).process(session, ExecutionPlan(rs), fetch, keyFeatures = keyFeatures)
+    val together = ingest(requests)
+    val alone = requests.map(r => ingest(Seq(r)))
+    assert(together.dataframes.size == 2)
+    assert(together.failedRequests.map(_.endpointName) == Seq("TIME_SERIES_DAILY"))
+    assert(sortedRows(together.dataframes) == sortedRows(alone.flatMap(_.dataframes)))
+    assert(together.validationReports == alone.flatMap(_.validationReports))
+    assert(together.failedRequests == alone.flatMap(_.failedRequests))
+  }
+
+  /** A price frame whose `close` nulls get random fills. */
+  private def priced(s: SparkSession, n: Int, shift: Int): DataFrame = {
+    val id = col("id")
+    s.range(0, n, 1, 3).select(
+      when(id % 2 === 0, "AAPL").otherwise("MSFT").as("ticker"),
+      timestamp_seconds(lit(1704067200L) + id * 86400).as("timestamp"),
+      (lit(100.0) + (id + shift) % 7).as("open"),
+      when(id % 5 === 3, lit(null)).otherwise(lit(101.0) + (id * 3 + shift) % 11).as("close"),
+      (lit(1000.0) + id * 10).as("volume"))
+  }
+
+  test("transform: two frames give the rows and reports of two single-frame runs") {
+    val session = RunSession.interpreted(spark)
+    val frames = Seq(priced(session, 40, 0), priced(session, 30, 3))
+    val threshold = Some(ValidatorConfig.balanced.columnDeleteThreshold)
+    val tp = new TransformPipeline()
+    try {
+      val (outputs, report) = tp.run(frames, Some(recipe), threshold)
+      val alone = frames.map(f => tp.run(Seq(f), Some(recipe), threshold))
+      assert(report.results.forall(
+        _.cleaning.columnsImputed.get("close").exists(_.method == "normal_distribution")))
+      assert(sortedRows(outputs) == sortedRows(alone.flatMap(_._1)))
+      assert(report.results == alone.zipWithIndex.map { case ((_, r), i) =>
+        r.results.head.copy(index = i)
+      })
+      assert(report.copy(results = Nil) == alone.head._2.copy(inputCount = 2, results = Nil))
+    } finally tp.cleanup()
   }
 }

@@ -1,5 +1,6 @@
 package graft.integrate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -208,5 +209,40 @@ class JoinEngineSpec extends SparkSpec {
     val (outputs, ops, any) = e2.stage1(Seq(a, b, c), denominator = 2L)
     assert(any)
     assert(outputs.size == 2) // a+b joined, c passes through
+  }
+
+  test("pad constant, pair guard and scored pairs on a frame pair with missing columns") {
+    import spark.implicits._
+    // sums whose value depends on the order they are added in, over
+    // several partitions
+    val df1 = (1 to 40).map(i => (i / 3.0, i * 0.1 + 1.0 / 7, (i % 5) * 1.1)).toDF("p", "q", "s")
+    val df2 = (1 to 30).map(i => (i * 0.3 + 1.0 / 3, i / 7.0)).toDF("q", "r")
+    assert(df1.rdd.getNumPartitions > 1)
+    // the grand mean as one aggregate of the column means, mean of means
+    def grand(df: DataFrame, cols: Seq[String]): Double = {
+      val means = df.agg(avg(col(cols.head)).cast("double"),
+        cols.tail.map(c => avg(col(c)).cast("double")): _*).collect()(0)
+      cols.indices.map(means.getDouble).reduceLeft(_ + _) / cols.size
+    }
+    val g1 = grand(df1, Seq("p", "q", "s"))
+    val g2 = grand(df2, Seq("q", "r"))
+    val Some((all, a1, a2)) = engine.alignColumns(df1, df2)
+    assert(all == Seq("p", "q", "s", "r"))
+    assert(a1.select("r").distinct().as[Double].collect().toSeq == Seq(g1))
+    assert(a2.select("p").distinct().as[Double].collect().toSeq == Seq(g2))
+    assert(a2.select("s").distinct().as[Double].collect().toSeq == Seq(g2))
+
+    // the guard admits exactly n1 x n2 pairs
+    val exact = new JoinEngine(ValidatorConfig.balanced, maxPairs = 40L * 30L)
+    val scored = exact.scoredPairs(df1, df2).collect().toSet
+    val ex = intercept[IllegalArgumentException] {
+      new JoinEngine(ValidatorConfig.balanced, maxPairs = 40L * 30L - 1).scoredPairs(df1, df2)
+    }
+    assert(ex.getMessage.contains("40 x 30 pairs"))
+    // scoring pads like the sides padded by hand
+    val byHand = exact.scoredPairs(df1.withColumn("r", lit(g1)),
+      df2.withColumn("p", lit(g2)).withColumn("s", lit(g2))).collect().toSet
+    assert(scored.nonEmpty)
+    assert(scored == byHand)
   }
 }

@@ -2,7 +2,8 @@ package graft.load
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{ActionCount, SparkSpec}
+import graft.core.RunSession
 
 class LoaderSpec extends SparkSpec {
   import spark.implicits._
@@ -69,5 +70,26 @@ class LoaderSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(paths.head)
     assert(back.count() == 2)
     assert(back.columns.toSeq == Seq("id", "tag"))
+  }
+
+  test("fresh and append loads verify each table's count in the database, in input order") {
+    val loader = new Loader(freshDb())
+    val session = RunSession.interpreted(spark)
+    val frames = Seq(3L, 7L, 5L).map(n => session.range(n).selectExpr("id", "id * 0.5 AS v"))
+    val tables = Seq("t_a", "t_b", "t_c")
+    def loaded(): (LoadReport, ActionCount) =
+      ActionCount.of(spark)(loader.loadJdbc(session, frames, Some(tables)))
+    val (fresh, freshCount) = loaded()
+    assert(fresh.status == "success")
+    assert(fresh.results.map(r => (r.index, r.tableName, r.action, r.tableExisted)) ==
+      Seq((0, "t_a", "create", false), (1, "t_b", "create", false), (2, "t_c", "create", false)))
+    assert(fresh.results.map(_.rowsLoaded) == Seq(3L, 7L, 5L))
+    val (appended, appendCount) = loaded()
+    assert(appended.status == "success")
+    assert(appended.results.map(r => (r.action, r.tableExisted)) == Seq.fill(3)(("append", true)))
+    assert(appended.results.map(_.rowsLoaded) == Seq(6L, 14L, 10L))
+    // per frame, the frame's count and the write: the database does
+    // the existence check and the before/after counts
+    assert(freshCount.jobs == 6 && appendCount.jobs == 6)
   }
 }
