@@ -1,13 +1,15 @@
 package graft.core
 
-import java.util.concurrent.{CompletionException, Executors}
+import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.util.{Failure, Try}
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.internal.SQLConf
+
+import graft.integrate.ValidatorConfig
 
 /** Run-scoped sessions that execute without code generation and
   * plan every action as a single Spark job.
@@ -80,11 +82,17 @@ object RunSession {
   def compiled(df: DataFrame): DataFrame =
     Option(callers.get(df.sparkSession)).fold(df)(SessionBridge.rebind(df, _))
 
+  /** The most tasks one [[parMap]] call runs at once: the validator's
+    * `maxDataframes`, the most frames a run carries past validation. A
+    * plan may list more requests than that, and every request's parse
+    * plans and runs Spark jobs, so ingest is held to the same width.
+    */
+  val maxParallel: Int = ValidatorConfig.balanced.maxDataframes
+
   /** Daemon threads made on demand, with no cap: a task that itself
-    * calls [[parMap]] can never wait for a thread that waits on it. A
-    * call's fan-out is its input count: a run's fetched payloads, or
-    * the at most `maxDataframes` frames the validator passes on. Idle
-    * threads exit after a minute.
+    * calls [[parMap]] can never wait for a thread that waits on it.
+    * Each call adds at most `maxParallel - 1` threads. Idle threads
+    * exit after a minute.
     */
   private val pool = {
     val ids = new AtomicInteger
@@ -95,29 +103,39 @@ object RunSession {
     }
   }
 
-  /** `items.map(f)`, with every item's `f` running at the same time.
+  /** `items.map(f)`, with up to [[maxParallel]] items' `f` running at
+    * the same time.
     *
-    * Each task runs with the calling thread's Spark thread-locals and
-    * `session` (read only when tasks start) as its active session, so
-    * it plans under that session's conf and its jobs carry the caller's
-    * job group, description and scheduler pool. A one-item input runs
-    * on the calling thread. Results come back in input order. The call
-    * returns once every task has finished, and then rethrows the first
-    * failure in input order, so no job outlives it. `f` must not touch
-    * state shared between items; the caller updates such state from
-    * the results.
+    * The calling thread and up to `maxParallel - 1` pool threads each
+    * take the next item until none is left. Every task runs with the
+    * calling thread's Spark thread-locals and `session` as its active
+    * session, so it plans under that session's conf and its jobs carry
+    * the caller's job group, description and scheduler pool. A one-item
+    * input thus runs on the calling thread. Results come back in input
+    * order. The call returns once every task has finished, and then
+    * rethrows the first failure in input order, so no job outlives it.
+    * `f` must not touch state shared between items; the caller updates
+    * such state from the results.
     */
-  def parMap[A, B](session: => SparkSession, items: Seq[A])(f: A => B): Seq[B] =
-    if (items.sizeIs <= 1) items.map(f)
-    else {
-      val active = session
-      // the body never throws, so the worker's thread-locals are restored
-      val tasks = items.toVector.map { a =>
-        SessionBridge.withThreadLocalCaptured(active, pool)(Try(f(a)))
+  def parMap[A, B](session: SparkSession, items: Seq[A])(f: A => B): Seq[B] = {
+    val in = items.toVector
+    val out = new Array[Try[B]](in.size)
+    val next = new AtomicInteger
+    // never throws a non-fatal error, so a worker's thread-locals are restored
+    def work(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < in.size) {
+        out(i) = Try(f(in(i)))
+        i = next.getAndIncrement()
       }
-      val outcomes = tasks.map { t =>
-        Try(t.join()).recoverWith { case e: CompletionException => Failure(e.getCause) }.flatten
-      }
-      outcomes.map(_.get)
     }
+    val helpers = Vector.fill(math.min(in.size, maxParallel) - 1) {
+      SessionBridge.withThreadLocalCaptured(session, pool)(work())
+    }
+    try SessionBridge.withActive(session)(work())
+    finally helpers.foreach(h => Try(h.join()))
+    // a helper that died of a fatal error left its item unset
+    helpers.foreach(_.join())
+    out.toSeq.map(_.get)
+  }
 }

@@ -97,28 +97,34 @@ class JoinEngine(
     val n2 = numericCols(df2)
     if (n1.isEmpty || n2.isEmpty) return None
     val all = n1 ++ n2.filterNot(n1.contains)
-    val Seq((_, p1), (_, p2)) = countAndPad(Seq(df1 -> n1, df2 -> n2), all)
+    val Seq((_, p1), (_, p2)) = countAndPad(Seq(df1 -> n1, df2 -> n2), all, counted = false)
     Some((all, p1, p2))
   }
 
-  /** Each side's row count, and the side with the columns of `all` it
-    * lacks padded with its grand mean — the mean of its numeric column
-    * means, matching pandas `df.mean().mean()` (join.py:77-86). One
-    * aggregate per side, both sides at once ([[RunSession.parMap]]).
+  /** Each side with the columns of `all` it lacks padded with its grand
+    * mean — the mean of its numeric column means, matching pandas
+    * `df.mean().mean()` (join.py:77-86) — and, if `counted`, its row
+    * count. One aggregate per side that needs either, none for a side
+    * that needs neither; both sides at once ([[RunSession.parMap]]).
     * Extra non-member columns (the row-id stamp) ride along untouched.
     */
-  private def countAndPad(sides: Seq[(DataFrame, Seq[String])], all: Seq[String])
-      : Seq[(Long, DataFrame)] =
+  private def countAndPad(sides: Seq[(DataFrame, Seq[String])], all: Seq[String],
+                          counted: Boolean): Seq[(Option[Long], DataFrame)] =
     RunSession.parMap(sides.head._1.sparkSession, sides) { case (df, own) =>
       val missing = all.filterNot(own.contains)
       val means = if (missing.isEmpty) Nil else own.map(c => avg(col(c)).cast(DoubleType))
-      val stats = df.agg(count(lit(1)), means: _*).collect()(0)
-      val padded = if (missing.isEmpty) df else {
-        // mean-of-means in column order, left-associated like np sum
-        val grand = own.indices.map(i => stats.getAs[Double](i + 1)).reduceLeft(_ + _) / own.size
-        missing.foldLeft(df)((d, c) => d.withColumn(c, lit(grand)))
+      val aggs = (if (counted) Seq(count(lit(1))) else Nil) ++ means
+      if (aggs.isEmpty) None -> df
+      else {
+        val stats = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+        val first = if (counted) 1 else 0
+        val padded = if (missing.isEmpty) df else {
+          // mean-of-means in column order, left-associated like np sum
+          val grand = own.indices.map(i => stats.getAs[Double](first + i)).reduceLeft(_ + _) / own.size
+          missing.foldLeft(df)((d, c) => d.withColumn(c, lit(grand)))
+        }
+        Option.when(counted)(stats.getLong(0)) -> padded
       }
-      stats.getLong(0) -> padded
     }
 
   /** J2+J3+J4 over pre-stamped sides: align, cast, cross-join with
@@ -137,7 +143,8 @@ class JoinEngine(
 
     // maxPairs enforcement + broadcast-side selection need both
     // cardinalities. Each side's one aggregate also fills its cache.
-    val Seq((n1, padded1), (n2, padded2)) = countAndPad(Seq(s1 -> own1, s2 -> own2), all)
+    val Seq((Some(n1), padded1), (Some(n2), padded2)) =
+      countAndPad(Seq(s1 -> own1, s2 -> own2), all, counted = true)
     if (n1 * n2 > maxPairs)
       throw new IllegalArgumentException(
         s"refusing cross join: $n1 x $n2 pairs exceeds maxPairs=$maxPairs")

@@ -63,9 +63,12 @@ class Loader(jdbcUrl: String, props: Properties = new Properties()) {
     require(names.size == dataframes.size,
       s"Number of table names (${names.size}) must match number of DataFrames (${dataframes.size})")
 
-    val results = RunSession.parMap(spark, dataframes.zip(names).zipWithIndex) {
-      case ((df, table), idx) => load(df, table, idx, ifExists)
-    }
+    // frames bound for one table load one after another, so each
+    // verify counts only its own write
+    val byTable = dataframes.zip(names).zipWithIndex.groupBy(_._1._2).values.toSeq
+    val results = RunSession.parMap(spark, byTable) {
+      _.map { case ((df, table), idx) => load(df, table, idx, ifExists) }
+    }.flatten.sortBy(_.index)
 
     val errors = results.count(_.status == "error")
     val loaded = results.count(_.status == "success")
@@ -133,7 +136,8 @@ object Loader {
     */
   def writeCsv(dataframes: Seq[DataFrame], outDir: String,
                singleFile: Boolean = true): Seq[String] =
-    RunSession.parMap(dataframes.head.sparkSession, dataframes.zipWithIndex) { case (df, i) =>
+    if (dataframes.isEmpty) Nil
+    else RunSession.parMap(dataframes.head.sparkSession, dataframes.zipWithIndex) { case (df, i) =>
       val path = s"$outDir/result_$i.csv"
       val w = if (singleFile) df.coalesce(1) else df
       w.write.mode("overwrite").option("header", "true").csv(path)

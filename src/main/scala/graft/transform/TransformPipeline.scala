@@ -64,9 +64,10 @@ class TransformPipeline(
   def run(dataframes: Seq[DataFrame], dslRecipe: Option[String],
           columnDeleteThreshold: Option[Double] = None)
       : (Seq[DataFrame], TransformReport) = {
-    val done = RunSession.parMap(dataframes.head.sparkSession, dataframes.zipWithIndex) {
-      case (df, idx) => Try(transform(df, idx, dslRecipe, columnDeleteThreshold))
-    }
+    val done = if (dataframes.isEmpty) Nil
+      else RunSession.parMap(dataframes.head.sparkSession, dataframes.zipWithIndex) {
+        case (df, idx) => Try(transform(df, idx, dslRecipe, columnDeleteThreshold))
+      }
     // a frame's post-clean cache is kept for cleanup() even when
     // another frame failed
     cachedResults ++= done.collect { case Success((post, _)) => post }

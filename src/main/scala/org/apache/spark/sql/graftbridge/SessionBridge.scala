@@ -26,6 +26,9 @@ object SessionBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 
+  /** `body` on the calling thread with `spark` as the active session. */
+  def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
+
   /** `body` on `exec` with the calling thread's Spark thread-locals:
     * `spark` as the active session (and so its SQL conf), and the
     * caller's local properties (job group, description, scheduler

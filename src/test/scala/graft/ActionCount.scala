@@ -6,16 +6,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.StorageBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** SQL executions (actions) run, and the `spark.jobGroup.id` of each
+/** SQL executions (actions) run, the `spark.jobGroup.id` of each
   * Spark job submitted (None for a job outside any group), in start
-  * order.
+  * order, and the most jobs that were running at once.
   */
-final case class ActionCount(executions: Int, jobGroups: Seq[Option[String]]) {
+final case class ActionCount(executions: Int, jobGroups: Seq[Option[String]], peakJobs: Int) {
   def jobs: Int = jobGroups.size
 }
 
@@ -28,9 +28,15 @@ object ActionCount {
   def of[A](spark: SparkSession)(f: => A): (A, ActionCount) = {
     val jobGroups = new ConcurrentLinkedQueue[Option[String]]
     val executions = new AtomicInteger
+    // the listener bus delivers job events one at a time, in order
+    var running, peak = 0
     val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         jobGroups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
+        running += 1
+        peak = peak max running
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running -= 1
     }
     val executionListener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -45,7 +51,7 @@ object ActionCount {
     try {
       val result = f
       StorageBridge.drainListeners(sc)
-      (result, ActionCount(executions.get, jobGroups.asScala.toSeq))
+      (result, ActionCount(executions.get, jobGroups.asScala.toSeq, peak))
     } finally {
       sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(executionListener)

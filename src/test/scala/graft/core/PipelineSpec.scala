@@ -259,6 +259,18 @@ class PipelineSpec extends SparkSpec {
     assert(together.failedRequests == alone.flatMap(_.failedRequests))
   }
 
+  test("ingest: a plan longer than maxParallel parses at most maxParallel payloads at once") {
+    val session = RunSession.interpreted(spark)
+    val requests = Seq.tabulate(RunSession.maxParallel * 2 + 5)(i => daily("AAPL", 10 + i))
+    val (together, count) = ActionCount.of(spark)(
+      new Ingestor(today).process(session, ExecutionPlan(requests), fetch, keyFeatures = keyFeatures))
+    assert(together.dataframes.size == requests.size)
+    assert(together.failedRequests.isEmpty)
+    assert(count.peakJobs <= RunSession.maxParallel, s"peak ${count.peakJobs} jobs")
+    // plan order: each frame is trimmed to its own request's limit
+    assert(together.dataframes.map(_.count()) == requests.indices.map(i => 10L + i))
+  }
+
   /** A price frame whose `close` nulls get random fills. */
   private def priced(s: SparkSession, n: Int, shift: Int): DataFrame = {
     val id = col("id")

@@ -25,19 +25,29 @@ class RunSessionSpec extends SparkSpec {
 
   test("parMap tasks run in the run session, with its confs and the caller's job group") {
     val run = RunSession.interpreted(spark)
-    val caller = Thread.currentThread()
     val seen = inGroup(RunSession.parMap(run, Seq(1, 2, 3)) { i =>
       val conf = SQLConf.get
-      (Thread.currentThread() ne caller,
-        SparkSession.active eq run,
+      (SparkSession.active eq run,
         conf.wholeStageEnabled, conf.adaptiveExecutionEnabled,
         conf.getConfString(SQLConf.CODEGEN_FACTORY_MODE.key),
         spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
         run.range(i).count())
     })
-    assert(seen == Seq(1, 2, 3).map(i => (true, true, false, false, "NO_CODEGEN", group, i.toLong)))
+    assert(seen == Seq(1, 2, 3).map(i => (true, false, false, "NO_CODEGEN", group, i.toLong)))
     // the caller's own thread-locals are untouched
     assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null)
+    assert(SparkSession.active eq spark)
+  }
+
+  test("parMap runs at most maxParallel items at once") {
+    val running, peak = new AtomicInteger
+    val n = RunSession.maxParallel * 3
+    val out = RunSession.parMap(spark, 0 until n) { i =>
+      peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      try { Thread.sleep(20); i } finally running.decrementAndGet()
+    }
+    assert(out == (0 until n))
+    assert(peak.get > 1 && peak.get <= RunSession.maxParallel, s"peak ${peak.get}")
   }
 
   test("parMap rethrows the first failure in input order, after every task has finished") {
@@ -56,9 +66,12 @@ class RunSessionSpec extends SparkSpec {
     assert(finished.get == 4)
   }
 
-  test("parMap runs a one-item input on the calling thread") {
+  test("parMap runs a one-item input on the calling thread, in the given session") {
+    val run = RunSession.interpreted(spark)
     val caller = Thread.currentThread()
-    assert(RunSession.parMap(spark, Seq(1))(_ => Thread.currentThread()) == Seq(caller))
+    assert(RunSession.parMap(run, Seq(1))(_ => (Thread.currentThread(), SparkSession.active)) ==
+      Seq((caller, run)))
+    assert(SparkSession.active eq spark)
     assert(RunSession.parMap(spark, Seq.empty[Int])(identity).isEmpty)
   }
 }

@@ -3,7 +3,7 @@ package graft.integrate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ActionCount, SparkSpec}
 
 class JoinEngineSpec extends SparkSpec {
 
@@ -58,6 +58,17 @@ class JoinEngineSpec extends SparkSpec {
     assert(a1.select("r").distinct().collect().map(_.getDouble(0)).toSeq == Seq(2.5))
     // df2 grand mean = mean(mean(q), mean(r)) = mean(20, 30) = 25.0
     assert(a2.select("p").distinct().collect().map(_.getDouble(0)).toSeq == Seq(25.0))
+  }
+
+  test("alignColumns runs one aggregate per side with columns to pad, none otherwise") {
+    import spark.implicits._
+    val df1 = Seq((1.0, 2.0), (3.0, 4.0)).toDF("p", "q")
+    val df2 = Seq((10.0, 20.0)).toDF("q", "r")
+    val (same, sameCount) = ActionCount.of(spark)(engine.alignColumns(df1, df1))
+    assert(same.map(_._1) == Some(Seq("p", "q")))
+    assert(sameCount.jobs == 0 && sameCount.executions == 0)
+    val (_, padCount) = ActionCount.of(spark)(engine.alignColumns(df1, df2))
+    assert(padCount.executions == 2)
   }
 
   test("identical frames score above threshold and join 1:1 under caps") {

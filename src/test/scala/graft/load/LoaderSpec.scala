@@ -92,4 +92,14 @@ class LoaderSpec extends SparkSpec {
     // the existence check and the before/after counts
     assert(freshCount.jobs == 6 && appendCount.jobs == 6)
   }
+
+  test("frames bound for one table load one after another, each verify counting its own write") {
+    val loader = new Loader(freshDb())
+    val session = RunSession.interpreted(spark)
+    val frames = Seq(3L, 4L, 2L).map(n => session.range(n).selectExpr("id"))
+    val report = loader.loadJdbc(session, frames, Some(Seq("t_same", "t_other", "t_same")))
+    assert(report.status == "success")
+    assert(report.results.map(r => (r.index, r.tableName, r.action, r.rowsLoaded)) ==
+      Seq((0, "t_same", "create", 3L), (1, "t_other", "create", 4L), (2, "t_same", "append", 5L)))
+  }
 }
