@@ -1,7 +1,5 @@
 package graft
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-round benchmark main: runs every catalog query on
@@ -44,61 +42,22 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // Scale-rehearsal knob: shrink file splits so scan parallelism
-    // tracks data volume when the whole SF fits in one row group —
-    // without it a 10x corpus still scans as one task and every
-    // per-task cost reads as 10x (a local-file artifact, not a plan
-    // property). Unset = Spark's default 128 MB.
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(b => builder.config("spark.sql.files.maxPartitionBytes", b))
-    // A/B knob for the corpus-sized-persist policy (see PersistPolicy):
-    // 0 forces the recompute path everywhere
-    sys.env.get("SPARK_GRAFT_PERSIST_MAX_BYTES")
-      .foreach(b => builder.config(graft.llmdata.PersistPolicy.confKey, b))
-    // A/B knob for session-conf hypothesis tests (r19 optimization
-    // round): semicolon-separated k=v pairs layered over the defaults.
-    // Unset in driver runs — the shipped defaults live above.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      // skip empty tokens (trailing ';'); fail loudly on a pair with
-      // no '=' instead of an opaque MatchError (ADVICE r19 #5)
-      if (kv.trim.nonEmpty) kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_EXTRA_CONF token '$kv' is not k=v")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Installed before any query so every broadcast is tracked; the
-    // reset (BenchReset.resetOrFail) FAILS the run if RDD blocks ever
-    // survive it — harness contamination can't silently return
-    // (VERDICT r8 §next-8 + advice #3).
-    val tracker = BenchReset.install(spark)
-    // Optional comma-separated name filter for targeted profiling.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // JVM/codegen/parquet-footer warmup so the first timed query isn't
-    // charged for one-time JIT + scan initialization (standard bench
-    // hygiene; per-query numbers then reflect steady-state latency).
-    try SparkEntry.queries("w_sma")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // Full inter-query storage reset — see [[BenchReset]]. Fails the
-    // run (nonzero exit) if RDD blocks survive; polls broadcast blocks
-    // within the same bounded wait.
-    def resetStorage(): Unit = BenchReset.resetOrFail(spark, tracker)
-    resetStorage()
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    // Watchlist knob (r18 sweep-vs-isolated bar): force named entries
+    // into the isolated set regardless of noise/median rank, so a
+    // specific adjudication question (is X's sweep number contention?)
+    // is answered in the same artifact. Checked before the sweep.
+    val isoExtra = sys.env.get("SPARK_GRAFT_ISOLATED_EXTRA")
+      .map(ns => Harness.select(SparkEntry.queries, Some(Harness.names(ns))).map(_._1))
+      .getOrElse(Seq.empty)
+    val catalog = Harness.select(SparkEntry.queries, Harness.only).sortBy(_._1)
+    // The storage reset (BenchReset.resetOrFail) FAILS the run if RDD
+    // blocks ever survive it — harness contamination can't silently
+    // return (VERDICT r8 §next-8 + advice #3).
+    val session = Harness.open(defaultCpus = 4)
+    val spark = session.spark
+    session.warmup(sfDir)
+    import Harness.median
     // allTimes keeps EVERY repeat (VERDICT r10 §wrong-2): the side file
     // must let a reader separate noise from regression — a median of
     // 14.8 could be {14.8,14.8,14.9} (real) or {2.0,14.8,80}
@@ -115,8 +74,6 @@ object Bench {
     // median sees three different contention contexts, and the seed is
     // reported so any sweep is reproducible.
     val orderSeed = sys.env.getOrElse("SPARK_GRAFT_ORDER_SEED", "14").toInt
-    val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val timesByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
     // per-repeat codegen cost and Spark jobs (side file only): classes
     // Janino compiled, its compile seconds and the jobs the query
@@ -126,32 +83,22 @@ object Bench {
     val compileSByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val jobsByName = scala.collection.mutable.Map.empty[String, Vector[Double]]
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val jobCount = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobCount.incrementAndGet()
-    })
-    def jobs: Long = {
-      org.apache.spark.graftbridge.StorageBridge.drainListeners(spark.sparkContext)
-      jobCount.get
-    }
     (0 until repeat).foreach { r =>
       val order = new scala.util.Random(orderSeed.toLong * 1000 + r)
         .shuffle(catalog)
       order.foreach { case (name, fn) =>
-        val (compiles0, compileNs0, jobs0) = (compiles, CodeGenerator.compileTime, jobs)
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
+        val (compiles0, compileNs0, jobs0) =
+          (compiles, CodeGenerator.compileTime, session.counts().jobs)
+        val elapsed = Harness.timedNoop(fn(spark, sfDir)) { e =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
-        val elapsed = (System.nanoTime() - t0) / 1e9
         compilesByName(name) = compilesByName.getOrElse(name, Vector.empty) :+
           (compiles - compiles0).toDouble
         compileSByName(name) = compileSByName.getOrElse(name, Vector.empty) :+
           (CodeGenerator.compileTime - compileNs0) / 1e9
         jobsByName(name) = jobsByName.getOrElse(name, Vector.empty) :+
-          (jobs - jobs0).toDouble
-        resetStorage() // outside the timed region: next run starts clean
+          (session.counts().jobs - jobs0).toDouble
+        session.reset() // outside the timed region: next run starts clean
         timesByName(name) = timesByName.getOrElse(name, Vector.empty) :+ elapsed
       }
     }
@@ -234,12 +181,6 @@ object Bench {
     // sweep median far above its isolated median now reads as sweep
     // contention directly from BENCH_r{N}.json.
     val isoRepeat = sys.env.getOrElse("SPARK_GRAFT_ISOLATED_REPEAT", "3").toInt
-    // Watchlist knob (r18 sweep-vs-isolated bar): force named entries
-    // into the isolated set regardless of noise/median rank, so a
-    // specific adjudication question (is X's sweep number contention?)
-    // is answered in the same artifact.
-    val isoExtra = sys.env.get("SPARK_GRAFT_ISOLATED_EXTRA")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
     // top-by-median entries come FIRST so the 12-entry cap can never
     // truncate them (VERDICT r18 §next-3: multimodal_dct_phash_dedup
     // was a top-5 cost with no isolated row because 10 noisy entries
@@ -250,21 +191,17 @@ object Bench {
         .distinct.take(12) ++ isoExtra.filterNot(
           (byMedian.take(6).map(_._1) ++ noisyEntries.map(_._1))
             .distinct.take(12).toSet)
-    val isolated = isoTargets.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        resetStorage()
-        val ts = (0 until isoRepeat).map { _ =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] isolated $name failed: ${e.getMessage}")
-          }
-          val el = (System.nanoTime() - t0) / 1e9
-          resetStorage()
-          el
+    val isolated = isoTargets.map { name =>
+      val fn = SparkEntry.queries(name)
+      session.reset()
+      val ts = (0 until isoRepeat).map { _ =>
+        val el = Harness.timedNoop(fn(spark, sfDir)) { e =>
+          System.err.println(s"[bench] isolated $name failed: ${e.getMessage}")
         }
-        name -> median(ts)
+        session.reset()
+        el
       }
+      name -> median(ts)
     }
     val isolatedJson = if (isolated.isEmpty) ""
       else s""","isolated":${isolated.map { case (k, v) =>

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: dumps the formatted physical plan of the headline
   * queries to a file (dev tool backing PLANS.md — the written record
   * that each operator compiles to the plan we want at scale: pushed
@@ -16,7 +14,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("/tmp/plans.txt")
-    val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq(
+    val names = args.lift(2).map(Harness.names).getOrElse(Seq(
       "w_sma", "w_ema", "sc_balance_ratios", "clean_pipeline",
       "join_pair_kernel", "dedup_minhash_candidates", "ann_topk",
       "ann_ivf_topk", "dedup_embedding_cosine", "text_tokens_freq",
@@ -40,25 +38,16 @@ object Explain {
       "profile_join_fanout", "text_cluster_diversity", "text_heaps_fit",
       "text_bootstrap_by_source", "profile_join_hotkeys",
       "sample_epochs_report", "dedup_cluster_histogram"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Harness.select(SparkEntry.queries, Some(names))
+    val spark = Harness.open(defaultCpus = 4, logLevel = "ERROR").spark
     val out = new StringBuilder
-    names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        out.append(s"\n${"=" * 76}\n== $name\n${"=" * 76}\n")
-        try {
-          val df = fn(spark, sfDir)
-          out.append(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        } catch { case e: Throwable => out.append(s"ERROR: ${e.getMessage}\n") }
-      }
+    queries.foreach { case (name, fn) =>
+      out.append(s"\n${"=" * 76}\n== $name\n${"=" * 76}\n")
+      try {
+        val df = fn(spark, sfDir)
+        out.append(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      } catch { case e: Throwable => out.append(s"ERROR: ${e.getMessage}\n") }
     }
     Files.writeString(Paths.get(outFile), out.toString)
     println(s"wrote $outFile")

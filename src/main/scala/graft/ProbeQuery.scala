@@ -1,11 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-/** Per-query cost-anatomy probe (optimization-round dev tool, the
-  * [[ProbeV6]] convention): for each named catalog entry, splits the
-  * bench's timed region into
+/** Per-query cost-anatomy probe (optimization-round dev tool): for
+  * each named catalog entry, splits the bench's timed region into
   *
   *   construct — `fn(spark, sfDir)` (plan building; includes any eager
   *               collect jobs a query runs at construction time),
@@ -20,61 +16,29 @@ import org.apache.spark.sql.SparkSession
 object ProbeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(1).map(_.split(",").toSeq)
+    val names = args.lift(1).map(Harness.names)
       .getOrElse(Seq("curation_pipeline_v5"))
     val repeat = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // A/B knob: semicolon-separated k=v extra confs for hypothesis tests
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
-      // tolerate empty tokens; loud fail on a token without '='
-      if (kv.trim.nonEmpty) kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_PROBE_CONF token '$kv' is not k=v")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tracker = BenchReset.install(spark)
+    val queries = Harness.select(SparkEntry.queries, Some(names))
+    val session = Harness.open(defaultCpus = 32)
+    val spark = session.spark
+    session.warmup(sfDir)
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        tasks += s.stageInfo.numTasks
-      }
-    })
-
-    // session warmup (the bench's own convention)
-    try SparkEntry.queries("w_sma")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    BenchReset.resetOrFail(spark, tracker)
-
-    names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        (1 to repeat).foreach { r =>
-          jobs = 0; stages = 0; tasks = 0
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val t1 = System.nanoTime()
-          val cJobs = jobs
-          df.write.format("noop").mode("overwrite").save()
-          val t2 = System.nanoTime()
-          println(f"[probe] $name%-34s rep=$r construct=${(t1 - t0) / 1e9}%6.2f s " +
-            f"(jobs=$cJobs) execute=${(t2 - t1) / 1e9}%6.2f s " +
-            f"total_jobs=$jobs stages=$stages tasks=$tasks")
-          BenchReset.resetOrFail(spark, tracker)
-        }
+    queries.foreach { case (name, fn) =>
+      (1 to repeat).foreach { r =>
+        val c0 = session.counts()
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        val cJobs = (session.counts() - c0).jobs
+        val t2 = System.nanoTime()
+        Harness.noop(df)
+        val t3 = System.nanoTime()
+        val c = session.counts() - c0
+        println(f"[probe] $name%-34s rep=$r construct=${(t1 - t0) / 1e9}%6.2f s " +
+          f"(jobs=$cJobs) execute=${(t3 - t2) / 1e9}%6.2f s " +
+          f"total_jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
+        session.reset()
       }
     }
     spark.stop()

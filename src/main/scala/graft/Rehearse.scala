@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
@@ -152,28 +150,13 @@ object Rehearse {
     val tier = args.headOption.getOrElse("x1")
     require(Set("x1", "x10", "x100")(tier), s"tier must be x1|x10|x100: $tier")
     val outFile = args.lift(1).getOrElse("REHEARSAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_REHEARSE_TIMEOUT", "900").toInt
     val resume = sys.env.getOrElse("SPARK_GRAFT_RESUME", "1") == "1"
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(b => builder.config("spark.sql.files.maxPartitionBytes", b))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tracker = BenchReset.install(spark)
-
-    // JIT/codegen/footer warmup so the first timed entry isn't charged
-    // for one-time initialization (the Bench convention)
-    try SparkEntry.queries("w_sma")(spark, sfDirs("x1"))
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    BenchReset.resetOrFail(spark, tracker)
+    val catalog = Harness.select(QueryCatalog.entries.map(e => e.name -> e).toMap, Harness.only)
+      .sortBy(_._1).map(_._2)
+    val session = Harness.open(defaultCpus = 8)
+    val spark = session.spark
+    session.warmup(sfDirs("x1"))
 
     // Per-tier noop floor (VERDICT r19 §next-7): the median cost of a
     // REAL catalog micro-entry doing negligible data work — the
@@ -188,21 +171,14 @@ object Rehearse {
     // of the floor is reported `floor-bound`, never a scale cliff.
     val floor = {
       val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try SparkEntry.queries("w_sma")(spark, sfDirs("x1"))
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val t = (System.nanoTime() - t0) / 1e9
-        BenchReset.resetOrFail(spark, tracker)
+        val t = Harness.timedNoop(SparkEntry.queries("w_sma")(spark, sfDirs("x1")))(_ => ())
+        session.reset()
         t
-      }.sorted
-      math.round(ts(1) * 100.0) / 100.0
+      }
+      math.round(Harness.median(ts) * 100.0) / 100.0
     }
     writeFloor(tier, floor)
     println(s"[rehearse] __floor $tier=$floor")
-
-    val catalog = QueryCatalog.entries.sortBy(_.name)
-      .filter(e => only.forall(_.contains(e.name)))
 
     catalog.foreach { e =>
       val existing = readRows(outFile)
@@ -219,7 +195,7 @@ object Rehearse {
           case JString(s) => s
         }
         val update = measure(spark, e, tier, timeoutSec, knownSeries)
-        BenchReset.resetOrFail(spark, tracker)
+        session.reset()
         writeRow(outFile, e.name, update)
         val shown = update.map { case (k, v) => s"$k=${JsonMethods.compact(JsonMethods.render(v))}" }
           .mkString(" ")
@@ -274,26 +250,19 @@ object Rehearse {
 
   private def timeEntry(spark: SparkSession, e: CatalogEntry, dir: String,
                         timeoutSec: Int, tier: String): Map[String, JValue] = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    spark.sparkContext.setJobGroup(s"rehearse-${e.name}",
-      s"rehearse ${e.name} $tier", interruptOnCancel = true)
     val t0 = System.nanoTime()
-    val fut = Future(Try {
-      e.query(spark, dir).write.format("noop").mode("overwrite").save()
-    })
-    val res = Try(Await.result(fut, timeoutSec.seconds)) match {
-      case Success(Success(_)) =>
+    Harness.withTimeout(spark, timeoutSec, s"rehearse ${e.name} $tier") {
+      Harness.noop(e.query(spark, dir))
+    } match {
+      case Some(Success(_)) =>
         val t = (System.nanoTime() - t0) / 1e9
         Map(tier -> JDouble(math.round(t * 100.0) / 100.0))
-      case Success(Failure(ex)) =>
+      case Some(Failure(ex)) =>
         Map(s"${tier}_status" -> JString(
           s"error: ${Option(ex.getMessage).getOrElse(ex.toString).take(200)}"))
-      case Failure(_) =>
-        spark.sparkContext.cancelJobGroup(s"rehearse-${e.name}")
+      case None =>
         Map(s"${tier}_status" -> JString(s"timeout: > $timeoutSec s"))
     }
-    spark.sparkContext.clearJobGroup()
-    res
   }
 
   /** Recompute decade ratios + verdicts over the merged artifact.

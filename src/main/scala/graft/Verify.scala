@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -30,16 +29,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tracker = BenchReset.install(spark)
+    val catalog = Harness.select(SparkEntry.queries, Harness.only).sortBy(_._1)
+    val session = Harness.open(defaultCpus = 4)
+    val spark = session.spark
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -66,10 +58,8 @@ object Verify {
     def manifestLine(s: String): Unit = {
       manifest.write(s + "\n"); manifest.flush()
     }
-    manifestLine(s"""{"max_heap_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"cpus":$cpus,"sf_dir":${q(sfDir)},"n_queries":${SparkEntry.queries.size}}""")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    manifestLine(s"""{"max_heap_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"cpus":${session.cpus},"sf_dir":${q(sfDir)},"n_queries":${SparkEntry.queries.size}}""")
+    catalog
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         val err =
@@ -92,7 +82,7 @@ object Verify {
         // non-fatal reset failure: the hard-fail semantics matter for
         // Bench (a dirty store skews timings); here an aborted reset
         // must never truncate the correctness catalog mid-run.
-        try BenchReset.resetOrFail(spark, tracker)
+        try session.reset()
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] reset warning: ${e.getMessage}")
         }

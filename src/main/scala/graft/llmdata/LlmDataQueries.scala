@@ -2015,7 +2015,7 @@ object LlmDataQueries {
     * over the kc-scaled graph — the fixed-kc sibling measured 90×
     * for 10× data (the occupancy² contract biting exactly as
     * documented); at kc∝n the wedge work rides bounded occupancy
-    * (RehearseKc `transitivity` point in PLANS.md).
+    * (the kc∝n `transitivity` rehearsal point in PLANS.md).
     */
   private val annGraphGlobalClusteringScaled = CatalogEntry(
     "ann_graph_global_clustering_scaled",

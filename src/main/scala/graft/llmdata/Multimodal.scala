@@ -825,8 +825,8 @@ object Multimodal {
       .select(col("media_id"), col("size_tier"), col("aspect_class"),
         col("__px").cast("long").as("px"),
         concat_ws("/", col("size_tier"), col("aspect_class")).as("__bucket"))
-    Sampling.groupedPrefixSums(m, groupCol = "__bucket", sizeCol = "px",
-        idCol = "media_id", cumCol = "__cum")
+    Sampling.groupedPrefixSums(m, groupCol = Some("__bucket"), sizeCol = "px",
+        order = Seq(col("media_id")), cumCol = "__cum")
       .select(col("media_id"), col("size_tier"), col("aspect_class"),
         col("px"),
         expr(s"(__cum - px) div ${pixelBudget}L").as("batch_id"),

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -175,103 +175,72 @@ object Sampling {
   /** Greedy token-budget subset selection ("fill a 1T-token training
     * budget with the best documents"): rank by `scoreCol` descending
     * (`tieCol` breaks ties), keep rows while the inclusive running
-    * token total stays within `budget`. The running total is a
-    * distributed two-pass prefix sum over the range-partitioned sort —
-    * per-partition token sums are collected (numPartitions longs),
-    * their exclusive scan is broadcast back as partition offsets, and
-    * the stamp pass is embarrassingly parallel. No global window, no
-    * single-partition stage, driver traffic is O(partitions).
+    * token total stays within `budget`. The running total is
+    * [[groupedPrefixSums]] over one group, so no global window and no
+    * single-partition stage; driver traffic is O(partitions).
     * Output: input columns + `cum_tokens`.
     *
     * `(scoreCol, tieCol)` MUST be a total order (in practice: tieCol
-    * unique, e.g. a doc id) — with duplicate keys the sort is not
-    * stable across partition recomputes, and the two passes could see
-    * different orders. Null/integer token values are read as
-    * `Number.longValue` with null counting 0 tokens.
+    * unique, e.g. a doc id). Null token values count 0.
     *
-    * EAGER-EXECUTION CONTRACT: this call runs its Spark jobs (the
-    * sort, the per-partition sums, and a `localCheckpoint(eager =
-    * true)` of the stamped result) at call time, not at first action —
-    * the returned frame is already materialized. That is deliberate:
-    * the two prefix-sum passes must observe the SAME sort order, and
-    * pinning the result lets the shared sorted frame be unpersisted
-    * here instead of leaking until the next cache clear. Consequences
-    * for callers: (a) composing further lazy plan on the result is
-    * fine, but the selection itself cannot be deferred or re-optimized
-    * into a larger plan; (b) a `localCheckpoint` is non-reliable — its
-    * blocks live on executors, so on executor loss the checkpointed
-    * partitions are unrecoverable and downstream actions fail rather
-    * than recompute. Callers needing laziness or lineage-based
-    * recovery should persist `docs` themselves and inline the window
-    * variant instead.
+    * Same eager-execution contract as [[groupedPrefixSums]]: the
+    * ranking runs at call time and is pinned by a non-reliable
+    * `localCheckpoint`, so the selection cannot be deferred or
+    * re-optimized into a larger plan; composing further lazy plan on
+    * the result is fine.
     */
   def selectByTokenBudget(docs: DataFrame, scoreCol: String, tokenCol: String,
-                          tieCol: String, budget: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val spark = docs.sparkSession
-    // persisted so the sums pass and the stamp pass share one sort
-    val sorted = docs.orderBy(col(scoreCol).desc, col(tieCol)).persist()
-    val tokIdx = sorted.schema.fieldIndex(tokenCol)
-    def tok(r: Row): Long =
-      if (r.isNullAt(tokIdx)) 0L else r.getAs[Number](tokIdx).longValue()
-    val rdd = sorted.rdd
-    val partSums = rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        var s = 0L; it.foreach(r => s += tok(r))
-        Iterator.single(i -> s)
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _) // exclusive prefix per partition
-    val bc = spark.sparkContext.broadcast(offsets)
-    val stamped = rdd.mapPartitionsWithIndex { (i, it) =>
-      var cum = bc.value(i)
-      it.map { r => cum += tok(r); Row.fromSeq(r.toSeq :+ cum) }
-    }
-    val schema = sorted.schema.add("cum_tokens", LongType, nullable = false)
-    val out = spark.createDataFrame(stamped, schema)
+                          tieCol: String, budget: Long): DataFrame =
+    groupedPrefixSums(docs, groupCol = None, sizeCol = tokenCol,
+        order = Seq(col(scoreCol).desc, col(tieCol)), cumCol = "cum_tokens")
       .filter(col("cum_tokens") <= budget)
-      .localCheckpoint(true)
-    sorted.unpersist(false)
-    out
-  }
 
-  /** Per-GROUP distributed prefix sums — [[selectByTokenBudget]]'s
-    * two-pass machinery generalized to a grouped running total: rows
-    * are range-sorted on (group, id) so each group occupies a
-    * contiguous partition span, pass 1 collects per-(partition,
-    * group) sums (bounded: with range contiguity that is ≤ partitions
-    * + groups rows on the driver), the driver scans them in partition
-    * order to the exclusive offset each (partition, group) cell
-    * starts from, and pass 2 stamps the inclusive running sum with
-    * the broadcast offsets — no per-group single-task window, which
-    * is what `Window.partitionBy(group)` would degenerate to when a
-    * bucket holds a billion rows.
+  /** Per-GROUP distributed prefix sums: rows are range-sorted on
+    * (group, `order`) so each group occupies a contiguous partition
+    * span, pass 1 collects per-(partition, group) sums (bounded: with
+    * range contiguity that is ≤ partitions + groups rows on the
+    * driver), the driver scans them in partition order to the
+    * exclusive offset each (partition, group) cell starts from, and
+    * pass 2 stamps the inclusive running sum with the broadcast
+    * offsets — no global window and no per-group single-task window,
+    * which is what `Window.partitionBy(group)` would degenerate to
+    * when a bucket holds a billion rows. With no `groupCol` the whole
+    * frame is one group.
     *
-    * Same materialization contract as [[selectByTokenBudget]]: the
-    * result is pinned with a non-reliable `localCheckpoint` so both
-    * passes observe one sort order.
+    * `order` MUST be a total order within a group (in practice: end
+    * on a unique id) — with duplicate keys the sort is not stable
+    * across partition recomputes. Null sizes count 0.
+    *
+    * EAGER-EXECUTION CONTRACT: the sort, the per-partition sums and a
+    * `localCheckpoint(eager = true)` of the stamped result run at
+    * call time, so both passes observe one sort order and the shared
+    * sorted frame is unpersisted here. The checkpoint is non-reliable:
+    * its blocks live on executors, and on executor loss downstream
+    * actions fail rather than recompute.
     *
     * Output: input columns + `cumCol` (inclusive running `sizeCol`
-    * total within the row's group, ordered by `idCol`).
+    * total within the row's group, in `order`).
     */
-  def groupedPrefixSums(items: DataFrame, groupCol: String, sizeCol: String,
-                        idCol: String, cumCol: String): DataFrame = {
+  def groupedPrefixSums(items: DataFrame, groupCol: Option[String], sizeCol: String,
+                        order: Seq[Column], cumCol: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
     val spark = items.sparkSession
+    // persisted so the sums pass and the stamp pass share one sort
+    val keys = groupCol.map(col).toSeq ++ order
     val sorted = items
-      .repartitionByRange(col(groupCol), col(idCol))
-      .sortWithinPartitions(col(groupCol), col(idCol))
+      .repartitionByRange(keys: _*)
+      .sortWithinPartitions(keys: _*)
       .persist()
-    val gIdx = sorted.schema.fieldIndex(groupCol)
+    val gIdx = groupCol.map(sorted.schema.fieldIndex)
     val sIdx = sorted.schema.fieldIndex(sizeCol)
     def size(r: Row): Long =
       if (r.isNullAt(sIdx)) 0L else r.getAs[Number](sIdx).longValue()
     // prefix-disambiguated key: a NULL group and the literal string
     // "null" must not collapse into one running total (ADVICE r18 #3)
-    def group(r: Row): String =
-      if (r.isNullAt(gIdx)) "\u0000" else "v:" + String.valueOf(r.get(gIdx))
+    def group(r: Row): String = gIdx.fold("") { i =>
+      if (r.isNullAt(i)) "\u0000" else "v:" + String.valueOf(r.get(i))
+    }
     val rdd = sorted.rdd
     // pass 1: per-(partition, group) sums, group order preserved
     val partGroupSums: Array[(Int, Seq[(String, Long)])] = rdd

@@ -19,7 +19,7 @@ class Round19PackSpec extends SparkSpec {
     val items = (0L until 1000L).map(i => ("big", i, i % 7 + 1))
       .++((0L until 5L).map(i => ("tiny", i, i + 100L)))
       .toDF("bucket", "id", "sz")
-    val got = Sampling.groupedPrefixSums(items, "bucket", "sz", "id", "cum")
+    val got = Sampling.groupedPrefixSums(items, Some("bucket"), "sz", Seq(col("id")), "cum")
       .select("bucket", "id", "cum")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val want = items
@@ -34,7 +34,7 @@ class Round19PackSpec extends SparkSpec {
     // guard that the fixture above exercises the cross-partition offset
     // hand-off instead of degenerating to one partition per group
     val items = (0L until 1000L).map(i => ("big", i, 1L)).toDF("bucket", "id", "sz")
-    val stamped = Sampling.groupedPrefixSums(items, "bucket", "sz", "id", "cum")
+    val stamped = Sampling.groupedPrefixSums(items, Some("bucket"), "sz", Seq(col("id")), "cum")
     assert(stamped.rdd.getNumPartitions > 1)
     val nonEmpty = stamped.rdd
       .mapPartitions(it => Iterator.single(if (it.hasNext) 1 else 0))
