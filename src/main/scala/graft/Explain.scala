@@ -2,11 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Plan-audit main: dumps the formatted physical plan of the headline
-  * queries to a file (dev tool backing PLANS.md — the written record
-  * that each operator compiles to the plan we want at scale: pushed
-  * filters, pruned scans, broadcast sides, codegen spans, bounded
-  * exchanges).
+/** Plan-audit main: dumps, per catalog entry, the optimized logical
+  * plan and then the formatted physical plan to a file (dev tool
+  * backing PLANS.md — the written record that each operator compiles
+  * to the plan we want at scale: pushed filters, pruned scans,
+  * broadcast sides, codegen spans, bounded exchanges).
+  *
+  * The optimized logical plans are what `tools/plan_diff.py` compares
+  * between two dumps; AQE's physical plans differ run to run. The
+  * storage is reset between entries, so one entry's cache cannot
+  * rewrite the next entry's plan.
   *
   * Usage: runMain graft.Explain <sfDir> <outFile> [name,name,...]
   */
@@ -39,15 +44,17 @@ object Explain {
       "text_bootstrap_by_source", "profile_join_hotkeys",
       "sample_epochs_report", "dedup_cluster_histogram"))
     val queries = Harness.select(SparkEntry.queries, Some(names))
-    val spark = Harness.open(defaultCpus = 4, logLevel = "ERROR").spark
+    val session = Harness.open(defaultCpus = 4, logLevel = "ERROR")
+    val spark = session.spark
     val out = new StringBuilder
     queries.foreach { case (name, fn) =>
       out.append(s"\n${"=" * 76}\n== $name\n${"=" * 76}\n")
       try {
-        val df = fn(spark, sfDir)
-        out.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        val qe = fn(spark, sfDir).queryExecution
+        out.append(s"-- optimized logical plan\n${qe.optimizedPlan}\n-- physical plan\n")
+        out.append(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
       } catch { case e: Throwable => out.append(s"ERROR: ${e.getMessage}\n") }
+      session.reset()
     }
     Files.writeString(Paths.get(outFile), out.toString)
     println(s"wrote $outFile")

@@ -56,20 +56,10 @@ object Rehearse {
     * chain siblings measured through one representative.
     */
   val exemptions: Map[String, String] = {
-    val sampled = Seq("dedup_edit_verify", "dedup_graph_transitivity",
-      "dedup_method_agreement", "dedup_lsh_param_plan",
-      "dedup_minhash_width_plan", "dedup_source_matrix",
-      "dedup_threshold_sweep")
+    val sampled = graft.llmdata.LlmDataQueries.sampledBases
       .map(n => n -> s"quadratic-BY-CONTRACT audit spelling; ${n}_sampled carries the 100x row")
-    val fixedKc = Seq("ann_knn_graph" -> "ann_knn_graph_scaled",
-      "ann_knn_graph_learned" -> "ann_knn_graph_learned_scaled",
-      "ann_knn_graph_pq" -> "ann_knn_graph_scaled (same fixed-kc graph build; PQ scoring is per-candidate)",
-      "ann_knn_mutual" -> "ann_knn_mutual_scaled",
-      "ann_knn_pagerank" -> "ann_knn_pagerank_scaled",
-      "ann_graph_triangles" -> "ann_graph_triangles_scaled",
-      "ann_graph_global_clustering" -> "ann_graph_global_clustering_scaled",
-      "ann_label_prop" -> "ann_label_prop_scaled",
-      "ann_triplet_mining" -> "ann_triplet_mining_scaled")
+    val fixedKc = (graft.llmdata.LlmDataQueries.scaledBases.map(n => n -> s"${n}_scaled") :+
+      ("ann_knn_graph_pq" -> "ann_knn_graph_scaled (same fixed-kc graph build; PQ scoring is per-candidate)"))
       .map { case (n, s) => n ->
         s"occupancy^2-BY-CONTRACT at fixed kc (toy oracle config); $s carries the kc-grown 100x row" }
     val embQuad = Seq("dedup_embedding_cosine", "dedup_embedding_cross")

@@ -48,6 +48,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Not dumped: keeps JIT, codegen and session start-up out of the
+    // first entry's `sec`.
+    session.warmup(sfDir)
     // Crash-robust run manifest (round-16, after CORRECTNESS_r15 came
     // back `{}` despite all 254 dumps existing): one JSON line per
     // query with status/rows/seconds, flushed as it happens, plus a

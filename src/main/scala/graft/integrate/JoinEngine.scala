@@ -60,17 +60,9 @@ case class JoinOp(
   */
 class JoinEngine(
     config: ValidatorConfig = ValidatorConfig.balanced,
-    maxPairs: Long = 200_000_000L,
-    maxCandidates: Long = 5_000_000L,
-    broadcastBytes: Long = 64L << 20,
-    greedyCollectThreshold: Long = 1_000_000L) {
+    maxPairs: Long = 200_000_000L) {
 
   import JoinEngine._
-
-  /** Stamped frames cached during `checkCompatibility`; released via
-    * [[cleanup]] once the caller has consumed the joined outputs.
-    */
-  private val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
   /** Memo of pairwise compatibility results, keyed by frame object
     * identity (frames flow through the validator stages as the same
@@ -80,9 +72,12 @@ class JoinEngine(
   private val compatMemo =
     scala.collection.mutable.Map[(DataFrame, DataFrame), (Boolean, Double, Option[DataFrame])]()
 
+  /** Releases the stamped frames cached during `checkCompatibility`,
+    * once the caller has consumed the joined outputs.
+    */
   def cleanup(): Unit = {
-    cached.foreach(_.unpersist())
-    cached.clear()
+    stamped.values.foreach(_.unpersist())
+    stamped.clear()
     compatMemo.clear()
   }
 
@@ -387,9 +382,7 @@ class JoinEngine(
       // repartition changes the partial-agg merge order and shifts the
       // pad constant by an ulp, breaking oracle parity). The cross-join
       // stream side is repartitioned after packing instead.
-      val s = withRowId(df, name).persist()
-      cached += s
-      s
+      withRowId(df, name).persist()
     })
 
   private def numericCols(df: DataFrame): Seq[String] =
@@ -397,6 +390,17 @@ class JoinEngine(
 }
 
 object JoinEngine {
+
+  /** Above this many candidate triples the greedy assignment falls
+    * back to the window-based approximation.
+    */
+  private val maxCandidates = 5_000_000L
+  /** The cross join broadcasts a side whose estimated size fits. */
+  private val broadcastBytes = 64L << 20
+  /** Candidate sets up to this size are collected at once; larger ones
+    * stream to the driver partition by partition.
+    */
+  private val greedyCollectThreshold = 1_000_000L
 
   private[integrate] val RID1 = "__rid1"
   private[integrate] val RID2 = "__rid2"

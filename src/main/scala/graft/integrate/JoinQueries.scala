@@ -246,19 +246,19 @@ object JoinQueries {
     },
     Some(greedyOracle))
 
-  /** Point-in-time lookup: each event joined to the customer's most
-    * recent order at or before the event's timestamp (backward
-    * inclusive). The right side is deduped to one order per
-    * (custkey, orderdate) — max order key wins — so the as-of pick is
+  /** One as-of family member: each event (on the epoch-micros axis)
+    * joined to its user's orders, deduped to one order per (custkey,
+    * orderdate) — max order key wins — so the as-of pick is
     * deterministic in both engines. Times compare on the epoch-MICROS
-    * axis: `events.ts` arrives as a nanos long (TIMESTAMP(NANOS) via
-    * nanosAsLong) and is floored to micros because DuckDB's TIMESTAMP
-    * is micro-precision; `o_orderdate` is a millis timestamp widened.
-    * The oracle replays the operator with DuckDB's native ASOF LEFT
-    * JOIN.
+    * axis: `events.ts` goes through [[QuerySupport.tsMicros]] because
+    * DuckDB's TIMESTAMP is micro-precision; `o_orderdate` is a millis
+    * timestamp widened. The oracle replays `join` with DuckDB's native
+    * ASOF LEFT JOIN after the same dedup (`od`); `oracleTail` follows
+    * it.
     */
-  private val joinAsof = CatalogEntry(
-    "join_asof",
+  private def asofEntry(name: String, oracleTail: String)(
+      join: (DataFrame, DataFrame) => DataFrame): CatalogEntry = CatalogEntry(
+    name,
     (s: SparkSession, dir: String) => {
       val evRaw = QuerySupport.table(s, dir, "events")
       val ev = evRaw
@@ -271,92 +271,47 @@ object JoinQueries {
             .partitionBy("o_custkey", "t_us").orderBy(col("o_orderkey").desc)))
         .filter(col("__rn") === 1)
         .select("o_custkey", "t_us", "o_orderkey", "o_totalprice")
-      AsOfJoin.asofBackward(ev, orders,
-          leftKey = "user_id", leftTime = "t_us",
-          rightKey = "o_custkey", rightTime = "t_us",
-          payloadCols = Seq("o_orderkey", "o_totalprice"))
-        .orderBy("event_id")
+      join(ev, orders).orderBy("event_id")
     },
-    Some("""WITH o AS (
+    Some(s"""WITH o AS (
            |  SELECT o_custkey, epoch_us(o_orderdate) AS t, o_orderkey, o_totalprice,
            |         row_number() OVER (PARTITION BY o_custkey, epoch_us(o_orderdate)
            |                            ORDER BY o_orderkey DESC) AS rn
            |  FROM orders),
-           |od AS (SELECT * FROM o WHERE rn = 1)
+           |od AS (SELECT * FROM o WHERE rn = 1)$oracleTail""".stripMargin))
+
+  private val asofPayload = Seq("o_orderkey", "o_totalprice")
+
+  /** Point-in-time lookup: each event joined to the customer's most
+    * recent order at or before the event's timestamp (backward
+    * inclusive).
+    */
+  private val joinAsof = asofEntry("join_asof", """
            |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS t_us,
            |       od.o_orderkey, od.o_totalprice
            |FROM events e ASOF LEFT JOIN od
            |  ON e.user_id = od.o_custkey AND epoch_us(e.ts) >= od.t
-           |ORDER BY e.event_id""".stripMargin))
+           |ORDER BY e.event_id""".stripMargin)(
+    (ev, o) => AsOfJoin.asofBackward(ev, o, "user_id", "t_us", "o_custkey", "t_us", asofPayload))
 
   /** Forward as-of: each event gets the user's NEXT order at-or-after
     * the event time — DuckDB replays it natively with the mirrored
     * ASOF inequality.
     */
-  private val joinAsofForward = CatalogEntry(
-    "join_asof_forward",
-    (s: SparkSession, dir: String) => {
-      val evRaw = QuerySupport.table(s, dir, "events")
-      val ev = evRaw
-        .select(col("event_id"), col("user_id"),
-          QuerySupport.tsMicros(evRaw).as("t_us"))
-      val orders = QuerySupport.table(s, dir, "orders")
-        .withColumn("t_us", unix_micros(col("o_orderdate").cast("timestamp")))
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("o_custkey", "t_us").orderBy(col("o_orderkey").desc)))
-        .filter(col("__rn") === 1)
-        .select("o_custkey", "t_us", "o_orderkey", "o_totalprice")
-      AsOfJoin.asofForward(ev, orders,
-          leftKey = "user_id", leftTime = "t_us",
-          rightKey = "o_custkey", rightTime = "t_us",
-          payloadCols = Seq("o_orderkey", "o_totalprice"))
-        .orderBy("event_id")
-    },
-    Some("""WITH o AS (
-           |  SELECT o_custkey, epoch_us(o_orderdate) AS t, o_orderkey, o_totalprice,
-           |         row_number() OVER (PARTITION BY o_custkey, epoch_us(o_orderdate)
-           |                            ORDER BY o_orderkey DESC) AS rn
-           |  FROM orders),
-           |od AS (SELECT * FROM o WHERE rn = 1)
+  private val joinAsofForward = asofEntry("join_asof_forward", """
            |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS t_us,
            |       od.o_orderkey, od.o_totalprice
            |FROM events e ASOF LEFT JOIN od
            |  ON e.user_id = od.o_custkey AND epoch_us(e.ts) <= od.t
-           |ORDER BY e.event_id""".stripMargin))
+           |ORDER BY e.event_id""".stripMargin)(
+    (ev, o) => AsOfJoin.asofForward(ev, o, "user_id", "t_us", "o_custkey", "t_us", asofPayload))
 
   /** Tolerance as-of (pandas merge_asof tolerance semantics): the
     * backward match counts only within a 7-day staleness horizon; the
     * oracle replays DuckDB's native ASOF join with the same row-local
     * CASE guard.
     */
-  private val joinAsofTolerance = CatalogEntry(
-    "join_asof_tolerance",
-    (s: SparkSession, dir: String) => {
-      val evRaw = QuerySupport.table(s, dir, "events")
-      val ev = evRaw
-        .select(col("event_id"), col("user_id"),
-          QuerySupport.tsMicros(evRaw).as("t_us"))
-      val orders = QuerySupport.table(s, dir, "orders")
-        .withColumn("t_us", unix_micros(col("o_orderdate").cast("timestamp")))
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("o_custkey", "t_us").orderBy(col("o_orderkey").desc)))
-        .filter(col("__rn") === 1)
-        .select("o_custkey", "t_us", "o_orderkey", "o_totalprice")
-      AsOfJoin.asofBackwardTolerance(ev, orders,
-          leftKey = "user_id", leftTime = "t_us",
-          rightKey = "o_custkey", rightTime = "t_us",
-          payloadCols = Seq("o_orderkey", "o_totalprice"),
-          tolerance = 604800000000L)
-        .orderBy("event_id")
-    },
-    Some("""WITH o AS (
-           |  SELECT o_custkey, epoch_us(o_orderdate) AS t, o_orderkey, o_totalprice,
-           |         row_number() OVER (PARTITION BY o_custkey, epoch_us(o_orderdate)
-           |                            ORDER BY o_orderkey DESC) AS rn
-           |  FROM orders),
-           |od AS (SELECT * FROM o WHERE rn = 1)
+  private val joinAsofTolerance = asofEntry("join_asof_tolerance", """
            |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS t_us,
            |       CASE WHEN epoch_us(e.ts) - od.t <= 604800000000
            |            THEN od.o_orderkey END AS o_orderkey,
@@ -364,38 +319,14 @@ object JoinQueries {
            |            THEN od.o_totalprice END AS o_totalprice
            |FROM events e ASOF LEFT JOIN od
            |  ON e.user_id = od.o_custkey AND epoch_us(e.ts) >= od.t
-           |ORDER BY e.event_id""".stripMargin))
+           |ORDER BY e.event_id""".stripMargin)(
+    (ev, o) => AsOfJoin.asofBackwardTolerance(ev, o, "user_id", "t_us", "o_custkey", "t_us", asofPayload,
+      tolerance = 604800000000L))
 
   /** Forward tolerance as-of: the mirrored staleness guard on the
     * forward join — next order within 7 days or null.
     */
-  private val joinAsofForwardTolerance = CatalogEntry(
-    "join_asof_forward_tolerance",
-    (s: SparkSession, dir: String) => {
-      val evRaw = QuerySupport.table(s, dir, "events")
-      val ev = evRaw
-        .select(col("event_id"), col("user_id"),
-          QuerySupport.tsMicros(evRaw).as("t_us"))
-      val orders = QuerySupport.table(s, dir, "orders")
-        .withColumn("t_us", unix_micros(col("o_orderdate").cast("timestamp")))
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("o_custkey", "t_us").orderBy(col("o_orderkey").desc)))
-        .filter(col("__rn") === 1)
-        .select("o_custkey", "t_us", "o_orderkey", "o_totalprice")
-      AsOfJoin.asofForwardTolerance(ev, orders,
-          leftKey = "user_id", leftTime = "t_us",
-          rightKey = "o_custkey", rightTime = "t_us",
-          payloadCols = Seq("o_orderkey", "o_totalprice"),
-          tolerance = 604800000000L)
-        .orderBy("event_id")
-    },
-    Some("""WITH o AS (
-           |  SELECT o_custkey, epoch_us(o_orderdate) AS t, o_orderkey, o_totalprice,
-           |         row_number() OVER (PARTITION BY o_custkey, epoch_us(o_orderdate)
-           |                            ORDER BY o_orderkey DESC) AS rn
-           |  FROM orders),
-           |od AS (SELECT * FROM o WHERE rn = 1)
+  private val joinAsofForwardTolerance = asofEntry("join_asof_forward_tolerance", """
            |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS t_us,
            |       CASE WHEN od.t - epoch_us(e.ts) <= 604800000000
            |            THEN od.o_orderkey END AS o_orderkey,
@@ -403,38 +334,15 @@ object JoinQueries {
            |            THEN od.o_totalprice END AS o_totalprice
            |FROM events e ASOF LEFT JOIN od
            |  ON e.user_id = od.o_custkey AND epoch_us(e.ts) <= od.t
-           |ORDER BY e.event_id""".stripMargin))
+           |ORDER BY e.event_id""".stripMargin)(
+    (ev, o) => AsOfJoin.asofForwardTolerance(ev, o, "user_id", "t_us", "o_custkey", "t_us", asofPayload,
+      tolerance = 604800000000L))
 
   /** Nearest as-of: each event gets the user's closest order in TIME,
     * either direction, ties backward. The oracle composes DuckDB's two
     * directional ASOF joins and replays the same integer delta pick.
     */
-  private val joinAsofNearest = CatalogEntry(
-    "join_asof_nearest",
-    (s: SparkSession, dir: String) => {
-      val evRaw = QuerySupport.table(s, dir, "events")
-      val ev = evRaw
-        .select(col("event_id"), col("user_id"),
-          QuerySupport.tsMicros(evRaw).as("t_us"))
-      val orders = QuerySupport.table(s, dir, "orders")
-        .withColumn("t_us", unix_micros(col("o_orderdate").cast("timestamp")))
-        .withColumn("__rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("o_custkey", "t_us").orderBy(col("o_orderkey").desc)))
-        .filter(col("__rn") === 1)
-        .select("o_custkey", "t_us", "o_orderkey", "o_totalprice")
-      AsOfJoin.asofNearest(ev, orders,
-          leftKey = "user_id", leftTime = "t_us",
-          rightKey = "o_custkey", rightTime = "t_us",
-          payloadCols = Seq("o_orderkey", "o_totalprice"))
-        .orderBy("event_id")
-    },
-    Some("""WITH o AS (
-           |  SELECT o_custkey, epoch_us(o_orderdate) AS t, o_orderkey, o_totalprice,
-           |         row_number() OVER (PARTITION BY o_custkey, epoch_us(o_orderdate)
-           |                            ORDER BY o_orderkey DESC) AS rn
-           |  FROM orders),
-           |od AS (SELECT * FROM o WHERE rn = 1),
+  private val joinAsofNearest = asofEntry("join_asof_nearest", """,
            |e AS (SELECT event_id, user_id, epoch_us(ts) AS t_us FROM events),
            |b AS (SELECT e.event_id, od.t AS bt, od.o_orderkey AS bk,
            |             od.o_totalprice AS bp
@@ -456,7 +364,8 @@ object JoinQueries {
            |       WHEN ft IS NOT NULL THEN ft - t_us END AS asof_dt,
            |  CASE WHEN use_b THEN 'backward'
            |       WHEN ft IS NOT NULL THEN 'forward' END AS asof_dir
-           |FROM j ORDER BY event_id""".stripMargin))
+           |FROM j ORDER BY event_id""".stripMargin)(
+    (ev, o) => AsOfJoin.asofNearest(ev, o, "user_id", "t_us", "o_custkey", "t_us", asofPayload))
 
   /** Pure-inequality interval join (no equality key): events whose
     * value falls inside price-derived windows. Spark's own plan for

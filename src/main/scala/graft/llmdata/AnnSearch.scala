@@ -443,12 +443,20 @@ object AnnSearch {
     */
   def knnGraph(emb: DataFrame, k: Int, kc: Int = ivfCentroids): DataFrame = {
     val dots = (0 until kc).map(c => dotLattice("v", 0L, c))
-    val assigned = vectors(emb)
-      .withColumn("__dots", array(dots: _*))
-      .withColumn("__b1", expr("array_position(__dots, array_max(__dots))"))
+    probeGraph(vectors(emb).withColumn("__dots", array(dots: _*)), "__dots", kc, k)
+  }
+
+  /** The kNN-graph body shared by [[knnGraph]] and [[knnGraphLearned]]:
+    * `scored` vectors carry one score per bucket in `scores`; each
+    * probes its best and second-best bucket, candidates equi-join on
+    * the bucket id, and the per-query rank window keeps k.
+    */
+  private def probeGraph(scored: DataFrame, scores: String, kc: Int, k: Int): DataFrame = {
+    val assigned = scored
+      .withColumn("__b1", expr(s"array_position($scores, array_max($scores))"))
     val corpus = assigned.select(col("vec_id"), col("v"), col("nrm"),
       col("__b1").as("bucket"))
-    val masked = maskedSecondBucket(kc, "__dots")
+    val masked = maskedSecondBucket(kc, scores)
     val probes = assigned
       .withColumn("__b2", expr(s"array_position($masked, array_max($masked))"))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
@@ -849,23 +857,9 @@ object AnnSearch {
   def knnGraphLearned(emb: DataFrame, k: Int, kc: Int = ivfCentroids,
                       iters: Int = 2, dim: Int = embDim): DataFrame = {
     val state = kmeansState(emb, kc, iters, dim)
-    val base = vectors(emb)
+    probeGraph(vectors(emb)
       .withColumn("vi", expr("transform(v, x -> cast(floor(x * 1000000) as bigint))"))
-      .withColumn("__scores", kmeansScores(state))
-      .withColumn("__b1", expr("array_position(__scores, array_max(__scores))"))
-    val corpus = base.select(col("vec_id"), col("v"), col("nrm"),
-      col("__b1").as("bucket"))
-    val masked = maskedSecondBucket(kc, "__scores")
-    val probes = base
-      .withColumn("__b2", expr(s"array_position($masked, array_max($masked))"))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(array(col("__b1"), col("__b2"))).as("bucket"))
-    rankTail(
-      corpus.join(probes, "bucket")
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-        .select(col("query_id"), col("vec_id"), col("cos")),
-      k, col("cos").desc, "cos")
+      .withColumn("__scores", kmeansScores(state)), "__scores", kc, k)
   }
 
   /** Recall@k audit of the IVF index against exact brute force — THE

@@ -163,6 +163,30 @@ object LlmDataQueries {
             |    - CASE WHEN uni = 0 THEN 1000000 ELSE inter * 1000000 // uni END AS err_micro
             |FROM j ORDER BY doc_a, doc_b""".stripMargin))
 
+  /** The audit family's shared 25% digest pair cut, one salt for every
+    * sampled audit so they all read one pair subset. Single line: a
+    * line-leading || would lose a pipe to a template's stripMargin.
+    */
+  private val auditSamplePred: String =
+    s" WHERE substr(md5('lshplan:' || CAST(c.doc_a AS VARCHAR) || " +
+      s"':' || CAST(c.doc_b AS VARCHAR)), 1, 8) < " +
+      s"'${Sampling.hexThreshold(0.25)}'"
+
+  /** A `_sampled` family: `base` audits every LSH candidate pair
+    * (quadratic by contract, the exact reference); `<base>_sampled`,
+    * its production scale path, runs the same audit at samplePpm =
+    * 250000 — `samplePred` in the oracle — ahead of the exact work.
+    * `query` gets the documents table and samplePpm; `oracle` gets ""
+    * for the base.
+    */
+  private def sampledPair(base: String, oracle: String => String,
+                          samplePred: String = auditSamplePred)(
+      query: (DataFrame, Long) => DataFrame): Seq[CatalogEntry] =
+    Seq(base -> (1000000L, ""), s"${base}_sampled" -> (250000L, samplePred)).map {
+      case (name, (ppm, pred)) => CatalogEntry(name,
+        (s, dir) => query(QuerySupport.table(s, dir, "documents"), ppm), Some(oracle(pred)))
+    }
+
   /** Source-pair near-dup matrix: candidate + verified-true pair
     * counts per unordered source pair with exact ppm shares —
     * diagonal = within-source re-crawl, off-diagonal = cross-source
@@ -193,23 +217,6 @@ object LlmDataQueries {
          |  CAST(n_true_pairs * 1000000 // greatest(tt, 1) AS BIGINT) AS true_share_ppm
          |FROM per CROSS JOIN t ORDER BY source_a, source_b""".stripMargin
   }
-
-  private val dedupSourceMatrix = CatalogEntry(
-    "dedup_source_matrix",
-    (s, dir) => Dedup.sourceReuseMatrix(
-        QuerySupport.table(s, dir, "documents"))
-      .orderBy("source_a", "source_b"),
-    Some(sourceMatrixOracleSql("")))
-
-  /** The contamination matrix's production scale path over the shared
-    * 25% digest pair sample (the audit family's pair-count contract:
-    * 36x at the 100x saturation point unsampled). */
-  private val dedupSourceMatrixSampled = CatalogEntry(
-    "dedup_source_matrix_sampled",
-    (s, dir) => Dedup.sourceReuseMatrix(
-        QuerySupport.table(s, dir, "documents"), samplePpm = 250000L)
-      .orderBy("source_a", "source_b"),
-    Some(sourceMatrixOracleSql(auditSamplePred)))
 
   /** MinHash WIDTH planner: per prefix width, the estimator's mean
     * |err| and signed bias vs exact Jaccard over the candidate pairs
@@ -242,34 +249,6 @@ object LlmDataQueries {
          |  CAST(sum(err) // greatest(count(*), 1) AS BIGINT) AS mean_err_micro
          |FROM pc GROUP BY n_hashes ORDER BY n_hashes""".stripMargin
   }
-
-  /** The shared sampled-pair predicate for the audit-family oracles
-    * (lshPlanOracleSql's spelling, 25% cut). Lazy: consumed by
-    * entries declared BEFORE this point in the object's
-    * initialization order. */
-  private lazy val auditSamplePred: String =
-    s" WHERE substr(md5('lshplan:' || CAST(c.doc_a AS VARCHAR) || " +
-      s"':' || CAST(c.doc_b AS VARCHAR)), 1, 8) < " +
-      s"'${Sampling.hexThreshold(0.25)}'"
-
-  private val dedupMinhashWidthPlan = CatalogEntry(
-    "dedup_minhash_width_plan",
-    (s, dir) => Dedup.minhashWidthPlan(
-        Dedup.sketch(QuerySupport.table(s, dir, "documents")))
-      .orderBy("n_hashes"),
-    Some(widthPlanOracleSql("")))
-
-  /** The width planner's production scale path: the same report over
-    * the shared 25% digest pair sample (the audit family tracks
-    * candidate pairs — 44x at the 100x saturation point unsampled).
-    */
-  private val dedupMinhashWidthPlanSampled = CatalogEntry(
-    "dedup_minhash_width_plan_sampled",
-    (s, dir) => Dedup.minhashWidthPlan(
-        Dedup.sketch(QuerySupport.table(s, dir, "documents")),
-        samplePpm = 250000L)
-      .orderBy("n_hashes"),
-    Some(widthPlanOracleSql(auditSamplePred)))
 
   /** Cheap-gate agreement audit: MinHash estimate vs SimHash hamming
     * against exact Jaccard on the candidate pairs — per-method exact
@@ -324,22 +303,6 @@ object LlmDataQueries {
          |    AS n_disagree
          |FROM pc GROUP BY method ORDER BY method""".stripMargin
   }
-
-  private val dedupMethodAgreement = CatalogEntry(
-    "dedup_method_agreement",
-    (s, dir) => Dedup.methodAgreement(
-        QuerySupport.table(s, dir, "documents"))
-      .orderBy("method"),
-    Some(methodAgreementOracleSql("")))
-
-  /** The agreement audit's production scale path over the shared 25%
-    * digest pair sample (the audit family's pair-count contract). */
-  private val dedupMethodAgreementSampled = CatalogEntry(
-    "dedup_method_agreement_sampled",
-    (s, dir) => Dedup.methodAgreement(
-        QuerySupport.table(s, dir, "documents"), samplePpm = 250000L)
-      .orderBy("method"),
-    Some(methodAgreementOracleSql(auditSamplePred)))
 
   /** Bigram conditional entropy rate: count-scaled micro-nat terms
     * (the charEntropy quantization) over the bigram vocabulary and
@@ -417,30 +380,6 @@ object LlmDataQueries {
          |    AS BIGINT) AS exp_false_rate_micro
          |FROM pc GROUP BY 1, 2 ORDER BY bands DESC""".stripMargin
   }
-
-  private val dedupLshParamPlan = CatalogEntry(
-    "dedup_lsh_param_plan",
-    (s, dir) => Dedup.lshParamPlan(QuerySupport.table(s, dir, "documents"))
-      .orderBy(col("bands").desc),
-    Some(lshPlanOracleSql("")))
-
-  /** The planner's production scale path, oracled next to the exact
-    * one (the fixed-vs-scaled sibling discipline): a deterministic
-    * 25% digest sample of the pair population BEFORE the exact
-    * Jaccard audit — the plan needs the distribution, not every
-    * pair, and the predicate pushes below the intersect work.
-    */
-  private val dedupLshParamPlanSampled = CatalogEntry(
-    "dedup_lsh_param_plan_sampled",
-    (s, dir) => Dedup.lshParamPlan(QuerySupport.table(s, dir, "documents"),
-        samplePpm = 250000L)
-      .orderBy(col("bands").desc),
-    Some(lshPlanOracleSql(
-      // single line: line-leading || would lose a pipe to the OUTER
-      // template's stripMargin
-      s" WHERE substr(md5('lshplan:' || CAST(c.doc_a AS VARCHAR) || " +
-        s"':' || CAST(c.doc_b AS VARCHAR)), 1, 8) < " +
-        s"'${Sampling.hexThreshold(0.25)}'")))
 
   /** N-gram novelty per document: distinct-shingle document
     * frequencies replayed with the same empty-under-3-tokens shingle
@@ -614,6 +553,28 @@ object LlmDataQueries {
       .orderBy("doc_id"),
     Some(clustersOracle))
 
+  /** The near-dup cluster chain with each doc's root (`cl`) next to
+    * the text_quality chain (`q`) — the canonical-selection inputs.
+    */
+  private def canonicalCtes: String =
+    s"""$clustersCtes,
+       |cl AS (SELECT d.doc_id, coalesce(r.root_id, d.doc_id) AS root_id
+       |       FROM documents d LEFT JOIN roots r USING (doc_id)),
+       |qw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |qm AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
+       |         len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop FROM qw),
+       |q AS (SELECT doc_id,
+       |        0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
+       |          + 0.3 * least(1.0, n_tokens / 50.0) AS quality
+       |      FROM qm)""".stripMargin
+
+  /** Cluster members ranked by quality, ties to the smallest doc_id. */
+  private val canonicalRankCte =
+    """jq AS (SELECT cl.doc_id, cl.root_id,
+      |         row_number() OVER (PARTITION BY cl.root_id
+      |                            ORDER BY q.quality DESC, cl.doc_id) AS rnk
+      |       FROM cl JOIN q USING (doc_id))""".stripMargin
+
   /** Canonical selection per cluster: composes the clustering chain
     * with the text_quality chain — both already hash-checked alone —
     * and ranks members by the identical double arithmetic, so the
@@ -621,16 +582,7 @@ object LlmDataQueries {
     * smallest doc_id on both engines).
     */
   private val selectCanonicalOracle: String =
-    s"""WITH RECURSIVE $clustersCtes,
-            |cl AS (SELECT d.doc_id, coalesce(r.root_id, d.doc_id) AS root_id
-            |       FROM documents d LEFT JOIN roots r USING (doc_id)),
-            |qw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            |qm AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
-            |         len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop FROM qw),
-            |q AS (SELECT doc_id,
-            |        0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
-            |          + 0.3 * least(1.0, n_tokens / 50.0) AS quality
-            |      FROM qm),
+    s"""WITH RECURSIVE $canonicalCtes,
             |jq AS (SELECT cl.doc_id, cl.root_id, q.quality,
             |         row_number() OVER (PARTITION BY cl.root_id
             |                            ORDER BY q.quality DESC, cl.doc_id) AS rnk,
@@ -674,20 +626,8 @@ object LlmDataQueries {
     (s, dir) => Dedup.mixtureImpact(
         QuerySupport.table(s, dir, "documents"))
       .orderBy("source"),
-    Some(s"""WITH RECURSIVE $clustersCtes,
-            |cl AS (SELECT d.doc_id, coalesce(r.root_id, d.doc_id) AS root_id
-            |       FROM documents d LEFT JOIN roots r USING (doc_id)),
-            |qw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            |qm AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
-            |         len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop FROM qw),
-            |q AS (SELECT doc_id,
-            |        0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
-            |          + 0.3 * least(1.0, n_tokens / 50.0) AS quality
-            |      FROM qm),
-            |jq AS (SELECT cl.doc_id, cl.root_id,
-            |         row_number() OVER (PARTITION BY cl.root_id
-            |                            ORDER BY q.quality DESC, cl.doc_id) AS rnk
-            |       FROM cl JOIN q USING (doc_id)),
+    Some(s"""WITH RECURSIVE $canonicalCtes,
+            |$canonicalRankCte,
             |bs AS (SELECT d.source,
             |         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS t,
             |         CASE WHEN jq.rnk = 1 THEN 1 ELSE 0 END AS canon
@@ -717,20 +657,8 @@ object LlmDataQueries {
     "dedup_quality_impact",
     (s, dir) => Dedup.qualityImpact(
       QuerySupport.table(s, dir, "documents")),
-    Some(s"""WITH RECURSIVE $clustersCtes,
-            |cl AS (SELECT d.doc_id, coalesce(r.root_id, d.doc_id) AS root_id
-            |       FROM documents d LEFT JOIN roots r USING (doc_id)),
-            |qw AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            |qm AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
-            |         len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop FROM qw),
-            |q AS (SELECT doc_id,
-            |        0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
-            |          + 0.3 * least(1.0, n_tokens / 50.0) AS quality
-            |      FROM qm),
-            |jq AS (SELECT cl.doc_id, cl.root_id,
-            |         row_number() OVER (PARTITION BY cl.root_id
-            |                            ORDER BY q.quality DESC, cl.doc_id) AS rnk
-            |       FROM cl JOIN q USING (doc_id)),
+    Some(s"""WITH RECURSIVE $canonicalCtes,
+            |$canonicalRankCte,
             |bs AS (SELECT d.source,
             |         CAST(floor(q.quality * 1000000.0 + 0.5) AS BIGINT) AS qmu,
             |         CASE WHEN jq.rnk = 1 THEN 1 ELSE 0 END AS canon
@@ -907,6 +835,16 @@ object LlmDataQueries {
        |k AS ($keySelects)""".stripMargin
   }
 
+  /** Exact cosine over the candidate pairs `cand(a, b)`, kept at or
+    * above the near-dup threshold.
+    */
+  private def embCosineTailSql(a: String, b: String): String =
+    s"""c AS (SELECT cand.$a, cand.$b,
+       |        list_sum(list_transform(range(1, len(x.v) + 1), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS cos
+       |      FROM cand JOIN n x ON x.vec_id = cand.$a JOIN n y ON y.vec_id = cand.$b)
+       |SELECT $a, $b, ${r6s("cos")} AS cosine FROM c
+       |WHERE cos >= $embDupThreshold ORDER BY $a, $b""".stripMargin
+
   private val dedupEmbedding = CatalogEntry(
     "dedup_embedding_cosine",
     (s, dir) => {
@@ -917,11 +855,7 @@ object LlmDataQueries {
     Some(s"""WITH $embLshCtes,
             |cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
             |         FROM k a JOIN k b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-            |c AS (SELECT cand.vec_a, cand.vec_b,
-            |        list_sum(list_transform(range(1, len(x.v) + 1), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS cos
-            |      FROM cand JOIN n x ON x.vec_id = cand.vec_a JOIN n y ON y.vec_id = cand.vec_b)
-            |SELECT vec_a, vec_b, ${r6s("cos")} AS cosine FROM c
-            |WHERE cos >= $embDupThreshold ORDER BY vec_a, vec_b""".stripMargin))
+            |${embCosineTailSql("vec_a", "vec_b")}""".stripMargin))
 
   /** Cross-corpus embedding near-dups: new keys join reference keys
     * only — the reference side never self-pairs.
@@ -939,11 +873,7 @@ object LlmDataQueries {
             |cand AS (SELECT DISTINCT a.vec_id AS new_id, b.vec_id AS ref_id
             |         FROM k a JOIN k b ON a.tbl = b.tbl AND a.bucket = b.bucket
             |         WHERE a.vec_id % 3 = 0 AND b.vec_id % 3 <> 0),
-            |c AS (SELECT cand.new_id, cand.ref_id,
-            |        list_sum(list_transform(range(1, len(x.v) + 1), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS cos
-            |      FROM cand JOIN n x ON x.vec_id = cand.new_id JOIN n y ON y.vec_id = cand.ref_id)
-            |SELECT new_id, ref_id, ${r6s("cos")} AS cosine FROM c
-            |WHERE cos >= $embDupThreshold ORDER BY new_id, ref_id""".stripMargin))
+            |${embCosineTailSql("new_id", "ref_id")}""".stripMargin))
 
   /** Hot-bucket capped embedding near-dups: buckets above the cap
     * (20 — sized so sf0.01's ~12-member average buckets split both
@@ -973,11 +903,7 @@ object LlmDataQueries {
             |  UNION
             |  SELECT rep AS vec_a, vec_id AS vec_b FROM kb
             |  WHERE cnt > 20 AND vec_id <> rep),
-            |c AS (SELECT cand.vec_a, cand.vec_b,
-            |        list_sum(list_transform(range(1, len(x.v) + 1), i -> x.v[i] * y.v[i])) / (x.nrm * y.nrm) AS cos
-            |      FROM cand JOIN n x ON x.vec_id = cand.vec_a JOIN n y ON y.vec_id = cand.vec_b)
-            |SELECT vec_a, vec_b, ${r6s("cos")} AS cosine FROM c
-            |WHERE cos >= $embDupThreshold ORDER BY vec_a, vec_b""".stripMargin))
+            |${embCosineTailSql("vec_a", "vec_b")}""".stripMargin))
 
   /** Passage-duplication stats (Lee et al. style window granularity):
     * 20-token passages, dup = exact text occurring more than once
@@ -1092,79 +1018,6 @@ object LlmDataQueries {
          |FROM n LEFT JOIN dd USING (doc_id) ORDER BY n.doc_id""".stripMargin
     })
 
-  /** Incremental-crawl dedup: the corpus is split into a reference set
-    * (doc_id % 3 <> 0, "the training set") and a new set (the rest,
-    * "today's crawl"); new docs are LSH-candidate-joined against the
-    * reference bands only — the reference is never self-paired — then
-    * exact-Jaccard verified.
-    */
-  private val dedupCrossCorpus = CatalogEntry(
-    "dedup_cross_corpus",
-    (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      val fresh = Dedup.sketch(d.filter(col("doc_id") % 3 === 0))
-      val ref = Dedup.sketch(d.filter(col("doc_id") % 3 =!= 0))
-      Dedup.crossCorpusNearDups(fresh, ref)
-        .select(col("new_id"), col("ref_id"), r6(col("jaccard")).as("jaccard"))
-        .orderBy("new_id", "ref_id")
-    },
-    Some(s"""WITH newc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-            |refc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-            |${minhashBandCtes("newc", "_n")},
-            |${minhashBandCtes("refc", "_r")},
-            |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-            |         FROM bands_n a JOIN bands_r b ON a.band = b.band AND a.key = b.key),
-            |dsn AS (SELECT doc_id, list_distinct(sh_n) AS s FROM sh_n),
-            |dsr AS (SELECT doc_id, list_distinct(sh_r) AS s FROM sh_r),
-            |j AS (SELECT c.new_id, c.ref_id,
-            |        len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-            |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id JOIN dsr b ON b.doc_id = c.ref_id)
-            |SELECT new_id, ref_id, ${r6s("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-            |FROM j WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= $jaccardThreshold
-            |ORDER BY new_id, ref_id""".stripMargin))
-
-  /** Incremental at-ingest assignment: every incoming doc attaches to
-    * its best reference partner (exact micro-Jaccard, ref-id
-    * tiebreak) or is declared new; the oracle replays the band join,
-    * the integer gate, and the rank-1 cut.
-    */
-  private val dedupIncrementalAssign = CatalogEntry(
-    "dedup_incremental_assign",
-    (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      Dedup.incrementalAssign(
-          d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0))
-        .orderBy("new_id")
-    },
-    Some {
-      val tm = (jaccardThreshold * 1000000).toLong
-      s"""WITH newc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         |refc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-         |${minhashBandCtes("newc", "_n")},
-         |${minhashBandCtes("refc", "_r")},
-         |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-         |         FROM bands_n a JOIN bands_r b ON a.band = b.band AND a.key = b.key),
-         |dsn AS (SELECT doc_id, list_distinct(sh_n) AS s FROM sh_n),
-         |dsr AS (SELECT doc_id, list_distinct(sh_r) AS s FROM sh_r),
-         |j AS (SELECT c.new_id, c.ref_id,
-         |        CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
-         |        CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-         |          AS BIGINT) AS uni
-         |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id
-         |      JOIN dsr b ON b.doc_id = c.ref_id),
-         |sc AS (SELECT new_id, ref_id,
-         |         inter * 1000000 // greatest(uni, 1) AS jaccard_micro
-         |       FROM j WHERE inter * 1000000 // greatest(uni, 1) >= $tm),
-         |bst AS (SELECT new_id, ref_id, jaccard_micro FROM (
-         |          SELECT *, row_number() OVER (PARTITION BY new_id
-         |            ORDER BY jaccard_micro DESC, ref_id) AS rk FROM sc)
-         |        WHERE rk = 1)
-         |SELECT n.doc_id AS new_id, b.ref_id, b.jaccard_micro,
-         |  b.ref_id IS NULL AS is_new
-         |FROM newc n LEFT JOIN bst b ON b.new_id = n.doc_id
-         |ORDER BY new_id""".stripMargin
-    })
-
   /** Hot-bucket truncation CTE for the capped cross-corpus oracles:
     * keeps the `cap` lowest doc_ids per (band, key) of `src`.
     */
@@ -1174,86 +1027,78 @@ object LlmDataQueries {
        |      row_number() OVER (PARTITION BY band, key ORDER BY doc_id) AS rk
        |    FROM $src) WHERE rk <= $cap)""".stripMargin
 
-  private val crossCap = 20
-
-  /** PRODUCTION spelling of [[dedupCrossCorpus]]: per-(band, key)
-    * occupancy capped at [[crossCap]] lowest ids PER SIDE — the
-    * uncapped band join pairs n_new × n_ref per bucket, which on a
-    * boilerplate corpus (stock phrases → hot band keys) is the
-    * rehearsal-measured OOM at zipf10; a true near-dup pair shares
-    * many bands, so truncating one hot band rarely loses it (the
-    * dedup_containment_tight contract, cross-corpus).
+  /** Cross-corpus band join: the corpus splits into a new set (doc_id
+    * % 3 = 0, "today's crawl") and a reference set (the rest, "the
+    * training set"); new docs are LSH-candidate-joined against the
+    * reference bands only — the reference is never self-paired —
+    * then exact-Jaccard verified (`j`, by the caller). `cap`, when
+    * set, keeps the lowest ids per (band, key) and side.
     */
-  private val dedupCrossCorpusCapped = CatalogEntry(
-    "dedup_cross_corpus_capped",
-    (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      val fresh = Dedup.sketch(d.filter(col("doc_id") % 3 === 0))
-      val ref = Dedup.sketch(d.filter(col("doc_id") % 3 =!= 0))
-      Dedup.crossCorpusNearDups(fresh, ref, maxBucket = crossCap)
-        .select(col("new_id"), col("ref_id"), r6(col("jaccard")).as("jaccard"))
-        .orderBy("new_id", "ref_id")
-    },
-    Some(s"""WITH newc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-            |refc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-            |${minhashBandCtes("newc", "_n")},
-            |${minhashBandCtes("refc", "_r")},
-            |${cappedBandCte("bands_n", "bandc_n", crossCap)},
-            |${cappedBandCte("bands_r", "bandc_r", crossCap)},
-            |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-            |         FROM bandc_n a JOIN bandc_r b ON a.band = b.band AND a.key = b.key),
-            |dsn AS (SELECT doc_id, list_distinct(sh_n) AS s FROM sh_n),
-            |dsr AS (SELECT doc_id, list_distinct(sh_r) AS s FROM sh_r),
-            |j AS (SELECT c.new_id, c.ref_id,
-            |        len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
-            |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id JOIN dsr b ON b.doc_id = c.ref_id)
-            |SELECT new_id, ref_id, ${r6s("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
-            |FROM j WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= $jaccardThreshold
-            |ORDER BY new_id, ref_id""".stripMargin))
+  private def crossCorpusCtes(cap: Option[Int]): String = {
+    val sfx = if (cap.isEmpty) "s" else "c"
+    val capped = cap.map(c =>
+      s"${cappedBandCte("bands_n", "bandc_n", c)},\n${cappedBandCte("bands_r", "bandc_r", c)},\n")
+    s"""WITH newc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+       |refc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
+       |${minhashBandCtes("newc", "_n")},
+       |${minhashBandCtes("refc", "_r")},
+       |${capped.getOrElse("")}cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
+       |         FROM band${sfx}_n a JOIN band${sfx}_r b ON a.band = b.band AND a.key = b.key),
+       |dsn AS (SELECT doc_id, list_distinct(sh_n) AS s FROM sh_n),
+       |dsr AS (SELECT doc_id, list_distinct(sh_r) AS s FROM sh_r),""".stripMargin
+  }
 
-  /** PRODUCTION spelling of [[dedupIncrementalAssign]] with the same
-    * per-side hot-bucket cap; the top-1 cut and the integer gate are
-    * identical.
+  /** A `_capped` family: `base` runs the uncapped cross-corpus band
+    * join (occupancy product by contract, the rehearsal-measured OOM
+    * at zipf10); `<base>_capped`, the production spelling, caps each
+    * side's (band, key) occupancy at 20 lowest ids — a true near-dup
+    * pair shares many bands, so truncating one hot band rarely loses
+    * it (the dedup_containment_tight contract, cross-corpus). `query`
+    * gets the new and reference documents and the cap; `oracleTail`
+    * follows [[crossCorpusCtes]].
     */
-  private val dedupIncrementalAssignCapped = CatalogEntry(
-    "dedup_incremental_assign_capped",
-    (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      Dedup.incrementalAssign(
-          d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0),
-          maxBucket = crossCap)
-        .orderBy("new_id")
-    },
-    Some {
-      val tm = (jaccardThreshold * 1000000).toLong
-      s"""WITH newc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-         |refc AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-         |${minhashBandCtes("newc", "_n")},
-         |${minhashBandCtes("refc", "_r")},
-         |${cappedBandCte("bands_n", "bandc_n", crossCap)},
-         |${cappedBandCte("bands_r", "bandc_r", crossCap)},
-         |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-         |         FROM bandc_n a JOIN bandc_r b ON a.band = b.band AND a.key = b.key),
-         |dsn AS (SELECT doc_id, list_distinct(sh_n) AS s FROM sh_n),
-         |dsr AS (SELECT doc_id, list_distinct(sh_r) AS s FROM sh_r),
-         |j AS (SELECT c.new_id, c.ref_id,
-         |        CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
-         |        CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
-         |          AS BIGINT) AS uni
-         |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id
-         |      JOIN dsr b ON b.doc_id = c.ref_id),
-         |sc AS (SELECT new_id, ref_id,
-         |         inter * 1000000 // greatest(uni, 1) AS jaccard_micro
-         |       FROM j WHERE inter * 1000000 // greatest(uni, 1) >= $tm),
-         |bst AS (SELECT new_id, ref_id, jaccard_micro FROM (
-         |          SELECT *, row_number() OVER (PARTITION BY new_id
-         |            ORDER BY jaccard_micro DESC, ref_id) AS rk FROM sc)
-         |        WHERE rk = 1)
-         |SELECT n.doc_id AS new_id, b.ref_id, b.jaccard_micro,
-         |  b.ref_id IS NULL AS is_new
-         |FROM newc n LEFT JOIN bst b ON b.new_id = n.doc_id
-         |ORDER BY new_id""".stripMargin
-    })
+  private def cappedPair(base: String, oracleTail: String)(
+      query: (DataFrame, DataFrame, Int) => DataFrame): Seq[CatalogEntry] =
+    Seq(base -> None, s"${base}_capped" -> Some(20)).map { case (name, cap) =>
+      CatalogEntry(name, (s, dir) => {
+        val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
+        query(d.filter(col("doc_id") % 3 === 0), d.filter(col("doc_id") % 3 =!= 0),
+          cap.getOrElse(Int.MaxValue))
+      }, Some(s"${crossCorpusCtes(cap)}\n$oracleTail"))
+    }
+
+  /** Near-dup pairs between the new and reference sets. */
+  private val crossCorpusTailSql =
+    s"""j AS (SELECT c.new_id, c.ref_id,
+       |        len(list_intersect(a.s, b.s)) AS inter, len(a.s) AS la, len(b.s) AS lb
+       |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id JOIN dsr b ON b.doc_id = c.ref_id)
+       |SELECT new_id, ref_id, ${r6s("CAST(inter AS DOUBLE) / (la + lb - inter)")} AS jaccard
+       |FROM j WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= $jaccardThreshold
+       |ORDER BY new_id, ref_id""".stripMargin
+
+  /** Incremental at-ingest assignment: every incoming doc attaches to
+    * its best reference partner (exact micro-Jaccard, ref-id
+    * tiebreak) or is declared new; the oracle replays the band join,
+    * the integer gate, and the rank-1 cut.
+    */
+  private val incrementalAssignTailSql =
+    s"""j AS (SELECT c.new_id, c.ref_id,
+       |        CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
+       |        CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))
+       |          AS BIGINT) AS uni
+       |      FROM cand c JOIN dsn a ON a.doc_id = c.new_id
+       |      JOIN dsr b ON b.doc_id = c.ref_id),
+       |sc AS (SELECT new_id, ref_id,
+       |         inter * 1000000 // greatest(uni, 1) AS jaccard_micro
+       |       FROM j WHERE inter * 1000000 // greatest(uni, 1) >= ${(jaccardThreshold * 1000000).toLong}),
+       |bst AS (SELECT new_id, ref_id, jaccard_micro FROM (
+       |          SELECT *, row_number() OVER (PARTITION BY new_id
+       |            ORDER BY jaccard_micro DESC, ref_id) AS rk FROM sc)
+       |        WHERE rk = 1)
+       |SELECT n.doc_id AS new_id, b.ref_id, b.jaccard_micro,
+       |  b.ref_id IS NULL AS is_new
+       |FROM newc n LEFT JOIN bst b ON b.new_id = n.doc_id
+       |ORDER BY new_id""".stripMargin
 
   /** Bloom-prefiltered exact cross-corpus matching on a head
     * fingerprint (first 3 tokens). The Bloom pass only prunes — false
@@ -1833,15 +1678,6 @@ object LlmDataQueries {
        |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)""".stripMargin
   }
 
-  private val annKnnGraph = CatalogEntry(
-    "ann_knn_graph",
-    (s, dir) => AnnSearch.knnGraph(QuerySupport.table(s, dir, "embeddings"), annK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
-      .orderBy("query_id", "rnk"),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)}
-            |SELECT query_id, neighbor_id, rnk, ${r6s("cos")} AS cosine
-            |FROM r WHERE rnk <= $annK ORDER BY query_id, rnk""".stripMargin))
-
   /** IVF bucket-occupancy audit: the oracle reuses the lattice
     * assignment CTE (`a`) and replays the kc-row rollup — unreferenced
     * graph CTEs are never evaluated.
@@ -1862,54 +1698,56 @@ object LlmDataQueries {
             |  n_buckets_used
             |FROM pb CROSS JOIN tt ORDER BY bucket""".stripMargin))
 
-  /** Mutual (reciprocal) kNN pairs: the oracle reuses the graph CTEs
-    * and replays the same direction-split self-join.
-    */
-  private val annKnnMutual = CatalogEntry(
-    "ann_knn_mutual",
-    (s, dir) => AnnSearch.knnMutual(QuerySupport.table(s, dir, "embeddings"), annK)
-      .select(col("vec_a"), col("vec_b"), col("rnk_ab"), col("rnk_ba"),
-        r6(col("cos")).as("cosine"))
-      .orderBy("vec_a", "vec_b"),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)},
-            |t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
-            |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b,
-            |              rnk AS rnk_ab, cos
-            |       FROM t WHERE query_id < neighbor_id),
-            |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b, rnk AS rnk_ba
-            |       FROM t WHERE query_id > neighbor_id)
-            |SELECT vec_a, vec_b, rnk_ab, rnk_ba, ${r6s("cos")} AS cosine
-            |FROM fw JOIN rv USING (vec_a, vec_b)
-            |ORDER BY vec_a, vec_b""".stripMargin))
-
-  /** [[annKnnMutual]]'s 100 TB path: same reciprocal cut over the
-    * kc-scaled graph (see `ann_knn_graph_scaled`) — bucket occupancy,
-    * and with it the candidate pair count feeding the mutual join,
-    * stays bounded as the corpus grows.
-    */
-  private val annKnnMutualScaled = CatalogEntry(
-    "ann_knn_mutual_scaled",
-    (s, dir) => AnnSearch.knnMutual(QuerySupport.table(s, dir, "embeddings"),
-        annK, kc = knnScaledCentroids)
-      .select(col("vec_a"), col("vec_b"), col("rnk_ab"), col("rnk_ba"),
-        r6(col("cos")).as("cosine"))
-      .orderBy("vec_a", "vec_b"),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)},
-            |t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
-            |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b,
-            |              rnk AS rnk_ab, cos
-            |       FROM t WHERE query_id < neighbor_id),
-            |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b, rnk AS rnk_ba
-            |       FROM t WHERE query_id > neighbor_id)
-            |SELECT vec_a, vec_b, rnk_ab, rnk_ba, ${r6s("cos")} AS cosine
-            |FROM fw JOIN rv USING (vec_a, vec_b)
-            |ORDER BY vec_a, vec_b""".stripMargin))
-
   /** Shared triangle-count oracle tail over a graph CTE chain ending
     * in `r` — symmetrize, degree, degree-ordered direction (tuple
     * compare, no rank), wedge + closure joins, per-node credit
     * (mirrors AnnSearch.knnTriangles).
     */
+  /** Mutual (reciprocal) kNN pairs: the oracle replays the same
+    * direction-split self-join over the graph CTEs.
+    */
+  private def knnMutualTailSql: String =
+    s"""t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
+       |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b,
+       |              rnk AS rnk_ab, cos
+       |       FROM t WHERE query_id < neighbor_id),
+       |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b, rnk AS rnk_ba
+       |       FROM t WHERE query_id > neighbor_id)
+       |SELECT vec_a, vec_b, rnk_ab, rnk_ba, ${r6s("cos")} AS cosine
+       |FROM fw JOIN rv USING (vec_a, vec_b)
+       |ORDER BY vec_a, vec_b""".stripMargin
+
+  /** Triplet mining: mutual pairs as positives, the best-ranked
+    * non-mutual neighbor as the hard negative — the oracle replays
+    * the direction-split mutual join, the anti-join, and the
+    * DISTINCT ON negative pick.
+    */
+  private def tripletTailSql: String =
+    s"""t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
+       |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b, cos
+       |       FROM t WHERE query_id < neighbor_id),
+       |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b
+       |       FROM t WHERE query_id > neighbor_id),
+       |mu AS (SELECT fw.vec_a, fw.vec_b, fw.cos FROM fw JOIN rv USING (vec_a, vec_b)),
+       |pa AS (SELECT vec_a AS query_id, vec_b AS neighbor_id FROM mu
+       |       UNION ALL SELECT vec_b, vec_a FROM mu),
+       |ng AS (SELECT t.query_id, t.neighbor_id, t.rnk, t.cos FROM t
+       |       LEFT JOIN pa ON pa.query_id = t.query_id
+       |         AND pa.neighbor_id = t.neighbor_id
+       |       WHERE pa.query_id IS NULL),
+       |n1 AS (SELECT DISTINCT ON (query_id) query_id, neighbor_id, cos
+       |       FROM ng ORDER BY query_id, rnk, neighbor_id)
+       |SELECT mu.vec_a AS anchor, mu.vec_b AS positive,
+       |  n1.neighbor_id AS negative,
+       |  ${r6s("mu.cos")} AS pos_cos, ${r6s("n1.cos")} AS neg_cos
+       |FROM mu JOIN n1 ON n1.query_id = mu.vec_a
+       |ORDER BY anchor, positive""".stripMargin
+
+  /** The lattice kNN graph's CTEs at `kc` centroids, then `tail`. */
+  private def latticeSql(tail: String)(kc: Int): String =
+    s"""WITH ${latticeGraphCtes(kc)},
+       |$tail""".stripMargin
+
   /** Triangle enumeration from an existing canonical `und(a, b)`
     * frame to `deg`/`cr` — shared by the kNN-graph and LSH-candidate
     * transitivity oracles. */
@@ -1973,94 +1811,32 @@ object LlmDataQueries {
        |    ELSE 0 END AS BIGINT) AS clustering_micro
        |FROM deg LEFT JOIN cr ON cr.v = deg.v ORDER BY vec_id""".stripMargin
 
-  /** Triangle count + clustering coefficient on the kNN graph: the
-    * oracle replays the degree-ordered compact-forward enumeration —
-    * direction by (degree, id) tuple compare, wedges from higher-rank
-    * out-edges only, one closure join.
-    */
-  private val annGraphTriangles = CatalogEntry(
-    "ann_graph_triangles",
-    (s, dir) => AnnSearch.knnTriangles(
-        QuerySupport.table(s, dir, "embeddings"), annK)
-      .orderBy("vec_id"),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)},
-            |$triangleTailSql""".stripMargin))
-
-  /** [[annGraphTriangles]]'s 100 TB path: the same enumeration over
-    * the kc-scaled graph — the closure/wedge work rides the scaled
-    * graph's bounded bucket occupancy.
-    */
-  private val annGraphTrianglesScaled = CatalogEntry(
-    "ann_graph_triangles_scaled",
-    (s, dir) => AnnSearch.knnTriangles(
-        QuerySupport.table(s, dir, "embeddings"), annK,
-        kc = knnScaledCentroids)
-      .orderBy("vec_id"),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)},
-            |$triangleTailSql""".stripMargin))
-
-  /** Global clustering coefficient (transitivity) + average local —
-    * the triangle chain's scalar rollup; diverging numbers flag
-    * hub-dominated (degenerate) embedding regions.
-    */
-  private val annGraphGlobalClustering = CatalogEntry(
-    "ann_graph_global_clustering",
-    (s, dir) => AnnSearch.globalClustering(
-        QuerySupport.table(s, dir, "embeddings"), annK),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)},
-            |$triangleChainSql,
-            |$clusteringRollupSql""".stripMargin))
-
-  /** [[annGraphGlobalClustering]]'s 100 TB path: the same rollup
-    * over the kc-scaled graph — the fixed-kc sibling measured 90×
-    * for 10× data (the occupancy² contract biting exactly as
-    * documented); at kc∝n the wedge work rides bounded occupancy
-    * (the kc∝n `transitivity` rehearsal point in PLANS.md).
-    */
-  private val annGraphGlobalClusteringScaled = CatalogEntry(
-    "ann_graph_global_clustering_scaled",
-    (s, dir) => AnnSearch.globalClustering(
-        QuerySupport.table(s, dir, "embeddings"), annK,
-        kc = knnScaledCentroids),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)},
-            |$triangleChainSql,
-            |$clusteringRollupSql""".stripMargin))
-
   /** Transitivity of the LSH candidate graph: the same triangle
     * kernel + rollup pointed at the near-dup pair frame — closed dup
-    * communities vs boilerplate chains, one scalar per corpus.
+    * communities vs boilerplate chains, one scalar per corpus. A
+    * non-empty `nodePred` keeps the subgraph its nodes induce.
     */
-  private val dedupGraphTransitivity = CatalogEntry(
-    "dedup_graph_transitivity",
-    (s, dir) => Dedup.candidateGraphTransitivity(
-      QuerySupport.table(s, dir, "documents")),
-    Some(s"""WITH $minhashCtes,
-            |und AS MATERIALIZED (SELECT DISTINCT least(doc_a, doc_b) AS a,
-            |          greatest(doc_a, doc_b) AS b FROM cand),
-            |$triangleFromUndSql,
-            |$clusteringRollupSql""".stripMargin))
+  private def transitivityOracleSql(nodePred: String): String = {
+    val pairs = "SELECT DISTINCT least(doc_a, doc_b) AS a,\n          greatest(doc_a, doc_b) AS b FROM cand"
+    val und =
+      if (nodePred.isEmpty) s"und AS MATERIALIZED ($pairs)"
+      else s"und0 AS ($pairs),\nund AS MATERIALIZED (SELECT a, b FROM und0$nodePred)"
+    s"""WITH $minhashCtes,
+       |$und,
+       |$triangleFromUndSql,
+       |$clusteringRollupSql""".stripMargin
+  }
 
-  /** [[dedupGraphTransitivity]]'s production path: the 25%
-    * NODE-digest induced subgraph — triangle and wedge are both
-    * 3-node motifs, so the p³ survival cancels in the ratio (an edge
-    * sample would bias C by p); the full enumeration measured 83×
-    * for 10× docs on the zipf reuse corpus.
+  /** [[transitivityOracleSql]]'s 25% NODE-digest sample — triangle and
+    * wedge are both 3-node motifs, so the p³ survival cancels in the
+    * ratio (an edge sample would bias C by p); the full enumeration
+    * measured 83× for 10× docs on the zipf reuse corpus.
     */
-  private val dedupGraphTransitivitySampled = CatalogEntry(
-    "dedup_graph_transitivity_sampled",
-    (s, dir) => Dedup.candidateGraphTransitivity(
-      QuerySupport.table(s, dir, "documents"), samplePpm = 250000L),
-    Some {
-      val thr = s"'${graft.llmdata.Sampling.hexThreshold(0.25)}'"
-      s"""WITH $minhashCtes,
-         |und0 AS (SELECT DISTINCT least(doc_a, doc_b) AS a,
-         |          greatest(doc_a, doc_b) AS b FROM cand),
-         |und AS MATERIALIZED (SELECT a, b FROM und0
-         |        WHERE substr(md5('trans:' || CAST(a AS VARCHAR)), 1, 8) < $thr
-         |          AND substr(md5('trans:' || CAST(b AS VARCHAR)), 1, 8) < $thr),
-         |$triangleFromUndSql,
-         |$clusteringRollupSql""".stripMargin
-    })
+  private val transitivityNodePred = {
+    val thr = s"'${Sampling.hexThreshold(0.25)}'"
+    s"\n        WHERE substr(md5('trans:' || CAST(a AS VARCHAR)), 1, 8) < $thr" +
+      s"\n          AND substr(md5('trans:' || CAST(b AS VARCHAR)), 1, 8) < $thr"
+  }
 
   /** Shared oracle tail for the label-propagation pair: vote, rank,
     * audit — parameterized only by the graph CTEs prepended above it.
@@ -2084,115 +1860,6 @@ object LlmDataQueries {
        |  CAST(vote_micro AS BIGINT) AS vote_micro,
        |  (true_label = nb_label) AS correct
        |FROM rkv WHERE rnk = 1 ORDER BY vec_id""".stripMargin
-
-  /** One-step cosine-weighted label propagation on the kNN graph:
-    * per-edge cosines quantize to micro BEFORE the vote sum (exact
-    * BIGINT votes), argmax tie-breaks on the smaller label.
-    */
-  private val annLabelProp = CatalogEntry(
-    "ann_label_prop",
-    (s, dir) => AnnSearch.labelPropagation(
-        QuerySupport.table(s, dir, "embeddings"), annK)
-      .orderBy("vec_id"),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)},
-            |$labelPropTailSql""".stripMargin))
-
-  /** [[annLabelProp]]'s 100 TB path: the same vote/argmax tail over
-    * the kc-scaled graph — the propagation is one narrow join + one
-    * aggregate and rides any kc, so scaling the graph scales the
-    * whole operator (the family's bounded-occupancy contract,
-    * measured next to the fixed-kc default).
-    */
-  private val annLabelPropScaled = CatalogEntry(
-    "ann_label_prop_scaled",
-    (s, dir) => AnnSearch.labelPropagation(
-        QuerySupport.table(s, dir, "embeddings"), annK,
-        kc = knnScaledCentroids)
-      .orderBy("vec_id"),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)},
-            |$labelPropTailSql""".stripMargin))
-
-  /** Triplet mining: mutual pairs as positives, the best-ranked
-    * non-mutual neighbor as the hard negative — the oracle replays
-    * the direction-split mutual join, the anti-join, and the
-    * DISTINCT ON negative pick.
-    */
-  private val annTripletMining = CatalogEntry(
-    "ann_triplet_mining",
-    (s, dir) => AnnSearch.tripletMining(
-        QuerySupport.table(s, dir, "embeddings"), annK)
-      .select(col("anchor"), col("positive"), col("negative"),
-        r6(col("pos_cos")).as("pos_cos"), r6(col("neg_cos")).as("neg_cos"))
-      .orderBy("anchor", "positive"),
-    Some(s"""WITH ${latticeGraphCtes(ivfCentroids)},
-            |t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
-            |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b, cos
-            |       FROM t WHERE query_id < neighbor_id),
-            |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b
-            |       FROM t WHERE query_id > neighbor_id),
-            |mu AS (SELECT fw.vec_a, fw.vec_b, fw.cos FROM fw JOIN rv USING (vec_a, vec_b)),
-            |pa AS (SELECT vec_a AS query_id, vec_b AS neighbor_id FROM mu
-            |       UNION ALL SELECT vec_b, vec_a FROM mu),
-            |ng AS (SELECT t.query_id, t.neighbor_id, t.rnk, t.cos FROM t
-            |       LEFT JOIN pa ON pa.query_id = t.query_id
-            |         AND pa.neighbor_id = t.neighbor_id
-            |       WHERE pa.query_id IS NULL),
-            |n1 AS (SELECT DISTINCT ON (query_id) query_id, neighbor_id, cos
-            |       FROM ng ORDER BY query_id, rnk, neighbor_id)
-            |SELECT mu.vec_a AS anchor, mu.vec_b AS positive,
-            |  n1.neighbor_id AS negative,
-            |  ${r6s("mu.cos")} AS pos_cos, ${r6s("n1.cos")} AS neg_cos
-            |FROM mu JOIN n1 ON n1.query_id = mu.vec_a
-            |ORDER BY anchor, positive""".stripMargin))
-
-  /** [[annTripletMining]]'s 100 TB path: the same mutual/anti-join
-    * tail over the kc-scaled graph (the family's bounded-occupancy
-    * contract, measured next to the fixed-kc default).
-    */
-  private val annTripletMiningScaled = CatalogEntry(
-    "ann_triplet_mining_scaled",
-    (s, dir) => AnnSearch.tripletMining(
-        QuerySupport.table(s, dir, "embeddings"), annK,
-        kc = knnScaledCentroids)
-      .select(col("anchor"), col("positive"), col("negative"),
-        r6(col("pos_cos")).as("pos_cos"), r6(col("neg_cos")).as("neg_cos"))
-      .orderBy("anchor", "positive"),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)},
-            |t AS (SELECT query_id, neighbor_id, rnk, cos FROM r WHERE rnk <= $annK),
-            |fw AS (SELECT query_id AS vec_a, neighbor_id AS vec_b, cos
-            |       FROM t WHERE query_id < neighbor_id),
-            |rv AS (SELECT neighbor_id AS vec_a, query_id AS vec_b
-            |       FROM t WHERE query_id > neighbor_id),
-            |mu AS (SELECT fw.vec_a, fw.vec_b, fw.cos FROM fw JOIN rv USING (vec_a, vec_b)),
-            |pa AS (SELECT vec_a AS query_id, vec_b AS neighbor_id FROM mu
-            |       UNION ALL SELECT vec_b, vec_a FROM mu),
-            |ng AS (SELECT t.query_id, t.neighbor_id, t.rnk, t.cos FROM t
-            |       LEFT JOIN pa ON pa.query_id = t.query_id
-            |         AND pa.neighbor_id = t.neighbor_id
-            |       WHERE pa.query_id IS NULL),
-            |n1 AS (SELECT DISTINCT ON (query_id) query_id, neighbor_id, cos
-            |       FROM ng ORDER BY query_id, rnk, neighbor_id)
-            |SELECT mu.vec_a AS anchor, mu.vec_b AS positive,
-            |  n1.neighbor_id AS negative,
-            |  ${r6s("mu.cos")} AS pos_cos, ${r6s("n1.cos")} AS neg_cos
-            |FROM mu JOIN n1 ON n1.query_id = mu.vec_a
-            |ORDER BY anchor, positive""".stripMargin))
-
-  /** The kNN graph's 100 TB path: centroid count scaled with the
-    * corpus (`knnScaledCentroids`), so per-bucket occupancy — and
-    * with it the self-join's pair count per query — stays bounded
-    * while the toy-config entry above stays oracle-comparable. Same
-    * probe semantics, more lattice planes.
-    */
-  private val annKnnGraphScaled = CatalogEntry(
-    "ann_knn_graph_scaled",
-    (s, dir) => AnnSearch.knnGraph(QuerySupport.table(s, dir, "embeddings"), annK,
-        kc = knnScaledCentroids)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
-      .orderBy("query_id", "rnk"),
-    Some(s"""WITH ${latticeGraphCtes(knnScaledCentroids)}
-            |SELECT query_id, neighbor_id, rnk, ${r6s("cos")} AS cosine
-            |FROM r WHERE rnk <= $annK ORDER BY query_id, rnk""".stripMargin))
 
   /** Recall@k audit: the oracle composes the brute-force and IVF
     * chains (CTEs renamed apart) and counts their per-query overlap —
@@ -3890,25 +3557,7 @@ object LlmDataQueries {
         col("vec_id") < annQueryIds, ivfK)
       .select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
       .orderBy("query_id", "rnk"),
-    Some {
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
-      s"""WITH $kmeansCtes,
-         |sc AS (SELECT vec_id, list(score ORDER BY j) AS scores FROM d2 GROUP BY vec_id),
-         |a AS (SELECT n.vec_id, n.v, n.nrm, sc.scores,
-         |        list_position(sc.scores, list_aggregate(sc.scores, 'max')) AS b1
-         |      FROM n JOIN sc USING (vec_id)),
-         |q AS (SELECT vec_id, v, nrm, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
-         |      FROM a WHERE vec_id < $annQueryIds),
-         |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
-         |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-         |          list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) / (qn * c.nrm) AS cos
-         |         FROM pr p JOIN a c ON c.b1 = p.bucket AND c.vec_id <> p.query_id),
-         |r AS (SELECT query_id, neighbor_id, cos,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)
-         |SELECT query_id, neighbor_id, rnk, ${r6s("cos")} AS cosine
-         |FROM r WHERE rnk <= $ivfK ORDER BY query_id, rnk""".stripMargin
-    })
+    Some(learnedProbeSql(ivfCentroids, s" WHERE vec_id < $annQueryIds", ivfK)))
 
   /** Learned-centroid corpus kNN graph (VERDICT r10 §next-3): the
     * `kmeansState` → `knnGraph` production composition the lattice docs
@@ -3918,7 +3567,12 @@ object LlmDataQueries {
     * removed), so every Lloyd-learned bucket and both probe choices
     * are hash-checked.
     */
-  private def learnedGraphSql(kc: Int): String = {
+  private def learnedGraphSql(kc: Int): String = learnedProbeSql(kc, "", annK)
+
+  /** Learned-bucket probe search: the `queryFilterSql` vectors probe
+    * their two best of `kc` Lloyd-learned buckets, top `k` by cosine.
+    */
+  private def learnedProbeSql(kc: Int, queryFilterSql: String, k: Int): String = {
     val masked = s"list_transform(range(1, ${kc + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
     s"""WITH ${kmeansCtesK(kc)},
        |sc AS (SELECT vec_id, list(score ORDER BY j) AS scores FROM d2 GROUP BY vec_id),
@@ -3927,7 +3581,7 @@ object LlmDataQueries {
        |      FROM n JOIN sc USING (vec_id)),
        |q AS (SELECT vec_id, v, nrm, b1,
        |        list_position($masked, list_aggregate($masked, 'max')) AS b2
-       |      FROM a),
+       |      FROM a$queryFilterSql),
        |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
        |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
        |          list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) / (qn * c.nrm) AS cos
@@ -3935,31 +3589,8 @@ object LlmDataQueries {
        |r AS (SELECT query_id, neighbor_id, cos,
        |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand)
        |SELECT query_id, neighbor_id, rnk, ${r6s("cos")} AS cosine
-       |FROM r WHERE rnk <= $annK ORDER BY query_id, rnk""".stripMargin
+       |FROM r WHERE rnk <= $k ORDER BY query_id, rnk""".stripMargin
   }
-
-  private val annKnnGraphLearned = CatalogEntry(
-    "ann_knn_graph_learned",
-    (s, dir) => AnnSearch.knnGraphLearned(QuerySupport.table(s, dir, "embeddings"), annK)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
-      .orderBy("query_id", "rnk"),
-    Some(learnedGraphSql(ivfCentroids)))
-
-  /** The learned graph's 100 TB path (VERDICT r11 §next-5): the same
-    * `kc` knob that bounds the lattice graph's per-bucket occupancy
-    * applied to the Lloyd-learned buckets — identical plan shape to
-    * `ann_knn_graph_learned`, more centroids, so the self-join's
-    * candidate count per query stays bounded as the corpus grows.
-    * Above the toy corpus this, not the fixed-kc entry, is the
-    * configuration to run.
-    */
-  private val annKnnGraphLearnedScaled = CatalogEntry(
-    "ann_knn_graph_learned_scaled",
-    (s, dir) => AnnSearch.knnGraphLearned(QuerySupport.table(s, dir, "embeddings"),
-        annK, kc = knnScaledCentroids)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
-      .orderBy("query_id", "rnk"),
-    Some(learnedGraphSql(knnScaledCentroids)))
 
   /** kNN-graph PageRank: the oracle composes the shared lattice graph
     * CTEs with the same fixed-iteration exact-integer recursion
@@ -3990,23 +3621,6 @@ object LlmDataQueries {
          |SELECT id AS vec_id, rk AS rank_micro FROM r$iters ORDER BY vec_id""".stripMargin)
     sb.toString
   }
-
-  private val annKnnPagerank = CatalogEntry(
-    "ann_knn_pagerank",
-    (s, dir) => AnnSearch.knnPageRank(QuerySupport.table(s, dir, "embeddings"))
-      .orderBy("vec_id"),
-    Some(pagerankSql(ivfCentroids)))
-
-  /** The PageRank's 100 TB path: it inherits the graph's per-bucket
-    * occupancy² contract, and the SAME `kc` knob solves it — this
-    * entry pins the scaled-centroid composition end to end.
-    */
-  private val annKnnPagerankScaled = CatalogEntry(
-    "ann_knn_pagerank_scaled",
-    (s, dir) => AnnSearch.knnPageRank(QuerySupport.table(s, dir, "embeddings"),
-        kc = knnScaledCentroids)
-      .orderBy("vec_id"),
-    Some(pagerankSql(knnScaledCentroids)))
 
   /** PQ code assignment (storage path for 100 TB embedding corpora):
     * the oracle replays the exact integer-space argmin — the 8x16
@@ -4185,7 +3799,13 @@ object LlmDataQueries {
     * `vi` integers, so bucket choice, codes, and ADC distances are all
     * engine-exact.
     */
-  private def ivfPqSql(queryFilterSql: String): String = {
+  private def ivfPqSql(queryFilterSql: String): String =
+    s"""${ivfPqCtes(queryFilterSql)}
+       |SELECT query_id, neighbor_id, rnk, CAST(dist AS BIGINT) AS adc_dist
+       |FROM r WHERE rnk <= $ivfK ORDER BY query_id, rnk""".stripMargin
+
+  /** The IVF-PQ chain up to the ranked ADC candidates `r`. */
+  private def ivfPqCtes(queryFilterSql: String): String = {
       val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
       val aList = (1 to pqSubspaces).map(m => s"a$m").mkString(", ")
       val dist = (1 to pqSubspaces).map(m => s"pr.a$m[c.code_$m]").mkString(" + ")
@@ -4206,9 +3826,7 @@ object LlmDataQueries {
          |      FROM pr JOIN c ON c.b1 = pr.bucket AND c.vec_id <> pr.query_id),
          |r AS (SELECT query_id, neighbor_id, dist,
          |        row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rnk
-         |      FROM p)
-         |SELECT query_id, neighbor_id, rnk, CAST(dist AS BIGINT) AS adc_dist
-         |FROM r WHERE rnk <= $ivfK ORDER BY query_id, rnk""".stripMargin
+         |      FROM p)""".stripMargin
   }
 
   private val annIvfPq = CatalogEntry(
@@ -4247,27 +3865,7 @@ object LlmDataQueries {
       .orderBy("query_id", "rnk"),
     Some {
       val kPrime = 3 * ivfK
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
-      val aList = (1 to pqSubspaces).map(m => s"a$m").mkString(", ")
-      val dist = (1 to pqSubspaces).map(m => s"pr.a$m[c.code_$m]").mkString(" + ")
-      s"""WITH $kmeansCtes,
-         |sc AS (SELECT vec_id, list(score ORDER BY j) AS scores FROM d2 GROUP BY vec_id),
-         |s AS (SELECT n.vec_id,
-         |  $pqArraysSql,
-         |  sc.scores, list_position(sc.scores, list_aggregate(sc.scores, 'max')) AS b1
-         |      FROM n JOIN sc USING (vec_id)),
-         |c AS (SELECT vec_id, b1,
-         |  $pqOracleCodes
-         |  FROM s),
-         |q AS (SELECT vec_id, $aList, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
-         |      FROM s WHERE vec_id < $annQueryIds),
-         |pr AS (SELECT vec_id AS query_id, $aList, unnest([b1, b2]) AS bucket FROM q),
-         |p AS (SELECT pr.query_id, c.vec_id AS neighbor_id, $dist AS dist
-         |      FROM pr JOIN c ON c.b1 = pr.bucket AND c.vec_id <> pr.query_id),
-         |r AS (SELECT query_id, neighbor_id, dist,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rnk
-         |      FROM p),
+      s"""${ivfPqCtes(s"WHERE vec_id < $annQueryIds")},
          |sl AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= $kPrime),
          |rr AS (SELECT sl.query_id, sl.neighbor_id,
          |        list_sum(list_transform(range(1, len(qv.v) + 1), i -> qv.v[i] * cv.v[i]))
@@ -4577,38 +4175,7 @@ object LlmDataQueries {
     (s, dir) => Classifier.trainEval(
         QuerySupport.table(s, dir, "documents"), col("lang") === "en"),
     Some {
-      val decode = hexDecode4("md5(feat)")
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, unnest(w) AS feat FROM tk
-         |      UNION ALL
-         |      SELECT doc_id, unnest(list_transform(range(1, len(w)),
-         |        i -> w[i] || ' ' || w[i + 1])) AS feat FROM tk),
-         |fb AS (SELECT doc_id, CAST(($decode) AS BIGINT) AS bucket,
-         |        count(*) AS x FROM f GROUP BY 1, 2
-         |       UNION ALL
-         |       SELECT doc_id, CAST(65536 AS BIGINT), CAST(1 AS BIGINT)
-         |       FROM documents),
-         |lab AS (SELECT doc_id,
-         |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
-         |tr AS (SELECT * FROM lab WHERE doc_id % 5 <> 0),
-         |te AS (SELECT * FROM lab WHERE doc_id % 5 = 0),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM tr),
-         |e1 AS (SELECT doc_id, CAST(500000 - 1000000 * y AS BIGINT) AS err
-         |       FROM tr),
-         |g1 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e1 USING (doc_id) GROUP BY bucket),
-         |w1 AS (SELECT bucket, -(g // (2 * nd)) AS w FROM g1 CROSS JOIN nn),
-         |m2 AS (SELECT doc_id, sum(x * w) AS m
-         |       FROM fb JOIN w1 USING (bucket) GROUP BY doc_id),
-         |e2 AS (SELECT tr.doc_id,
-         |        least(greatest(500000 + m // 4, 0), 1000000) - 1000000 * y AS err
-         |       FROM tr JOIN m2 USING (doc_id)),
-         |g2 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e2 USING (doc_id) GROUP BY bucket),
-         |w2 AS (SELECT w1.bucket, w1.w - (g2.g // (2 * nd)) AS w
-         |       FROM w1 JOIN g2 USING (bucket) CROSS JOIN nn),
-         |mf AS (SELECT doc_id, CAST(sum(x * w) AS BIGINT) AS m
-         |       FROM fb JOIN w2 USING (bucket) GROUP BY doc_id),
+      s"""WITH ${classifierCtes(Set.empty, holdout = true, "m")},
          |sc AS (SELECT te.doc_id, y, coalesce(mf.m, 0) >= 0 AS p
          |       FROM te LEFT JOIN mf USING (doc_id)),
          |cf AS (SELECT CAST(count(*) AS BIGINT) AS n_test,
@@ -4639,37 +4206,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "documents"), col("lang") === "en")
       .orderBy("epoch"),
     Some {
-      val decode = hexDecode4("md5(feat)")
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, unnest(w) AS feat FROM tk
-         |      UNION ALL
-         |      SELECT doc_id, unnest(list_transform(range(1, len(w)),
-         |        i -> w[i] || ' ' || w[i + 1])) AS feat FROM tk),
-         |fb AS MATERIALIZED (SELECT doc_id, CAST(($decode) AS BIGINT) AS bucket,
-         |        count(*) AS x FROM f GROUP BY 1, 2
-         |       UNION ALL
-         |       SELECT doc_id, CAST(65536 AS BIGINT), CAST(1 AS BIGINT)
-         |       FROM documents),
-         |lab AS MATERIALIZED (SELECT doc_id,
-         |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents),
-         |e1 AS (SELECT doc_id, CAST(500000 - 1000000 * y AS BIGINT) AS err
-         |       FROM lab),
-         |g1 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e1 USING (doc_id) GROUP BY bucket),
-         |w1 AS MATERIALIZED (SELECT bucket, -(g // (2 * nd)) AS w
-         |       FROM g1 CROSS JOIN nn),
-         |m2 AS MATERIALIZED (SELECT doc_id, sum(x * w) AS m
-         |       FROM fb JOIN w1 USING (bucket) GROUP BY doc_id),
-         |e2 AS (SELECT lab.doc_id,
-         |        least(greatest(500000 + m // 4, 0), 1000000) - 1000000 * y AS err
-         |       FROM lab JOIN m2 USING (doc_id)),
-         |g2 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e2 USING (doc_id) GROUP BY bucket),
-         |w2 AS (SELECT w1.bucket, w1.w - (g2.g // (2 * nd)) AS w
-         |       FROM w1 JOIN g2 USING (bucket) CROSS JOIN nn),
-         |mf AS (SELECT doc_id, CAST(sum(x * w) AS BIGINT) AS m
-         |       FROM fb JOIN w2 USING (bucket) GROUP BY doc_id),
+      s"""WITH ${classifierCtes(Set("fb", "lab", "w1", "m2"), holdout = false, "m")},
          |s0 AS (SELECT CAST(0 AS BIGINT) AS epoch,
          |         CAST(count(*) AS BIGINT) AS n_docs,
          |         CAST(sum(abs(500000 - 1000000 * y)) AS BIGINT) AS sum_abs_err,
@@ -4697,43 +4234,82 @@ object LlmDataQueries {
     * MATERIALIZED — the r15 driver-gate lesson), ending in
     * `lab(doc_id, y)` and `scored(doc_id, y, margin_micro, p_micro)`.
     */
-  private def classifierScoredCtes: String = {
+  private def classifierScoredCtes: String =
+    s"""${classifierCtes(Set("fb", "lab", "w1"), holdout = false, "margin_micro")},
+       |scored AS MATERIALIZED (SELECT lab.doc_id, y, margin_micro,
+       |        CAST(least(greatest(500000 + margin_micro // 4, 0), 1000000)
+       |          AS BIGINT) AS p_micro
+       |       FROM lab JOIN mf USING (doc_id))""".stripMargin
+
+  /** The unrolled 2-epoch classifier-training CTE chain, `tk` to
+    * `mf(doc_id, <margin>)`: hashed unigram+bigram buckets `fb`, the
+    * en-vs-rest labels `lab`, two exact-integer GD epochs. `holdout`
+    * fits on the doc_id % 5 <> 0 slice `tr` and keeps the rest as
+    * `te`; `mat` names the CTEs pinned AS MATERIALIZED.
+    */
+  private def classifierCtes(mat: Set[String], holdout: Boolean, margin: String): String = {
     val decode = hexDecode4("md5(feat)")
+    def cte(n: String) = if (mat(n)) s"$n AS MATERIALIZED" else s"$n AS"
+    val fit = if (holdout) "tr" else "lab"
+    val split =
+      if (holdout) "tr AS (SELECT * FROM lab WHERE doc_id % 5 <> 0),\nte AS (SELECT * FROM lab WHERE doc_id % 5 = 0),\n"
+      else ""
+    val w1 =
+      if (mat("w1")) "w1 AS MATERIALIZED (SELECT bucket, -(g // (2 * nd)) AS w\n       FROM g1 CROSS JOIN nn)"
+      else "w1 AS (SELECT bucket, -(g // (2 * nd)) AS w FROM g1 CROSS JOIN nn)"
     s"""tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
        |f AS (SELECT doc_id, unnest(w) AS feat FROM tk
        |      UNION ALL
        |      SELECT doc_id, unnest(list_transform(range(1, len(w)),
        |        i -> w[i] || ' ' || w[i + 1])) AS feat FROM tk),
-       |fb AS MATERIALIZED (SELECT doc_id, CAST(($decode) AS BIGINT) AS bucket,
+       |${cte("fb")} (SELECT doc_id, CAST(($decode) AS BIGINT) AS bucket,
        |        count(*) AS x FROM f GROUP BY 1, 2
        |       UNION ALL
        |       SELECT doc_id, CAST(65536 AS BIGINT), CAST(1 AS BIGINT)
        |       FROM documents),
-       |lab AS MATERIALIZED (SELECT doc_id,
+       |${cte("lab")} (SELECT doc_id,
        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents),
+       |${split}nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM ${if (holdout) "tr" else "documents"}),
        |e1 AS (SELECT doc_id, CAST(500000 - 1000000 * y AS BIGINT) AS err
-       |       FROM lab),
+       |       FROM $fit),
        |g1 AS (SELECT bucket, sum(x * err) AS g
        |       FROM fb JOIN e1 USING (doc_id) GROUP BY bucket),
-       |w1 AS MATERIALIZED (SELECT bucket, -(g // (2 * nd)) AS w
-       |       FROM g1 CROSS JOIN nn),
-       |m2 AS (SELECT doc_id, sum(x * w) AS m
+       |$w1,
+       |${cte("m2")} (SELECT doc_id, sum(x * w) AS m
        |       FROM fb JOIN w1 USING (bucket) GROUP BY doc_id),
-       |e2 AS (SELECT lab.doc_id,
+       |e2 AS (SELECT $fit.doc_id,
        |        least(greatest(500000 + m // 4, 0), 1000000) - 1000000 * y AS err
-       |       FROM lab JOIN m2 USING (doc_id)),
+       |       FROM $fit JOIN m2 USING (doc_id)),
        |g2 AS (SELECT bucket, sum(x * err) AS g
        |       FROM fb JOIN e2 USING (doc_id) GROUP BY bucket),
        |w2 AS (SELECT w1.bucket, w1.w - (g2.g // (2 * nd)) AS w
        |       FROM w1 JOIN g2 USING (bucket) CROSS JOIN nn),
-       |mf AS (SELECT doc_id, CAST(sum(x * w) AS BIGINT) AS margin_micro
-       |       FROM fb JOIN w2 USING (bucket) GROUP BY doc_id),
-       |scored AS MATERIALIZED (SELECT lab.doc_id, y, margin_micro,
-       |        CAST(least(greatest(500000 + margin_micro // 4, 0), 1000000)
-       |          AS BIGINT) AS p_micro
-       |       FROM lab JOIN mf USING (doc_id))""".stripMargin
+       |mf AS (SELECT doc_id, CAST(sum(x * w) AS BIGINT) AS $margin
+       |       FROM fb JOIN w2 USING (bucket) GROUP BY doc_id)""".stripMargin
   }
+
+  /** The doubled-rank exact AUC over a distinct-score frame
+    * `gr(s, c, p)`: count, positives per score.
+    */
+  private val aucTailSql =
+    """wn AS (SELECT c, p,
+      |        coalesce(sum(c) OVER (ORDER BY s
+      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+      |          0) AS cb
+      |       FROM gr),
+      |ag AS (SELECT CAST(sum(p) AS BIGINT) AS n_pos,
+      |         CAST(sum(c - p) AS BIGINT) AS n_neg,
+      |         CAST(count(*) AS BIGINT) AS n_score_groups,
+      |         CAST(sum(p * (2 * cb + c + 1)) AS BIGINT) AS r2
+      |       FROM wn),
+      |au AS (SELECT n_pos, n_neg, n_score_groups,
+      |         CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 500000
+      |           ELSE (r2 - n_pos * (n_pos + 1)) * 1000000
+      |             // (2 * n_pos * n_neg) END AS BIGINT) AS auc_ppm
+      |       FROM ag)
+      |SELECT n_pos, n_neg, n_score_groups, auc_ppm,
+      |  CAST(2 * auc_ppm - 1000000 AS BIGINT) AS gini_ppm
+      |FROM au""".stripMargin
 
   /** Tie-aware exact ROC-AUC over the trained margins — see
     * [[Classifier.aucFromScores]]: the corpus collapses to the
@@ -4749,24 +4325,7 @@ object LlmDataQueries {
     Some(s"""WITH $classifierScoredCtes,
             |gr AS (SELECT margin_micro AS s, count(*) AS c, sum(y) AS p
             |       FROM scored GROUP BY 1),
-            |wn AS (SELECT c, p,
-            |        coalesce(sum(c) OVER (ORDER BY s
-            |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-            |          0) AS cb
-            |       FROM gr),
-            |ag AS (SELECT CAST(sum(p) AS BIGINT) AS n_pos,
-            |         CAST(sum(c - p) AS BIGINT) AS n_neg,
-            |         CAST(count(*) AS BIGINT) AS n_score_groups,
-            |         CAST(sum(p * (2 * cb + c + 1)) AS BIGINT) AS r2
-            |       FROM wn),
-            |au AS (SELECT n_pos, n_neg, n_score_groups,
-            |         CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 500000
-            |           ELSE (r2 - n_pos * (n_pos + 1)) * 1000000
-            |             // (2 * n_pos * n_neg) END AS BIGINT) AS auc_ppm
-            |       FROM ag)
-            |SELECT n_pos, n_neg, n_score_groups, auc_ppm,
-            |  CAST(2 * auc_ppm - 1000000 AS BIGINT) AS gini_ppm
-            |FROM au""".stripMargin))
+            |$aucTailSql""".stripMargin))
 
   /** Precision/recall operating-point sweep over the trained
     * hard-sigmoid probabilities — see [[Classifier.prSweep]]: one
@@ -4809,60 +4368,11 @@ object LlmDataQueries {
     (s, dir) => Classifier.trainAucHoldout(
         QuerySupport.table(s, dir, "documents"), col("lang") === "en"),
     Some {
-      val decode = hexDecode4("md5(feat)")
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, unnest(w) AS feat FROM tk
-         |      UNION ALL
-         |      SELECT doc_id, unnest(list_transform(range(1, len(w)),
-         |        i -> w[i] || ' ' || w[i + 1])) AS feat FROM tk),
-         |fb AS MATERIALIZED (SELECT doc_id, CAST(($decode) AS BIGINT) AS bucket,
-         |        count(*) AS x FROM f GROUP BY 1, 2
-         |       UNION ALL
-         |       SELECT doc_id, CAST(65536 AS BIGINT), CAST(1 AS BIGINT)
-         |       FROM documents),
-         |lab AS MATERIALIZED (SELECT doc_id,
-         |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
-         |tr AS (SELECT * FROM lab WHERE doc_id % 5 <> 0),
-         |te AS (SELECT * FROM lab WHERE doc_id % 5 = 0),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM tr),
-         |e1 AS (SELECT doc_id, CAST(500000 - 1000000 * y AS BIGINT) AS err
-         |       FROM tr),
-         |g1 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e1 USING (doc_id) GROUP BY bucket),
-         |w1 AS MATERIALIZED (SELECT bucket, -(g // (2 * nd)) AS w
-         |       FROM g1 CROSS JOIN nn),
-         |m2 AS (SELECT doc_id, sum(x * w) AS m
-         |       FROM fb JOIN w1 USING (bucket) GROUP BY doc_id),
-         |e2 AS (SELECT tr.doc_id,
-         |        least(greatest(500000 + m // 4, 0), 1000000) - 1000000 * y AS err
-         |       FROM tr JOIN m2 USING (doc_id)),
-         |g2 AS (SELECT bucket, sum(x * err) AS g
-         |       FROM fb JOIN e2 USING (doc_id) GROUP BY bucket),
-         |w2 AS (SELECT w1.bucket, w1.w - (g2.g // (2 * nd)) AS w
-         |       FROM w1 JOIN g2 USING (bucket) CROSS JOIN nn),
-         |mf AS (SELECT doc_id, CAST(sum(x * w) AS BIGINT) AS m
-         |       FROM fb JOIN w2 USING (bucket) GROUP BY doc_id),
+      s"""WITH ${classifierCtes(Set("fb", "lab", "w1"), holdout = true, "m")},
          |sc AS (SELECT te.doc_id, y, coalesce(mf.m, 0) AS s
          |       FROM te LEFT JOIN mf USING (doc_id)),
          |gr AS (SELECT s, count(*) AS c, sum(y) AS p FROM sc GROUP BY 1),
-         |wn AS (SELECT c, p,
-         |        coalesce(sum(c) OVER (ORDER BY s
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |          0) AS cb
-         |       FROM gr),
-         |ag AS (SELECT CAST(sum(p) AS BIGINT) AS n_pos,
-         |         CAST(sum(c - p) AS BIGINT) AS n_neg,
-         |         CAST(count(*) AS BIGINT) AS n_score_groups,
-         |         CAST(sum(p * (2 * cb + c + 1)) AS BIGINT) AS r2
-         |       FROM wn),
-         |au AS (SELECT n_pos, n_neg, n_score_groups,
-         |         CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 500000
-         |           ELSE (r2 - n_pos * (n_pos + 1)) * 1000000
-         |             // (2 * n_pos * n_neg) END AS BIGINT) AS auc_ppm
-         |       FROM ag)
-         |SELECT n_pos, n_neg, n_score_groups, auc_ppm,
-         |  CAST(2 * auc_ppm - 1000000 AS BIGINT) AS gini_ppm
-         |FROM au""".stripMargin
+         |$aucTailSql""".stripMargin
     })
 
   /** Unigram-LM surprisal: per-vocab-entry micro-nat quantization
@@ -5200,6 +4710,32 @@ object LlmDataQueries {
          |FROM d1 JOIN ensk USING (doc_id) JOIN decf USING (doc_id) JOIN mixk USING (doc_id)
          |ORDER BY doc_id""".stripMargin))
 
+  /** The span gate (`sp`-prefixed CTEs ending in `spk`): replays
+    * `text_dup_span_coverage` and keeps a document whose dup-span
+    * coverage is at or under 50%; a sub-shingle document covers zero
+    * positions and passes, like the operator.
+    */
+  private def spanGateCtes: String = {
+    val sw = shingleWidth
+    val cat = (0 until sw).map(o => s"spw[i+$o]").mkString(" || ' ' || ")
+    s"""spwt AS (SELECT doc_id, string_split(text, ' ') AS spw FROM documents),
+       |spp AS (SELECT doc_id, spw,
+       |          unnest(range(1, greatest(len(spw) - ${sw - 2}, 1))) AS i FROM spwt),
+       |spg AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, $cat AS g FROM spp),
+       |spocc AS (SELECT g, count(*) AS occ FROM spg GROUP BY g HAVING count(*) >= 2),
+       |spd AS (SELECT doc_id, pos FROM spg JOIN spocc USING (g)),
+       |spc AS (SELECT doc_id, pos,
+       |          lead(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt FROM spd),
+       |spcov AS (SELECT doc_id,
+       |            sum(CASE WHEN nxt IS NULL THEN $sw
+       |                     ELSE least($sw, nxt - pos) END) AS covered
+       |          FROM spc GROUP BY doc_id),
+       |spn AS (SELECT doc_id, len(spw) AS n_tokens FROM spwt),
+       |spk AS (SELECT spn.doc_id,
+       |          coalesce(spcov.covered, 0) * 1000000 // spn.n_tokens <= 500000 AS span_keep
+       |        FROM spn LEFT JOIN spcov USING (doc_id))""".stripMargin
+  }
+
   /** The v3 capstone: v2's four gates plus the SPAN-level conjunct
     * (dup-span coverage at or under 50% — Lee et al. 2022's signal
     * that a digest-unique document can still be mostly corpus
@@ -5217,25 +4753,8 @@ object LlmDataQueries {
         .orderBy("doc_id")
     },
     Some {
-      val sw = shingleWidth
-      val cat = (0 until sw).map(o => s"spw[i+$o]").mkString(" || ' ' || ")
       s"""WITH RECURSIVE $curationVerdictCtes,
-         |spwt AS (SELECT doc_id, string_split(text, ' ') AS spw FROM documents),
-         |spp AS (SELECT doc_id, spw,
-         |          unnest(range(1, greatest(len(spw) - ${sw - 2}, 1))) AS i FROM spwt),
-         |spg AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, $cat AS g FROM spp),
-         |spocc AS (SELECT g, count(*) AS occ FROM spg GROUP BY g HAVING count(*) >= 2),
-         |spd AS (SELECT doc_id, pos FROM spg JOIN spocc USING (g)),
-         |spc AS (SELECT doc_id, pos,
-         |          lead(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt FROM spd),
-         |spcov AS (SELECT doc_id,
-         |            sum(CASE WHEN nxt IS NULL THEN $sw
-         |                     ELSE least($sw, nxt - pos) END) AS covered
-         |          FROM spc GROUP BY doc_id),
-         |spn AS (SELECT doc_id, len(spw) AS n_tokens FROM spwt),
-         |spk AS (SELECT spn.doc_id,
-         |          coalesce(spcov.covered, 0) * 1000000 // spn.n_tokens <= 500000 AS span_keep
-         |        FROM spn LEFT JOIN spcov USING (doc_id))
+         |$spanGateCtes
          |SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
          |  NOT decf.cluster_contaminated AS decontam_keep, mixk.mixture_keep,
          |  spk.span_keep,
@@ -5257,27 +4776,11 @@ object LlmDataQueries {
     */
   private lazy val curationV4Ctes: String = {
       val sw = shingleWidth
-      val cat = (0 until sw).map(o => s"spw[i+$o]").mkString(" || ' ' || ")
       val hx = hexDecode4("md5(dsterm)", posFn = "strpos", substrFn = "substr")
       val b = dsirBuckets
       val nvcat = (0 until sw).map(o => s"nvw2[i+$o]").mkString(" || ' ' || ")
       s"""$curationVerdictCtes,
-         |spwt AS (SELECT doc_id, string_split(text, ' ') AS spw FROM documents),
-         |spp AS (SELECT doc_id, spw,
-         |          unnest(range(1, greatest(len(spw) - ${sw - 2}, 1))) AS i FROM spwt),
-         |spg AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, $cat AS g FROM spp),
-         |spocc AS (SELECT g, count(*) AS occ FROM spg GROUP BY g HAVING count(*) >= 2),
-         |spd AS (SELECT doc_id, pos FROM spg JOIN spocc USING (g)),
-         |spc AS (SELECT doc_id, pos,
-         |          lead(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt FROM spd),
-         |spcov AS (SELECT doc_id,
-         |            sum(CASE WHEN nxt IS NULL THEN $sw
-         |                     ELSE least($sw, nxt - pos) END) AS covered
-         |          FROM spc GROUP BY doc_id),
-         |spn AS (SELECT doc_id, len(spw) AS n_tokens FROM spwt),
-         |spk AS (SELECT spn.doc_id,
-         |          coalesce(spcov.covered, 0) * 1000000 // spn.n_tokens <= 500000 AS span_keep
-         |        FROM spn LEFT JOIN spcov USING (doc_id)),
+         |$spanGateCtes,
          |dst AS (SELECT doc_id, lang = '$dsirTargetLang' AS tgt,
          |          unnest(string_split(text, ' ')) AS dsterm FROM documents),
          |dsh AS (SELECT doc_id, tgt, ($hx) % $b AS dsb FROM dst),
@@ -5317,24 +4820,8 @@ object LlmDataQueries {
           mixtureTargets, target = col("lang") === dsirTargetLang)
         .orderBy("doc_id")
     },
-    Some(s"""WITH RECURSIVE $curationV4Ctes
-         |SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
-         |  NOT decf.cluster_contaminated AS decontam_keep, mixk.mixture_keep,
-         |  spk.span_keep, dsk.dsir_keep, nvk.novelty_keep,
-         |  (d1.dedup_keep AND ensk.quality_keep AND NOT decf.cluster_contaminated
-         |   AND mixk.mixture_keep AND spk.span_keep AND dsk.dsir_keep
-         |   AND nvk.novelty_keep) AS keep
-         |FROM d1 JOIN ensk USING (doc_id) JOIN decf USING (doc_id)
-         |  JOIN mixk USING (doc_id) JOIN spk USING (doc_id)
-         |  JOIN dsk USING (doc_id) JOIN nvk USING (doc_id)
-         |ORDER BY doc_id""".stripMargin))
+    Some(s"WITH RECURSIVE $curationV4Ctes\n${capstoneSelectSql(anchored = false, clf = false)}"))
 
-  /** The v5 capstone: v4's seven gates plus the SELF-TRAINED
-    * classifier gate — the ensemble keep flag is the weak label for
-    * the 2-epoch exact-integer fit (`tc`-prefixed CTEs replay the
-    * `text_classifier_train` chain with `tclab` reading `ensk`), and
-    * the eighth conjunct is the trained margin's sign.
-    */
   /** The 2-epoch classifier-gate CTE chain (the `text_classifier_train`
     * replay with `tclab` reading `ensk`) — shared by the exact and the
     * anchored v5 capstone oracles.
@@ -5374,31 +4861,6 @@ object LlmDataQueries {
          |tck AS (SELECT doc_id, m >= 0 AS clf_keep FROM tcmf)""".stripMargin
   }
 
-  private val curationPipelineV5 = CatalogEntry(
-    "curation_pipeline_v5",
-    (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents")
-      Curation.curationVerdictsV5(d,
-          d.filter(col("doc_id") % 97 === 0).select("doc_id", "text"),
-          mixtureTargets, target = col("lang") === dsirTargetLang)
-        .orderBy("doc_id")
-    },
-    Some {
-      s"""WITH RECURSIVE $curationV4Ctes,
-         |$classifierGateCtes
-         |SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
-         |  NOT decf.cluster_contaminated AS decontam_keep, mixk.mixture_keep,
-         |  spk.span_keep, dsk.dsir_keep, nvk.novelty_keep, tck.clf_keep,
-         |  (d1.dedup_keep AND ensk.quality_keep AND NOT decf.cluster_contaminated
-         |   AND mixk.mixture_keep AND spk.span_keep AND dsk.dsir_keep
-         |   AND nvk.novelty_keep AND tck.clf_keep) AS keep
-         |FROM d1 JOIN ensk USING (doc_id) JOIN decf USING (doc_id)
-         |  JOIN mixk USING (doc_id) JOIN spk USING (doc_id)
-         |  JOIN dsk USING (doc_id) JOIN nvk USING (doc_id)
-         |  JOIN tck USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    })
-
   /** The eval-anchored decontamination CTE block (ends in `adec`) —
     * shared by the anchored v5 capstone and the v6 budget capstone.
     */
@@ -5420,41 +4882,79 @@ object LlmDataQueries {
        |         FROM documents d LEFT JOIN hits h USING (doc_id)
        |           LEFT JOIN andp nd USING (doc_id))""".stripMargin
 
-  /** The v5 capstone with the ANCHORED decontamination gate — the
-    * production spelling for reuse-heavy corpora (PLANS.md round-18:
-    * the cluster chain is 638 s of v4's 724 s at the zipf10
-    * saturation point; the anchored verdict is 94 s): decontam_keep
-    * becomes NOT(direct gram overlap OR one-hop (train, eval)
-    * near-dup), every other gate bit-identical to v5. The multi-hop
-    * divergence is spec-pinned in Round18OpsSpec.
+  /** The v4+ capstones' gate conjunction: decontamination from the
+    * anchored verdict `adec` when `anchored`, else from the cluster
+    * chain's `decf`; the classifier gate `tck` when `clf`.
+    * Continuation lines are indented by `ind`.
     */
-  private val curationPipelineV5Anchored = CatalogEntry(
-    "curation_pipeline_v5_anchored",
+  private def gateConjunctionSql(anchored: Boolean, clf: Boolean, ind: String): String = {
+    val dec = if (anchored) "adec.decontam_keep" else "NOT decf.cluster_contaminated"
+    val tc = if (clf) " AND tck.clf_keep" else ""
+    s"""(d1.dedup_keep AND ensk.quality_keep AND $dec
+       |$ind   AND mixk.mixture_keep AND spk.span_keep AND dsk.dsir_keep
+       |$ind   AND nvk.novelty_keep$tc)""".stripMargin
+  }
+
+  /** The gate join that goes with [[gateConjunctionSql]]. */
+  private def gateJoinSql(anchored: Boolean, clf: Boolean, ind: String): String = {
+    val dec = if (anchored) "adec" else "decf"
+    val tc = if (clf) s"\n$ind  JOIN tck USING (doc_id)" else ""
+    s"""FROM d1 JOIN ensk USING (doc_id) JOIN $dec USING (doc_id)
+       |$ind  JOIN mixk USING (doc_id) JOIN spk USING (doc_id)
+       |$ind  JOIN dsk USING (doc_id) JOIN nvk USING (doc_id)$tc""".stripMargin
+  }
+
+  /** The v4/v5 capstones' verdict frame: every gate bit and `keep`. */
+  private def capstoneSelectSql(anchored: Boolean, clf: Boolean): String = {
+    val dec = if (anchored) "adec.decontam_keep" else "NOT decf.cluster_contaminated AS decontam_keep"
+    val tc = if (clf) " tck.clf_keep," else ""
+    s"""SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
+       |  $dec, mixk.mixture_keep,
+       |  spk.span_keep, dsk.dsir_keep, nvk.novelty_keep,$tc
+       |  ${gateConjunctionSql(anchored, clf, "")} AS keep
+       |${gateJoinSql(anchored, clf, "")}
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  /** The eval set the capstones decontaminate against, and the
+    * ANCHORED decontamination verdict over it.
+    */
+  private def capstoneEval(d: DataFrame): DataFrame =
+    d.filter(col("doc_id") % 97 === 0).select("doc_id", "text")
+
+  private def anchoredVerdict(d: DataFrame, ev: DataFrame): DataFrame =
+    Curation.decontaminateAnchored(d, ev)
+      .select(col("doc_id"), (!col("flagged")).as("decontam_keep"))
+
+  /** The v5 capstone: v4's seven gates plus the SELF-TRAINED
+    * classifier gate — the ensemble keep flag is the weak label for
+    * the 2-epoch exact-integer fit (`tc`-prefixed CTEs replay the
+    * `text_classifier_train` chain with `tclab` reading `ensk`), and
+    * the eighth conjunct is the trained margin's sign.
+    *
+    * `curation_pipeline_v5_anchored` swaps in the ANCHORED
+    * decontamination gate — the production spelling for reuse-heavy
+    * corpora (PLANS.md round-18: the cluster chain is 638 s of v4's
+    * 724 s at the zipf10 saturation point; the anchored verdict is
+    * 94 s): decontam_keep becomes NOT(direct gram overlap OR one-hop
+    * (train, eval) near-dup), every other gate bit-identical to v5.
+    * The multi-hop divergence is spec-pinned in Round18OpsSpec.
+    */
+  private def curationPipelineV5(anchored: Boolean): CatalogEntry = CatalogEntry(
+    if (anchored) "curation_pipeline_v5_anchored" else "curation_pipeline_v5",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val ev = d.filter(col("doc_id") % 97 === 0).select("doc_id", "text")
-      val anchored = Curation.decontaminateAnchored(d, ev)
-        .select(col("doc_id"), (!col("flagged")).as("decontam_keep"))
+      val ev = capstoneEval(d)
       Curation.curationVerdictsV5(d, ev, mixtureTargets,
           target = col("lang") === dsirTargetLang,
-          decontamVerdict = Some(anchored))
+          decontamVerdict = Option.when(anchored)(anchoredVerdict(d, ev)))
         .orderBy("doc_id")
     },
     Some {
+      val adec = if (anchored) s",\n$anchoredDecontamCtes" else ""
       s"""WITH RECURSIVE $curationV4Ctes,
-         |$classifierGateCtes,
-         |$anchoredDecontamCtes
-         |SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
-         |  adec.decontam_keep, mixk.mixture_keep,
-         |  spk.span_keep, dsk.dsir_keep, nvk.novelty_keep, tck.clf_keep,
-         |  (d1.dedup_keep AND ensk.quality_keep AND adec.decontam_keep
-         |   AND mixk.mixture_keep AND spk.span_keep AND dsk.dsir_keep
-         |   AND nvk.novelty_keep AND tck.clf_keep) AS keep
-         |FROM d1 JOIN ensk USING (doc_id) JOIN adec USING (doc_id)
-         |  JOIN mixk USING (doc_id) JOIN spk USING (doc_id)
-         |  JOIN dsk USING (doc_id) JOIN nvk USING (doc_id)
-         |  JOIN tck USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
+         |$classifierGateCtes$adec
+         |${capstoneSelectSql(anchored, clf = true)}""".stripMargin
     })
 
   /** The v6 budget capstone on the anchored production path: gates
@@ -5464,12 +4964,10 @@ object LlmDataQueries {
     "curation_pipeline_v6",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val ev = d.filter(col("doc_id") % 97 === 0).select("doc_id", "text")
-      val anchored = Curation.decontaminateAnchored(d, ev)
-        .select(col("doc_id"), (!col("flagged")).as("decontam_keep"))
+      val ev = capstoneEval(d)
       Curation.curationVerdictsV6(d, ev, mixtureTargets,
           target = col("lang") === dsirTargetLang, tokenBudget = 20000L,
-          decontamVerdict = Some(anchored))
+          decontamVerdict = Some(anchoredVerdict(d, ev)))
         .orderBy("doc_id")
     },
     Some {
@@ -5479,13 +4977,8 @@ object LlmDataQueries {
          |v5r AS (SELECT d1.doc_id, d1.dedup_keep, ensk.quality_keep,
          |          adec.decontam_keep, mixk.mixture_keep, spk.span_keep,
          |          dsk.dsir_keep, nvk.novelty_keep, tck.clf_keep,
-         |          (d1.dedup_keep AND ensk.quality_keep AND adec.decontam_keep
-         |           AND mixk.mixture_keep AND spk.span_keep AND dsk.dsir_keep
-         |           AND nvk.novelty_keep AND tck.clf_keep) AS gates_keep
-         |        FROM d1 JOIN ensk USING (doc_id) JOIN adec USING (doc_id)
-         |          JOIN mixk USING (doc_id) JOIN spk USING (doc_id)
-         |          JOIN dsk USING (doc_id) JOIN nvk USING (doc_id)
-         |          JOIN tck USING (doc_id)),
+         |          ${gateConjunctionSql(anchored = true, clf = true, "        ")} AS gates_keep
+         |        ${gateJoinSql(anchored = true, clf = true, "        ")}),
          |m6 AS (SELECT doc_id, len(w2) AS n_tokens,
          |         len(list_distinct(w2)) AS n_distinct,
          |         len(list_filter(w2, t -> t IN ${inList(stopwords)})) AS n_stop
@@ -7427,24 +6920,6 @@ object LlmDataQueries {
        |  sim_ppm >= 800000 AS is_match
        |FROM sm ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Edit verify's production path at scale: the audit family's
-    * shared 25% digest pair cut ahead of the banded DP.
-    */
-  private val dedupEditVerifySampled = CatalogEntry(
-    "dedup_edit_verify_sampled",
-    (s, dir) => Dedup.editVerify(
-        QuerySupport.table(s, dir, "documents").select("doc_id", "text"),
-        samplePpm = 250000L)
-      .orderBy("doc_a", "doc_b"),
-    Some(editVerifyOracleSql(auditSamplePred)))
-
-  private val dedupEditVerify = CatalogEntry(
-    "dedup_edit_verify",
-    (s, dir) => Dedup.editVerify(
-        QuerySupport.table(s, dir, "documents").select("doc_id", "text"))
-      .orderBy("doc_a", "doc_b"),
-    Some(editVerifyOracleSql("")))
-
   /** t-closeness over (source, length-bucket) with `lang` sensitive —
     * the third rung after k-anonymity and l-diversity: all-integer
     * total-variation distance per group, absent sensitive values
@@ -7813,71 +7288,27 @@ object LlmDataQueries {
     * shared by every threshold, exact integer-ppm Jaccard — the
     * fourth planner axis.
     */
-  private val dedupThresholdSweep = CatalogEntry(
-    "dedup_threshold_sweep",
-    (s, dir) => Dedup.jaccardThresholdSweep(
-        QuerySupport.table(s, dir, "documents").select("doc_id", "text"))
-      .orderBy("threshold_pct"),
-    Some(s"""WITH $minhashCtes,
-            |ds AS (SELECT doc_id, list_distinct(sh) AS s FROM sh),
-            |jp AS (SELECT len(list_intersect(a.s, b.s)) * 1000000
-            |         // greatest(len(a.s) + len(b.s)
-            |           - len(list_intersect(a.s, b.s)), 1) AS jppm
-            |       FROM cand c JOIN ds a ON a.doc_id = c.doc_a
-            |       JOIN ds b ON b.doc_id = c.doc_b),
-            |tt AS (SELECT count(*) AS n_candidates FROM jp),
-            |sp AS (SELECT unnest([30, 50, 70, 90]) AS threshold_pct),
-            |hits AS (SELECT sp.threshold_pct, count(*) AS n_pairs
-            |         FROM jp CROSS JOIN sp
-            |         WHERE jp.jppm >= sp.threshold_pct * 10000
-            |         GROUP BY sp.threshold_pct)
-            |SELECT CAST(sp.threshold_pct AS BIGINT) AS threshold_pct,
-            |  CAST(tt.n_candidates AS BIGINT) AS n_candidates,
-            |  CAST(coalesce(hits.n_pairs, 0) AS BIGINT) AS n_pairs,
-            |  CAST(coalesce(hits.n_pairs, 0) * 1000000
-            |    // greatest(tt.n_candidates, 1) AS BIGINT) AS share_ppm
-            |FROM sp LEFT JOIN hits USING (threshold_pct) CROSS JOIN tt
-            |ORDER BY threshold_pct""".stripMargin))
-
-  /** [[dedupThresholdSweep]]'s production path: the audit family's
-    * SHARED 25% digest pair cut (same salt as lshParamPlan /
-    * edit-verify, so every sampled audit reads one pair subset)
-    * before the exact-intersect work — a survivor curve needs the
-    * distribution, not every pair.
-    */
-  private val dedupThresholdSweepSampled = CatalogEntry(
-    "dedup_threshold_sweep_sampled",
-    (s, dir) => Dedup.jaccardThresholdSweep(
-        QuerySupport.table(s, dir, "documents").select("doc_id", "text"),
-        samplePpm = 250000L)
-      .orderBy("threshold_pct"),
-    Some {
-      val cut =
-        s"WHERE substr(md5('lshplan:' || CAST(c.doc_a AS VARCHAR) || " +
-          s"':' || CAST(c.doc_b AS VARCHAR)), 1, 8) < " +
-          s"'${Sampling.hexThreshold(0.25)}'"
-      s"""WITH $minhashCtes,
-         |ds AS (SELECT doc_id, list_distinct(sh) AS s FROM sh),
-         |jp AS (SELECT len(list_intersect(a.s, b.s)) * 1000000
-         |         // greatest(len(a.s) + len(b.s)
-         |           - len(list_intersect(a.s, b.s)), 1) AS jppm
-         |       FROM cand c JOIN ds a ON a.doc_id = c.doc_a
-         |       JOIN ds b ON b.doc_id = c.doc_b
-         |       $cut),
-         |tt AS (SELECT count(*) AS n_candidates FROM jp),
-         |sp AS (SELECT unnest([30, 50, 70, 90]) AS threshold_pct),
-         |hits AS (SELECT sp.threshold_pct, count(*) AS n_pairs
-         |         FROM jp CROSS JOIN sp
-         |         WHERE jp.jppm >= sp.threshold_pct * 10000
-         |         GROUP BY sp.threshold_pct)
-         |SELECT CAST(sp.threshold_pct AS BIGINT) AS threshold_pct,
-         |  CAST(tt.n_candidates AS BIGINT) AS n_candidates,
-         |  CAST(coalesce(hits.n_pairs, 0) AS BIGINT) AS n_pairs,
-         |  CAST(coalesce(hits.n_pairs, 0) * 1000000
-         |    // greatest(tt.n_candidates, 1) AS BIGINT) AS share_ppm
-         |FROM sp LEFT JOIN hits USING (threshold_pct) CROSS JOIN tt
-         |ORDER BY threshold_pct""".stripMargin
-    })
+  private def thresholdSweepOracleSql(samplePred: String): String =
+    s"""WITH $minhashCtes,
+       |ds AS (SELECT doc_id, list_distinct(sh) AS s FROM sh),
+       |jp AS (SELECT len(list_intersect(a.s, b.s)) * 1000000
+       |         // greatest(len(a.s) + len(b.s)
+       |           - len(list_intersect(a.s, b.s)), 1) AS jppm
+       |       FROM cand c JOIN ds a ON a.doc_id = c.doc_a
+       |       JOIN ds b ON b.doc_id = c.doc_b$samplePred),
+       |tt AS (SELECT count(*) AS n_candidates FROM jp),
+       |sp AS (SELECT unnest([30, 50, 70, 90]) AS threshold_pct),
+       |hits AS (SELECT sp.threshold_pct, count(*) AS n_pairs
+       |         FROM jp CROSS JOIN sp
+       |         WHERE jp.jppm >= sp.threshold_pct * 10000
+       |         GROUP BY sp.threshold_pct)
+       |SELECT CAST(sp.threshold_pct AS BIGINT) AS threshold_pct,
+       |  CAST(tt.n_candidates AS BIGINT) AS n_candidates,
+       |  CAST(coalesce(hits.n_pairs, 0) AS BIGINT) AS n_pairs,
+       |  CAST(coalesce(hits.n_pairs, 0) * 1000000
+       |    // greatest(tt.n_candidates, 1) AS BIGINT) AS share_ppm
+       |FROM sp LEFT JOIN hits USING (threshold_pct) CROSS JOIN tt
+       |ORDER BY threshold_pct""".stripMargin
 
   /** Empirical Heaps curve at id-range checkpoints: one vocabulary
     * aggregate carrying min(doc_id) per term answers every
@@ -7969,6 +7400,20 @@ object LlmDataQueries {
     * hash-exact.
     */
   private val annRadiusTheta = 250000L
+  /** The brute radius oracle; every radius-search plan shares it. */
+  private val radiusOracleSql =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
+       |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |        CAST(floor(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i]))
+       |          / (q.nrm * c.nrm) * 1000000.0 + 0.5) AS BIGINT) AS cm
+       |      FROM n q JOIN n c ON c.vec_id <> q.vec_id
+       |      WHERE q.vec_id < $annQueryIds),
+       |m AS (SELECT * FROM p WHERE cm >= $annRadiusTheta)
+       |SELECT query_id, neighbor_id,
+       |  CAST(cm AS DOUBLE) / 1000000.0 AS cosine,
+       |  CAST(count(*) OVER (PARTITION BY query_id) AS BIGINT) AS n_matches
+       |FROM m ORDER BY query_id, neighbor_id""".stripMargin
   private val annRadiusSearch = CatalogEntry(
     "ann_radius_search",
     (s, dir) => {
@@ -7977,18 +7422,7 @@ object LlmDataQueries {
           annRadiusTheta)
         .orderBy("query_id", "neighbor_id")
     },
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-            |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-            |        CAST(floor(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i]))
-            |          / (q.nrm * c.nrm) * 1000000.0 + 0.5) AS BIGINT) AS cm
-            |      FROM n q JOIN n c ON c.vec_id <> q.vec_id
-            |      WHERE q.vec_id < $annQueryIds),
-            |m AS (SELECT * FROM p WHERE cm >= $annRadiusTheta)
-            |SELECT query_id, neighbor_id,
-            |  CAST(cm AS DOUBLE) / 1000000.0 AS cosine,
-            |  CAST(count(*) OVER (PARTITION BY query_id) AS BIGINT) AS n_matches
-            |FROM m ORDER BY query_id, neighbor_id""".stripMargin))
+    Some(radiusOracleSql))
 
   /** Exact bucket-pruned radius search: identical output to
     * ann_radius_search (the pruning is provably lossless), same
@@ -8000,18 +7434,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "embeddings"),
         col("vec_id") < annQueryIds, annRadiusTheta)
       .orderBy("query_id", "neighbor_id"),
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-            |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-            |        CAST(floor(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i]))
-            |          / (q.nrm * c.nrm) * 1000000.0 + 0.5) AS BIGINT) AS cm
-            |      FROM n q JOIN n c ON c.vec_id <> q.vec_id
-            |      WHERE q.vec_id < $annQueryIds),
-            |m AS (SELECT * FROM p WHERE cm >= $annRadiusTheta)
-            |SELECT query_id, neighbor_id,
-            |  CAST(cm AS DOUBLE) / 1000000.0 AS cosine,
-            |  CAST(count(*) OVER (PARTITION BY query_id) AS BIGINT) AS n_matches
-            |FROM m ORDER BY query_id, neighbor_id""".stripMargin))
+    Some(radiusOracleSql))
 
   /** Plan-adaptive exact radius search: the path pick (brute vs
     * ball-pruned) comes from the measured sampled pruning power —
@@ -8025,18 +7448,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "embeddings"),
         col("vec_id") < annQueryIds, annRadiusTheta)
       .orderBy("query_id", "neighbor_id"),
-    Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-            |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-            |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-            |        CAST(floor(list_sum(list_transform(range(1, len(q.v) + 1), i -> q.v[i] * c.v[i]))
-            |          / (q.nrm * c.nrm) * 1000000.0 + 0.5) AS BIGINT) AS cm
-            |      FROM n q JOIN n c ON c.vec_id <> q.vec_id
-            |      WHERE q.vec_id < $annQueryIds),
-            |m AS (SELECT * FROM p WHERE cm >= $annRadiusTheta)
-            |SELECT query_id, neighbor_id,
-            |  CAST(cm AS DOUBLE) / 1000000.0 AS cosine,
-            |  CAST(count(*) OVER (PARTITION BY query_id) AS BIGINT) AS n_matches
-            |FROM m ORDER BY query_id, neighbor_id""".stripMargin))
+    Some(radiusOracleSql))
 
   /** Pairwise label-centroid cosines from exact integer sum-vector
     * dots (cosine is scale-invariant, so sum == mean); one bounded
@@ -8198,23 +7610,104 @@ object LlmDataQueries {
             |  CAST(n_tokens_kept * 1000000 // greatest(tot.tt, 1) AS BIGINT) AS token_share_ppm
             |FROM k CROSS JOIN tot ORDER BY threshold_micro""".stripMargin))
 
+  /** A `_scaled` family: `base` builds its kNN graph at the toy
+    * config's fixed [[ivfCentroids]] (oracle-comparable, occupancy²
+    * by contract); `<base>_scaled`, the 100 TB path, at the
+    * corpus-grown [[knnScaledCentroids]], so per-bucket occupancy —
+    * and with it the self-join's pair count per query — stays bounded
+    * as the corpus grows. Same probe semantics, more lattice planes.
+    * `query` gets the embeddings table and kc, `oracle` kc.
+    */
+  private def scaledPair(base: String, oracle: Int => String)(
+      query: (DataFrame, Int) => DataFrame): Seq[CatalogEntry] =
+    Seq(base -> ivfCentroids, s"${base}_scaled" -> knnScaledCentroids).map {
+      case (name, kc) => CatalogEntry(name,
+        (s, dir) => query(QuerySupport.table(s, dir, "embeddings"), kc), Some(oracle(kc)))
+    }
+
+  private def graphCosine(g: DataFrame): DataFrame =
+    g.select(col("query_id"), col("neighbor_id"), col("rnk"), r6(col("cos")).as("cosine"))
+      .orderBy("query_id", "rnk")
+
+  private val cappedFamilies: Seq[Seq[CatalogEntry]] = Seq(
+    cappedPair("dedup_cross_corpus", crossCorpusTailSql)((n, r, cap) =>
+      Dedup.crossCorpusNearDups(Dedup.sketch(n), Dedup.sketch(r), maxBucket = cap)
+        .select(col("new_id"), col("ref_id"), r6(col("jaccard")).as("jaccard"))
+        .orderBy("new_id", "ref_id")),
+    cappedPair("dedup_incremental_assign", incrementalAssignTailSql)((n, r, cap) =>
+      Dedup.incrementalAssign(n, r, maxBucket = cap).orderBy("new_id")))
+
+  private val sampledFamilies: Seq[Seq[CatalogEntry]] = Seq(
+    // unsampled, the pair count grows 36x at the 100x saturation point
+    sampledPair("dedup_source_matrix", sourceMatrixOracleSql)(
+      (d, ppm) => Dedup.sourceReuseMatrix(d, samplePpm = ppm).orderBy("source_a", "source_b")),
+    // unsampled, 44x at the 100x saturation point
+    sampledPair("dedup_minhash_width_plan", widthPlanOracleSql)(
+      (d, ppm) => Dedup.minhashWidthPlan(Dedup.sketch(d), samplePpm = ppm).orderBy("n_hashes")),
+    sampledPair("dedup_method_agreement", methodAgreementOracleSql)(
+      (d, ppm) => Dedup.methodAgreement(d, samplePpm = ppm).orderBy("method")),
+    // a plan needs the Jaccard distribution, not every pair
+    sampledPair("dedup_lsh_param_plan", lshPlanOracleSql)(
+      (d, ppm) => Dedup.lshParamPlan(d, samplePpm = ppm).orderBy(col("bands").desc)),
+    sampledPair("dedup_graph_transitivity", transitivityOracleSql, transitivityNodePred)(
+      (d, ppm) => Dedup.candidateGraphTransitivity(d, samplePpm = ppm)),
+    sampledPair("dedup_edit_verify", editVerifyOracleSql)(
+      (d, ppm) => Dedup.editVerify(d.select("doc_id", "text"), samplePpm = ppm)
+        .orderBy("doc_a", "doc_b")),
+    // this oracle spells the cut on a line of its own
+    sampledPair("dedup_threshold_sweep", thresholdSweepOracleSql, "\n      " + auditSamplePred)(
+      (d, ppm) => Dedup.jaccardThresholdSweep(d.select("doc_id", "text"), samplePpm = ppm)
+        .orderBy("threshold_pct")))
+
+  private val scaledFamilies: Seq[Seq[CatalogEntry]] = Seq(
+    scaledPair("ann_knn_graph", kc => s"""WITH ${latticeGraphCtes(kc)}
+            |SELECT query_id, neighbor_id, rnk, ${r6s("cos")} AS cosine
+            |FROM r WHERE rnk <= $annK ORDER BY query_id, rnk""".stripMargin)(
+      (e, kc) => graphCosine(AnnSearch.knnGraph(e, annK, kc = kc))),
+    scaledPair("ann_knn_graph_learned", learnedGraphSql)(
+      (e, kc) => graphCosine(AnnSearch.knnGraphLearned(e, annK, kc = kc))),
+    scaledPair("ann_knn_mutual", latticeSql(knnMutualTailSql))(
+      (e, kc) => AnnSearch.knnMutual(e, annK, kc = kc)
+        .select(col("vec_a"), col("vec_b"), col("rnk_ab"), col("rnk_ba"),
+          r6(col("cos")).as("cosine"))
+        .orderBy("vec_a", "vec_b")),
+    scaledPair("ann_knn_pagerank", pagerankSql)(
+      (e, kc) => AnnSearch.knnPageRank(e, kc = kc).orderBy("vec_id")),
+    // triangles + local clustering: degree-ordered compact-forward
+    // enumeration, wedges from higher-rank out-edges, one closure join
+    scaledPair("ann_graph_triangles", latticeSql(triangleTailSql))(
+      (e, kc) => AnnSearch.knnTriangles(e, annK, kc = kc).orderBy("vec_id")),
+    // transitivity + average local clustering; diverging numbers flag
+    // hub-dominated (degenerate) embedding regions
+    scaledPair("ann_graph_global_clustering",
+        latticeSql(s"$triangleChainSql,\n$clusteringRollupSql"))(
+      (e, kc) => AnnSearch.globalClustering(e, annK, kc = kc)),
+    // one-step cosine-weighted label propagation: per-edge cosines
+    // quantize to micro before the vote sum, argmax ties to the smaller label
+    scaledPair("ann_label_prop", latticeSql(labelPropTailSql))(
+      (e, kc) => AnnSearch.labelPropagation(e, annK, kc = kc).orderBy("vec_id")),
+    scaledPair("ann_triplet_mining", latticeSql(tripletTailSql))(
+      (e, kc) => AnnSearch.tripletMining(e, annK, kc = kc)
+        .select(col("anchor"), col("positive"), col("negative"),
+          r6(col("pos_cos")).as("pos_cos"), r6(col("neg_cos")).as("neg_cos"))
+        .orderBy("anchor", "positive")))
+
+  /** Family tables: each base's sibling is `<base>_sampled` /
+    * `<base>_scaled`. */
+  val sampledBases: Seq[String] = sampledFamilies.map(_.head.name)
+  val scaledBases: Seq[String] = scaledFamilies.map(_.head.name)
+
   val entries: Seq[CatalogEntry] = Seq(
     retrievalQueryLikelihood, textLexicalStats, annRadiusSearch,
     embLabelCentroidMatrix, textBigramHoldout, annKnnPurity,
-    textDecontaminateAnchored, curationPipelineV5Anchored,
+    textDecontaminateAnchored, curationPipelineV5(anchored = true),
     retrievalEvalQl, textBigramHoldoutSource,
     sampleQualityBudgetCurve, annRadiusIvf, annRadiusAdaptive,
     curationPipelineV6,
-    textSourceJsDivergence, dedupEditVerify, dedupEditVerifySampled,
-    textLengthLognormal, eventsActivityGini, eventsLorenzDeciles,
-    textQualityRankCorr, sampleEssAudit, dedupThresholdSweep,
-    dedupThresholdSweepSampled,
-    textVocabGrowth,
+    textSourceJsDivergence, textLengthLognormal, eventsActivityGini, eventsLorenzDeciles,
+    textQualityRankCorr, sampleEssAudit, textVocabGrowth,
     privacyTCloseness, annInt8Recall, annRecallCurve, annKmeansSilhouette,
     dedupExact, dedupExactNormalized, dedupMinhash, dedupMinhashAudit,
-    dedupMinhashWidthPlan, dedupMinhashWidthPlanSampled,
-    dedupMethodAgreement, dedupMethodAgreementSampled,
-    dedupSourceMatrix, dedupSourceMatrixSampled,
     dedupBlockingAudit,
     textNgramNovelty, textCrossNovelty, textDupSpanCoverage, textDupSpanRemoval, textLineDedup,
     textHeavyHitters, textBootstrapMeans, textBootstrapBySource,
@@ -8223,7 +7716,7 @@ object LlmDataQueries {
     textVocabKmvOverlap, textCmsAudit, dedupPrefix,
     sampleWeighted, textDsirWeights, sampleDsir, samplePriorityGroup, sampleNeyman,
     eventsDauHll, eventsWauRolling,
-    dedupLshCapped, dedupLshParamPlan, dedupLshParamPlanSampled, dedupJaccard, dedupClusters, dedupClusterHistogram,
+    dedupLshCapped, dedupJaccard, dedupClusters, dedupClusterHistogram,
     dedupClustersDist, dedupSelectCanonical, dedupSelectCanonicalDist, dedupMixtureImpact,
     dedupQualityImpact,
     splitLeakageFree, splitTemporalEmbargo, splitKfold, sampleClusterWeighted,
@@ -8231,20 +7724,10 @@ object LlmDataQueries {
     dedupEmbeddingCross,
     dedupEmbeddingCapped,
     dedupSemantic,
-    dedupPassageStats, dedupSegments, dedupPassageMulti, dedupCrossCorpus,
-    dedupCrossCorpusCapped,
-    dedupBloomPrefilter, dedupIncrementalAssign, dedupIncrementalAssignCapped,
-    contamReportSampled,
+    dedupPassageStats, dedupSegments, dedupPassageMulti, dedupBloomPrefilter, contamReportSampled,
     textVocabCoverage,
     annTopK, annIvfTopK, retrievalRrfFusion,
-    annKnnGraph, annBucketBalance, annKnnMutual, annKnnMutualScaled, annKnnGraphScaled, annKnnGraphLearned, annKnnGraphLearnedScaled,
-    annGraphTriangles, annGraphTrianglesScaled, annGraphGlobalClustering,
-    annGraphGlobalClusteringScaled, dedupGraphTransitivity,
-    dedupGraphTransitivitySampled,
-    annLabelProp, annLabelPropScaled,
-    annTripletMining, annTripletMiningScaled,
-    annKnnPagerank, annKnnPagerankScaled,
-    annKmeans, annIvfKmeans,
+    annBucketBalance, annKmeans, annIvfKmeans,
     annPqAssign, annPqAssignLearned, annPqDistortion, annPqTopK,
     annIvfPq, annKnnGraphPq, annIvfPqRerank, annRecall, annRecallLearned, annMatryoshkaRecall, annRpRecall,
     annProbeSweep,
@@ -8256,7 +7739,7 @@ object LlmDataQueries {
     sampleWeightedStratified, packCurriculum, textFingerprint, textTokenCount,
     textTokensFreq,
     textCuration, pretrainPipeline, curationPipelineV2, curationPipelineV3,
-    curationPipelineV4, curationPipelineV5,
+    curationPipelineV4, curationPipelineV5(anchored = false),
     textRepetition, textPiiRedact, textPiiDensity,
     textTfidf, textSurprisal, textBigramSurprisal,
     textHashClassifier, textClassifierTrain, textClassifierEval,
@@ -8282,5 +7765,5 @@ object LlmDataQueries {
     multimodalPhashDedupTight, multimodalDctPhashDedup,
     multimodalPhashKeep, multimodalPayloadAudit, multimodalFormatReport,
     multimodalAspectPack, multimodalPackEfficiency, textMsttr,
-    skewSaltedAgg, skewSaltedJoin)
+    skewSaltedAgg, skewSaltedJoin) ++ (sampledFamilies ++ scaledFamilies ++ cappedFamilies).flatten
 }
