@@ -45,13 +45,19 @@ object RunSession {
     * caller's partition count (200 by default) would apply to every
     * exchange of a run's few hundred rows, and one partition also
     * spares a global sort its range-sampling job.
+    *
+    * ANSI off and a UTC session time zone, whatever the caller runs
+    * with: cleaning follows pandas' coerce-to-null casts, and the
+    * parsers turn epoch instants into UTC dates.
     */
   private val runConf = Seq(
     SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
     SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN",
     SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
     SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
-    SQLConf.SHUFFLE_PARTITIONS.key -> "1")
+    SQLConf.SHUFFLE_PARTITIONS.key -> "1",
+    SQLConf.ANSI_ENABLED.key -> "false",
+    SQLConf.SESSION_LOCAL_TIMEZONE.key -> "UTC")
 
   /** Interpreted run session -> the session it was cloned from. Weak
     * keys: an entry lives as long as some frame of the run does.
@@ -59,9 +65,8 @@ object RunSession {
   private val callers = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, SparkSession]())
 
-  /** A clone of `spark` with every conf the caller set, code generation
-    * and adaptive execution off and one shuffle partition, sharing its
-    * SparkContext and cache.
+  /** A clone of `spark` with every conf the caller set, then
+    * [[runConf]] over them, sharing its SparkContext and cache.
     */
   def interpreted(spark: SparkSession): SparkSession = {
     // a session fixes its artifact isolation while it is cloned, from

@@ -122,13 +122,15 @@ class JoinEngine(
       }
     }
 
-  /** J2+J3+J4 over pre-stamped sides: align, cast, cross-join with
-    * size-based broadcast selection, 26 features, score, filter to
-    * prob >= joinRowThreshold. The rid columns are excluded from the
-    * numeric alignment.
+  /** J2+J3+J4: stamp both sides' row ids (once per frame, cached),
+    * align, cast, cross-join with size-based broadcast selection, 26
+    * features, score, filter to prob >= joinRowThreshold. The rid
+    * columns are excluded from the numeric alignment. Output columns:
+    * rid1, rid2, prob (+ the 26 features if asked).
     */
-  private def scoredPairsStamped(s1: DataFrame, s2: DataFrame,
-                                 keepFeatures: Boolean): DataFrame = {
+  def scoredPairs(df1: DataFrame, df2: DataFrame, keepFeatures: Boolean = false): DataFrame = {
+    val s1 = stampCached(df1, RID1)
+    val s2 = stampCached(df2, RID2)
     val own1 = numericCols(s1).filterNot(_ == RID1)
     val own2 = numericCols(s2).filterNot(_ == RID2)
     if (own1.isEmpty || own2.isEmpty)
@@ -182,12 +184,6 @@ class JoinEngine(
     // it runs with code generation even inside an interpreted run
     RunSession.compiled(out)
   }
-
-  /** Public J2-J4 entry: stamps row ids once (cached), then scores.
-    * Output columns: rid1, rid2, prob (+ the 26 features if asked).
-    */
-  def scoredPairs(df1: DataFrame, df2: DataFrame, keepFeatures: Boolean = false): DataFrame =
-    scoredPairsStamped(stampCached(df1, RID1), stampCached(df2, RID2), keepFeatures)
 
   /** J5: limited many-to-many assignment — candidates sorted by
     * probability descending, greedily accepted while both row ids are
@@ -278,23 +274,22 @@ class JoinEngine(
   def checkCompatibility(df1: DataFrame, df2: DataFrame, denominator: Long)
       : (Boolean, Double, Option[DataFrame]) =
     compatMemo.getOrElseUpdate((df1, df2), {
-      val s1 = stampCached(df1, RID1)
-      val s2 = stampCached(df2, RID2)
-      val matches = limitedAssignment(scoredPairsStamped(s1, s2, keepFeatures = false))
+      val matches = limitedAssignment(scoredPairs(df1, df2))
       if (matches.isEmpty) (false, 0.0, None)
       else {
         val retention = if (denominator > 0) matches.size.toDouble / denominator else 0.0
         if (retention >= config.joinRetentionThreshold) {
-          (true, retention, Some(executeJoinStamped(s1, s2, matches)))
+          (true, retention, Some(executeJoin(df1, df2, matches)))
         } else (false, retention, None)
       }
     })
 
-  /** J7 on pre-stamped sides: equi-join the (small, broadcast) match
-    * triples back to both sides on the shared row ids.
+  /** J7: equi-join the (small, broadcast) match triples back to both
+    * sides on the row ids they were scored with.
     */
-  private def executeJoinStamped(s1: DataFrame, s2: DataFrame,
-                                 matches: Seq[PairMatch]): DataFrame = {
+  def executeJoin(df1: DataFrame, df2: DataFrame, matches: Seq[PairMatch]): DataFrame = {
+    val s1 = stampCached(df1, RID1)
+    val s2 = stampCached(df2, RID2)
     val spark = s1.sparkSession
     import spark.implicits._
     val m = matches.toDF(RID1, RID2, "__prob")
@@ -305,10 +300,6 @@ class JoinEngine(
       .join(suffixed(s2, "_y"), RID2)
       .drop(RID1, RID2, "__prob")
   }
-
-  /** Public J7 entry: stamps both sides once (cached) and joins. */
-  def executeJoin(df1: DataFrame, df2: DataFrame, matches: Seq[PairMatch]): DataFrame =
-    executeJoinStamped(stampCached(df1, RID1), stampCached(df2, RID2), matches)
 
   /** J8 stage 1: each frame takes its best-retention partner among the
     * frames after it; unjoined frames pass through (join.py:886-983).
@@ -369,21 +360,22 @@ class JoinEngine(
     (outputs.toSeq, operations.toSeq)
   }
 
-  /** Stamps a row id and caches the stamped frame (it is consumed at
-    * least twice: count-and-pad aggregate + cross join, and again by the
-    * materialization when a join succeeds). One stamp per (frame, id)
-    * per engine instance.
+  /** `df` with its row id under `name`. The stamped frame is cached
+    * (it is consumed at least twice: count-and-pad aggregate + cross
+    * join, and again by the materialization when a join succeeds) and
+    * stamped once per frame per engine instance, whichever side the
+    * frame is on; each side renames the id to its own name.
     */
-  private val stamped = scala.collection.mutable.Map[(DataFrame, String), DataFrame]()
+  private val stamped = scala.collection.mutable.Map[DataFrame, DataFrame]()
   private def stampCached(df: DataFrame, name: String): DataFrame =
-    stamped.getOrElseUpdate((df, name), {
+    stamped.getOrElseUpdate(df, {
       // NOT repartitioned here: the grand-mean aggregation in countAndPad
       // must accumulate in the frame's own deterministic order (a
       // repartition changes the partial-agg merge order and shifts the
       // pad constant by an ulp, breaking oracle parity). The cross-join
       // stream side is repartitioned after packing instead.
-      withRowId(df, name).persist()
-    })
+      withRowId(df, RID).persist()
+    }).withColumnRenamed(RID, name)
 
   private def numericCols(df: DataFrame): Seq[String] =
     df.schema.fields.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name }.toSeq
@@ -402,6 +394,7 @@ object JoinEngine {
     */
   private val greedyCollectThreshold = 1_000_000L
 
+  private val RID = "__rid"
   private[integrate] val RID1 = "__rid1"
   private[integrate] val RID2 = "__rid2"
 

@@ -124,7 +124,7 @@ class TransformPipeline(
         }
     }
 
-    // Phase 3: post-enrichment cleaning. Its stats passes materialize
+    // Phase 3: post-enrichment cleaning. Its stats probes materialize
     // the post-cast cache, whose lineage reads through phase 1's —
     // so phase 1's cache is no longer needed once this returns, while
     // phase 3's stays live for the caller's output materialization

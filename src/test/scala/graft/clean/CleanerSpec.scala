@@ -2,7 +2,7 @@ package graft.clean
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{ActionCount, SparkSpec}
@@ -311,5 +311,103 @@ class CleanerSpec extends SparkSpec {
     // the fast path covered random fills: same rows, draws included
     assert(rowsDigest(res.df) == "e9f77e45ce0de692")
     assert(reportDigest(res.report) == "fa11cb0a7e956888")
+  }
+
+  // ---- restartable probes: frames whose boundary masks the probe
+  // cannot assume ----
+
+  /** 33 rows on 3 partitions; rows 30-32 repeat rows 0-2. */
+  private def rangeFrame(s: SparkSession)(cols: Column => Seq[Column]): DataFrame =
+    s.range(0, 33, 1, 3).select(cols(col("id") % 30): _*)
+
+  /** A Polygon frame unioned with Alpha Vantage frames: only rows
+    * 0-17 carry `vwap` and `transactions`, so the last batch's
+    * boundary `transactions` gets random fills, some of them negative.
+    */
+  private def unionFrame(s: SparkSession): DataFrame = rangeFrame(s) { id =>
+    val open = lit(100.0) + id % 7
+    Seq(when(id % 2 === 0, "AAPL").otherwise("MSFT").as("ticker"),
+      timestamp_seconds(lit(1704067200L) + id * 86400).as("ts"),
+      open.as("open"), (open + 5).as("high"), (open - 5).as("low"), (open + 1).as("close"),
+      (lit(1000.0) + id * 10).as("volume"),
+      when(id < 18, open + 0.5).as("vwap"),
+      when(id < 18, id % 4).as("transactions"))
+  }
+
+  /** `open` carries nulls, so its stats fill blocks the first probe
+    * after batch 1; `vwap` and `sma_close_3` get random fills after it.
+    */
+  private def nullOpenFrame(s: SparkSession): DataFrame = rangeFrame(s) { id =>
+    val base = lit(2.0) + id % 7
+    Seq(when(id % 2 === 0, "AAPL").otherwise("MSFT").as("ticker"),
+      timestamp_seconds(lit(1704067200L) + id * 86400).as("ts"),
+      when(id % 6 === 5, lit(null)).when(id === 1 || id === 8, -1.0).otherwise(base).as("open"),
+      when(id % 5 === 3, lit(null)).otherwise(base + 0.5).as("vwap"),
+      (base + 5).as("high"), (base - 1.5).as("low"), (base + 1).as("close"),
+      (lit(1000.0) + id * 10).as("volume"),
+      when(id < 4, lit(null)).otherwise(lit(4.0) + id % 5 * 0.7).as("sma_close_3"))
+  }
+
+  /** `ts` is null on 18 of 30 rows and may be deleted, so its raw
+    * mask, not its unix-epoch fill, decides batch 0's survivors.
+    */
+  private def nullTsFrame(s: SparkSession): DataFrame = rangeFrame(s) { id =>
+    val open = lit(100.0) + id % 7
+    Seq(when(id % 2 === 0, "AAPL").otherwise("MSFT").as("ticker"),
+      when(id % 5 < 3, lit(null))
+        .when(id === 4, timestamp_seconds(lit(4102444800L)))
+        .otherwise(timestamp_seconds(lit(1704067200L) + id * 86400)).as("ts"),
+      open.as("open"), (open + 5).as("high"), (open - 5).as("low"), (open + 1).as("close"),
+      (lit(1000.0) + id * 10).as("volume"),
+      when(id < 6, lit(null)).otherwise(lit(100.0) + id % 5 * 0.7).as("sma_close_3"))
+  }
+
+  private val deletableTs = CleaningConfig.reference.copy(columnRules =
+    RawColumnRule("^ts$", Some("datetime"), Some(0.5), Some(true), Some("unix_epoch"), None,
+      Some(Seq("no_future_dates"))) +: CleaningConfig.reference.columnRules)
+
+  private val probeNow = java.time.Instant.parse("2026-08-12T09:30:00Z")
+
+  /** name, frame, config, jobs without dedup, and the (rows, report)
+    * digests without and with dedup, recorded from the sequential loop
+    * that cleaned these frames before the restartable probes, in 8 jobs
+    * each, 10 with dedup.
+    */
+  private val blockedShapes = Seq(
+    ("a blocked last batch", unionFrame _, CleaningConfig.reference, 2,
+      ("7bb0df2042dfeade", "e7cb91e00ff368f6"), ("14d2f723e4c5a423", "2af733927ae7f160")),
+    ("a blocked mid-frame batch, then random fills", nullOpenFrame _, CleaningConfig.reference, 3,
+      ("3b366bae6ef9ba62", "a184ec1dffe12b7f"), ("590d0f827e756650", "df83d05c22770946")),
+    ("a deleted boundary with a static fill", nullTsFrame _, deletableTs, 3,
+      ("22ece613b6c9ade4", "005db574be36e5f7"), ("22ece613b6c9ade4", "89023da8469099cc")))
+
+  for ((name, frame, cfg, jobs, plain, deduped) <- blockedShapes;
+       (dedup, (rows, report)) <- Seq(false -> plain, true -> deduped)) {
+    test(s"restartable probes: $name${if (dedup) ", deduplicated" else ""}") {
+      val (res, count) = ActionCount.of(spark)(Cleaner.clean(
+        frame(graft.core.RunSession.interpreted(spark)),
+        cfg.copy(removeDuplicates = dedup), now = probeNow))
+      // one probe plus one per blocked batch that is not last, the
+      // relationship aggregate, and the count before dedup
+      val want = jobs + (if (dedup) 1 else 0)
+      assert(count.jobs == want && count.executions == want)
+      assert(res.report.exactDuplicatesDropped == (if (dedup) 3 else 0))
+      assert(rowsDigest(res.df) == rows)
+      assert(reportDigest(res.report) == report)
+      res.release()
+    }
+  }
+
+  test("a failing clean releases the frame it persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = spark.range(0, 10, 1, 2).select(col("id").cast("double").as("x"),
+      when(col("id") === 7, raise_error(lit("boom"))).otherwise(lit(1.0)).as("y"))
+    intercept[Exception](Cleaner.clean(df, CleaningConfig.minimal))
+    assert(sc.getPersistentRDDs.keySet == before)
+    // the minimal config casts nothing: the post-cast frame is `df`
+    // projected onto its own columns
+    val castFrame = df.select(df.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
+    assert(castFrame.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 }

@@ -7,7 +7,7 @@ import java.util.Locale
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.functions.{col, lit, timestamp_seconds, when}
+import org.apache.spark.sql.functions.{col, date_format, lit, timestamp_seconds, when}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.internal.SQLConf
 
@@ -298,5 +298,84 @@ class PipelineSpec extends SparkSpec {
       })
       assert(report.copy(results = Nil) == alone.head._2.copy(inputCount = 2, results = Nil))
     } finally tp.cleanup()
+  }
+
+  // ---- provider mixes ----
+
+  /** Polygon daily aggregates: bars stamped at 00:00 UTC, each with a
+    * `vw` and a small transaction count `n`.
+    */
+  private def aggsPayload(sym: String, startDay: Int, n: Int): String = {
+    val bars = (0 until n).map { i =>
+      val day = LocalDate.of(2026, 1, 1).plusDays((startDay + i).toLong)
+      val o = ((i * 5) % 9) + 3.25
+      s"""{"o": ${f2(o)}, "h": ${f2(o + 1)}, "l": ${f2(o - 1)}, "c": ${f2(o + 0.25)},
+         | "v": ${6000 + i}, "vw": ${f2(o + 0.1)}, "t": ${day.toEpochDay * 86400000L},
+         | "n": ${i % 4}}""".stripMargin.replace("\n", "")
+    }
+    s"""{"ticker": "$sym", "results": [${bars.mkString(", ")}]}"""
+  }
+
+  private def aggs(sym: String, startDay: Int, n: Int) =
+    ApiRequest("polygon", "get_aggs", Map("ticker" -> sym, "multiplier" -> 1,
+      "timespan" -> "day", "from" -> LocalDate.of(2026, 1, 1).plusDays(startDay.toLong).toString,
+      "to" -> LocalDate.of(2026, 1, 1).plusDays((startDay + n - 1).toLong).toString))
+
+  /** A Polygon frame unioned with a smaller Alpha Vantage frame: only
+    * the Polygon rows carry `vwap` and `transactions`, so cleaning
+    * imputes a validated column with random fills.
+    */
+  private val mixed = ExecutionPlan(Seq(aggs("NVDA", 0, 40), daily("AAPL", 30)))
+  private val mixedPayloads = Map(
+    "get_aggs:NVDA" -> aggsPayload("NVDA", 0, 40),
+    "TIME_SERIES_DAILY:AAPL" -> tsPayload("AAPL", 5))
+  private def mixedFetch(payloads: Map[String, String])(req: ApiRequest): Option[String] =
+    payloads.get(s"${req.endpointName}:" +
+      req.parameters.get("symbol").orElse(req.parameters.get("ticker")).getOrElse(""))
+
+  private def digest(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+
+  private def mixedRun(caller: SparkSession, payloads: Map[String, String]): PipelineRun = {
+    val run = new Pipeline(today = today).run(caller, mixed, mixedFetch(payloads),
+      Some(recipe), keyFeatures)
+    materialized(run)
+    run
+  }
+
+  test("a mixed-provider run keeps its reports and rows, in fewer jobs") {
+    mixedRun(spark, mixedPayloads)
+    val (run, count) = ActionCount.of(spark)(mixedRun(spark, mixedPayloads))
+    assert(run.validation.earlyTermination)
+    val cleaning = run.transform.results.head.cleaning
+    assert(cleaning.columnsImputed("transactions").method == "normal_distribution")
+    assert(cleaning.validationRowsDropped.keySet == Set("transactions"))
+    // recorded from the sequential loop that cleaned this run's frame
+    // before the restartable probes, when the run took 15 jobs; it
+    // takes 9 now
+    assert(digest(run.transform.toString) == "a4aea2f68a16abaf")
+    assert(digest(sortedRows(run.outputs).toString) == "0bac8351ecd099ef")
+    assert(count.jobs <= 9 && count.jobs <= count.executions)
+  }
+
+  test("run session: ANSI off and UTC, whatever the caller runs with") {
+    val caller = spark.newSession()
+    caller.conf.set(SQLConf.ANSI_ENABLED.key, "true")
+    caller.conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, "America/New_York")
+    // one Alpha Vantage open, mid-series, that is not a number
+    val malformed = mixedPayloads.updated("TIME_SERIES_DAILY:AAPL", tsPayload("AAPL", 5)
+      .replaceFirst("(\"2026-01-26\": \\{\"1. open\": \")[^\"]+", "$1abc"))
+    assert(malformed("TIME_SERIES_DAILY:AAPL").contains("\"1. open\": \"abc\""))
+    val run = mixedRun(caller, malformed)
+    val out = run.outputs.head
+    assert(run.transform.results.head.cleaning.columnsImputed("open").nullCount == 1)
+    assert(out.filter(col("open").isNull).count() == 0)
+    // Polygon bars stamped at 00:00 UTC keep their UTC dates
+    val days = out.filter(col("ticker") === "NVDA")
+      .select(date_format(col("timestamp"), "yyyy-MM-dd")).collect().map(_.getString(0)).toSet
+    assert(days == (0 until 40).map(i => LocalDate.of(2026, 1, 1).plusDays(i.toLong).toString).toSet)
+    assert(caller.conf.get(SQLConf.ANSI_ENABLED.key) == "true")
+    assert(caller.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) == "America/New_York")
   }
 }

@@ -256,4 +256,36 @@ class JoinEngineSpec extends SparkSpec {
     assert(scored.nonEmpty)
     assert(scored == byHand)
   }
+
+  test("stage1 stamps each frame once, whichever side it is on") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val frames = Seq(0.0, 0.5, 1.0).map(shift =>
+      (1 to 8).map(i => (i + shift, i * 2.0 - shift)).toDF("u", "v"))
+    val e = new JoinEngine(ValidatorConfig.balanced)
+    val before = sc.getPersistentRDDs.size
+    e.stage1(frames, denominator = 8L)
+    // frame 1 is df2 of the pair (0, 1) and df1 of the pair (1, 2)
+    assert(sc.getPersistentRDDs.size - before == 3)
+    e.cleanup()
+    assert(sc.getPersistentRDDs.size == before)
+  }
+
+  test("a frame scored against itself scores all n x n pairs, like against a copy") {
+    import spark.implicits._
+    val rows = (1 to 12).map(i => (i * 1.5, (i % 4) * 2.0 + 1.0, i * i * 0.1))
+    val df = rows.toDF("x", "y", "z")
+    val e = new JoinEngine(ValidatorConfig.balanced, maxPairs = 12L * 12L)
+    val self = e.scoredPairs(df, df).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val copy = e.scoredPairs(df, rows.toDF("x", "y", "z")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(self.toSet == copy.toSet && self.length == copy.length)
+    // every row matches itself
+    assert((0L until 12L).forall(i => self.exists(p => p._1 == i && p._2 == i)))
+    val ex = intercept[IllegalArgumentException] {
+      new JoinEngine(ValidatorConfig.balanced, maxPairs = 12L * 12L - 1).scoredPairs(df, df)
+    }
+    assert(ex.getMessage.contains("12 x 12 pairs"))
+    e.cleanup()
+  }
 }
