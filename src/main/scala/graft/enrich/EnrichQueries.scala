@@ -1289,8 +1289,7 @@ object EnrichQueries {
   /** Mergeable fixed-grid histogram quantiles per event type: the
     * IEEE-identical floor((v−lo)/width) bucket key, integer
     * cum·100 ≥ n·q cut — grid resolution by contract (the exact-rank
-    * sibling is events_quantiles). Streaming twin:
-    * StreamingSketch.statefulHistogramQuantiles (parity spec-pinned).
+    * sibling is events_quantiles).
     */
   private val eventsHistogramQuantiles = CatalogEntry(
     "events_histogram_quantiles",

@@ -44,12 +44,6 @@ object SafeExprDsl {
     // casts
     "cast", "double", "int", "bigint", "string")
 
-  /** Parse-only check used by the DSL validator (mirrors the
-    * reference's `ast.parse` syntax gate). */
-  def syntaxCheck(code: String): Either[String, Unit] =
-    try { CatalystSqlParser.parseExpression(code); scala.util.Right(()) }
-    catch { case NonFatal(e) => scala.util.Left(firstLine(e.getMessage)) }
-
   /** Full allow-list validation: parse, then require every node in the
     * tree to be a whitelisted construct. */
   def validate(code: String): Either[String, Expression] = {

@@ -142,14 +142,12 @@ object TimeSeriesOps {
     * quantile to grid resolution BY CONTRACT; `eventsQuantiles` is
     * the exact-rank sibling when a sort pass is affordable.
     *
-    * Engine/stream parity: the bucket key is the IEEE-identical
+    * Engine parity: the bucket key is the IEEE-identical
     * `floor((v − lo) / width)` (the profile_value_histogram
-    * convention) — the same doubles produce the same bucket in Spark,
-    * DuckDB, and the streaming twin's JVM loop
-    * ([[graft.streaming.StreamingSketch.statefulHistogramQuantiles]]),
-    * so the three agree digit-for-digit. 100 TB plan: ONE map-side-
-    * combined (key, bucket) aggregate is the only corpus-sized work;
-    * the cumulative window and the per-q cut ride the
+    * convention) — the same doubles produce the same bucket in Spark
+    * and DuckDB, so the two agree digit-for-digit. 100 TB plan: ONE
+    * map-side-combined (key, bucket) aggregate is the only corpus-sized
+    * work; the cumulative window and the per-q cut ride the
     * ≤ nBuckets-per-key frame. Output: (key, q_pct, n_events,
     * bucket, value_lo).
     */

@@ -1004,7 +1004,7 @@ object AnnSearch {
       .filter(col("rnk") <= col("k") && col("__arnk") <= col("k"))
       .groupBy("k")
       .agg(count(lit(1)).as("sum_hits"))
-      .join(broadcast(spine), Seq("k"), "right")
+      .join(spine, Seq("k"), "right")
       .na.fill(0L, Seq("sum_hits"))
       .crossJoin(broadcast(nq))
       .withColumn("n_queries", col("__nq"))

@@ -371,7 +371,7 @@ object Curation {
       .filter(col("__q") >= col("threshold_micro"))
       .groupBy("threshold_micro")
       .agg(sum("__d").as("n_docs_kept"), sum("__t").as("n_tokens_kept"))
-      .join(broadcast(th), Seq("threshold_micro"), "right")
+      .join(th, Seq("threshold_micro"), "right")
       .na.fill(0L, Seq("n_docs_kept", "n_tokens_kept"))
       .crossJoin(broadcast(tot))
       .withColumn("doc_share_ppm",

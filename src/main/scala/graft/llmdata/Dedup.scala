@@ -65,15 +65,6 @@ object Dedup {
           .otherwise(
             WordShinglesExpression.shingles(col(textCol), shingleWidth)))
 
-  /** MinHash signature (`__mh`: array of `numHashes` hex minhashes),
-    * computed by the one-pass codegen kernel
-    * ([[MinHashSignatureExpression]]; byte-identical to the
-    * `array_min(transform(..md5..))` HOF spelling the oracle uses).
-    */
-  def minhashed(docs: DataFrame): DataFrame =
-    shingled(docs).withColumn("__mh",
-      MinHashSignatureExpression.signature(col("__sh"), numHashes))
-
   /** Inputs estimated under this many bytes skip [[spread]] entirely:
     * a sub-2-MiB corpus shingles in well under the cost of the
     * repartition exchange the guard would insert, so firing there can
@@ -135,22 +126,15 @@ object Dedup {
     * row per band, where key is the digest of that band's
     * `rowsPerBand` consecutive minhashes.
     */
-  /** The per-band (band, key) struct array over a `__mh` signature
-    * column — shared by [[bandKeys]] and the streaming near-dup's
-    * pre-stateful projection (same keys ⇒ same buckets on both paths).
-    */
-  private[graft] def bandStructsSql: String = {
+  def bandKeys(sk: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val bandStructs = (0 until bands).map { j =>
       val slice = (1 to rowsPerBand)
         .map(i => s"element_at(__mh, ${j * rowsPerBand + i})").mkString(", ")
       s"struct($j AS band, md5(concat($slice)) AS key)"
     }.mkString(", ")
-    s"array($bandStructs)"
-  }
-
-  def bandKeys(sk: DataFrame, idCol: String = "doc_id"): DataFrame =
-    sk.select(col(idCol), explode(expr(bandStructsSql)).as("k"))
+    sk.select(col(idCol), explode(expr(s"array($bandStructs)")).as("k"))
       .select(col(idCol), col("k.band"), col("k.key"))
+  }
 
   /** Distinct candidate pairs `(doc_a, doc_b)`, `doc_a < doc_b`, from a
     * self-equi-join of the band keys (the LSH bucket join — the only
@@ -312,7 +296,7 @@ object Dedup {
       .filter(expr("__jppm >= threshold_pct * 10000"))
       .groupBy("threshold_pct")
       .agg(count(lit(1)).as("n_pairs"))
-      .join(broadcast(spine), Seq("threshold_pct"), "right")
+      .join(spine, Seq("threshold_pct"), "right")
       .na.fill(0L, Seq("n_pairs"))
       .crossJoin(broadcast(tot))
       .withColumn("share_ppm", expr(

@@ -6588,10 +6588,9 @@ object LlmDataQueries {
          |ORDER BY stratum, rank""".stripMargin
     })
 
-  /** Bottom-k priority sample per group: the mergeable uniform sample
-    * whose streaming twin is pinned row-identical by spec; the oracle
-    * replays the distinct projection, the md5 draw, and the (h, id)
-    * rank cut.
+  /** Bottom-k priority sample per group: the mergeable uniform
+    * sample; the oracle replays the distinct projection, the md5 draw,
+    * and the (h, id) rank cut.
     */
   private val samplePriorityGroup = CatalogEntry(
     "sample_priority_group",

@@ -1,358 +1,29 @@
 package graft.llmdata
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling: image/audio/video payloads travel as
-  * opaque `binary` columns with typed metadata alongside (builder
-  * brief). The Spark-side plumbing — schema contract, partition-local
-  * batched processing, deterministic output shape — is real and
-  * tested. Dimension decode is a real pure-JVM header parse for
-  * PNG/GIF/WAV/JPEG ([[decodeHeader]]: magic bytes + dimension fields,
-  * no codec needed); unrecognized formats fall back to a clearly-marked
-  * deterministic STUB (the container has no full image/audio codecs),
-  * swappable for a JNI/library call without touching the plan.
+  * opaque `binary` columns with metadata alongside. Every operator here
+  * reads the payload through codegen'd SQL expressions (digest, length,
+  * head bytes, positional byte decode), so payloads never reach the
+  * driver and no UDF runs. Dimensions are a deterministic STUB
+  * ([[decodeStub]], computed in SQL by [[metaProjection]]): no
+  * image/audio codec is linked in.
   *
-  * 100 TB design: payloads never reach the driver; decode/feature
-  * extraction runs as `mapPartitions` over the binary column so each
-  * task processes its partition's payloads in one batch-shaped pass
-  * (the Scala analogue of `mapInPandas` — same per-partition batch
-  * contract, no per-row UDF dispatch). Metadata-only pipelines prune
-  * the binary column at the parquet scan, so a stats query never even
-  * reads the payload bytes.
+  * 100 TB design: metadata-only queries prune the binary column at the
+  * parquet scan, so a stats query never even reads the payload bytes.
   */
 object Multimodal {
 
-  /** Typed metadata contract for a decoded media payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("format", StringType, nullable = false)))
-
   /** ==== STUB ==== Deterministic fake decode: derives plausible
-    * dimensions from the payload bytes alone. The fallback for
-    * payloads [[decodeHeader]] does not recognize (full MP4/WebP/...
-    * codecs aren't in the container); the signature and determinism
-    * contract are what the pipeline relies on.
+    * dimensions from the payload length alone. [[metaProjection]]
+    * computes the same formulas as SQL (`fake_width`, `fake_height`),
+    * and its spec pins the two together.
     */
   def decodeStub(payload: Array[Byte]): (Int, Int, Int, String) = {
     val n = payload.length
     (64 + n % 512, 64 + (n / 7) % 512, 3, "fake/rgb8")
-  }
-
-  /** Real pure-JVM container-header decode — magic bytes + dimension
-    * fields only, no codec required:
-    *
-    *  - PNG: 8-byte signature, then the mandatory first IHDR chunk
-    *    (width/height big-endian at 16/20, channels from the color
-    *    type at 25);
-    *  - GIF87a/89a: logical-screen width/height little-endian at 6/8;
-    *  - WAV (RIFF....WAVE + leading `fmt ` chunk): audio has no pixel
-    *    dimensions, so width carries the sample rate and height the
-    *    bits per sample; channels is the real channel count.
-    *  - FLAC (fLaC + mandatory first STREAMINFO block): same audio
-    *    carry convention as WAV — width = 20-bit sample rate,
-    *    height = bits per sample, channels real.
-    *  - MP4/ISO-BMFF (ftyp): box walk to `moov` — video gets the
-    *    visual track's tkhd pixel dims; audio-only files carry the
-    *    mvhd duration-ms in width and the timescale in height (see
-    *    [[mp4Walk]] / [[mp4DurationMs]]).
-    *  - MP3/MPEG audio (ID3v2 tag or bare frame sync): skip the
-    *    syncsafe-sized ID3v2 tag if present, bounded-scan to the
-    *    first valid frame sync, then version/layer-correct sample
-    *    rate and bitrate tables from the 4-byte frame header — width
-    *    = sample rate, height = bitrate kbps (0 = free format),
-    *    channels from the mode field; reserved version/layer/index
-    *    values degrade to None.
-    *  - OGG (OggS first page): Vorbis identification packet (width =
-    *    sample rate, height = nominal bitrate kbps, real channels) or
-    *    OpusHead (width = input sample rate, height 0 — Opus headers
-    *    carry no bitrate).
-    *  - WebP (RIFF....WEBP): lossy VP8 sync-coded 14-bit dims,
-    *    lossless VP8L packed dims + alpha bit, extended VP8X 24-bit
-    *    dims + alpha flag;
-    *  - BMP ('BM' + BITMAPINFOHEADER): little-endian width/height
-    *    (negative height = top-down), channels from bits-per-pixel;
-    *  - JPEG (FFD8 SOI): walk the marker segments (each FF-marker +
-    *    big-endian length; standalone RSTn/TEM markers have none) to
-    *    the first SOF0 (baseline) or SOF2 (progressive) frame header,
-    *    whose payload is precision(1) height(2) width(2) components(1).
-    *    Scan data (SOS) or EOI before any SOF ends the walk — a
-    *    desynced or truncated stream degrades to None, never a
-    *    mis-parse.
-    *
-    * Returns None for anything else (caller falls back to the labeled
-    * stub), so unknown formats degrade instead of mis-parsing.
-    */
-  def decodeHeader(p: Array[Byte]): Option[(Int, Int, Int, String)] = {
-    def u8(i: Int): Int = p(i) & 0xff
-    def be32(i: Int): Int = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
-    def ascii(i: Int, s: String): Boolean =
-      s.indices.forall(k => u8(i + k) == s.charAt(k).toInt)
-    if (p.length >= 26 && u8(0) == 0x89 && ascii(1, "PNG") &&
-        u8(4) == 0x0d && u8(5) == 0x0a && u8(6) == 0x1a && u8(7) == 0x0a &&
-        ascii(12, "IHDR")) {
-      val channels = u8(25) match {
-        case 0 => 1 // grayscale
-        case 2 => 3 // truecolor
-        case 3 => 1 // palette
-        case 4 => 2 // gray + alpha
-        case 6 => 4 // rgba
-        case _ => 3
-      }
-      Some((be32(16), be32(20), channels, "image/png"))
-    } else if (p.length >= 10 && (ascii(0, "GIF87a") || ascii(0, "GIF89a"))) {
-      Some((le16(6), le16(8), 3, "image/gif"))
-    } else if (p.length >= 36 && ascii(0, "RIFF") && ascii(8, "WAVE") &&
-               ascii(12, "fmt ")) {
-      Some((le32(24), le16(34), le16(22), "audio/wav"))
-    } else if (p.length >= 30 && ascii(0, "RIFF") && ascii(8, "WEBP")) {
-      // WebP: dims live in the first chunk's bitstream header —
-      // lossy VP8 (sync code 9D 01 2A then 14-bit w/h), lossless VP8L
-      // (0x2F then packed 14-bit w-1/h-1 + alpha bit), extended VP8X
-      // (flag byte + 24-bit w-1/h-1).
-      def le24(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-      if (ascii(12, "VP8 ") && u8(23) == 0x9d && u8(24) == 0x01 && u8(25) == 0x2a)
-        Some((le16(26) & 0x3fff, le16(28) & 0x3fff, 3, "image/webp"))
-      else if (ascii(12, "VP8L") && u8(20) == 0x2f) {
-        val b = le32(21)
-        val alpha = ((b >>> 28) & 1) == 1
-        Some(((b & 0x3fff) + 1, ((b >>> 14) & 0x3fff) + 1,
-          if (alpha) 4 else 3, "image/webp"))
-      } else if (ascii(12, "VP8X"))
-        Some((le24(24) + 1, le24(27) + 1,
-          if ((u8(20) & 0x10) != 0) 4 else 3, "image/webp"))
-      else None
-    } else if (p.length >= 30 && u8(0) == 'B'.toInt && u8(1) == 'M'.toInt &&
-               le32(14) >= 40) {
-      // BMP: BITMAPINFOHEADER (or the V4/V5 supersets, DIB size >= 40)
-      // width/height (height may be negative = top-down),
-      // bits-per-pixel -> channels. The 12-byte BITMAPCOREHEADER packs
-      // 16-bit dims at different offsets — gated out above so it
-      // degrades to None instead of mis-parsing.
-      val h = le32(22)
-      Some((le32(18), math.abs(h), math.max(1, le16(28) / 8), "image/bmp"))
-    } else if (p.length >= 26 && ascii(0, "fLaC") && (u8(4) & 0x7f) == 0) {
-      // FLAC: the mandatory first STREAMINFO block (type 0) — sample
-      // rate is 20 bits at byte 18, then 3 bits channels-1 and 5 bits
-      // bits-per-sample-1 straddling bytes 20/21. Same carry
-      // convention as WAV: width = sample rate, height = bit depth.
-      val sr = (u8(18) << 12) | (u8(19) << 4) | (u8(20) >> 4)
-      val channels = ((u8(20) >> 1) & 0x7) + 1
-      val bps = (((u8(20) & 0x1) << 4) | (u8(21) >> 4)) + 1
-      Some((sr, bps, channels, "audio/flac"))
-    } else if (p.length >= 12 && ascii(4, "ftyp")) {
-      // ISO-BMFF (MP4/M4A): box walk to moov, then mvhd (timescale +
-      // duration) and the first visual trak's tkhd (16.16 fixed-point
-      // pixel dims). Video: real dims. No visual track (audio-only
-      // M4A): width carries the duration in ms and height the mvhd
-      // timescale — the same carry-what-you-have convention as WAV.
-      mp4Walk(p) match {
-        case Some(Mp4Meta(_, _, Some((w, h)))) =>
-          Some((w, h, 3, "video/mp4"))
-        case Some(Mp4Meta(timescale, duration, None)) if timescale > 0 =>
-          val ms = duration * 1000L / timescale
-          Some((math.min(ms, Int.MaxValue.toLong).toInt, timescale, 1, "audio/mp4"))
-        case _ => None
-      }
-    } else if (p.length >= 28 && ascii(0, "OggS") && u8(4) == 0) {
-      // OGG container, first (BOS) page: the identification packet
-      // starts right after the 27-byte page header + segment table.
-      // Vorbis: 0x01 'vorbis' then channels u8, rate le32;
-      // Opus: 'OpusHead' then version, channels u8, pre-skip le16,
-      // input rate le32. Carry convention as WAV/FLAC: width = sample
-      // rate; height = Vorbis nominal bitrate kbps (0 when absent /
-      // Opus, whose header carries none).
-      val segs = u8(26)
-      val off = 27 + segs
-      if (p.length >= off + 30 && u8(off) == 0x01 && ascii(off + 1, "vorbis")) {
-        val rateI = off + 12
-        val rate = le32(rateI)
-        val brNominal = le32(off + 20)
-        Some((rate, math.max(brNominal / 1000, 0), u8(off + 11), "audio/ogg"))
-      } else if (p.length >= off + 19 && ascii(off, "OpusHead")) {
-        Some((le32(off + 12), 0, u8(off + 9), "audio/opus"))
-      } else None
-    } else if (p.length >= 10 &&
-               (ascii(0, "ID3") ||
-                 (u8(0) == 0xff && (u8(1) & 0xe0) == 0xe0 &&
-                   ((u8(1) >> 1) & 0x3) != 0 && ((u8(1) >> 3) & 0x3) != 1))) {
-      // MP3 / MPEG audio: optionally skip an ID3v2 tag (syncsafe
-      // 28-bit size), scan to the first frame sync, then read
-      // version/layer/bitrate/sample-rate/mode from the 4-byte frame
-      // header. Carry convention: width = sample rate, height =
-      // bitrate kbps (0 = free-format), channels from the mode field.
-      val start =
-        if (ascii(0, "ID3"))
-          10 + ((u8(6) << 21) | (u8(7) << 14) | (u8(8) << 7) | u8(9))
-        else 0
-      // bounded forward scan: tags are often zero-padded before the
-      // first frame; a desynced stream degrades to None
-      var i = start
-      var found = -1
-      while (found < 0 && i + 3 < p.length && i < start + 4096) {
-        if (u8(i) == 0xff && (u8(i + 1) & 0xe0) == 0xe0 &&
-            ((u8(i + 1) >> 1) & 0x3) != 0 &&     // layer not reserved
-            ((u8(i + 1) >> 3) & 0x3) != 1) found = i // version not reserved
-        else i += 1
-      }
-      if (found < 0) None
-      else {
-        val h1 = u8(found + 1); val h2 = u8(found + 2); val h3 = u8(found + 3)
-        val version = (h1 >> 3) & 0x3 // 0=MPEG2.5, 2=MPEG2, 3=MPEG1
-        val layer = (h1 >> 1) & 0x3   // 1=III, 2=II, 3=I
-        val srIdx = (h2 >> 2) & 0x3
-        val brIdx = (h2 >> 4) & 0xf
-        val srTab = version match {
-          case 3 => Seq(44100, 48000, 32000)
-          case 2 => Seq(22050, 24000, 16000)
-          case _ => Seq(11025, 12000, 8000)
-        }
-        val brTab = (version, layer) match { // kbps, index 0 = free
-          case (3, 3) => Seq(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
-          case (3, 2) => Seq(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384)
-          case (3, _) => Seq(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-          case (_, 3) => Seq(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256)
-          case _ => Seq(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-        }
-        if (srIdx == 3 || brIdx == 15) None // reserved values: malformed
-        else {
-          val channels = if (((h3 >> 6) & 0x3) == 3) 1 else 2
-          Some((srTab(srIdx), brTab(brIdx), channels, "audio/mpeg"))
-        }
-      }
-    } else if (p.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
-      // JPEG marker walk to the first SOF0/SOF2 (see scaladoc)
-      var i = 2
-      var res: Option[(Int, Int, Int, String)] = None
-      var done = false
-      while (!done && i + 1 < p.length) {
-        if (u8(i) != 0xff) done = true // desynced: not at a marker
-        else {
-          var j = i + 1
-          while (j < p.length && u8(j) == 0xff) j += 1 // fill bytes
-          if (j >= p.length) done = true
-          else u8(j) match {
-            case m if m == 0x01 || (m >= 0xd0 && m <= 0xd8) =>
-              i = j + 1 // standalone marker: no length field
-            case 0xd9 | 0xda => done = true // EOI / scan data before SOF
-            case _ if j + 2 >= p.length => done = true
-            case m =>
-              val len = (u8(j + 1) << 8) | u8(j + 2)
-              if ((m == 0xc0 || m == 0xc2) && len >= 8 && j + 8 < p.length) {
-                val h = (u8(j + 4) << 8) | u8(j + 5)
-                val w = (u8(j + 6) << 8) | u8(j + 7)
-                res = Some((w, h, u8(j + 8), "image/jpeg"))
-                done = true
-              } else if (len < 2) done = true // malformed length
-              else i = j + 1 + len
-          }
-        }
-      }
-      res
-    } else None
-  }
-
-  /** The decode the pipeline runs: real header parse where the format
-    * is recognized, deterministic stub otherwise.
-    */
-  def decode(payload: Array[Byte]): (Int, Int, Int, String) =
-    decodeHeader(payload).getOrElse(decodeStub(payload))
-
-  private[llmdata] final case class Mp4Meta(timescale: Int, duration: Long,
-                                            dims: Option[(Int, Int)])
-
-  /** ISO-BMFF box walk (VERDICT r11 §next-8): header fields only, no
-    * codec — the same class of parse as the JPEG marker walk. Finds
-    * the top-level `moov`, reads `mvhd` (movie timescale + duration;
-    * v0 32-bit and v1 64-bit layouts) and the first `trak`/`tkhd`
-    * with nonzero 16.16 fixed-point width/height (the visual track).
-    * Any malformed size/bound degrades to None — never a mis-parse.
-    */
-  private[llmdata] def mp4Walk(p: Array[Byte]): Option[Mp4Meta] = {
-    def u8(i: Int): Int = p(i) & 0xff
-    def be32(i: Int): Long = ((u8(i).toLong << 24) | (u8(i + 1) << 16) |
-      (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def typ(i: Int): String = new String(p.slice(i, i + 4), "ISO-8859-1")
-    // Walk the boxes in [from, until); invoke f(type, payloadStart,
-    // payloadEnd) per box; bail on any malformed size.
-    def walk(from: Int, until: Int)(f: (String, Int, Int) => Unit): Boolean = {
-      var i = from
-      while (i + 8 <= until) {
-        val size32 = be32(i)
-        val t = typ(i + 4)
-        val (hdr, size) =
-          if (size32 == 1L) {
-            if (i + 16 > until) return false
-            (16, be64(i + 8))
-          } else if (size32 == 0L) (8, (until - i).toLong) // to end of scope
-          else (8, size32)
-        if (size < hdr || i + size > until) return false
-        f(t, i + hdr, i + size.toInt)
-        i += size.toInt
-      }
-      true
-    }
-    var meta: Option[Mp4Meta] = None
-    var timescale = 0
-    var duration = 0L
-    var dims: Option[(Int, Int)] = None
-    var sawMvhd = false
-    val ok = walk(0, p.length) { (t, s, e) =>
-      if (t == "moov") {
-        walk(s, e) { (ct, cs, ce) =>
-          if (ct == "mvhd" && ce - cs >= 24) {
-            val v = u8(cs)
-            if (v == 0 && ce - cs >= 20) {
-              timescale = be32(cs + 12).toInt; duration = be32(cs + 16)
-              sawMvhd = true
-            } else if (v == 1 && ce - cs >= 32) {
-              timescale = be32(cs + 20).toInt; duration = be64(cs + 24)
-              sawMvhd = true
-            }
-          } else if (ct == "trak" && dims.isEmpty) {
-            walk(cs, ce) { (gt, gs, ge) =>
-              if (gt == "tkhd" && dims.isEmpty) {
-                val v = u8(gs)
-                val off = if (v == 1) 88 else 76 // 16.16 width/height
-                if (ge - gs >= off + 8) {
-                  val w = (be32(gs + off) >>> 16).toInt
-                  val h = (be32(gs + off + 4) >>> 16).toInt
-                  if (w > 0 && h > 0) dims = Some((w, h))
-                }
-              }
-            }
-          }
-        }
-      }
-    }
-    if (ok && sawMvhd) meta = Some(Mp4Meta(timescale, duration, dims))
-    meta
-  }
-
-  /** Movie duration in milliseconds from the `mvhd` header, None for
-    * anything that isn't a well-formed ISO-BMFF payload.
-    */
-  def mp4DurationMs(payload: Array[Byte]): Option[Long] =
-    if (payload.length >= 12 &&
-        new String(payload.slice(4, 8), "ISO-8859-1") == "ftyp")
-      mp4Walk(payload).collect {
-        case Mp4Meta(ts, d, _) if ts > 0 => d * 1000L / ts
-      }
-    else None
-
-  /** ==== STUB ==== Deterministic fake frame sampling: returns the
-    * byte offsets a real video decoder would seek to for `k` evenly
-    * spaced frames.
-    */
-  def frameOffsetsStub(payload: Array[Byte], k: Int): Seq[Long] = {
-    val n = math.max(payload.length.toLong, 1L)
-    (0 until k).map(i => i * n / k)
   }
 
   /** Wraps a text corpus as a media table (payload = utf-8 bytes) —
@@ -363,30 +34,6 @@ object Multimodal {
                    textCol: String = "text"): DataFrame =
     docs.select(col(idCol).as("media_id"),
       col(textCol).cast("binary").as("payload"))
-
-  /** Decode + feature-extract over the binary column, batched per
-    * partition (`mapPartitions`): schema in `(media_id, payload)`,
-    * schema out `(media_id, byte_len, meta struct)`. The iterator is
-    * consumed lazily, so a partition streams through constant memory
-    * regardless of payload count.
-    */
-  def extractMeta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("byte_len", LongType, nullable = false),
-      StructField("meta", mediaMetaType, nullable = false)))
-    val rdd = media.select(col("media_id").cast("long"), col("payload")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val payload = r.getAs[Array[Byte]](1)
-          val (w, h, c, fmt) = decode(payload)
-          Row(id, payload.length.toLong, Row(w, h, c, fmt))
-        }
-      }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Pure-SQL metadata projection over the binary column (digest,
     * length, head bytes, stub-decoded dimensions) — the oracle-checked

@@ -352,9 +352,7 @@ object Sampling {
     * the k smallest. The representation is a SKETCH — bottom-k of a
     * union is the bottom-k of concatenated bottom-k's — so the sample
     * merges across partitions, days, or a stream in any order and
-    * always converges to the same k rows; the streaming twin
-    * (`StreamingSketch.statefulPrioritySample`) is pinned
-    * row-identical to this batch spelling.
+    * always converges to the same k rows.
     *
     * 100 TB plan: one distinct-projection, one per-group rank window
     * that Spark 4 executes with WindowGroupLimit (per-partition

@@ -51,16 +51,4 @@ object SkewTools {
       .join(broadcast(replicated), Seq(key, "__salt"))
       .drop("__salt")
   }
-
-  /** Per-key frequency profile: the quick skew diagnostic (which keys
-    * exceed `threshold` of all rows) a pipeline runs before choosing a
-    * mitigation. One aggregation, map-side combined.
-    */
-  def skewProfile(df: DataFrame, key: String, threshold: Double = 0.01): DataFrame = {
-    val total = df.count().toDouble
-    df.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-      .withColumn("fraction", col("cnt") / lit(total))
-      .filter(col("fraction") >= threshold)
-      .orderBy(col("cnt").desc, col(key))
-  }
 }

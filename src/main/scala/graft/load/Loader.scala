@@ -143,20 +143,4 @@ object Loader {
       w.write.mode("overwrite").option("header", "true").csv(path)
       path
     }
-
-  /** Bucketed-and-sorted parquet table sink: pays the shuffle ONCE at
-    * write time (`buckets` files keyed + sorted on `keyCols`), after
-    * which every equi-join or aggregation on the same key between
-    * same-bucketed tables runs exchange-free — the lake-scale answer
-    * to re-shuffling a hot join key on every query. At 100 TB: bucket
-    * the fact tables on the join key at ingest; downstream joins are
-    * scan + sort-merge with no Exchange node (see `BucketedJoinSpec`,
-    * which asserts exactly that on the physical plan).
-    */
-  def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String],
-                    buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .saveAsTable(table)
 }

@@ -149,4 +149,17 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(out(("b", "dow", 3L)) == ((1L, 1000000L, true)))
     assert(out.size == 6)
   }
+
+  // --------------------------------------------- histogramQuantiles
+
+  test("histogramQuantiles: out-of-range values land in the edge buckets") {
+    val tiny = Seq((9L, -100.0), (9L, 1e9), (9L, 55.0))
+    val out = TimeSeriesOps.histogramQuantiles(
+        tiny.toDF("group", "value"), "group", "value",
+        lo = 0.0, hi = 100.0, nBuckets = 10, qs = Seq(1, 50, 100))
+      .collect().map(r => r.getLong(1) -> r.getLong(3)).toMap
+    assert(out(1L) == 0L)   // p1 -> the clamped low bucket
+    assert(out(50L) == 5L)  // 55.0 -> bucket 5
+    assert(out(100L) == 9L) // p100 -> the clamped high bucket
+  }
 }

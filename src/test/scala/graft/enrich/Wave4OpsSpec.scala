@@ -1,17 +1,12 @@
 package graft.enrich
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.llmdata.AnnSearch
-import graft.streaming.{SeasonalRow, StreamingSketch}
 
 /** Semantic pins for the seasonal-residual / lifetime-histogram /
-  * recall-curve / streaming-seasonal wave.
+  * recall-curve wave.
   */
 class Wave4OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -81,42 +76,5 @@ class Wave4OpsSpec extends SparkSpec {
     val single = AnnSearch.ivfRecall(d, col("vec_id") < 4, 3)
       .agg(sum("n_hits")).collect().head.getLong(0)
     assert(curve.find(_._1 == 3L).get._3 == single)
-  }
-
-  test("statefulSeasonalProfile: stream equals batch row-for-row, any batching") {
-    def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    val evs: Seq[(Long, Long, Timestamp)] =
-      (0 until 300).map { i =>
-        (i % 2 + 1L, (i * 7L % 400L) * hourUs + i, ts(i % 9))
-      }
-    val batch = TimeSeriesOps.seasonalProfile(
-        evs.toDF("key", "t_us", "ts"), keyCol = "key", timeCol = "t_us")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getBoolean(5)))
-      .toSet
-
-    def run(chunk: Int, seed: Int): Set[(Long, String, Long, Long, Long, Boolean)] = {
-      implicit val sqlCtx = spark.sqlContext
-      @volatile var last: Map[Long, Seq[SeasonalRow]] = Map.empty
-      val input = MemoryStream[(Long, Long, Timestamp)]
-      val query = StreamingSketch.statefulSeasonalProfile(input.toDS())
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: Dataset[SeasonalRow], _: Long) =>
-          df.collect().groupBy(_.key).foreach { case (k, rows) =>
-            last = last.updated(k, rows.toSeq)
-          }
-        }
-        .start()
-      new scala.util.Random(seed).shuffle(evs).grouped(chunk).foreach { c =>
-        input.addData(c); query.processAllAvailable()
-      }
-      query.stop()
-      last.values.flatten
-        .map(r => (r.key, r.grain, r.bucket, r.nEvents, r.sharePpm, r.isPeak))
-        .toSet
-    }
-    assert(run(83, seed = 7) == batch)
-    assert(run(29, seed = 41) == batch)
   }
 }

@@ -190,6 +190,35 @@ class DedupSpec extends SparkSpec {
     assert(full.count { case (a, b) => a >= 10L && b >= 10L } == 15) // C(6,2)
   }
 
+  // Four texts that share their band-0 bucket (the common low-hash
+  // core shingle "oak kit bee") while pairwise signature agreement
+  // stays at most 4 of 12, below the 5-of-12 gate.
+  test("bandKeys: a shared core shingle puts texts in one bucket below the gate") {
+    val df = docs(
+      11L -> "oak kit bee owl oak fen bee",
+      12L -> "oak kit bee fen elm green fox",
+      13L -> "oak kit bee kit sky ash bee",
+      14L -> "oak kit bee red fen sky green")
+    val keys = Dedup.bandKeys(Dedup.sketch(df))
+      .filter(col("band") === 0).select("key").distinct().count()
+    assert(keys == 1L, "all four must land in ONE band-0 bucket")
+    // no pair passes the near-dup gate (exact OR estimate)
+    assert(Dedup.verifiedNearDups(Dedup.sketch(df)).count() == 0L)
+  }
+
+  // A 7-of-12 signature match (above the gate) that shares its band-0
+  // bucket with the original and differs in bands 1-3.
+  test("bandKeys: a partial-band near-dup shares only band 0 and passes the gate") {
+    val df = docs(
+      31L -> "the quick brown fox jumps over the lazy dog tonight",
+      32L -> "sky quick brown fox jumps over the lazy dog tonight")
+    val shared = Dedup.bandKeys(Dedup.sketch(df))
+      .groupBy("band", "key").count().filter(col("count") === 2)
+      .select("band").as[Int].collect().toSeq
+    assert(shared == Seq(0), s"must share exactly band 0, got $shared")
+    assert(Dedup.minhashCandidates(Dedup.sketch(df)).count() == 1L)
+  }
+
   test("verifiedNearDups scores candidates with exact jaccard in (0,1]") {
     val base = "one two three four five six seven eight nine ten eleven twelve"
     val d = docs(0L -> base, 1L -> base, 2L -> "a b c d e f g h i j")

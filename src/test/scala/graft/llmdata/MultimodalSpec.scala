@@ -14,358 +14,18 @@ class MultimodalSpec extends SparkSpec {
     assert(new String(bytes, "UTF-8") == "hello")
   }
 
-  test("extractMeta batches decode per partition with the typed schema") {
-    val m = Multimodal.asMediaTable(docs(0L -> "tiny", 1L -> ("x" * 100)))
-      .repartition(2)
-    val out = Multimodal.extractMeta(m).orderBy("media_id").collect()
-    assert(out.length == 2)
-    assert(out(0).getAs[Long]("byte_len") == 4L)
-    val meta = out(1).getStruct(out(1).fieldIndex("meta"))
-    // deterministic stub: same input -> same fake dimensions
-    val (w, h, c, fmt) = Multimodal.decodeStub(("x" * 100).getBytes("UTF-8"))
-    assert(meta.getAs[Int]("width") == w && meta.getAs[Int]("height") == h)
-    assert(meta.getAs[Int]("channels") == c && meta.getAs[String]("format") == fmt)
-  }
-
-  test("decodeStub and frameOffsetsStub are deterministic and bounded") {
-    val p = Array.tabulate[Byte](1000)(_.toByte)
-    assert(Multimodal.decodeStub(p) == Multimodal.decodeStub(p.clone()))
-    val offs = Multimodal.frameOffsetsStub(p, 4)
-    assert(offs == Seq(0L, 250L, 500L, 750L))
-    assert(offs.forall(o => o >= 0 && o < 1000))
-  }
-
-  // --- real header-decode fixtures: bytes built in-test, formats per spec ---
-
-  private def pngFixture(w: Int, h: Int, colorType: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(33).order(java.nio.ByteOrder.BIG_ENDIAN)
-    b.put(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    b.putInt(13).put("IHDR".getBytes("US-ASCII"))
-    b.putInt(w).putInt(h)
-    b.put(8.toByte).put(colorType.toByte) // bit depth, color type
-    b.put(0.toByte).put(0.toByte).put(0.toByte) // compression, filter, interlace
-    b.array()
-  }
-
-  private def gifFixture(w: Int, h: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(13).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("GIF89a".getBytes("US-ASCII"))
-    b.putShort(w.toShort).putShort(h.toShort)
-    b.put(0.toByte).put(0.toByte).put(0.toByte)
-    b.array()
-  }
-
-  private def wavFixture(sampleRate: Int, bits: Int, channels: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(44).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36).put("WAVE".getBytes("US-ASCII"))
-    b.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    b.putShort(1).putShort(channels.toShort).putInt(sampleRate)
-    b.putInt(sampleRate * channels * bits / 8)
-    b.putShort((channels * bits / 8).toShort).putShort(bits.toShort)
-    b.put("data".getBytes("US-ASCII")).putInt(0)
-    b.array()
-  }
-
-  /** Minimal structurally-valid JPEG prefix: SOI, an APP0 JFIF stub, a
-    * DQT stub, then the SOF frame header (`sofMarker` 0xC0 baseline /
-    * 0xC2 progressive) carrying precision/height/width/components —
-    * the segment walk the decoder performs on any real camera file.
-    */
-  private def jpegFixture(w: Int, h: Int, channels: Int,
-                          sofMarker: Int = 0xc0): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(64).order(java.nio.ByteOrder.BIG_ENDIAN)
-    b.put(0xff.toByte).put(0xd8.toByte) // SOI
-    b.put(0xff.toByte).put(0xe0.toByte).putShort(16) // APP0, len 16
-    b.put("JFIF".getBytes("US-ASCII")).put(Array.fill[Byte](10)(0))
-    b.put(0xff.toByte).put(0xdb.toByte).putShort(5) // DQT stub, len 5
-    b.put(Array.fill[Byte](3)(0))
-    b.put(0xff.toByte).put(sofMarker.toByte).putShort((8 + 3 * channels).toShort)
-    b.put(8.toByte) // precision
-    b.putShort(h.toShort).putShort(w.toShort)
-    b.put(channels.toByte)
-    (0 until channels).foreach(c => b.put(c.toByte).put(0x11.toByte).put(0.toByte))
-    b.array().take(b.position())
-  }
-
-  test("decodeHeader walks JPEG segments to SOF0/SOF2") {
-    assert(Multimodal.decodeHeader(jpegFixture(1920, 1080, 3)) ==
-      Some((1920, 1080, 3, "image/jpeg")))
-    assert(Multimodal.decodeHeader(jpegFixture(512, 384, 3, sofMarker = 0xc2)) ==
-      Some((512, 384, 3, "image/jpeg")))
-    assert(Multimodal.decodeHeader(jpegFixture(100, 50, 1)) ==
-      Some((100, 50, 1, "image/jpeg")))
-    // DHT (0xC4) between DQT and SOF must be skipped, not read as SOF
-    val withDht = {
-      val base = jpegFixture(640, 480, 3)
-      // SOI(2) + APP0(2+16) + DQT(2+5) ends at byte 27
-      val (head, tail) = base.splitAt(27)
-      head ++ Array(0xff.toByte, 0xc4.toByte, 0x00.toByte, 0x04.toByte,
-        0x00.toByte, 0x00.toByte) ++ tail
-    }
-    assert(Multimodal.decodeHeader(withDht) == Some((640, 480, 3, "image/jpeg")))
-  }
-
-  test("decodeHeader degrades truncated or SOF-less JPEG to None") {
-    // truncated before the SOF segment -> None, falls to the stub
-    assert(Multimodal.decodeHeader(jpegFixture(10, 10, 3).take(20)).isEmpty)
-    // SOS (scan data) with no prior SOF -> give up, never mis-parse
-    val sosFirst = Array(0xff, 0xd8, 0xff, 0xda, 0x00, 0x04, 0x01, 0x00)
-      .map(_.toByte)
-    assert(Multimodal.decodeHeader(sosFirst).isEmpty)
-    // desynced stream (garbage where a marker should be)
-    val garbage = Array(0xff, 0xd8, 0x12, 0x34, 0x56).map(_.toByte)
-    assert(Multimodal.decodeHeader(garbage).isEmpty)
-    val jp = jpegFixture(10, 10, 3).take(20)
-    assert(Multimodal.decode(jp) == Multimodal.decodeStub(jp))
-  }
-
-  private def webpLossyFixture(w: Int, h: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(32).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(24).put("WEBP".getBytes("US-ASCII"))
-    b.put("VP8 ".getBytes("US-ASCII")).putInt(12)
-    b.put(Array.fill[Byte](3)(0)) // frame tag
-    b.put(0x9d.toByte).put(0x01.toByte).put(0x2a.toByte) // sync code
-    b.putShort((w & 0x3fff).toShort).putShort((h & 0x3fff).toShort)
-    b.array()
-  }
-
-  private def webpLosslessFixture(w: Int, h: Int, alpha: Boolean): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(32).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(20).put("WEBP".getBytes("US-ASCII"))
-    b.put("VP8L".getBytes("US-ASCII")).putInt(8)
-    b.put(0x2f.toByte)
-    val packed = (w - 1) | ((h - 1) << 14) | (if (alpha) 1 << 28 else 0)
-    b.putInt(packed)
-    b.array()
-  }
-
-  private def bmpFixture(w: Int, h: Int, bpp: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(54).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(54).putInt(0).putInt(54)
-    b.putInt(40).putInt(w).putInt(h).putShort(1).putShort(bpp.toShort)
-    b.array()
-  }
-
-  test("decodeHeader parses WebP (lossy + lossless) and BMP headers") {
-    assert(Multimodal.decodeHeader(webpLossyFixture(550, 368)) ==
-      Some((550, 368, 3, "image/webp")))
-    assert(Multimodal.decodeHeader(webpLosslessFixture(256, 128, alpha = true)) ==
-      Some((256, 128, 4, "image/webp")))
-    assert(Multimodal.decodeHeader(webpLosslessFixture(1, 1, alpha = false)) ==
-      Some((1, 1, 3, "image/webp")))
-    assert(Multimodal.decodeHeader(bmpFixture(640, 480, 24)) ==
-      Some((640, 480, 3, "image/bmp")))
-    // top-down BMP: negative height decodes to its magnitude
-    assert(Multimodal.decodeHeader(bmpFixture(32, -32, 8)) ==
-      Some((32, 32, 1, "image/bmp")))
-    // RIFF + WEBP with a bad bitstream header degrades to None
-    val broken = webpLossyFixture(10, 10); broken(23) = 0x00
-    assert(Multimodal.decodeHeader(broken).isEmpty)
-    // 12-byte BITMAPCOREHEADER packs 16-bit dims at other offsets:
-    // must degrade to None, never mis-parse (ADVICE r11)
-    val core = java.nio.ByteBuffer.allocate(30)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    core.put('B'.toByte).put('M'.toByte).putInt(26).putInt(0).putInt(26)
-    core.putInt(12).putShort(640.toShort).putShort(480.toShort)
-      .putShort(1).putShort(24)
-    assert(Multimodal.decodeHeader(core.array()).isEmpty)
-  }
-
-  /** Minimal well-formed ISO-BMFF: ftyp + moov(mvhd [+ trak/tkhd]),
-    * big-endian box sizes, spec-sized payloads (v0 mvhd = 100 bytes,
-    * v0 tkhd = 84 bytes, v1 mvhd = 112 bytes).
-    */
-  private def mp4Fixture(timescale: Int, duration: Long,
-                         dims: Option[(Int, Int)],
-                         v1: Boolean = false): Array[Byte] = {
-    val mvhdSize = if (v1) 120 else 108
-    val trakSize = if (dims.isDefined) 100 else 0
-    val moovSize = 8 + mvhdSize + trakSize
-    val b = java.nio.ByteBuffer.allocate(16 + moovSize) // big-endian default
-    b.putInt(16).put("ftypisom".getBytes("US-ASCII")).putInt(0)
-    b.putInt(moovSize).put("moov".getBytes("US-ASCII"))
-    b.putInt(mvhdSize).put("mvhd".getBytes("US-ASCII"))
-    if (v1) {
-      b.putInt(0x01000000) // version 1, flags 0
-      b.putLong(0L).putLong(0L) // creation, modification (64-bit)
-      b.putInt(timescale).putLong(duration)
-      b.put(Array.fill[Byte](80)(0)) // rate..next_track
-    } else {
-      b.putInt(0) // version 0, flags 0
-      b.putInt(0).putInt(0) // creation, modification
-      b.putInt(timescale).putInt(duration.toInt)
-      b.put(Array.fill[Byte](80)(0))
-    }
-    dims.foreach { case (w, h) =>
-      b.putInt(100).put("trak".getBytes("US-ASCII"))
-      b.putInt(92).put("tkhd".getBytes("US-ASCII"))
-      b.putInt(0) // version 0, flags
-      b.put(Array.fill[Byte](72)(0)) // creation..matrix
-      b.putInt(w << 16).putInt(h << 16) // 16.16 fixed point
-    }
-    b.array()
-  }
-
-  test("decodeHeader walks MP4 boxes to mvhd + the visual tkhd") {
-    // video: real pixel dims from the 16.16 tkhd fields
-    val vid = mp4Fixture(600, 3000L, Some((1280, 720)))
-    assert(Multimodal.decodeHeader(vid) == Some((1280, 720, 3, "video/mp4")))
-    assert(Multimodal.mp4DurationMs(vid) == Some(5000L)) // 3000/600 s
-    // audio-only M4A: width carries duration-ms, height the timescale
-    val aud = mp4Fixture(44100, 441000L, None)
-    assert(Multimodal.decodeHeader(aud) == Some((10000, 44100, 1, "audio/mp4")))
-    assert(Multimodal.mp4DurationMs(aud) == Some(10000L))
-    // v1 mvhd: 64-bit duration survives; the 4-field meta caps at Int
-    val long64 = mp4Fixture(1000, 3000000000L, None, v1 = true)
-    assert(Multimodal.mp4DurationMs(long64) == Some(3000000000L))
-    assert(Multimodal.decodeHeader(long64) ==
-      Some((Int.MaxValue, 1000, 1, "audio/mp4")))
-  }
-
-  test("decodeHeader degrades malformed MP4 to None, never mis-parses") {
-    // a box whose declared size runs past the payload
-    val overrun = mp4Fixture(600, 3000L, Some((640, 480)))
-    val bb = java.nio.ByteBuffer.wrap(overrun)
-    bb.putInt(16, overrun.length * 2) // moov size field -> out of bounds
-    assert(Multimodal.decodeHeader(overrun).isEmpty)
-    assert(Multimodal.mp4DurationMs(overrun).isEmpty)
-    // ftyp with no moov at all
-    val ftypOnly = mp4Fixture(600, 3000L, None).take(16)
-    assert(Multimodal.decodeHeader(ftypOnly).isEmpty)
-    // truncated mid-mvhd
-    assert(Multimodal.decodeHeader(
-      mp4Fixture(600, 3000L, None).dropRight(90)).isEmpty)
-    // decode() falls back to the labeled stub
-    assert(Multimodal.decode(ftypOnly) == Multimodal.decodeStub(ftypOnly))
-  }
-
-  private def flacFixture(sampleRate: Int, bits: Int, channels: Int): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(42) // 4 magic + 4 header + 34 STREAMINFO
-    b.put("fLaC".getBytes("US-ASCII"))
-    b.put(0x80.toByte).put(0.toByte).put(0.toByte).put(34.toByte) // last, type 0, len 34
-    b.putShort(4096.toShort).putShort(4096.toShort) // min/max block
-    b.put(Array.fill[Byte](6)(0)) // min/max frame size (24-bit each)
-    // 20-bit sample rate | 3-bit channels-1 | 5-bit bps-1 | 36-bit total
-    b.put(((sampleRate >> 12) & 0xff).toByte)
-    b.put(((sampleRate >> 4) & 0xff).toByte)
-    b.put((((sampleRate & 0xf) << 4) | ((channels - 1) << 1) |
-      ((bits - 1) >> 4)).toByte)
-    b.put((((bits - 1) & 0xf) << 4).toByte)
-    b.array()
-  }
-
-  test("decodeHeader parses FLAC STREAMINFO (sample rate / bits / channels)") {
-    assert(Multimodal.decodeHeader(flacFixture(44100, 16, 2)) ==
-      Some((44100, 16, 2, "audio/flac")))
-    assert(Multimodal.decodeHeader(flacFixture(192000, 24, 8)) ==
-      Some((192000, 24, 8, "audio/flac")))
-    // first block not STREAMINFO -> degrade to None, never mis-parse
-    val wrongBlock = flacFixture(44100, 16, 2)
-    wrongBlock(4) = 0x84.toByte // type 4 (VORBIS_COMMENT)
-    assert(Multimodal.decodeHeader(wrongBlock).isEmpty)
-    assert(Multimodal.decodeHeader(flacFixture(44100, 16, 2).take(20)).isEmpty)
-  }
-
-  private def mp3Frame(b1: Int, b2: Int, b3: Int): Array[Byte] =
-    Array(0xff, b1, b2, b3).map(_.toByte) ++ Array.fill[Byte](8)(0)
-
-  private def id3(tagBytes: Int, frame: Array[Byte]): Array[Byte] =
-    ("ID3".getBytes("ISO-8859-1") ++ Array[Byte](3, 0, 0,
-      ((tagBytes >> 21) & 0x7f).toByte, ((tagBytes >> 14) & 0x7f).toByte,
-      ((tagBytes >> 7) & 0x7f).toByte, (tagBytes & 0x7f).toByte) ++
-      Array.fill[Byte](tagBytes)(0)) ++ frame
-
-  private def oggPage(packet: Array[Byte]): Array[Byte] = {
-    val head = "OggS".getBytes("ISO-8859-1") ++
-      Array[Byte](0, 2) ++ Array.fill[Byte](20)(0) ++
-      Array[Byte](1, packet.length.toByte)
-    head ++ packet
-  }
-
-  test("decodeHeader parses MP3 frame headers, with and without ID3v2 tags") {
-    // MPEG1 Layer III, 128 kbps (idx 9), 44100 Hz (idx 0), joint stereo
-    val frame = mp3Frame(0xfb, 0x90, 0x40)
-    assert(Multimodal.decodeHeader(frame).contains((44100, 128, 2, "audio/mpeg")))
-    // same frame behind a 40-byte ID3v2 tag (zero padding scanned over)
-    assert(Multimodal.decodeHeader(id3(40, frame))
-      .contains((44100, 128, 2, "audio/mpeg")))
-    // MPEG2 Layer III, 64 kbps (idx 8 in the V2 table), 24000 Hz
-    // (idx 1), mono: b1 = sync|10|01|1 = 0xf3, b2 = 1000 01 00
-    assert(Multimodal.decodeHeader(mp3Frame(0xf3, 0x84, 0xc0))
-      .contains((24000, 64, 1, "audio/mpeg")))
-    // reserved sample-rate index degrades to None, never a mis-parse
-    assert(Multimodal.decodeHeader(mp3Frame(0xfb, 0x9c, 0x40)).isEmpty)
-    // an ID3 tag with no frame behind it degrades to None
-    assert(Multimodal.decodeHeader(id3(12, Array.fill[Byte](8)(0))).isEmpty)
-  }
-
-  test("decodeHeader parses OGG Vorbis and Opus identification headers") {
-    val vorbis = Array[Byte](1) ++ "vorbis".getBytes("ISO-8859-1") ++
-      Array.fill[Byte](4)(0) ++ Array[Byte](2) ++ // version, channels
-      Array[Byte](0x44, 0xac.toByte, 0, 0) ++    // 44100 le32
-      Array.fill[Byte](4)(0) ++                  // bitrate_max
-      Array[Byte](0, 0xf4.toByte, 1, 0) ++       // nominal 128000
-      Array.fill[Byte](6)(0)
-    assert(Multimodal.decodeHeader(oggPage(vorbis))
-      .contains((44100, 128, 2, "audio/ogg")))
-    val opus = "OpusHead".getBytes("ISO-8859-1") ++
-      Array[Byte](1, 2) ++ Array[Byte](0x38, 1) ++ // version, ch, pre-skip
-      Array[Byte](0x80.toByte, 0xbb.toByte, 0, 0) ++ // 48000 le32
-      Array.fill[Byte](4)(0)
-    assert(Multimodal.decodeHeader(oggPage(opus))
-      .contains((48000, 0, 2, "audio/opus")))
-    // an OGG page wrapping an unknown codec degrades to None
-    assert(Multimodal.decodeHeader(
-      oggPage("mystery!".getBytes("ISO-8859-1") ++ Array.fill[Byte](24)(0))).isEmpty)
-  }
-
-  test("decodeHeader parses real PNG/GIF/WAV headers") {
-    assert(Multimodal.decodeHeader(pngFixture(640, 480, 6)) ==
-      Some((640, 480, 4, "image/png")))
-    assert(Multimodal.decodeHeader(pngFixture(1, 99999, 0)) ==
-      Some((1, 99999, 1, "image/png")))
-    assert(Multimodal.decodeHeader(gifFixture(320, 200)) ==
-      Some((320, 200, 3, "image/gif")))
-    assert(Multimodal.decodeHeader(wavFixture(44100, 16, 2)) ==
-      Some((44100, 16, 2, "audio/wav")))
-  }
-
-  test("decodeHeader rejects non-media payloads and truncated headers") {
-    assert(Multimodal.decodeHeader("plain text payload".getBytes("UTF-8")).isEmpty)
-    assert(Multimodal.decodeHeader(Array.emptyByteArray).isEmpty)
-    assert(Multimodal.decodeHeader(pngFixture(10, 10, 2).take(20)).isEmpty)
-    // decode() falls back to the labeled stub for unknown formats
-    val txt = "plain text payload".getBytes("UTF-8")
-    assert(Multimodal.decode(txt) == Multimodal.decodeStub(txt))
-  }
-
-  test("extractMeta uses the real header decode for recognized formats") {
-    val rows = Seq(
-      (0L, pngFixture(800, 600, 2)),
-      (1L, wavFixture(16000, 8, 1)),
-      (2L, "not media".getBytes("UTF-8")),
-      (3L, jpegFixture(1024, 768, 3)))
-    val media = rows.toDF("media_id", "payload")
-    val out = Multimodal.extractMeta(media).orderBy("media_id").collect()
-    val png = out(0).getStruct(out(0).fieldIndex("meta"))
-    assert(png.getAs[Int]("width") == 800 && png.getAs[Int]("height") == 600)
-    assert(png.getAs[Int]("channels") == 3 && png.getAs[String]("format") == "image/png")
-    val wav = out(1).getStruct(out(1).fieldIndex("meta"))
-    assert(wav.getAs[Int]("width") == 16000 && wav.getAs[Int]("height") == 8)
-    assert(wav.getAs[Int]("channels") == 1 && wav.getAs[String]("format") == "audio/wav")
-    val other = out(2).getStruct(out(2).fieldIndex("meta"))
-    assert(other.getAs[String]("format") == "fake/rgb8")
-    val jpg = out(3).getStruct(out(3).fieldIndex("meta"))
-    assert(jpg.getAs[Int]("width") == 1024 && jpg.getAs[Int]("height") == 768)
-    assert(jpg.getAs[Int]("channels") == 3 && jpg.getAs[String]("format") == "image/jpeg")
-  }
-
   test("metaProjection matches the stub decode formulas") {
-    val m = Multimodal.asMediaTable(docs(5L -> "abcdefghij"))
-    val r = Multimodal.metaProjection(m).collect()(0)
+    val m = Multimodal.asMediaTable(docs(5L -> "abcdefghij", 6L -> ("x" * 1000)))
+    val rows = Multimodal.metaProjection(m).orderBy("media_id").collect()
+    val r = rows(0)
     assert(r.getAs[Long]("byte_len") == 10L)
     assert(r.getAs[Long]("fake_width") == 64 + 10 % 512)
     assert(r.getAs[String]("head_hex") == "6162636465666768")
     assert(r.getAs[String]("payload_md5").length == 32)
+    // the SQL dimensions are decodeStub's, on either side of 512 bytes
+    Seq("abcdefghij", "x" * 1000).zip(rows).foreach { case (text, row) =>
+      val (w, h, _, _) = Multimodal.decodeStub(text.getBytes("UTF-8"))
+      assert(row.getAs[Long]("fake_width") == w && row.getAs[Long]("fake_height") == h)
+    }
   }
 }

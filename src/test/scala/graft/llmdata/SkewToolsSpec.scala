@@ -33,12 +33,4 @@ class SkewToolsSpec extends SparkSpec {
     assert(salted.filter($"key" === "hot").count() == 500)
     assert(salted.filter($"key" === "miss").count() == 0)
   }
-
-  test("skewProfile surfaces only keys above the threshold") {
-    val df = ((0 until 90).map(_ => "hot") ++ (0 until 10).map(i => s"k$i")).toDF("key")
-    val prof = SkewTools.skewProfile(df, "key", threshold = 0.5).collect()
-    assert(prof.length == 1)
-    assert(prof(0).getString(0) == "hot")
-    assert(prof(0).getAs[Double]("fraction") == 0.9)
-  }
 }

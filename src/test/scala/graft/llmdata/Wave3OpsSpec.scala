@@ -1,18 +1,12 @@
 package graft.llmdata
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.clean.Profiler
 import graft.enrich.TimeSeriesOps
-import graft.streaming.{BenfordRow, StreamingSketch}
 
-/** Semantic pins for the t-closeness / seasonal-naive / int8-recall /
-  * streaming-Benford wave.
+/** Semantic pins for the t-closeness / seasonal-naive / int8-recall
+  * wave.
   */
 class Wave3OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -67,37 +61,5 @@ class Wave3OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.length == 2)
     out.foreach { case (_, h, rec) => assert(h == 2L && rec == 1.0) }
-  }
-
-  test("statefulBenford: stream equals batch digit-for-digit, any batching") {
-    def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    val vals: Seq[(Long, Double, Timestamp)] =
-      (0 until 400).map(i => (1L, 1.0 + (i * 37 % 900) + i * 0.01, ts(i % 7))) ++
-        Seq((1L, 0.005, ts(0)), (1L, -4.0, ts(1)), (1L, 0.09, ts(2)))
-    val batch = Profiler.benfordAudit(
-        vals.map(_._2).map(Tuple1(_)).toDF("value"), "value")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-
-    def run(chunk: Int, seed: Int): Set[(Long, Long, Long, Long)] = {
-      implicit val sqlCtx = spark.sqlContext
-      @volatile var last: Seq[BenfordRow] = Seq.empty
-      val input = MemoryStream[(Long, Double, Timestamp)]
-      val query = StreamingSketch.statefulBenford(input.toDS())
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: Dataset[BenfordRow], _: Long) =>
-          val rows = df.collect()
-          if (rows.nonEmpty) last = rows.toSeq
-        }
-        .start()
-      new scala.util.Random(seed).shuffle(vals).grouped(chunk).foreach { c =>
-        input.addData(c); query.processAllAvailable()
-      }
-      query.stop()
-      last.map(r => (r.digit, r.nRows, r.obsPpm, r.expPpm)).toSet
-    }
-    assert(run(97, seed = 3) == batch)
-    assert(run(31, seed = 17) == batch)
   }
 }
