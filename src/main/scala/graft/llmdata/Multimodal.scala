@@ -26,6 +26,15 @@ object Multimodal {
     (64 + n % 512, 64 + (n / 7) % 512, 3, "fake/rgb8")
   }
 
+  /** ==== STUB ==== Deterministic fake frame sampling: returns the
+    * byte offsets a real video decoder would seek to for `k` evenly
+    * spaced frames.
+    */
+  def frameOffsetsStub(payload: Array[Byte], k: Int): Seq[Long] = {
+    val n = math.max(payload.length.toLong, 1L)
+    (0 until k).map(i => i * n / k)
+  }
+
   /** Wraps a text corpus as a media table (payload = utf-8 bytes) —
     * the demo source for the multimodal plumbing, since the testdata
     * ships no binary table.

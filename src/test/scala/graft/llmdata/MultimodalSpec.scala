@@ -14,6 +14,14 @@ class MultimodalSpec extends SparkSpec {
     assert(new String(bytes, "UTF-8") == "hello")
   }
 
+  test("decodeStub and frameOffsetsStub are deterministic and bounded") {
+    val p = Array.tabulate[Byte](1000)(_.toByte)
+    assert(Multimodal.decodeStub(p) == Multimodal.decodeStub(p.clone()))
+    val offs = Multimodal.frameOffsetsStub(p, 4)
+    assert(offs == Seq(0L, 250L, 500L, 750L))
+    assert(offs.forall(o => o >= 0 && o < 1000))
+  }
+
   test("metaProjection matches the stub decode formulas") {
     val m = Multimodal.asMediaTable(docs(5L -> "abcdefghij", 6L -> ("x" * 1000)))
     val rows = Multimodal.metaProjection(m).orderBy("media_id").collect()
