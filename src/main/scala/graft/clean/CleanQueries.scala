@@ -373,6 +373,12 @@ object CleanQueries {
            |FROM sp LEFT JOIN d USING (digit) CROSS JOIN t
            |ORDER BY digit""".stripMargin))
 
+  /** The lineitem columns the correlation entries quantize, with the
+    * per-column scales that keep price² inside int64.
+    */
+  private val lineitemScales = Seq(("l_quantity", 100L), ("l_extendedprice", 1L),
+    ("l_discount", 1000000L), ("l_tax", 1000000L))
+
   /** Pairwise Pearson correlation over lineitem's numeric columns:
     * exact BIGINT moments from ONE aggregate pass, per-column
     * quantization scales chosen so price² stays inside int64, final
@@ -382,46 +388,53 @@ object CleanQueries {
     "profile_correlation",
     (s: SparkSession, dir: String) => Profiler.correlationMatrix(
         QuerySupport.table(s, dir, "lineitem"),
-        Seq(("l_quantity", 100L), ("l_extendedprice", 1L),
-          ("l_discount", 1000000L), ("l_tax", 1000000L)))
+        lineitemScales)
       .select(col("col_a"), col("col_b"), col("n_rows"),
         QuerySupport.r6(col("r")).as("r"))
       .orderBy("col_a", "col_b"),
-    Some {
-      val scs = Seq(("l_quantity", 100L), ("l_extendedprice", 1L),
-        ("l_discount", 1000000L), ("l_tax", 1000000L))
-      val names = scs.map(_._1)
-      val qCols = scs.map { case (c, sc) =>
-        s"CAST(floor($c * $sc) AS BIGINT) AS $c"
-      }.mkString(",\n|        ")
-      val notNull = names.map(c => s"$c IS NOT NULL").mkString(" AND ")
-      val moms = (Seq("count(*) AS n") ++
-        names.map(c => s"sum($c) AS s_$c") ++
-        (for { i <- names.indices; j <- i until names.size }
-          yield s"sum(${names(i)} * ${names(j)}) AS p_${names(i)}_${names(j)}"))
-        .mkString(",\n|        ")
-      val pairSelects = (for {
-        i <- names.indices; j <- (i + 1) until names.size
-      } yield {
-        val (a, b) = (names(i), names(j))
-        s"""SELECT '$a' AS col_a, '$b' AS col_b, n,
-           |  CAST(n AS DOUBLE) * CAST(p_${a}_$b AS DOUBLE)
-           |    - CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE) AS num,
-           |  CAST(n AS DOUBLE) * CAST(p_${a}_$a AS DOUBLE)
-           |    - CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE) AS va,
-           |  CAST(n AS DOUBLE) * CAST(p_${b}_$b AS DOUBLE)
-           |    - CAST(s_$b AS DOUBLE) * CAST(s_$b AS DOUBLE) AS vb
-           |FROM m""".stripMargin
-      }).mkString("\n|      UNION ALL\n|")
-      s"""WITH q AS (SELECT $qCols
-         |      FROM lineitem WHERE $notNull),
-         |m AS MATERIALIZED (SELECT $moms
-         |      FROM q),
-         |u AS ($pairSelects)
-         |SELECT col_a, col_b, CAST(n AS BIGINT) AS n_rows,
-         |  ${QuerySupport.r6Sql("CASE WHEN va <= 0 OR vb <= 0 THEN 0.0 ELSE num / sqrt(va * vb) END")} AS r
-         |FROM u ORDER BY col_a, col_b""".stripMargin
-    })
+    Some(lineitemPearsonSql("r")))
+
+  /** The lineitem correlation oracles: quantize [[lineitemScales]] into
+    * `q`, take the exact BIGINT moments of `moment(c)` over `from` in
+    * one `m`, then each pair's fixed IEEE quotient as `rCol`. `between`
+    * is the CTE text between `q` and `m` (Spearman's rank CTEs); `q` is
+    * MATERIALIZED when they read it again.
+    */
+  private def lineitemPearsonSql(rCol: String, moment: String => String = identity,
+                                 between: String = "", from: String = "q"): String = {
+    val names = lineitemScales.map(_._1)
+    val qCols = lineitemScales.map { case (c, sc) =>
+      s"CAST(floor($c * $sc) AS BIGINT) AS $c"
+    }.mkString(",\n|        ")
+    val notNull = names.map(c => s"$c IS NOT NULL").mkString(" AND ")
+    val moms = (Seq("count(*) AS n") ++
+      names.map(c => s"sum(${moment(c)}) AS s_$c") ++
+      (for { i <- names.indices; j <- i until names.size }
+        yield s"sum(${moment(names(i))} * ${moment(names(j))}) AS p_${names(i)}_${names(j)}"))
+      .mkString(",\n|        ")
+    val pairSelects = (for {
+      i <- names.indices; j <- (i + 1) until names.size
+    } yield {
+      val (a, b) = (names(i), names(j))
+      s"""SELECT '$a' AS col_a, '$b' AS col_b, n,
+         |  CAST(n AS DOUBLE) * CAST(p_${a}_$b AS DOUBLE)
+         |    - CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE) AS num,
+         |  CAST(n AS DOUBLE) * CAST(p_${a}_$a AS DOUBLE)
+         |    - CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE) AS va,
+         |  CAST(n AS DOUBLE) * CAST(p_${b}_$b AS DOUBLE)
+         |    - CAST(s_$b AS DOUBLE) * CAST(s_$b AS DOUBLE) AS vb
+         |FROM m""".stripMargin
+    }).mkString("\n|      UNION ALL\n|")
+    val q = if (between.isEmpty) "q AS" else "q AS MATERIALIZED"
+    s"""WITH $q (SELECT $qCols
+       |      FROM lineitem WHERE $notNull),
+       |${between}m AS MATERIALIZED (SELECT $moms
+       |      FROM $from),
+       |u AS ($pairSelects)
+       |SELECT col_a, col_b, CAST(n AS BIGINT) AS n_rows,
+       |  ${QuerySupport.r6Sql("CASE WHEN va <= 0 OR vb <= 0 THEN 0.0 ELSE num / sqrt(va * vb) END")} AS $rCol
+       |FROM u ORDER BY col_a, col_b""".stripMargin
+  }
 
   /** Top-5 values per orders category column: WindowGroupLimit rank
     * cut over the map-side-combined value frame, broadcast totals.
@@ -560,19 +573,12 @@ object CleanQueries {
     "profile_spearman",
     (s: SparkSession, dir: String) => Profiler.spearmanMatrix(
         QuerySupport.table(s, dir, "lineitem"),
-        Seq(("l_quantity", 100L), ("l_extendedprice", 1L),
-          ("l_discount", 1000000L), ("l_tax", 1000000L)))
+        lineitemScales)
       .select(col("col_a"), col("col_b"), col("n_rows"),
         QuerySupport.r6(col("rho")).as("rho"))
       .orderBy("col_a", "col_b"),
     Some {
-      val scs = Seq(("l_quantity", 100L), ("l_extendedprice", 1L),
-        ("l_discount", 1000000L), ("l_tax", 1000000L))
-      val names = scs.map(_._1)
-      val qCols = scs.map { case (c, sc) =>
-        s"CAST(floor($c * $sc) AS BIGINT) AS $c"
-      }.mkString(",\n|        ")
-      val notNull = names.map(c => s"$c IS NOT NULL").mkString(" AND ")
+      val names = lineitemScales.map(_._1)
       val rankCtes = names.map { c =>
         s"""rc_$c AS (SELECT $c AS v, count(*) AS cnt FROM q GROUP BY 1),
            |rw_$c AS (SELECT v,
@@ -584,36 +590,12 @@ object CleanQueries {
       val joinOn = names.map(c => s"JOIN rw_$c ON q.$c = rw_$c.v")
         .mkString("\n|        ")
       val rSel = names.map(c => s"rw_$c.r2 AS r_$c").mkString(", ")
-      val moms = (Seq("count(*) AS n") ++
-        names.map(c => s"sum(r_$c) AS s_$c") ++
-        (for { i <- names.indices; j <- i until names.size }
-          yield s"sum(r_${names(i)} * r_${names(j)}) AS p_${names(i)}_${names(j)}"))
-        .mkString(",\n|        ")
-      val pairSelects = (for {
-        i <- names.indices; j <- (i + 1) until names.size
-      } yield {
-        val (a, b) = (names(i), names(j))
-        s"""SELECT '$a' AS col_a, '$b' AS col_b, n,
-           |  CAST(n AS DOUBLE) * CAST(p_${a}_$b AS DOUBLE)
-           |    - CAST(s_$a AS DOUBLE) * CAST(s_$b AS DOUBLE) AS num,
-           |  CAST(n AS DOUBLE) * CAST(p_${a}_$a AS DOUBLE)
-           |    - CAST(s_$a AS DOUBLE) * CAST(s_$a AS DOUBLE) AS va,
-           |  CAST(n AS DOUBLE) * CAST(p_${b}_$b AS DOUBLE)
-           |    - CAST(s_$b AS DOUBLE) * CAST(s_$b AS DOUBLE) AS vb
-           |FROM m""".stripMargin
-      }).mkString("\n|      UNION ALL\n|")
-      s"""WITH q AS MATERIALIZED (SELECT $qCols
-         |      FROM lineitem WHERE $notNull),
-         |$rankCtes,
-         |j AS (SELECT $rSel
-         |      FROM q
-         |        $joinOn),
-         |m AS MATERIALIZED (SELECT $moms
-         |      FROM j),
-         |u AS ($pairSelects)
-         |SELECT col_a, col_b, CAST(n AS BIGINT) AS n_rows,
-         |  ${QuerySupport.r6Sql("CASE WHEN va <= 0 OR vb <= 0 THEN 0.0 ELSE num / sqrt(va * vb) END")} AS rho
-         |FROM u ORDER BY col_a, col_b""".stripMargin
+      lineitemPearsonSql("rho", c => s"r_$c",
+        s"""$rankCtes,
+           |j AS (SELECT $rSel
+           |      FROM q
+           |        $joinOn),
+           |""", "j")
     })
 
   /** Per-column Shannon entropy over the documents dimensions:

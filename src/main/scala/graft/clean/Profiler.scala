@@ -317,36 +317,54 @@ object Profiler {
     */
   def correlationMatrix(df: DataFrame,
                         scaledCols: Seq[(String, Long)]): DataFrame = {
-    require(scaledCols.size >= 2, s"need at least two columns: $scaledCols")
     val cols = scaledCols.map(_._1)
-    val q = df
-      .filter(cols.map(col(_).isNotNull).reduce(_ && _))
+    pearsonFromMoments(quantized(df, scaledCols), cols, cols, "r")
+  }
+
+  /** The correlation matrices' input: rows with a null in any column
+    * dropped (every moment sees the same population), each column
+    * quantized to `floor(x·scale)` as BIGINT.
+    */
+  private def quantized(df: DataFrame, scaledCols: Seq[(String, Long)]): DataFrame = {
+    require(scaledCols.size >= 2, s"need at least two columns: $scaledCols")
+    df.filter(scaledCols.map { case (c, _) => col(c).isNotNull }.reduce(_ && _))
       .select(scaledCols.map { case (c, scale) =>
         expr(s"cast(floor($c * $scale) as bigint)").as(c)
       }: _*)
+  }
+
+  /** Pearson from exact BIGINT moments, the correlation matrices'
+    * shared tail: ONE aggregate takes n, every Σx and every Σx·y over
+    * `momentCols`, each pair's (num, va, vb) is one struct of casted
+    * moments exploded from that row, and r is one fixed IEEE sequence
+    * (0.0 when a column is constant). Output: (col_a, col_b, n_rows,
+    * `rCol`), with each pair named by `labels`.
+    */
+  private def pearsonFromMoments(df: DataFrame, momentCols: Seq[String],
+                                 labels: Seq[String], rCol: String): DataFrame = {
     val aggs = Seq(count(lit(1)).as("__n")) ++
-      cols.map(c => sum(col(c)).as(s"__s_$c")) ++
-      (for { i <- cols.indices; j <- i until cols.size } yield
-        sum(col(cols(i)) * col(cols(j))).as(s"__p_${cols(i)}_${cols(j)}"))
-    val m = q.agg(aggs.head, aggs.tail: _*)
-    val pairs = for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield (cols(i), cols(j))
-    val structs = pairs.map { case (a, b) =>
-      s"struct('$a' AS col_a, '$b' AS col_b, " +
+      momentCols.map(c => sum(col(c)).as(s"__s_$c")) ++
+      (for { i <- momentCols.indices; j <- i until momentCols.size } yield
+        sum(col(momentCols(i)) * col(momentCols(j))).as(s"__p_${momentCols(i)}_${momentCols(j)}"))
+    val m = df.agg(aggs.head, aggs.tail: _*)
+    val structs = (for {
+      i <- momentCols.indices; j <- (i + 1) until momentCols.size
+    } yield {
+      val (a, b) = (momentCols(i), momentCols(j))
+      s"struct('${labels(i)}' AS col_a, '${labels(j)}' AS col_b, " +
         s"cast(__n as double) * cast(__p_${a}_$b as double) " +
         s"- cast(__s_$a as double) * cast(__s_$b as double) AS num, " +
         s"cast(__n as double) * cast(__p_${a}_$a as double) " +
         s"- cast(__s_$a as double) * cast(__s_$a as double) AS va, " +
         s"cast(__n as double) * cast(__p_${b}_$b as double) " +
         s"- cast(__s_$b as double) * cast(__s_$b as double) AS vb)"
-    }.mkString(", ")
+    }).mkString(", ")
     m.select(col("__n").as("n_rows"),
         explode(expr(s"array($structs)")).as("p"))
       .select(col("p.col_a").as("col_a"), col("p.col_b").as("col_b"),
         col("n_rows"),
         expr("case when p.va <= 0 or p.vb <= 0 then 0.0 " +
-          "else p.num / sqrt(p.va * p.vb) end").as("r"))
+          "else p.num / sqrt(p.va * p.vb) end").as(rCol))
   }
 
   /** One-way ANOVA F — does an integer metric differ across groups
@@ -605,13 +623,8 @@ object Profiler {
     */
   def spearmanMatrix(df: DataFrame,
                      scaledCols: Seq[(String, Long)]): DataFrame = {
-    require(scaledCols.size >= 2, s"need at least two columns: $scaledCols")
     val cols = scaledCols.map(_._1)
-    val q = df
-      .filter(cols.map(col(_).isNotNull).reduce(_ && _))
-      .select(scaledCols.map { case (c, scale) =>
-        expr(s"cast(floor($c * $scale) as bigint)").as(c)
-      }: _*)
+    val q = quantized(df, scaledCols)
     val ranked = cols.foldLeft(q) { (acc, c) =>
       val byVal = q.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
       val w = org.apache.spark.sql.expressions.Window.orderBy(col(c))
@@ -623,30 +636,7 @@ object Profiler {
         .select(col(c), col(s"__r_$c"))
       acc.join(r2, Seq(c))
     }
-    val rcols = cols.map(c => s"__r_$c")
-    val aggs = Seq(count(lit(1)).as("__n")) ++
-      rcols.map(c => sum(col(c)).as(s"__s_$c")) ++
-      (for { i <- rcols.indices; j <- i until rcols.size } yield
-        sum(col(rcols(i)) * col(rcols(j))).as(s"__p_${rcols(i)}_${rcols(j)}"))
-    val m = ranked.agg(aggs.head, aggs.tail: _*)
-    val structs = (for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield {
-      val (a, b) = (rcols(i), rcols(j))
-      s"struct('${cols(i)}' AS col_a, '${cols(j)}' AS col_b, " +
-        s"cast(__n as double) * cast(__p_${a}_$b as double) " +
-        s"- cast(__s_$a as double) * cast(__s_$b as double) AS num, " +
-        s"cast(__n as double) * cast(__p_${a}_$a as double) " +
-        s"- cast(__s_$a as double) * cast(__s_$a as double) AS va, " +
-        s"cast(__n as double) * cast(__p_${b}_$b as double) " +
-        s"- cast(__s_$b as double) * cast(__s_$b as double) AS vb)"
-    }).mkString(", ")
-    m.select(col("__n").as("n_rows"),
-        explode(expr(s"array($structs)")).as("p"))
-      .select(col("p.col_a").as("col_a"), col("p.col_b").as("col_b"),
-        col("n_rows"),
-        expr("case when p.va <= 0 or p.vb <= 0 then 0.0 " +
-          "else p.num / sqrt(p.va * p.vb) end").as("rho"))
+    pearsonFromMoments(ranked, cols.map(c => s"__r_$c"), cols, "rho")
   }
 
   /** Top-k most frequent values per column — the classic profiler

@@ -21,6 +21,15 @@ import graft.{CatalogEntry, QuerySupport}
   */
 object EnrichQueries {
 
+  /** `events` with `cols` and the event time in epoch micros as `t_us`
+    * (after the columns), whatever the parquet's `ts` type: the time
+    * axis of every events entry.
+    */
+  private def eventsMicros(s: SparkSession, dir: String, cols: String*): DataFrame = {
+    val raw = QuerySupport.table(s, dir, "events")
+    raw.select(cols.map(col) :+ QuerySupport.tsMicros(raw).as("t_us"): _*)
+  }
+
   private val ctx = EnrichContext(Some("user_id"), Some("ts"), Seq("event_id"))
 
   private def events(s: SparkSession, dir: String): DataFrame =
@@ -556,9 +565,7 @@ object EnrichQueries {
   private val wSessionize = CatalogEntry(
     "sessionize_events",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw.select(col("event_id"), col("user_id"),
-        QuerySupport.tsMicros(raw).as("t_us"))
+      val ev = eventsMicros(s, dir, "event_id", "user_id")
       Sessionize.sessionize(ev, keyCol = "user_id", timeCol = "t_us",
           tieCol = "event_id", gap = 6L * 3600 * 1000000)
         .select("event_id", "user_id", "session_seq")
@@ -583,9 +590,7 @@ object EnrichQueries {
   private val wSessionStats = CatalogEntry(
     "sessionize_stats",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw.select(col("event_id"), col("user_id"),
-        QuerySupport.tsMicros(raw).as("t_us"))
+      val ev = eventsMicros(s, dir, "event_id", "user_id")
       Sessionize.sessionStats(ev, keyCol = "user_id", timeCol = "t_us",
           tieCol = "event_id", gap = 6L * 3600 * 1000000)
         .orderBy("user_id", "session_seq")
@@ -632,6 +637,26 @@ object EnrichQueries {
            |           * CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_vk
            |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))
 
+  /** The view -> click -> purchase funnel oracles' stage CTEs over
+    * `events`: `s3` carries each user's first time at each stage
+    * (`t_1`..`t_3`, each at or after the one before) on every row.
+    */
+  private val funnelStagesSql =
+    """e AS (
+      |  SELECT user_id, event_type, epoch_us(ts) AS t_us FROM events),
+      |s1 AS (
+      |  SELECT *, min(CASE WHEN event_type = 'view' THEN t_us END)
+      |              OVER (PARTITION BY user_id) AS t_1
+      |  FROM e),
+      |s2 AS (
+      |  SELECT *, min(CASE WHEN event_type = 'click' AND t_us >= t_1 THEN t_us END)
+      |              OVER (PARTITION BY user_id) AS t_2
+      |  FROM s1),
+      |s3 AS (
+      |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t_us >= t_2 THEN t_us END)
+      |              OVER (PARTITION BY user_id) AS t_3
+      |  FROM s2)"""
+
   /** Ordered view->click->purchase funnel over the event stream: the
     * oracle replays the same chained whole-partition window minima —
     * stage j counts only at-or-after stage j-1's reach time, all
@@ -640,28 +665,13 @@ object EnrichQueries {
   private val eventsFunnel = CatalogEntry(
     "events_funnel",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.funnelTimes(
-          raw.select(col("user_id"), col("event_type"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           stages = Seq("view", "click", "purchase"))
         .orderBy("user_id")
     },
-    Some("""WITH e AS (
-           |  SELECT user_id, event_type, epoch_us(ts) AS t_us FROM events),
-           |s1 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'view' THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_1
-           |  FROM e),
-           |s2 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'click' AND t_us >= t_1 THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_2
-           |  FROM s1),
-           |s3 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t_us >= t_2 THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_3
-           |  FROM s2)
+    Some(s"""WITH $funnelStagesSql
            |SELECT user_id, min(t_1) AS t_1, min(t_2) AS t_2, min(t_3) AS t_3,
            |       CAST(CASE WHEN min(t_3) IS NOT NULL THEN 3
            |                 WHEN min(t_2) IS NOT NULL THEN 2
@@ -677,10 +687,8 @@ object EnrichQueries {
   private val eventsAttribution = CatalogEntry(
     "events_attribution",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.attribution(
-          raw.select(col("user_id"), col("event_type"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type", "event_id"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           tieCol = "event_id", convType = "purchase")
         .orderBy("user_id")
@@ -711,28 +719,13 @@ object EnrichQueries {
   private val eventsFunnelDaily = CatalogEntry(
     "events_funnel_daily",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.funnelDaily(
-          raw.select(col("user_id"), col("event_type"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           stages = Seq("view", "click", "purchase"), bucket = 86400000000L)
         .orderBy("cohort")
     },
-    Some("""WITH e AS (
-           |  SELECT user_id, event_type, epoch_us(ts) AS t_us FROM events),
-           |s1 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'view' THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_1
-           |  FROM e),
-           |s2 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'click' AND t_us >= t_1 THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_2
-           |  FROM s1),
-           |s3 AS (
-           |  SELECT *, min(CASE WHEN event_type = 'purchase' AND t_us >= t_2 THEN t_us END)
-           |              OVER (PARTITION BY user_id) AS t_3
-           |  FROM s2),
+    Some(s"""WITH $funnelStagesSql,
            |f AS (SELECT user_id, min(t_1) AS t_1, min(t_2) AS t_2, min(t_3) AS t_3
            |      FROM s3 GROUP BY user_id),
            |ft AS (SELECT *, t_1 // 86400000000 AS cohort FROM f WHERE t_1 IS NOT NULL),
@@ -762,9 +755,8 @@ object EnrichQueries {
   private val eventsRetention = CatalogEntry(
     "events_retention",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.cohortRetention(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us", bucket = 86400000000L)
         .orderBy("cohort", "bucket_offset")
     },
@@ -790,10 +782,8 @@ object EnrichQueries {
   private val tsResampleOhlc = CatalogEntry(
     "ts_resample_ohlc",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       val r = TimeSeriesOps.resampleOhlc(
-        raw.select(col("user_id"), col("value"), col("event_id"),
-          QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir, "user_id", "value", "event_id"),
         keyCol = "user_id", timeCol = "t_us", valueCol = "value",
         tieCol = "event_id", bucket = 3600000000L)
       r.withColumn("volume", QuerySupport.r6(col("volume")))
@@ -824,10 +814,8 @@ object EnrichQueries {
   private val tsGapFill = CatalogEntry(
     "ts_gap_fill",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       val daily = TimeSeriesOps.resampleOhlc(
-          raw.select(col("user_id"), col("value"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "value", "event_id"),
           keyCol = "user_id", timeCol = "t_us", valueCol = "value",
           tieCol = "event_id", bucket = 86400000000L)
         .select(col("user_id"), col("bucket"), col("close"))
@@ -861,10 +849,8 @@ object EnrichQueries {
   private val eventsTransitionTopK = CatalogEntry(
     "events_transition_topk",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       EventPaths.transitionTopK(
-          raw.select(col("user_id"), col("event_type"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type", "event_id"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           tieCol = "event_id", k = 3)
         .orderBy("src", "rank")
@@ -895,10 +881,8 @@ object EnrichQueries {
   private val eventsTopPaths = CatalogEntry(
     "events_top_paths",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       EventPaths.topPaths(
-          raw.select(col("user_id"), col("event_type"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type", "event_id"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           tieCol = "event_id", k = 10)
         .orderBy("rank")
@@ -956,9 +940,8 @@ object EnrichQueries {
   private val eventsSeasonalProfile = CatalogEntry(
     "events_seasonal_profile",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.seasonalProfile(
-          raw.select(col("event_type"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "event_type"),
           keyCol = "event_type", timeCol = "t_us")
         .orderBy("event_type", "grain", "bucket")
     },
@@ -988,10 +971,8 @@ object EnrichQueries {
   private val eventsInterArrival = CatalogEntry(
     "events_inter_arrival",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       EventPaths.interArrivalStats(
-          raw.select(col("user_id"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_id"),
           keyCol = "user_id", timeCol = "t_us", tieCol = "event_id")
         .orderBy("user_id")
     },
@@ -1118,9 +1099,7 @@ object EnrichQueries {
   private val eventsBurstThrottle = CatalogEntry(
     "events_burst_throttle",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw.select(col("event_id"), col("user_id"),
-        QuerySupport.tsMicros(raw).as("t_us"))
+      val ev = eventsMicros(s, dir, "event_id", "user_id")
       Sessionize.burstThrottle(ev, keyCol = "user_id", timeCol = "t_us",
           tieCol = "event_id", cooldown = 600000000L)
         .orderBy("user_id", "session_seq")
@@ -1173,9 +1152,8 @@ object EnrichQueries {
   private val layoutZorderAudit = CatalogEntry(
     "layout_zorder_audit",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Layout.zOrderFileAudit(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us"))
+          eventsMicros(s, dir, "user_id")
             .select((col("user_id") % 1024).as("a"),
               (TimeSeriesOps.floorDivCol("t_us", 86400000000L) % 1024).as("b")),
           aCol = "a", bCol = "b")
@@ -1198,9 +1176,8 @@ object EnrichQueries {
   private val eventsRateSpikes = CatalogEntry(
     "events_rate_spikes",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.rateSpikes(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us", bucket = 86400000000L,
           window = 7, factor = 3)
         .orderBy("user_id", "bucket")
@@ -1226,9 +1203,8 @@ object EnrichQueries {
   private val eventsCusum = CatalogEntry(
     "events_cusum_changepoint",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.cusumChangepoint(
-          raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir),
           timeCol = "t_us", bucket = 86400000000L)
         .orderBy("bucket")
     },
@@ -1260,10 +1236,8 @@ object EnrichQueries {
   private val eventsTransitionEntropy = CatalogEntry(
     "events_transition_entropy",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       EventPaths.transitionEntropy(
-          raw.select(col("user_id"), col("event_type"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type", "event_id"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           tieCol = "event_id")
         .orderBy("src")
@@ -1286,6 +1260,22 @@ object EnrichQueries {
            |  CAST(sum(term) // greatest(max(tot), 1) AS BIGINT) AS h_micro_nats
            |FROM q GROUP BY src ORDER BY src""".stripMargin))
 
+  /** The histogram-quantile oracles' grid CTEs over `events`: `b` =
+    * `bCols` plus the clamped 50-bucket key of `value` over [0, 500),
+    * per-bucket counts, their running and total sums per event_type
+    * (`m`), and the three quantiles `q`.
+    */
+  private def valueHistogramCtes(bCols: String): String =
+    s"""WITH b AS (SELECT $bCols
+       |        least(greatest(CAST(floor((value - 0.0) / 10.0) AS BIGINT),
+       |          0), 49) AS b
+       |      FROM events),
+       |c AS (SELECT event_type, b, count(*) AS c FROM b GROUP BY 1, 2),
+       |m AS (SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY b
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+       |        sum(c) OVER (PARTITION BY event_type) AS n FROM c),
+       |q AS (SELECT unnest([50, 90, 99]::BIGINT[]) AS q_pct),"""
+
   /** Mergeable fixed-grid histogram quantiles per event type: the
     * IEEE-identical floor((v−lo)/width) bucket key, integer
     * cum·100 ≥ n·q cut — grid resolution by contract (the exact-rank
@@ -1303,15 +1293,7 @@ object EnrichQueries {
           col("bucket"), QuerySupport.r6(col("value_lo")).as("value_lo"))
         .orderBy("event_type", "q_pct")
     },
-    Some(s"""WITH b AS (SELECT event_type,
-            |        least(greatest(CAST(floor((value - 0.0) / 10.0) AS BIGINT),
-            |          0), 49) AS b
-            |      FROM events),
-            |c AS (SELECT event_type, b, count(*) AS c FROM b GROUP BY 1, 2),
-            |m AS (SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY b
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-            |        sum(c) OVER (PARTITION BY event_type) AS n FROM c),
-            |q AS (SELECT unnest([50, 90, 99]::BIGINT[]) AS q_pct),
+    Some(s"""${valueHistogramCtes("event_type,")}
             |h AS (SELECT event_type, q.q_pct, min(b) AS bucket, max(n) AS n
             |      FROM m CROSS JOIN q
             |      WHERE cum * 100 >= n * q.q_pct
@@ -1340,15 +1322,7 @@ object EnrichQueries {
           col("in_bucket"))
         .orderBy("event_type", "q_pct")
     },
-    Some(s"""WITH b AS (SELECT event_type, value, event_id,
-            |        least(greatest(CAST(floor((value - 0.0) / 10.0) AS BIGINT),
-            |          0), 49) AS b
-            |      FROM events),
-            |c AS (SELECT event_type, b, count(*) AS c FROM b GROUP BY 1, 2),
-            |m AS (SELECT *, sum(c) OVER (PARTITION BY event_type ORDER BY b
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-            |        sum(c) OVER (PARTITION BY event_type) AS n FROM c),
-            |q AS (SELECT unnest([50, 90, 99]::BIGINT[]) AS q_pct),
+    Some(s"""${valueHistogramCtes("event_type, value, event_id,")}
             |h AS (SELECT event_type, q.q_pct, min(b) AS bucket, max(n) AS n
             |      FROM m CROSS JOIN q WHERE cum * 100 >= n * q.q_pct
             |      GROUP BY event_type, q.q_pct),
@@ -1379,9 +1353,7 @@ object EnrichQueries {
   private val eventsPeakConcurrency = CatalogEntry(
     "events_peak_concurrency",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw.select(col("event_id"), col("user_id"),
-        QuerySupport.tsMicros(raw).as("t_us"))
+      val ev = eventsMicros(s, dir, "event_id", "user_id")
       val sessions = Sessionize.sessionStats(ev, keyCol = "user_id",
         timeCol = "t_us", tieCol = "event_id", gap = 6L * 3600 * 1000000)
       Sessionize.peakConcurrency(sessions, "t_start", "t_end",
@@ -1428,9 +1400,8 @@ object EnrichQueries {
   private val eventsMannKendall = CatalogEntry(
     "events_mann_kendall",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.mannKendall(
-          raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir),
           timeCol = "t_us", bucket = 86400000000L)
         .select(col("n_days"), col("n_nonzero_days"), col("s_stat"),
           col("var_s_x18"), QuerySupport.r6(col("z_score")).as("z_score"),
@@ -1473,10 +1444,8 @@ object EnrichQueries {
   private val eventsMarkovStationary = CatalogEntry(
     "events_markov_stationary",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       EventPaths.markovStationary(
-          raw.select(col("user_id"), col("event_type"), col("event_id"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type", "event_id"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           tieCol = "event_id", iters = 8)
         .orderBy("state")
@@ -1518,9 +1487,8 @@ object EnrichQueries {
   private val eventsStickiness = CatalogEntry(
     "events_stickiness",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.stickiness(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us", window = 30)
         .orderBy("bucket")
     },
@@ -1550,10 +1518,8 @@ object EnrichQueries {
   private val eventsConversionLatency = CatalogEntry(
     "events_conversion_latency",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.conversionLatency(
-          raw.select(col("user_id"), col("event_type"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "event_type"),
           keyCol = "user_id", timeCol = "t_us", typeCol = "event_type",
           fromType = "signup", toType = "purchase")
         .orderBy("q_pct")
@@ -1585,10 +1551,8 @@ object EnrichQueries {
   private val eventsRfmSegments = CatalogEntry(
     "events_rfm_segments",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       GroupStats.rfmSegments(
-          raw.select(col("user_id"), col("value"),
-            QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id", "value"),
           keyCol = "user_id", timeCol = "t_us", valueCol = "value")
         .orderBy("r_seg", "f_seg", "m_seg")
     },
@@ -1642,9 +1606,8 @@ object EnrichQueries {
   private val eventsRetentionHalflife = CatalogEntry(
     "events_retention_halflife",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.retentionHalfLife(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us", bucket = 86400000000L)
         .select(col("n_offsets_fit"),
           QuerySupport.r6(col("lambda")).as("lambda"),
@@ -1697,9 +1660,8 @@ object EnrichQueries {
   private val eventsSeasonalResidual = CatalogEntry(
     "events_seasonal_residual",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.seasonalResidualOutliers(
-          raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir),
           timeCol = "t_us", thresholdPpm = 500000L)
         .orderBy("bucket")
     },
@@ -1731,9 +1693,8 @@ object EnrichQueries {
   private val eventsLifetimeHistogram = CatalogEntry(
     "events_lifetime_histogram",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.lifetimeHistogram(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us")
         .orderBy("lifetime_days")
     },
@@ -1759,9 +1720,8 @@ object EnrichQueries {
   private val eventsSeasonalNaive = CatalogEntry(
     "events_seasonal_naive",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.seasonalNaiveBacktest(
-          raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir),
           timeCol = "t_us", bucket = 86400000000L, season = 7)
         .orderBy("method")
     },
@@ -1789,9 +1749,8 @@ object EnrichQueries {
   private val eventsAutocorrelation = CatalogEntry(
     "events_autocorrelation",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.autocorrelation(
-          raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir),
           timeCol = "t_us", bucket = 86400000000L, maxLag = 7)
         .select(col("lag"), col("n_pairs"),
           QuerySupport.r6(col("r")).as("r"))
@@ -1828,9 +1787,8 @@ object EnrichQueries {
   private val eventsSurvivalKm = CatalogEntry(
     "events_survival_km",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.survivalKm(
-        raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir, "user_id"),
         keyCol = "user_id", timeCol = "t_us", bucket = 86400000000L)
     },
     Some("""WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS d
@@ -1873,9 +1831,8 @@ object EnrichQueries {
   private val eventsBotRegularity = CatalogEntry(
     "events_bot_regularity",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.botRegularity(
-        raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir, "user_id"),
         keyCol = "user_id", timeCol = "t_us")
     },
     Some("""WITH e AS (SELECT user_id, epoch_us(ts) // 1000000 AS t
@@ -1909,9 +1866,8 @@ object EnrichQueries {
   private val eventsEwmaAnomaly = CatalogEntry(
     "events_ewma_anomaly",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.ewmaAnomaly(
-        raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir),
         timeCol = "t_us", bucket = 86400000000L, span = 7)
     },
     Some {
@@ -1951,9 +1907,8 @@ object EnrichQueries {
   private val eventsPsiDrift = CatalogEntry(
     "events_psi_drift",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.categoryPsiDrift(
-        raw.select(col("event_type"), QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir, "event_type"),
         catCol = "event_type", timeCol = "t_us")
     },
     Some("""WITH d AS (SELECT event_type AS category,
@@ -1988,9 +1943,8 @@ object EnrichQueries {
   private val eventsChangepointBinseg = CatalogEntry(
     "events_changepoint_binseg",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       TimeSeriesOps.binarySegmentation(
-        raw.select(QuerySupport.tsMicros(raw).as("t_us")),
+        eventsMicros(s, dir),
         timeCol = "t_us", bucket = 86400000000L)
     },
     Some("""WITH e AS (SELECT epoch_us(ts) // 86400000000 AS bucket
@@ -2059,9 +2013,8 @@ object EnrichQueries {
   private val eventsGrowthAccounting = CatalogEntry(
     "events_growth_accounting",
     (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
       Funnel.growthAccounting(
-          raw.select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us")),
+          eventsMicros(s, dir, "user_id"),
           keyCol = "user_id", timeCol = "t_us", bucket = 86400000000L)
         .orderBy("bucket")
     },

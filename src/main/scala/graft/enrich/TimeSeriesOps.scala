@@ -386,6 +386,21 @@ object TimeSeriesOps {
       .drop("__tot")
   }
 
+  /** Events counted per `bucket`-wide time bucket over the dense
+    * calendar from the first to the last bucket, empty buckets as 0:
+    * (bucket, n_events).
+    */
+  private def calendarCounts(events: DataFrame, timeCol: String, bucket: Long): DataFrame = {
+    val daily = events
+      .withColumn("bucket", floorDivCol(timeCol, bucket))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_events"))
+    val span = daily.agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
+    span.select(explode(expr("sequence(__lo, __hi)")).as("bucket"))
+      .join(daily, Seq("bucket"), "left")
+      .na.fill(0L, Seq("n_events"))
+  }
+
   /** Mann-Kendall trend test over the zero-filled daily event-count
     * series — the nonparametric "is traffic trending?" answer that
     * needs no distribution assumption and pairs with
@@ -409,14 +424,7 @@ object TimeSeriesOps {
     */
   def mannKendall(events: DataFrame, timeCol: String,
                   bucket: Long): DataFrame = {
-    val daily = events
-      .withColumn("bucket", floorDivCol(timeCol, bucket))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_events"))
-    val span = daily.agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
-    val cal = span.select(explode(expr("sequence(__lo, __hi)")).as("bucket"))
-      .join(daily, Seq("bucket"), "left")
-      .na.fill(0L, Seq("n_events"))
+    val cal = calendarCounts(events, timeCol, bucket)
     val a = cal.select(col("bucket").as("b1"), col("n_events").as("x1"))
     val b = cal.select(col("bucket").as("b2"), col("n_events").as("x2"))
     val s = a.join(b, col("b2") > col("b1"))
@@ -584,14 +592,7 @@ object TimeSeriesOps {
     */
   def seasonalNaiveBacktest(events: DataFrame, timeCol: String,
                             bucket: Long, season: Int = 7): DataFrame = {
-    val daily = events
-      .withColumn("bucket", floorDivCol(timeCol, bucket))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_events"))
-    val span = daily.agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
-    val cal = span.select(explode(expr("sequence(__lo, __hi)")).as("bucket"))
-      .join(daily, Seq("bucket"), "left")
-      .na.fill(0L, Seq("n_events"))
+    val cal = calendarCounts(events, timeCol, bucket)
     val w = Window.orderBy(col("bucket").asc)
     val scored = cal
       .withColumn("__f1", lag(col("n_events"), 1).over(w))
@@ -633,14 +634,7 @@ object TimeSeriesOps {
     */
   def autocorrelation(events: DataFrame, timeCol: String, bucket: Long,
                       maxLag: Int): DataFrame = {
-    val daily = events
-      .withColumn("bucket", floorDivCol(timeCol, bucket))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_events"))
-    val span = daily.agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
-    val cal = span.select(explode(expr("sequence(__lo, __hi)")).as("bucket"))
-      .join(daily, Seq("bucket"), "left")
-      .na.fill(0L, Seq("n_events"))
+    val cal = calendarCounts(events, timeCol, bucket)
     val lags = events.sparkSession.range(1, maxLag + 1L)
       .select(col("id").as("lag"))
     val a = cal.select(col("bucket").as("b1"), col("n_events").as("x"))

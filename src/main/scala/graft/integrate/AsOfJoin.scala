@@ -1,7 +1,7 @@
 package graft.integrate
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Point-in-time (as-of) join: attach to each left row the payload of
@@ -38,31 +38,41 @@ object AsOfJoin {
                    leftKey: String, leftTime: String,
                    rightKey: String, rightTime: String,
                    payloadCols: Seq[String]): DataFrame = {
+    // left side 1: right rows sort first at equal times (inclusive <=)
+    val (u, ordered) = taggedUnion(left, right, leftKey, leftTime, rightKey, rightTime,
+      struct(payloadCols.map(col): _*), leftSide = 1, _.asc)
+    u.withColumn("__match", last(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter(col("__side") === 1)
+      .select(left.columns.toSeq.map(col) ++
+        payloadCols.map(c => col(s"__match.$c").as(c)): _*)
+  }
+
+  /** The family's one-exchange tagged union: the left rows (side
+    * `leftSide`, a null payload typed from `payload`) and the right rows
+    * with a non-null key and time (the other side, every left column a
+    * typed null, `payload` as `__p`), with the window order over it:
+    * partitioned on the key, sorted by (`timeOrder` of the time, side).
+    * The side tags and the time's null order are each variant's
+    * contract; see their scaladocs.
+    */
+  private def taggedUnion(left: DataFrame, right: DataFrame,
+                          leftKey: String, leftTime: String,
+                          rightKey: String, rightTime: String,
+                          payload: Column, leftSide: Int,
+                          timeOrder: Column => Column): (DataFrame, WindowSpec) = {
     val leftCols = left.columns.toSeq
-    val payloadStruct = struct(payloadCols.map(col): _*)
-
-    def nullOf(df: DataFrame, c: String): Column =
-      lit(null).cast(df.schema(c).dataType)
-
-    // left rows: side 1, payload null (typed from the right schema)
     val l = left.select(
-      col(leftKey).as("__k") +: col(leftTime).as("__t") +: lit(1).as("__side") +:
+      col(leftKey).as("__k") +: col(leftTime).as("__t") +: lit(leftSide).as("__side") +:
         leftCols.map(col) :+
-        lit(null).cast(right.select(payloadStruct).schema.head.dataType).as("__p"): _*)
-    // right rows: side 0, left columns null (typed from the left schema)
+        lit(null).cast(right.select(payload).schema.head.dataType).as("__p"): _*)
     val r = right
       .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
       .select(
-        col(rightKey).as("__k") +: col(rightTime).as("__t") +: lit(0).as("__side") +:
-          leftCols.map(c => nullOf(left, c).as(c)) :+ payloadStruct.as("__p"): _*)
-
-    val w = Window.partitionBy("__k").orderBy(col("__t").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.unionByName(r)
-      .withColumn("__match", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++
-        payloadCols.map(c => col(s"__match.$c").as(c)): _*)
+        col(rightKey).as("__k") +: col(rightTime).as("__t") +: lit(1 - leftSide).as("__side") +:
+          leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) :+ payload.as("__p"): _*)
+    (l.unionByName(r),
+      Window.partitionBy("__k").orderBy(timeOrder(col("__t")), col("__side").asc))
   }
 
   /** The FORWARD as-of join: attach the EARLIEST right row with the
@@ -89,31 +99,15 @@ object AsOfJoin {
                   leftKey: String, leftTime: String,
                   rightKey: String, rightTime: String,
                   payloadCols: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val payloadStruct = struct(payloadCols.map(col): _*)
-
-    def nullOf(df: DataFrame, c: String): Column =
-      lit(null).cast(df.schema(c).dataType)
-
-    // left rows: side 0 so they sort BEFORE right rows at equal times
-    // (the right row is then inside the forward frame = inclusive >=)
-    val l = left.select(
-      col(leftKey).as("__k") +: col(leftTime).as("__t") +: lit(0).as("__side") +:
-        leftCols.map(col) :+
-        lit(null).cast(right.select(payloadStruct).schema.head.dataType).as("__p"): _*)
-    val r = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .select(
-        col(rightKey).as("__k") +: col(rightTime).as("__t") +: lit(1).as("__side") +:
-          leftCols.map(c => nullOf(left, c).as(c)) :+ payloadStruct.as("__p"): _*)
-
+    // left side 0: left rows sort BEFORE right rows at equal times (the
+    // right row is then inside the forward frame = inclusive >=);
     // asc_nulls_last (NOT plain asc): see the scaladoc null contract.
-    val w = Window.partitionBy("__k").orderBy(col("__t").asc_nulls_last, col("__side").asc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    l.unionByName(r)
-      .withColumn("__match", first(col("__p"), ignoreNulls = true).over(w))
+    val (u, ordered) = taggedUnion(left, right, leftKey, leftTime, rightKey, rightTime,
+      struct(payloadCols.map(col): _*), leftSide = 0, _.asc_nulls_last)
+    u.withColumn("__match", first(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
       .filter(col("__side") === 0)
-      .select(leftCols.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         payloadCols.map(c => col(s"__match.$c").as(c)): _*)
   }
 
@@ -135,16 +129,11 @@ object AsOfJoin {
                             leftKey: String, leftTime: String,
                             rightKey: String, rightTime: String,
                             payloadCols: Seq[String],
-                            tolerance: Long): DataFrame = {
-    require(tolerance >= 0L, s"tolerance must be >= 0, got $tolerance")
-    val rt = right.withColumn("__rt_tol", col(rightTime))
-    val joined = asofBackward(left, rt, leftKey, leftTime,
-      rightKey, rightTime, payloadCols :+ "__rt_tol")
-    val fresh = col("__rt_tol").isNotNull &&
-      col(leftTime) - col("__rt_tol") <= tolerance
-    joined.select(left.columns.map(col).toSeq ++
-      payloadCols.map(c => when(fresh, col(c)).otherwise(lit(null)).as(c)): _*)
-  }
+                            tolerance: Long): DataFrame =
+    withinTolerance(left, right, rightTime, payloadCols, tolerance,
+      col(leftTime) - col("__rt_tol")) { (rt, cols) =>
+      asofBackward(left, rt, leftKey, leftTime, rightKey, rightTime, cols)
+    }
 
   /** [[asofForward]] with the mirrored tolerance horizon: the next
     * at-or-after match counts only while `rightTime - leftTime <=
@@ -156,13 +145,24 @@ object AsOfJoin {
                            leftKey: String, leftTime: String,
                            rightKey: String, rightTime: String,
                            payloadCols: Seq[String],
-                           tolerance: Long): DataFrame = {
+                           tolerance: Long): DataFrame =
+    withinTolerance(left, right, rightTime, payloadCols, tolerance,
+      col("__rt_tol") - col(leftTime)) { (rt, cols) =>
+      asofForward(left, rt, leftKey, leftTime, rightKey, rightTime, cols)
+    }
+
+  /** The tolerance variants' row-local guard: `join` runs on the right
+    * side with its time carried as `__rt_tol` in the payload, and a
+    * payload column survives only while `staleness` (the gap between
+    * the left time and `__rt_tol`) is within `tolerance`.
+    */
+  private def withinTolerance(left: DataFrame, right: DataFrame, rightTime: String,
+                              payloadCols: Seq[String], tolerance: Long,
+                              staleness: Column)(
+                              join: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
     require(tolerance >= 0L, s"tolerance must be >= 0, got $tolerance")
-    val rt = right.withColumn("__rt_tol", col(rightTime))
-    val joined = asofForward(left, rt, leftKey, leftTime,
-      rightKey, rightTime, payloadCols :+ "__rt_tol")
-    val fresh = col("__rt_tol").isNotNull &&
-      col("__rt_tol") - col(leftTime) <= tolerance
+    val joined = join(right.withColumn("__rt_tol", col(rightTime)), payloadCols :+ "__rt_tol")
+    val fresh = col("__rt_tol").isNotNull && staleness <= tolerance
     joined.select(left.columns.map(col).toSeq ++
       payloadCols.map(c => when(fresh, col(c)).otherwise(lit(null)).as(c)): _*)
   }
@@ -198,27 +198,11 @@ object AsOfJoin {
                   leftKey: String, leftTime: String,
                   rightKey: String, rightTime: String,
                   payloadCols: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val payloadStruct = struct(
-      col(rightTime).as("__rt") +: payloadCols.map(col): _*)
-
-    def nullOf(df: DataFrame, c: String): Column =
-      lit(null).cast(df.schema(c).dataType)
-
     // right side 0: sorts before left at equal times (inclusive <=
     // into the backward frame)
-    val l = left.select(
-      col(leftKey).as("__k") +: col(leftTime).as("__t") +: lit(1).as("__side") +:
-        leftCols.map(col) :+
-        lit(null).cast(right.select(payloadStruct).schema.head.dataType).as("__p"): _*)
-    val r = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .select(
-        col(rightKey).as("__k") +: col(rightTime).as("__t") +: lit(0).as("__side") +:
-          leftCols.map(c => nullOf(left, c).as(c)) :+ payloadStruct.as("__p"): _*)
-
-    val ordered = Window.partitionBy("__k")
-      .orderBy(col("__t").asc_nulls_last, col("__side").asc)
+    val (u, ordered) = taggedUnion(left, right, leftKey, leftTime, rightKey, rightTime,
+      struct(col(rightTime).as("__rt") +: payloadCols.map(col): _*),
+      leftSide = 1, _.asc_nulls_last)
     val wBack = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wFwd = ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing)
 
@@ -230,12 +214,11 @@ object AsOfJoin {
       .when(useBack, col("__b"))
       .otherwise(col("__f")) // null when both directions are empty
 
-    l.unionByName(r)
-      .withColumn("__b", last(col("__p"), ignoreNulls = true).over(wBack))
+    u.withColumn("__b", last(col("__p"), ignoreNulls = true).over(wBack))
       .withColumn("__f", first(col("__p"), ignoreNulls = true).over(wFwd))
       .filter(col("__side") === 1)
       .withColumn("__m", chosen)
-      .select(leftCols.map(col) ++
+      .select(left.columns.toSeq.map(col) ++
         payloadCols.map(c => col(s"__m.$c").as(c)) ++ Seq(
           col("__m.__rt").as("asof_t"),
           abs(col("__t") - col("__m.__rt")).as("asof_dt"),

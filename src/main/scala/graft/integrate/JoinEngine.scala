@@ -195,14 +195,15 @@ class JoinEngine(
   def limitedAssignment(candidates: DataFrame): Seq[PairMatch] = {
     val k = config.maxMatchesPerRow
     val all = candidates.select("rid1", "rid2", "prob")
-    if (k == 0) {
-      return all.collect().map(r => PairMatch(r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    }
-    // the candidate set is consumed twice (count + sorted scan) and is
-    // the tail of the expensive cross-join pipeline: cache it
+    // the candidate set is consumed twice (count + collect or sorted
+    // scan) and is the tail of the expensive cross-join pipeline: cache it
     all.persist()
     try {
       val nCand = all.count()
+      if (k == 0) {
+        checkUnlimitedCandidates(config.profile, nCand)
+        return all.collect().map(r => PairMatch(r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      }
       val bounded = if (nCand > maxCandidates) windowedAssignment(all, k) else all
       // Sort distributed — prob desc with rid tie-break, the same total
       // order the reference's stable pandas sort induces — then stream
@@ -387,6 +388,19 @@ object JoinEngine {
     * back to the window-based approximation.
     */
   private val maxCandidates = 5_000_000L
+
+  /** The unlimited (`maxMatchesPerRow == 0`) assignment keeps every
+    * candidate, so it has no windowed fallback: above `maxCandidates`
+    * it fails before the collect instead of filling the driver. Split
+    * out so a spec can reach the failure branch without scoring
+    * millions of pairs.
+    */
+  private[integrate] def checkUnlimitedCandidates(profile: String, nCand: Long): Unit =
+    require(nCand <= maxCandidates,
+      s"limitedAssignment: profile $profile keeps every candidate, and $nCand " +
+        s"candidate pairs > maxCandidates=$maxCandidates — raise the join " +
+        "threshold or use a profile that caps matches per row")
+
   /** The cross join broadcasts a side whose estimated size fits. */
   private val broadcastBytes = 64L << 20
   /** Candidate sets up to this size are collected at once; larger ones

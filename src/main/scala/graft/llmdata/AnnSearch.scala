@@ -158,8 +158,16 @@ object AnnSearch {
                    thetaMicro: Long): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),
       col("v").as("qv"), col("nrm").as("qn"))
+    cosineAtLeast(corpus.crossJoin(broadcast(q)), thetaMicro)
+  }
+
+  /** The radius searches' match step over (query, corpus) pair rows: a
+    * non-self pair matches when its micro-quantized cosine is at least
+    * `thetaMicro`. Output: (query_id, neighbor_id, cosine, n_matches).
+    */
+  private def cosineAtLeast(pairs: DataFrame, thetaMicro: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-    corpus.crossJoin(broadcast(q))
+    pairs
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("__cm", floor(
         dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
@@ -268,17 +276,7 @@ object AnnSearch {
           - acos(least(lit(1.0), greatest(lit(-1.0), col("rcmin"))))
           <= lit(math.acos(thetaEff) + radiusPadRad))
       .select(col("query_id"), col("qv"), col("qn"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-    assigned.join(broadcast(survivors), "bucket")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("__cm", floor(
-        dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
-      .filter(col("__cm") >= thetaMicro)
-      .withColumn("n_matches", count(lit(1)).over(w))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (col("__cm").cast("double") / lit(1000000.0)).as("cosine"),
-        col("n_matches"))
+    cosineAtLeast(assigned.join(broadcast(survivors), "bucket"), thetaMicro)
   }
 
   /** Measured pruning power of the ball bound on a deterministic
@@ -404,11 +402,21 @@ object AnnSearch {
     */
   def ivfTopK(emb: DataFrame, queryFilter: org.apache.spark.sql.Column,
               k: Int): DataFrame = {
-    val assigned = ivfAssigned(emb)
-    val corpus = assigned.select(col("vec_id"), col("v"), col("nrm"),
+    twoBucketTopK(ivfAssigned(emb), queryFilter,
+      maskedSecondBucket(ivfCentroids, "__dots"), k)
+  }
+
+  /** The two-probe IVF top-k over bucketed vectors `base` (vec_id, v,
+    * nrm, first bucket `__b1`): each query selected by `queryFilter`
+    * also probes the arg-max of `masked` (its scores with `__b1` masked
+    * out); candidates are an equi-join on the bucket, re-ranked by
+    * exact cosine.
+    */
+  private def twoBucketTopK(base: DataFrame, queryFilter: org.apache.spark.sql.Column,
+                            masked: String, k: Int): DataFrame = {
+    val corpus = base.select(col("vec_id"), col("v"), col("nrm"),
       col("__b1").as("bucket"))
-    val masked = maskedSecondBucket(ivfCentroids, "__dots")
-    val probes = assigned.filter(queryFilter)
+    val probes = base.filter(queryFilter)
       .withColumn("__b2", expr(s"array_position($masked, array_max($masked))"))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
         explode(array(col("__b1"), col("__b2"))).as("bucket"))
@@ -1203,18 +1211,7 @@ object AnnSearch {
       .withColumn("vi", expr("transform(v, x -> cast(floor(x * 1000000) as bigint))"))
       .withColumn("__scores", kmeansScores(state))
       .withColumn("__b1", expr("array_position(__scores, array_max(__scores))"))
-    val corpus = base.select(col("vec_id"), col("v"), col("nrm"),
-      col("__b1").as("bucket"))
-    val masked = maskedSecondBucket(kc, "__scores")
-    val probes = base.filter(queryFilter)
-      .withColumn("__b2", expr(s"array_position($masked, array_max($masked))"))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"),
-        explode(array(col("__b1"), col("__b2"))).as("bucket"))
-    rankTail(
-      corpus.join(broadcast(probes), "bucket")
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm"))),
-      k, col("cos").desc, "cos")
+    twoBucketTopK(base, queryFilter, maskedSecondBucket(kc, "__scores"), k)
   }
 
   /** Product quantization assignment (Jégou et al. 2011): the
@@ -1651,6 +1648,14 @@ object AnnSearch {
       .filter(col("vec_a") < col("vec_b"))
       .select("vec_a", "vec_b")
       .distinct()
+    dupPairCosines(emb, cand)
+  }
+
+  /** The embedding near-dup operators' verify step: each candidate
+    * (vec_a, vec_b) pair joins both vectors and survives when its exact
+    * cosine reaches `embDupThreshold`. Output: (vec_a, vec_b, cos).
+    */
+  private def dupPairCosines(emb: DataFrame, cand: DataFrame): DataFrame = {
     val n = vectors(emb)
     cand
       .join(n.select(col("vec_id").as("vec_a"), col("v").as("__va"), col("nrm").as("__na")), "vec_a")
@@ -1694,13 +1699,7 @@ object AnnSearch {
       .filter(col("__n") > maxBucket && col("vec_id") =!= col("__rep"))
       .select(col("__rep").as("vec_a"), col("vec_id").as("vec_b"))
     val cand = allPairs.union(starPairs).distinct()
-    val n = vectors(emb)
-    cand
-      .join(n.select(col("vec_id").as("vec_a"), col("v").as("__va"), col("nrm").as("__na")), "vec_a")
-      .join(n.select(col("vec_id").as("vec_b"), col("v").as("__vb"), col("nrm").as("__nb")), "vec_b")
-      .withColumn("cos", dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-      .filter(col("cos") >= embDupThreshold)
-      .select("vec_a", "vec_b", "cos")
+    dupPairCosines(emb, cand)
   }
 
   /** Dominant direction of the embedding cloud (UNCENTERED Gram-matrix

@@ -224,15 +224,8 @@ object Classifier {
   def trainEval(docs: DataFrame, target: Column, epochs: Int = 2,
                 holdoutMod: Int = 5, idCol: String = "doc_id",
                 textCol: String = "text"): DataFrame = {
-    require(holdoutMod > 1, s"holdoutMod must be > 1: $holdoutMod")
-    val train = docs.filter(col(idCol) % holdoutMod =!= 0)
-    val test = docs.filter(col(idCol) % holdoutMod === 0)
-    val weights = trainWeights(train, target, epochs, idCol, textCol)
-      .withColumnRenamed("w_micro", "__w")
-    val margins = features(test, idCol, textCol)
-      .join(broadcast(weights), Seq("bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(col("x") * coalesce(col("__w"), lit(0L))).as("__m"))
+    val (train, test, margins) =
+      holdoutMargins(docs, target, epochs, holdoutMod, idCol, textCol, "__m")
     val nTrain = train.agg(count(lit(1)).as("n_train"))
     test.select(col(idCol), when(target, 1L).otherwise(0L).as("__y"))
       .join(margins, Seq(idCol))
@@ -245,16 +238,41 @@ object Classifier {
       .crossJoin(broadcast(nTrain))
       .withColumn("accuracy_micro",
         expr("(tp + tn) * 1000000 div greatest(n_test, 1)"))
+      .transform(withPrecisionRecallF1)
+      .select(col("n_train"), col("n_test"), col("tp"), col("fp"),
+        col("fn"), col("tn"), col("accuracy_micro"),
+        col("precision_micro"), col("recall_micro"), col("f1_micro"))
+  }
+
+  /** The holdout split (`id % holdoutMod == 0` is the test slice), the
+    * weights trained on the rest, and each test doc's margin under them
+    * as `marginCol`: (train, test, margins).
+    */
+  private def holdoutMargins(docs: DataFrame, target: Column, epochs: Int,
+                             holdoutMod: Int, idCol: String, textCol: String,
+                             marginCol: String): (DataFrame, DataFrame, DataFrame) = {
+    require(holdoutMod > 1, s"holdoutMod must be > 1: $holdoutMod")
+    val train = docs.filter(col(idCol) % holdoutMod =!= 0)
+    val test = docs.filter(col(idCol) % holdoutMod === 0)
+    val weights = trainWeights(train, target, epochs, idCol, textCol)
+      .withColumnRenamed("w_micro", "__w")
+    val margins = features(test, idCol, textCol)
+      .join(broadcast(weights), Seq("bucket"), "left")
+      .groupBy(col(idCol))
+      .agg(sum(col("x") * coalesce(col("__w"), lit(0L))).as(marginCol))
+    (train, test, margins)
+  }
+
+  /** Precision, recall and F1 in exact integer micro-units over the
+    * confusion counts `tp`, `fp` and `fn`.
+    */
+  private def withPrecisionRecallF1(confusion: DataFrame): DataFrame = confusion
       .withColumn("precision_micro",
         expr("tp * 1000000 div greatest(tp + fp, 1)"))
       .withColumn("recall_micro",
         expr("tp * 1000000 div greatest(tp + fn, 1)"))
       .withColumn("f1_micro",
         expr("2 * tp * 1000000 div greatest(2 * tp + fp + fn, 1)"))
-      .select(col("n_train"), col("n_test"), col("tp"), col("fp"),
-        col("fn"), col("tn"), col("accuracy_micro"),
-        col("precision_micro"), col("recall_micro"), col("f1_micro"))
-  }
 
   /** Convergence / loss-curve report (r15 judge next-7): one row per
     * epoch BOUNDARY — epoch 0 is the untrained w = 0 state, epoch e
@@ -471,15 +489,8 @@ object Classifier {
   def trainAucHoldout(docs: DataFrame, target: Column, epochs: Int = 2,
                       holdoutMod: Int = 5, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    require(holdoutMod > 1, s"holdoutMod must be > 1: $holdoutMod")
-    val train = docs.filter(col(idCol) % holdoutMod =!= 0)
-    val test = docs.filter(col(idCol) % holdoutMod === 0)
-    val weights = trainWeights(train, target, epochs, idCol, textCol)
-      .withColumnRenamed("w_micro", "__w")
-    val margins = features(test, idCol, textCol)
-      .join(broadcast(weights), Seq("bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(col("x") * coalesce(col("__w"), lit(0L))).as("margin_micro"))
+    val (_, test, margins) = holdoutMargins(docs, target, epochs, holdoutMod,
+      idCol, textCol, "margin_micro")
     val scoredTest = test
       .select(col(idCol), when(target, 1L).otherwise(0L).as("y"))
       .join(margins, Seq(idCol))
@@ -517,12 +528,7 @@ object Classifier {
           .as("fn"),
         sum(when(!col("__pred") && col(labelCol) === 0L, 1L).otherwise(0L))
           .as("tn"))
-      .withColumn("precision_micro",
-        expr("tp * 1000000 div greatest(tp + fp, 1)"))
-      .withColumn("recall_micro",
-        expr("tp * 1000000 div greatest(tp + fn, 1)"))
-      .withColumn("f1_micro",
-        expr("2 * tp * 1000000 div greatest(2 * tp + fp + fn, 1)"))
+      .transform(withPrecisionRecallF1)
       .orderBy("threshold_ppm")
   }
 

@@ -1501,6 +1501,22 @@ object LlmDataQueries {
          |FROM u ORDER BY dim, query_id""".stripMargin
     })
 
+  /** The lattice oracles' per-vector dot products with the first `kc`
+    * lattice centroids, as the elements of a list over `v`.
+    */
+  private def latticeDotsSql(kc: Int): String = (0 until kc).map { k =>
+    val lit = latticeTerms(0L, k).mkString(", ")
+    s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
+  }.mkString(",\n  ")
+
+  /** The second-probe bucket: the arg-max of the `kc` bucket `scores`
+    * list with the first bucket `b1` masked out.
+    */
+  private def secondBucketSql(kc: Int, scores: String): String = {
+    val masked = s"list_transform(range(1, ${kc + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE $scores[i] END)"
+    s"list_position($masked, list_aggregate($masked, 'max'))"
+  }
+
   /** JL random-projection recall audit: the oracle inlines the same
     * LCG-derived ±1 sign rows, projects with the identical fold
     * order, and compares projected vs full exact top-k.
@@ -1548,24 +1564,12 @@ object LlmDataQueries {
          |GROUP BY tp.query_id ORDER BY tp.query_id""".stripMargin
     })
 
-  /** Prefixed IVF top-k oracle CTE chain — the DuckDB replay of
-    * [[AnnSearch.ivfTopK]] (two-probe bucket join + exact cosine
-    * re-rank), ending in `${p}r` with columns (query_id, neighbor_id,
-    * cos, rnk). The prefix keeps the chain composable next to other
-    * CTE families (the hybrid entry stacks it on [[bm25BatchCtes]],
-    * whose names it must not collide with).
-    */
   private def ivfRankCtes(p: String, pred: String): String = {
-    val dots = (0 until ivfCentroids).map { k =>
-      val lit = latticeTerms(0L, k).mkString(", ")
-      s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-    }.mkString(",\n  ")
-    val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
     s"""${p}e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |${p}d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [$dots] AS dots FROM ${p}e),
+       |${p}d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [${latticeDotsSql(ivfCentroids)}] AS dots FROM ${p}e),
        |${p}a AS (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM ${p}d),
        |${p}q AS (SELECT vec_id, v, nrm, b1,
-       |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+       |        ${secondBucketSql(ivfCentroids, "dots")} AS b2
        |      FROM ${p}a WHERE $pred),
        |${p}pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM ${p}q),
        |${p}cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -1604,11 +1608,6 @@ object LlmDataQueries {
         .orderBy("query_id", "rnk")
     },
     Some {
-      val dots = (0 until ivfCentroids).map { k =>
-        val lit = latticeTerms(0L, k).mkString(", ")
-        s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-      }.mkString(",\n  ")
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
          |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1616,10 +1615,10 @@ object LlmDataQueries {
          |      FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < $annQueryIds),
          |rex AS (SELECT query_id, neighbor_id,
          |          row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM p),
-         |d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [$dots] AS dots FROM e),
+         |d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [${latticeDotsSql(ivfCentroids)}] AS dots FROM e),
          |a AS (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM d),
          |qf AS (SELECT vec_id, v, nrm, b1,
-         |         list_position($masked, list_aggregate($masked, 'max')) AS b2
+         |         ${secondBucketSql(ivfCentroids, "dots")} AS b2
          |       FROM a WHERE vec_id < $annQueryIds),
          |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM qf),
          |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -1652,11 +1651,6 @@ object LlmDataQueries {
     * and composed further by the PageRank oracle.
     */
   private def latticeGraphCtes(kc: Int): String = {
-    val dots = (0 until kc).map { k =>
-      val lit = latticeTerms(0L, k).mkString(", ")
-      s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-    }.mkString(",\n  ")
-    val masked = s"list_transform(range(1, ${kc + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
     // `a` and `r` are pinned AS MATERIALIZED: DuckDB inlines plain
     // CTEs at every reference, and the downstream tails (mutual /
     // triangles / pagerank / label-prop / triplets) reference
@@ -1665,10 +1659,10 @@ object LlmDataQueries {
     // join re-ran per reference (12-31 s per entry at sf0.01; the
     // round-15 driver-compare budget breaker, with the power chain).
     s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [$dots] AS dots FROM e),
+       |d AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm, [${latticeDotsSql(kc)}] AS dots FROM e),
        |a AS MATERIALIZED (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM d),
        |q AS (SELECT vec_id, v, nrm, b1,
-       |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+       |        ${secondBucketSql(kc, "dots")} AS b2
        |      FROM a),
        |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
        |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -1861,6 +1855,34 @@ object LlmDataQueries {
        |  (true_label = nb_label) AS correct
        |FROM rkv WHERE rnk = 1 ORDER BY vec_id""".stripMargin
 
+  /** The two-probe IVF recall oracles' index side over the bucketed
+    * `a(vec_id, v, nrm, <scores>, b1)`: each query vector probes `b1`
+    * and its second bucket, re-ranks the candidates by exact cosine and
+    * keeps `it(query_id, neighbor_id)`, its top `ivfK`.
+    */
+  private def ivfProbeTopKCtes(scores: String): String =
+    s"""q AS (SELECT vec_id, v, nrm, b1,
+       |        ${secondBucketSql(ivfCentroids, scores)} AS b2
+       |      FROM a WHERE vec_id < $annQueryIds),
+       |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
+       |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
+       |          list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) / (qn * c.nrm) AS cos
+       |         FROM pr p JOIN a c ON c.b1 = p.bucket AND c.vec_id <> p.query_id),
+       |ir AS (SELECT query_id, neighbor_id,
+       |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand),
+       |it AS (SELECT query_id, neighbor_id FROM ir WHERE rnk <= $ivfK),"""
+
+  /** recall@`ivfK` per query: the index's top `it` against the exact
+    * top `bt`.
+    */
+  private lazy val ivfRecallTailSql: String =
+    s"""h AS (SELECT bt.query_id, count(*) AS n_hits
+       |      FROM bt JOIN it USING (query_id, neighbor_id) GROUP BY bt.query_id),
+       |qs AS (SELECT DISTINCT query_id FROM bt)
+       |SELECT qs.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
+       |  ${r6s(s"CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / $ivfK")} AS recall
+       |FROM qs LEFT JOIN h USING (query_id) ORDER BY query_id"""
+
   /** Recall@k audit: the oracle composes the brute-force and IVF
     * chains (CTEs renamed apart) and counts their per-query overlap —
     * index-quality measurement as a first-class, hash-checked query.
@@ -1872,11 +1894,6 @@ object LlmDataQueries {
       .select(col("query_id"), col("n_hits"), r6(col("recall")).as("recall"))
       .orderBy("query_id"),
     Some {
-      val dots = (0 until ivfCentroids).map { k =>
-        val lit = latticeTerms(0L, k).mkString(", ")
-        s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-      }.mkString(",\n  ")
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
          |bp AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1885,24 +1902,10 @@ object LlmDataQueries {
          |br AS (SELECT query_id, neighbor_id,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM bp),
          |bt AS (SELECT query_id, neighbor_id FROM br WHERE rnk <= $ivfK),
-         |d AS (SELECT vec_id, v, nrm, [$dots] AS dots FROM n),
+         |d AS (SELECT vec_id, v, nrm, [${latticeDotsSql(ivfCentroids)}] AS dots FROM n),
          |a AS (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM d),
-         |q AS (SELECT vec_id, v, nrm, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
-         |      FROM a WHERE vec_id < $annQueryIds),
-         |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
-         |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-         |          list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) / (qn * c.nrm) AS cos
-         |         FROM pr p JOIN a c ON c.b1 = p.bucket AND c.vec_id <> p.query_id),
-         |ir AS (SELECT query_id, neighbor_id,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand),
-         |it AS (SELECT query_id, neighbor_id FROM ir WHERE rnk <= $ivfK),
-         |h AS (SELECT bt.query_id, count(*) AS n_hits
-         |      FROM bt JOIN it USING (query_id, neighbor_id) GROUP BY bt.query_id),
-         |qs AS (SELECT DISTINCT query_id FROM bt)
-         |SELECT qs.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  ${r6s(s"CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / $ivfK")} AS recall
-         |FROM qs LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin
+         |${ivfProbeTopKCtes("dots")}
+         |$ivfRecallTailSql""".stripMargin
     })
 
   /** IVF probe-count sweep: recall@k at probes = 1 vs 2 against one
@@ -1917,11 +1920,6 @@ object LlmDataQueries {
         col("vec_id") < annQueryIds, ivfK)
       .orderBy("n_probes"),
     Some {
-      val dots = (0 until ivfCentroids).map { k =>
-        val lit = latticeTerms(0L, k).mkString(", ")
-        s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-      }.mkString(",\n  ")
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |n AS MATERIALIZED (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
          |bp AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1930,10 +1928,10 @@ object LlmDataQueries {
          |br AS (SELECT query_id, neighbor_id,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM bp),
          |bt AS MATERIALIZED (SELECT query_id, neighbor_id FROM br WHERE rnk <= $ivfK),
-         |d AS (SELECT vec_id, v, nrm, [$dots] AS dots FROM n),
+         |d AS (SELECT vec_id, v, nrm, [${latticeDotsSql(ivfCentroids)}] AS dots FROM n),
          |a AS MATERIALIZED (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM d),
          |q AS MATERIALIZED (SELECT vec_id, v, nrm, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+         |        ${secondBucketSql(ivfCentroids, "dots")} AS b2
          |      FROM a WHERE vec_id < $annQueryIds),
          |pr1 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, b1 AS bucket FROM q),
          |pr2 AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
@@ -1973,34 +1971,19 @@ object LlmDataQueries {
       .select(col("query_id"), col("n_hits"), r6(col("recall")).as("recall"))
       .orderBy("query_id"),
     Some {
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
       s"""WITH ${kmeansCtesK(ivfCentroids)},
          |sc AS (SELECT vec_id, list(score ORDER BY j) AS scores FROM d2 GROUP BY vec_id),
          |a AS (SELECT n.vec_id, n.v, n.nrm, sc.scores,
          |        list_position(sc.scores, list_aggregate(sc.scores, 'max')) AS b1
          |      FROM n JOIN sc USING (vec_id)),
-         |q AS (SELECT vec_id, v, nrm, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
-         |      FROM a WHERE vec_id < $annQueryIds),
-         |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
-         |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-         |          list_sum(list_transform(range(1, len(qv) + 1), i -> qv[i] * c.v[i])) / (qn * c.nrm) AS cos
-         |         FROM pr p JOIN a c ON c.b1 = p.bucket AND c.vec_id <> p.query_id),
-         |ir AS (SELECT query_id, neighbor_id,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM cand),
-         |it AS (SELECT query_id, neighbor_id FROM ir WHERE rnk <= $ivfK),
+         |${ivfProbeTopKCtes("scores")}
          |bp AS (SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
          |        list_sum(list_transform(range(1, len(qq.v) + 1), i -> qq.v[i] * c.v[i])) / (qq.nrm * c.nrm) AS cos
          |      FROM n qq JOIN n c ON c.vec_id <> qq.vec_id WHERE qq.vec_id < $annQueryIds),
          |br AS (SELECT query_id, neighbor_id,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk FROM bp),
          |bt AS (SELECT query_id, neighbor_id FROM br WHERE rnk <= $ivfK),
-         |h AS (SELECT bt.query_id, count(*) AS n_hits
-         |      FROM bt JOIN it USING (query_id, neighbor_id) GROUP BY bt.query_id),
-         |qs AS (SELECT DISTINCT query_id FROM bt)
-         |SELECT qs.query_id, CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  ${r6s(s"CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / $ivfK")} AS recall
-         |FROM qs LEFT JOIN h USING (query_id) ORDER BY query_id""".stripMargin
+         |$ivfRecallTailSql""".stripMargin
     })
 
   // ----------------------------------------------------------------- text
@@ -2074,6 +2057,44 @@ object LlmDataQueries {
             |  CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
             |FROM c ORDER BY doc_id""".stripMargin))
 
+  /** The langid oracles' marker scores over a word list `w`: `s_<lang>`
+    * counts the words in that language's marker set.
+    */
+  private lazy val langScoresSql: String = langMarkers
+    .map { case (l, m) => s"len(list_filter(w, t -> t IN ${inList(m)})) AS s_$l" }
+    .mkString(", ")
+
+  /** The predicted language over the `s_<lang>` scores: 'und' when all
+    * are 0, else the first language that scores at least every later
+    * one. `beforeElse` is the text between the branches and the ELSE.
+    */
+  private def langPickSql(beforeElse: String): String = {
+    val langs = langMarkers.map(_._1)
+    val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
+    val branches = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
+      val geRest = langs.drop(i + 1).map(r => s"s_$l >= s_$r").mkString(" AND ")
+      s"WHEN $geRest THEN '$l'"
+    }.mkString(" ")
+    s"CASE WHEN $allZero THEN 'und' $branches${beforeElse}ELSE '${langs.last}' END"
+  }
+
+  /** The Gopher-rule oracles' per-document counters over the words `w`
+    * and lines `l` of `text`: words, characters, alphabetic words, '#'
+    * and '...' symbols, lines, bullet and ellipsis lines, stop words.
+    */
+  private lazy val gopherCountsSql: String = {
+    val stops = TextAnalysis.gopherStops.map(s => s"'$s'").mkString(", ")
+    s"""CAST(len(w) AS BIGINT) AS n_words,
+       |        COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS chars,
+       |        len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS alpha,
+       |        len(text) - len(replace(text, '#', '')) AS hash,
+       |        (len(text) - len(replace(text, '...', ''))) // 3 AS ell,
+       |        len(l) AS nl,
+       |        len(list_filter(l, x -> starts_with(ltrim(x), '-') OR starts_with(ltrim(x), '*') OR starts_with(ltrim(x), '•'))) AS bul,
+       |        len(list_filter(l, x -> ends_with(rtrim(x), '...'))) AS elll,
+       |        len(list_intersect(list_distinct(w), [$stops])) AS stop"""
+  }
+
   /** Gopher rule-based quality filter (Rae et al. 2021 A1.1): every
     * ratio rule spelled as an exact integer cross-product on BOTH
     * sides, so the 7 flags + verdict hash-replay engine-identically.
@@ -2083,19 +2104,10 @@ object LlmDataQueries {
     (s, dir) => TextAnalysis.gopherRules(QuerySupport.table(s, dir, "documents"))
       .orderBy("doc_id"),
     Some {
-      val stops = TextAnalysis.gopherStops.map(s => s"'$s'").mkString(", ")
       s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS w,
          |             string_split(text, chr(10)) AS l FROM documents),
          |m AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS chars,
-         |        len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS alpha,
-         |        len(text) - len(replace(text, '#', '')) AS hash,
-         |        (len(text) - len(replace(text, '...', ''))) // 3 AS ell,
-         |        len(l) AS nl,
-         |        len(list_filter(l, x -> starts_with(ltrim(x), '-') OR starts_with(ltrim(x), '*') OR starts_with(ltrim(x), '•'))) AS bul,
-         |        len(list_filter(l, x -> ends_with(rtrim(x), '...'))) AS elll,
-         |        len(list_intersect(list_distinct(w), [$stops])) AS stop
+         |        $gopherCountsSql
          |      FROM w),
          |f AS (SELECT doc_id, n_words,
          |        CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END AS r1_word_count,
@@ -2126,20 +2138,11 @@ object LlmDataQueries {
     (s, dir) => TextAnalysis.languageId(QuerySupport.table(s, dir, "documents"))
       .orderBy("doc_id"),
     Some {
-      val langs = langMarkers.map(_._1)
-      val scores = langMarkers
-        .map { case (l, m) => s"len(list_filter(w, t -> t IN ${inList(m)})) AS s_$l" }
-        .mkString(", ")
-      val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
-      val branches = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
-        val geRest = langs.drop(i + 1).map(r => s"s_$l >= s_$r").mkString(" AND ")
-        s"WHEN $geRest THEN '$l'"
-      }.mkString(" ")
-      val outs = langs.map(l => s"CAST(s_$l AS BIGINT) AS s_$l").mkString(", ")
+      val outs = langMarkers.map { case (l, _) => s"CAST(s_$l AS BIGINT) AS s_$l" }.mkString(", ")
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |s AS (SELECT doc_id, $scores FROM w)
+         |s AS (SELECT doc_id, $langScoresSql FROM w)
          |SELECT doc_id, $outs,
-         |  CASE WHEN $allZero THEN 'und' $branches ELSE '${langs.last}' END AS predicted_lang
+         |  ${langPickSql(" ")} AS predicted_lang
          |FROM s ORDER BY doc_id""".stripMargin
     })
 
@@ -2185,20 +2188,10 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "documents"))
       .orderBy("true_lang", "predicted_lang"),
     Some {
-      val langs = langMarkers.map(_._1)
-      val scores = langMarkers
-        .map { case (l, m) => s"len(list_filter(w, t -> t IN ${inList(m)})) AS s_$l" }
-        .mkString(", ")
-      val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
-      val branches = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
-        val geRest = langs.drop(i + 1).map(r => s"s_$l >= s_$r").mkString(" AND ")
-        s"WHEN $geRest THEN '$l'"
-      }.mkString(" ")
       s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |s AS (SELECT doc_id, $scores FROM w),
+         |s AS (SELECT doc_id, $langScoresSql FROM w),
          |p AS (SELECT doc_id,
-         |        CASE WHEN $allZero THEN 'und' $branches
-         |        ELSE '${langs.last}' END AS predicted_lang
+         |        ${langPickSql("\n|        ")} AS predicted_lang
          |      FROM s),
          |c AS (SELECT d.lang AS true_lang, p.predicted_lang,
          |        count(*) AS n_docs
@@ -2220,22 +2213,12 @@ object LlmDataQueries {
     (s, dir) => TextAnalysis.languageMix(QuerySupport.table(s, dir, "documents"))
       .orderBy("doc_id"),
     Some {
-      val langs = langMarkers.map(_._1)
-      val scores = langMarkers
-        .map { case (l, m) => s"len(list_filter(w, t -> t IN ${inList(m)})) AS s_$l" }
-        .mkString(", ")
-      val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
-      val branches = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
-        val geRest = langs.drop(i + 1).map(r => s"s_$l >= s_$r").mkString(" AND ")
-        s"WHEN $geRest THEN '$l'"
-      }.mkString(" ")
       s"""WITH ln0 AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
          |            FROM documents),
          |lw AS (SELECT doc_id, string_split(line, ' ') AS w FROM ln0),
-         |ls AS (SELECT doc_id, $scores FROM lw),
+         |ls AS (SELECT doc_id, $langScoresSql FROM lw),
          |lp AS (SELECT doc_id,
-         |         CASE WHEN $allZero THEN 'und' $branches
-         |              ELSE '${langs.last}' END AS predicted_lang
+         |         ${langPickSql("\n|              ")} AS predicted_lang
          |       FROM ls),
          |lc AS (SELECT doc_id, predicted_lang, count(*) AS n FROM lp
          |       GROUP BY doc_id, predicted_lang),
@@ -2341,15 +2324,6 @@ object LlmDataQueries {
     * LSH near-dup roots (recursive reachability), survivors only.
     */
   private val curationCtes: String = {
-    val langs = langMarkers.map(_._1)
-    val scores = langMarkers
-      .map { case (l, m) => s"len(list_filter(w, t -> t IN ${inList(m)})) AS s_$l" }
-      .mkString(", ")
-    val allZero = langs.map(l => s"s_$l = 0").mkString(" AND ")
-    val branches = langs.zipWithIndex.dropRight(1).map { case (l, i) =>
-      val geRest = langs.drop(i + 1).map(r => s"s_$l >= s_$r").mkString(" AND ")
-      s"WHEN $geRest THEN '$l'"
-    }.mkString(" ")
     s"""$minhashCtes,
        |ds AS (SELECT doc_id, list_distinct(sh) AS s FROM sh),
        |vp AS (SELECT c.doc_a, c.doc_b
@@ -2361,11 +2335,11 @@ object LlmDataQueries {
        |          UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
        |roots AS (SELECT a AS doc_id, least(a, min(b)) AS root_id FROM reach GROUP BY a),
        |m AS (SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
-       |        len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop, $scores FROM w),
+       |        len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop, $langScoresSql FROM w),
        |scored AS (SELECT doc_id,
        |    0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
        |      + 0.3 * least(1.0, n_tokens / 50.0) AS quality,
-       |    CASE WHEN $allZero THEN 'und' $branches ELSE '${langs.last}' END AS predicted_lang
+       |    ${langPickSql(" ")} AS predicted_lang
        |  FROM m),
        |cur AS (SELECT s.doc_id, s.predicted_lang, s.quality
        |        FROM scored s LEFT JOIN roots r USING (doc_id)
@@ -2835,6 +2809,26 @@ object LlmDataQueries {
            |   OR h = 'ffffffff'
            |ORDER BY doc_id""".stripMargin)
 
+  /** The temperature oracles' rows: per-source token counts `per`, and
+    * `rows_(alpha_micro, source, n_tokens, weight)` with each source's
+    * weight n^alpha at alpha = 1, 1/2 and 1/4 in micro-units.
+    */
+  private val temperatureRowsCtes =
+    """per AS (SELECT source,
+      |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+      |      FROM documents GROUP BY source),
+      |rows_ AS (
+      |  SELECT CAST(1000000 AS BIGINT) AS alpha_micro, source, n_tokens,
+      |         n_tokens AS weight FROM per
+      |  UNION ALL
+      |  SELECT CAST(500000 AS BIGINT), source, n_tokens,
+      |         CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5)
+      |           AS BIGINT) FROM per
+      |  UNION ALL
+      |  SELECT CAST(250000 AS BIGINT), source, n_tokens,
+      |         CAST(floor(sqrt(sqrt(CAST(n_tokens AS DOUBLE))) * 1000000 + 0.5)
+      |           AS BIGINT) FROM per),"""
+
   /** Temperature-sweep planning table: nested-sqrt α weights (no
     * pow — sqrt is correctly-rounded on both engines), exact integer
     * ppm shares per α.
@@ -2844,20 +2838,7 @@ object LlmDataQueries {
     (s, dir) => Curation.temperatureSweep(
         QuerySupport.table(s, dir, "documents"))
       .orderBy(col("alpha_micro").desc, col("source")),
-    Some("""WITH per AS (SELECT source,
-           |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           |      FROM documents GROUP BY source),
-           |rows_ AS (
-           |  SELECT CAST(1000000 AS BIGINT) AS alpha_micro, source, n_tokens,
-           |         n_tokens AS weight FROM per
-           |  UNION ALL
-           |  SELECT CAST(500000 AS BIGINT), source, n_tokens,
-           |         CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5)
-           |           AS BIGINT) FROM per
-           |  UNION ALL
-           |  SELECT CAST(250000 AS BIGINT), source, n_tokens,
-           |         CAST(floor(sqrt(sqrt(CAST(n_tokens AS DOUBLE))) * 1000000 + 0.5)
-           |           AS BIGINT) FROM per),
+    Some(s"""WITH $temperatureRowsCtes
            |tot AS (SELECT alpha_micro, CAST(sum(weight) AS BIGINT) AS tw
            |        FROM rows_ GROUP BY alpha_micro)
            |SELECT r.alpha_micro, r.source, r.n_tokens, r.weight,
@@ -3080,20 +3061,26 @@ object LlmDataQueries {
            |  CAST(sh // n_items AS BIGINT) AS avg_height
            |FROM g, t ORDER BY size_tier, aspect_class""".stripMargin))
 
+  /** The pHash dedup entries' media corpus: `documents` plus exact
+    * copies of every 5th doc and one-character edits of every 9th.
+    */
+  private def editedMediaCorpus(s: SparkSession, dir: String): DataFrame = {
+    val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
+    d.union(d.filter(col("doc_id") % 5 === 0)
+        .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      .union(d.filter(col("doc_id") % 9 === 0)
+        .select((col("doc_id") + 3000000).as("doc_id"),
+          expr("concat(substring(text, 1, 4), 'q', substring(text, 6))")
+            .as("text")))
+  }
+
   /** Perceptual-hash near-dup oracle: replays the positional byte
     * decode, integer mean, band packing, band-bucket candidates (with
     * the star cap), and popcount verify over a corpus with injected
     * exact copies and one-character edits.
     */
   private def phashDedupQuery(cap: Int)(s: SparkSession, dir: String): DataFrame = {
-    val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-    val corpus = d
-      .union(d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-      .union(d.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 3000000).as("doc_id"),
-          expr("concat(substring(text, 1, 4), 'q', substring(text, 6))")
-            .as("text")))
+    val corpus = editedMediaCorpus(s, dir)
     Multimodal.phashDedup(Multimodal.asMediaTable(corpus), maxBucket = cap)
       .orderBy("media_a", "media_b")
   }
@@ -3243,14 +3230,7 @@ object LlmDataQueries {
   private val multimodalDctPhashDedup = CatalogEntry(
     "multimodal_dct_phash_dedup",
     (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      val corpus = d
-        .union(d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        .union(d.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 3000000).as("doc_id"),
-            expr("concat(substring(text, 1, 4), 'q', substring(text, 6))")
-              .as("text")))
+      val corpus = editedMediaCorpus(s, dir)
       Multimodal.dctPhashDedup(Multimodal.asMediaTable(corpus))
         .orderBy("media_a", "media_b")
     },
@@ -3270,14 +3250,7 @@ object LlmDataQueries {
   private val multimodalPhashKeep = CatalogEntry(
     "multimodal_phash_keep",
     (s, dir) => {
-      val d = QuerySupport.table(s, dir, "documents").select("doc_id", "text")
-      val corpus = d
-        .union(d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        .union(d.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 3000000).as("doc_id"),
-            expr("concat(substring(text, 1, 4), 'q', substring(text, 6))")
-              .as("text")))
+      val corpus = editedMediaCorpus(s, dir)
       Multimodal.phashKeep(Multimodal.asMediaTable(corpus))
         .orderBy("media_id")
     },
@@ -3396,6 +3369,25 @@ object LlmDataQueries {
            |  CAST(n_items * 1000000 // t.t AS BIGINT) AS share_ppm
            |FROM g, t ORDER BY format, status""".stripMargin))
 
+  /** The aspect-pack oracles' media CTEs: the stub decode's width and
+    * height per document, then each item's size tier, aspect class and
+    * pixel count as `c(media_id, size_tier, aspect_class, px)`.
+    */
+  private val mediaBucketCtes =
+    """m AS (SELECT doc_id AS media_id,
+      |    CAST(64 + octet_length(encode(text)) % 512 AS BIGINT) AS w,
+      |    CAST(64 + (octet_length(encode(text)) // 7) % 512 AS BIGINT) AS h
+      |  FROM documents),
+      |c AS (SELECT media_id,
+      |    CASE WHEN w * h < 16384 THEN 'small'
+      |      WHEN w * h < 147456 THEN 'medium'
+      |      ELSE 'large' END AS size_tier,
+      |    CASE WHEN w * 1000000 // h < 950000 THEN 'portrait'
+      |      WHEN w * 1000000 // h > 1052631 THEN 'landscape'
+      |      ELSE 'square' END AS aspect_class,
+      |    w * h AS px
+      |  FROM m),"""
+
   /** Aspect-bucketed pixel-budget batch packing over the (stub)
     * decoded dims: per (size_tier × aspect_class) bucket, items pack
     * in id order into ≤ 1 Mpx batches via the grouped distributed
@@ -3410,19 +3402,7 @@ object LlmDataQueries {
         Multimodal.asMediaTable(QuerySupport.table(s, dir, "documents")),
         pixelBudget = 1000000L)
       .orderBy("media_id"),
-    Some("""WITH m AS (SELECT doc_id AS media_id,
-           |    CAST(64 + octet_length(encode(text)) % 512 AS BIGINT) AS w,
-           |    CAST(64 + (octet_length(encode(text)) // 7) % 512 AS BIGINT) AS h
-           |  FROM documents),
-           |c AS (SELECT media_id,
-           |    CASE WHEN w * h < 16384 THEN 'small'
-           |      WHEN w * h < 147456 THEN 'medium'
-           |      ELSE 'large' END AS size_tier,
-           |    CASE WHEN w * 1000000 // h < 950000 THEN 'portrait'
-           |      WHEN w * 1000000 // h > 1052631 THEN 'landscape'
-           |      ELSE 'square' END AS aspect_class,
-           |    w * h AS px
-           |  FROM m),
+    Some(s"""WITH $mediaBucketCtes
            |p AS (SELECT media_id, size_tier, aspect_class, px,
            |    sum(px) OVER (PARTITION BY size_tier, aspect_class
            |                  ORDER BY media_id
@@ -3442,19 +3422,7 @@ object LlmDataQueries {
     (s, dir) => Multimodal.packEfficiency(
       Multimodal.asMediaTable(QuerySupport.table(s, dir, "documents")),
       pixelBudget = 1000000L),
-    Some("""WITH m AS (SELECT doc_id AS media_id,
-           |    CAST(64 + octet_length(encode(text)) % 512 AS BIGINT) AS w,
-           |    CAST(64 + (octet_length(encode(text)) // 7) % 512 AS BIGINT) AS h
-           |  FROM documents),
-           |c AS (SELECT media_id,
-           |    CASE WHEN w * h < 16384 THEN 'small'
-           |      WHEN w * h < 147456 THEN 'medium'
-           |      ELSE 'large' END AS size_tier,
-           |    CASE WHEN w * 1000000 // h < 950000 THEN 'portrait'
-           |      WHEN w * 1000000 // h > 1052631 THEN 'landscape'
-           |      ELSE 'square' END AS aspect_class,
-           |    w * h AS px
-           |  FROM m),
+    Some(s"""WITH $mediaBucketCtes
            |p AS (SELECT media_id, size_tier, aspect_class, px,
            |    (sum(px) OVER (PARTITION BY size_tier, aspect_class
            |                   ORDER BY media_id
@@ -3573,14 +3541,13 @@ object LlmDataQueries {
     * their two best of `kc` Lloyd-learned buckets, top `k` by cosine.
     */
   private def learnedProbeSql(kc: Int, queryFilterSql: String, k: Int): String = {
-    val masked = s"list_transform(range(1, ${kc + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
     s"""WITH ${kmeansCtesK(kc)},
        |sc AS (SELECT vec_id, list(score ORDER BY j) AS scores FROM d2 GROUP BY vec_id),
        |a AS (SELECT n.vec_id, n.v, n.nrm, sc.scores,
        |        list_position(sc.scores, list_aggregate(sc.scores, 'max')) AS b1
        |      FROM n JOIN sc USING (vec_id)),
        |q AS (SELECT vec_id, v, nrm, b1,
-       |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+       |        ${secondBucketSql(kc, "scores")} AS b2
        |      FROM a$queryFilterSql),
        |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
        |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -3806,7 +3773,6 @@ object LlmDataQueries {
 
   /** The IVF-PQ chain up to the ranked ADC candidates `r`. */
   private def ivfPqCtes(queryFilterSql: String): String = {
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE scores[i] END)"
       val aList = (1 to pqSubspaces).map(m => s"a$m").mkString(", ")
       val dist = (1 to pqSubspaces).map(m => s"pr.a$m[c.code_$m]").mkString(" + ")
       s"""WITH $kmeansCtes,
@@ -3819,7 +3785,7 @@ object LlmDataQueries {
          |  $pqOracleCodes
          |  FROM s),
          |q AS (SELECT vec_id, $aList, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+         |        ${secondBucketSql(ivfCentroids, "scores")} AS b2
          |      FROM s $queryFilterSql),
          |pr AS (SELECT vec_id AS query_id, $aList, unnest([b1, b2]) AS bucket FROM q),
          |p AS (SELECT pr.query_id, c.vec_id AS neighbor_id, $dist AS dist
@@ -4073,6 +4039,16 @@ object LlmDataQueries {
             |JOIN sz sb ON sb.doc_id = p.doc_b
             |WHERE n_shared >= 3 ORDER BY doc_a, doc_b""".stripMargin))
 
+  /** The hashed-classifier oracles' feature CTEs: each document's
+    * words `w(doc_id, w)` and its unigram + bigram features `f(doc_id, f)`.
+    */
+  private val wordBigramFeatureCtes =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+      |f AS (SELECT doc_id, list_concat(w,
+      |        CASE WHEN len(w) >= 2
+      |        THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
+      |        ELSE []::VARCHAR[] END) AS f FROM w),"""
+
   /** Hashed-n-gram linear classifier: weights derive from the 16-bit
     * md5-prefix bucket (`% mod - shift`), so the exact BIGINT score
     * replays through the same positional hex decode the SimHash oracle
@@ -4088,11 +4064,7 @@ object LlmDataQueries {
     },
     Some {
       val decode = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, list_concat(w,
-         |        CASE WHEN len(w) >= 2
-         |        THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
-         |        ELSE []::VARCHAR[] END) AS f FROM w),
+      s"""WITH $wordBigramFeatureCtes
          |s AS (SELECT doc_id, len(f) AS n_feats,
          |        list_sum(list_transform(list_transform(f, t -> md5(t)),
          |          h -> ($decode) % 21 - 10)) AS score
@@ -4566,20 +4538,11 @@ object LlmDataQueries {
     * the entry below and the composed `curation_pipeline_v2` oracle.
     */
   private lazy val ensembleCtesSql: String = {
-      val stops = TextAnalysis.gopherStops.map(s => s"'$s'").mkString(", ")
       val decode = hexDecode4("h", posFn = "strpos", substrFn = "substr")
       s"""gw AS (SELECT doc_id, text, string_split(text, ' ') AS w,
          |             string_split(text, chr(10)) AS l FROM documents),
          |gm AS (SELECT doc_id,
-         |        CAST(len(w) AS BIGINT) AS n_words,
-         |        COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS chars,
-         |        len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS alpha,
-         |        len(text) - len(replace(text, '#', '')) AS hash,
-         |        (len(text) - len(replace(text, '...', ''))) // 3 AS ell,
-         |        len(l) AS nl,
-         |        len(list_filter(l, x -> starts_with(ltrim(x), '-') OR starts_with(ltrim(x), '*') OR starts_with(ltrim(x), '•'))) AS bul,
-         |        len(list_filter(l, x -> ends_with(rtrim(x), '...'))) AS elll,
-         |        len(list_intersect(list_distinct(w), [$stops])) AS stop
+         |        $gopherCountsSql
          |      FROM gw),
          |gf AS (SELECT doc_id,
          |        CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END
@@ -5139,14 +5102,21 @@ object LlmDataQueries {
     "text_bm25_batch",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.bm25TopKBatch(d, q, k = 5)
         .orderBy("query_id", "rank")
     },
     Some(s"""WITH $bm25BatchCtes
             |SELECT * FROM rk WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+
+  /** The known-item retrieval entries' queries over `documents`: every
+    * 53rd doc below 5000 asks for itself by its first 6 words, as
+    * (query_id, query_terms).
+    */
+  private def knownItemQueries(d: DataFrame): DataFrame =
+    d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
+      .select(col("doc_id").as("query_id"),
+        slice(split(col("text"), " "), 1, 6).as("query_terms"))
 
   /** Shared DuckDB CTE chain for the batch-BM25 family: the fixed
     * query derivation, the one-pass corpus stats, per-(doc, term)
@@ -5183,22 +5153,29 @@ object LlmDataQueries {
     * metrics. `pq` ends the chain.
     */
   private lazy val retrievalEvalCtes: String =
-    bm25BatchCtes + """,
-      |topk AS (SELECT * FROM rk WHERE rank <= 10),
-      |rel AS (SELECT query_id, query_id AS doc_id FROM q),
-      |h AS (SELECT rel.query_id, topk.rank
-      |      FROM rel LEFT JOIN topk ON rel.query_id = topk.query_id
-      |       AND rel.doc_id = topk.doc_id),
-      |pq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_relevant,
-      |         CAST(count(rank) AS BIGINT) AS n_found,
-      |         CAST(min(rank) AS BIGINT) AS first_rank
-      |       FROM h GROUP BY query_id),
-      |ev AS (SELECT query_id, n_relevant, n_found, first_rank,
-      |         CASE WHEN first_rank IS NOT NULL THEN 1000000 // first_rank
-      |              ELSE 0 END AS rr_micro,
-      |         coalesce(first_rank = 1, FALSE) AS hit1,
-      |         coalesce(first_rank <= 5, FALSE) AS hit_at_k
-      |       FROM pq)""".stripMargin
+    bm25BatchCtes + s""",
+      |${knownItemEvalCtes("rk")}""".stripMargin
+
+  /** The known-item eval over the ranked run `run(query_id, doc_id,
+    * rank)`: each query's source document is its one relevant doc,
+    * the run's top 10 is judged, exact-integer metrics end in `ev`.
+    */
+  private def knownItemEvalCtes(run: String): String =
+    s"""topk AS (SELECT * FROM $run WHERE rank <= 10),
+       |rel AS (SELECT query_id, query_id AS doc_id FROM q),
+       |h AS (SELECT rel.query_id, topk.rank
+       |      FROM rel LEFT JOIN topk ON rel.query_id = topk.query_id
+       |       AND rel.doc_id = topk.doc_id),
+       |pq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_relevant,
+       |         CAST(count(rank) AS BIGINT) AS n_found,
+       |         CAST(min(rank) AS BIGINT) AS first_rank
+       |       FROM h GROUP BY query_id),
+       |ev AS (SELECT query_id, n_relevant, n_found, first_rank,
+       |         CASE WHEN first_rank IS NOT NULL THEN 1000000 // first_rank
+       |              ELSE 0 END AS rr_micro,
+       |         coalesce(first_rank = 1, FALSE) AS hit1,
+       |         coalesce(first_rank <= 5, FALSE) AS hit_at_k
+       |       FROM pq)"""
 
   /** Batch query-likelihood CTE chain ending in `qrk` — the QL twin
     * of [[bm25BatchCtes]] over the same known-item query frame.
@@ -5242,30 +5219,14 @@ object LlmDataQueries {
     "retrieval_eval_ql",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.retrievalEval(
           TextAnalysis.queryLikelihoodTopKBatch(d, q, k = 10),
           q.select(col("query_id"), col("query_id").as("doc_id")), k = 5)
         .orderBy("query_id")
     },
     Some(s"""WITH $qlBatchCtes,
-            |topk AS (SELECT * FROM qrk WHERE rank <= 10),
-            |rel AS (SELECT query_id, query_id AS doc_id FROM q),
-            |h AS (SELECT rel.query_id, topk.rank
-            |      FROM rel LEFT JOIN topk ON rel.query_id = topk.query_id
-            |       AND rel.doc_id = topk.doc_id),
-            |pq AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_relevant,
-            |         CAST(count(rank) AS BIGINT) AS n_found,
-            |         CAST(min(rank) AS BIGINT) AS first_rank
-            |       FROM h GROUP BY query_id),
-            |ev AS (SELECT query_id, n_relevant, n_found, first_rank,
-            |         CASE WHEN first_rank IS NOT NULL THEN 1000000 // first_rank
-            |              ELSE 0 END AS rr_micro,
-            |         coalesce(first_rank = 1, FALSE) AS hit1,
-            |         coalesce(first_rank <= 5, FALSE) AS hit_at_k
-            |       FROM pq)
+            |${knownItemEvalCtes("qrk")}
             |SELECT * FROM ev ORDER BY query_id""".stripMargin))
 
   /** Spark side of the known-item eval: BM25 top-10 judged against
@@ -5276,9 +5237,7 @@ object LlmDataQueries {
     */
   private def knownItemEval(s: SparkSession, dir: String): DataFrame = {
     val d = QuerySupport.table(s, dir, "documents")
-    val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-      .select(col("doc_id").as("query_id"),
-        slice(split(col("text"), " "), 1, 6).as("query_terms"))
+    val q = knownItemQueries(d)
     TextAnalysis.retrievalEval(
       TextAnalysis.bm25TopKBatch(d, q, k = 10),
       q.select(col("query_id"), col("query_id").as("doc_id")), k = 5)
@@ -5335,20 +5294,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "documents"))
       .select(col("alpha_micro"), col("n_sources"), col("n_tokens_total"),
         r6(col("ess")).as("ess"), r6(col("ess_ratio")).as("ess_ratio")),
-    Some(s"""WITH per AS (SELECT source,
-           |        CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-           |      FROM documents GROUP BY source),
-           |rows_ AS (
-           |  SELECT CAST(1000000 AS BIGINT) AS alpha_micro, source, n_tokens,
-           |         n_tokens AS weight FROM per
-           |  UNION ALL
-           |  SELECT CAST(500000 AS BIGINT), source, n_tokens,
-           |         CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5)
-           |           AS BIGINT) FROM per
-           |  UNION ALL
-           |  SELECT CAST(250000 AS BIGINT), source, n_tokens,
-           |         CAST(floor(sqrt(sqrt(CAST(n_tokens AS DOUBLE))) * 1000000 + 0.5)
-           |           AS BIGINT) FROM per),
+    Some(s"""WITH $temperatureRowsCtes
            |u AS (SELECT alpha_micro, source, n_tokens,
            |        weight * 1000000 // greatest(n_tokens, 1) AS uu
            |      FROM rows_),
@@ -5378,9 +5324,7 @@ object LlmDataQueries {
     "retrieval_ndcg",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.ndcgAtK(
           TextAnalysis.bm25TopKBatch(d, q, k = 10),
           gain = when(col("doc_id") === col("query_id"), 3L)
@@ -5423,9 +5367,7 @@ object LlmDataQueries {
     "retrieval_map",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.mapAtK(
           TextAnalysis.bm25TopKBatch(d, q, k = 10),
           rel = col("doc_id") === col("query_id") || col("n_hit_terms") >= 4L,
@@ -5481,6 +5423,25 @@ object LlmDataQueries {
             |FROM s JOIN cm USING (source, q_micro) JOIN t USING (source)
             |ORDER BY doc_id""".stripMargin))
 
+  /** The doc clustering oracles' CTEs: the hashed-TF unit doc vectors
+    * through the Lloyd chain, then each doc's nearest cluster as
+    * `a2(vec_id, bucket)`.
+    */
+  private lazy val docClusterCtes: String = {
+    val hx = hexDecode4("md5(t)", posFn = "strpos", substrFn = "substr")
+    val docVecSql =
+      s"""SELECT vec_id, list_transform(rv, x -> x / nn) AS v FROM (
+         |    SELECT doc_id AS vec_id, rv,
+         |      sqrt(list_sum(list_transform(rv, x -> x * x))) AS nn FROM (
+         |      SELECT doc_id, list_transform(range(0, $docTfDim), d ->
+         |        CAST(len(list_filter(string_split(text, ' '),
+         |          t -> ($hx) % $docTfDim = d)) AS DOUBLE)) AS rv
+         |      FROM documents)) WHERE nn > 0""".stripMargin
+    s"""${kmeansCtesFrom(docVecSql, docClusterK, docTfDim)},
+       |a2 AS (SELECT DISTINCT ON (vec_id) vec_id, CAST(j + 1 AS INT) AS bucket
+       |  FROM d2 ORDER BY vec_id, score DESC, j)"""
+  }
+
   /** Hashed-TF doc clustering: the doc-vector subquery feeds the SAME
     * Lloyd CTE chain as the embedding k-means (generalized source +
     * width; init LCG strides embDim — see kmeansCtesFrom).
@@ -5491,18 +5452,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "documents"))
       .orderBy("doc_id"),
     Some {
-      val hx = hexDecode4("md5(t)", posFn = "strpos", substrFn = "substr")
-      val docVecSql =
-        s"""SELECT vec_id, list_transform(rv, x -> x / nn) AS v FROM (
-           |    SELECT doc_id AS vec_id, rv,
-           |      sqrt(list_sum(list_transform(rv, x -> x * x))) AS nn FROM (
-           |      SELECT doc_id, list_transform(range(0, $docTfDim), d ->
-           |        CAST(len(list_filter(string_split(text, ' '),
-           |          t -> ($hx) % $docTfDim = d)) AS DOUBLE)) AS rv
-           |      FROM documents)) WHERE nn > 0""".stripMargin
-      s"""WITH ${kmeansCtesFrom(docVecSql, docClusterK, docTfDim)},
-         |a2 AS (SELECT DISTINCT ON (vec_id) vec_id, CAST(j + 1 AS INT) AS bucket
-         |  FROM d2 ORDER BY vec_id, score DESC, j)
+      s"""WITH $docClusterCtes
          |SELECT vec_id AS doc_id, bucket FROM a2 ORDER BY doc_id""".stripMargin
     })
 
@@ -5516,18 +5466,7 @@ object LlmDataQueries {
         QuerySupport.table(s, dir, "documents"))
       .orderBy("source"),
     Some {
-      val hx = hexDecode4("md5(t)", posFn = "strpos", substrFn = "substr")
-      val docVecSql =
-        s"""SELECT vec_id, list_transform(rv, x -> x / nn) AS v FROM (
-           |    SELECT doc_id AS vec_id, rv,
-           |      sqrt(list_sum(list_transform(rv, x -> x * x))) AS nn FROM (
-           |      SELECT doc_id, list_transform(range(0, $docTfDim), d ->
-           |        CAST(len(list_filter(string_split(text, ' '),
-           |          t -> ($hx) % $docTfDim = d)) AS DOUBLE)) AS rv
-           |      FROM documents)) WHERE nn > 0""".stripMargin
-      s"""WITH ${kmeansCtesFrom(docVecSql, docClusterK, docTfDim)},
-         |a2 AS (SELECT DISTINCT ON (vec_id) vec_id, CAST(j + 1 AS INT) AS bucket
-         |  FROM d2 ORDER BY vec_id, score DESC, j),
+      s"""WITH $docClusterCtes,
          |sc AS (SELECT d.source, a.bucket, CAST(count(*) AS BIGINT) AS c
          |       FROM documents d JOIN a2 a ON a.vec_id = d.doc_id GROUP BY 1, 2),
          |sn AS (SELECT source, bucket, c,
@@ -5547,6 +5486,22 @@ object LlmDataQueries {
          |FROM ag ORDER BY source""".stripMargin
     })
 
+  /** The calibration oracles' heuristic quality gate over `w`: the
+    * stopword/distinct/length counts `m`, then `ql(doc_id, <label>)`,
+    * whether the quality in micro-units reaches `calibGateMicro`.
+    */
+  private def qualityGateCtes(label: String): String =
+    s"""m AS (SELECT doc_id, len(w) AS n_tokens,
+       |        len(list_distinct(w)) AS n_distinct,
+       |        len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop
+       |      FROM w),
+       |ql AS (SELECT doc_id,
+       |         CAST(floor((0.4 * (n_distinct / n_tokens)
+       |           + 0.3 * (1.0 - n_stop / n_tokens)
+       |           + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
+       |           AS BIGINT) >= $calibGateMicro AS $label
+       |       FROM m),"""
+
   /** Cohen's kappa between the classifier verdict and the quality
     * gate: exact confusion counts, chance correction in double from
     * those counts.
@@ -5560,25 +5515,12 @@ object LlmDataQueries {
         r6(col("kappa")).as("kappa")),
     Some {
       val decode = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, list_concat(w,
-         |        CASE WHEN len(w) >= 2
-         |        THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
-         |        ELSE []::VARCHAR[] END) AS f FROM w),
+      s"""WITH $wordBigramFeatureCtes
          |s AS (SELECT doc_id,
          |        list_sum(list_transform(list_transform(f, t -> md5(t)),
          |          h -> ($decode) % 21 - 10)) >= 0 AS a
          |      FROM f),
-         |m AS (SELECT doc_id, len(w) AS n_tokens,
-         |        len(list_distinct(w)) AS n_distinct,
-         |        len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop
-         |      FROM w),
-         |ql AS (SELECT doc_id,
-         |         CAST(floor((0.4 * (n_distinct / n_tokens)
-         |           + 0.3 * (1.0 - n_stop / n_tokens)
-         |           + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
-         |           AS BIGINT) >= $calibGateMicro AS b
-         |       FROM m),
+         |${qualityGateCtes("b")}
          |c AS (SELECT count(*) AS n,
          |        sum(CASE WHEN a AND b THEN 1 ELSE 0 END) AS n11,
          |        sum(CASE WHEN a AND NOT b THEN 1 ELSE 0 END) AS n10,
@@ -5697,9 +5639,7 @@ object LlmDataQueries {
     "retrieval_hard_negatives",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.hardNegatives(
           TextAnalysis.bm25TopKBatch(d, q, k = 10),
           q.select(col("query_id"), col("query_id").as("doc_id")), k = 5)
@@ -5735,25 +5675,12 @@ object LlmDataQueries {
       .orderBy("bin"),
     Some {
       val decode = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |f AS (SELECT doc_id, list_concat(w,
-         |        CASE WHEN len(w) >= 2
-         |        THEN list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])
-         |        ELSE []::VARCHAR[] END) AS f FROM w),
+      s"""WITH $wordBigramFeatureCtes
          |s AS (SELECT doc_id, len(f) AS n_feats,
          |        list_sum(list_transform(list_transform(f, t -> md5(t)),
          |          h -> ($decode) % 21 - 10)) AS score
          |      FROM f),
-         |m AS (SELECT doc_id, len(w) AS n_tokens,
-         |        len(list_distinct(w)) AS n_distinct,
-         |        len(list_filter(w, t -> t IN ${inList(stopwords)})) AS n_stop
-         |      FROM w),
-         |ql AS (SELECT doc_id,
-         |         CAST(floor((0.4 * (n_distinct / n_tokens)
-         |           + 0.3 * (1.0 - n_stop / n_tokens)
-         |           + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
-         |           AS BIGINT) >= $calibGateMicro AS label
-         |       FROM m),
+         |${qualityGateCtes("label")}
          |j AS (SELECT s.doc_id, s.n_feats, s.score, ql.label
          |      FROM s JOIN ql USING (doc_id)),
          |b AS (SELECT (score - (((score % (2 * n_feats)) + 2 * n_feats)
@@ -5773,6 +5700,23 @@ object LlmDataQueries {
          |FROM b ORDER BY bin""".stripMargin
     })
 
+  /** Reciprocal-rank fusion of the ranked lists `lex` and `den`
+    * (query_id, neighbor_id, rnk): each hit scores a micro-quantized
+    * 1 / (60 + rnk), summed per pair, re-ranked as `rr(query_id,
+    * neighbor_id, rnk, n_lists, rrf_micro)`.
+    */
+  private val rrfFusedCtes =
+    """u AS (SELECT query_id, neighbor_id,
+      |        CAST(floor(1000000.0 / (60 + rnk) + 0.5) AS BIGINT) AS c
+      |      FROM (SELECT * FROM lex UNION ALL SELECT * FROM den)),
+      |f AS (SELECT query_id, neighbor_id, sum(c) AS rrf_micro, count(*) AS n_lists
+      |      FROM u GROUP BY query_id, neighbor_id),
+      |rr AS (SELECT query_id, neighbor_id,
+      |         CAST(row_number() OVER (PARTITION BY query_id
+      |              ORDER BY rrf_micro DESC, neighbor_id) AS INT) AS rnk,
+      |         CAST(n_lists AS BIGINT) AS n_lists,
+      |         CAST(rrf_micro AS BIGINT) AS rrf_micro FROM f)"""
+
   /** The LEXICAL ⊕ DENSE hybrid — the composition a real retrieval
     * stack ships: the same fixed query set scored by batch BM25 over
     * `documents` AND by exact cosine over the query docs' `embeddings`
@@ -5787,9 +5731,7 @@ object LlmDataQueries {
     "retrieval_hybrid_batch",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       val lexical = TextAnalysis.bm25TopKBatch(d, q, k = 10)
         .select(col("query_id"), col("doc_id").as("neighbor_id"),
           col("rank").as("rnk"))
@@ -5813,16 +5755,7 @@ object LlmDataQueries {
             |         SELECT query_id, neighbor_id,
             |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
             |         FROM p) WHERE rnk <= 10),
-            |u AS (SELECT query_id, neighbor_id,
-            |        CAST(floor(1000000.0 / (60 + rnk) + 0.5) AS BIGINT) AS c
-            |      FROM (SELECT * FROM lex UNION ALL SELECT * FROM den)),
-            |f AS (SELECT query_id, neighbor_id, sum(c) AS rrf_micro, count(*) AS n_lists
-            |      FROM u GROUP BY query_id, neighbor_id),
-            |rr AS (SELECT query_id, neighbor_id,
-            |         CAST(row_number() OVER (PARTITION BY query_id
-            |              ORDER BY rrf_micro DESC, neighbor_id) AS INT) AS rnk,
-            |         CAST(n_lists AS BIGINT) AS n_lists,
-            |         CAST(rrf_micro AS BIGINT) AS rrf_micro FROM f)
+            |$rrfFusedCtes
             |SELECT * FROM rr WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin))
 
   /** The hybrid with the INDEX-backed dense side — at corpus scale
@@ -5841,9 +5774,7 @@ object LlmDataQueries {
     * known-item eval). */
   private def hybridAnnFused(s: SparkSession, dir: String): DataFrame = {
     val d = QuerySupport.table(s, dir, "documents")
-    val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-      .select(col("doc_id").as("query_id"),
-        slice(split(col("text"), " "), 1, 6).as("query_terms"))
+    val q = knownItemQueries(d)
     val lexical = TextAnalysis.bm25TopKBatch(d, q, k = 10)
       .select(col("query_id"), col("doc_id").as("neighbor_id"),
         col("rank").as("rnk"))
@@ -5860,16 +5791,7 @@ object LlmDataQueries {
        |lex AS (SELECT query_id, doc_id AS neighbor_id, rank AS rnk
        |        FROM rk WHERE rank <= 10),
        |den AS (SELECT query_id, neighbor_id, rnk FROM ar WHERE rnk <= 10),
-       |u AS (SELECT query_id, neighbor_id,
-       |        CAST(floor(1000000.0 / (60 + rnk) + 0.5) AS BIGINT) AS c
-       |      FROM (SELECT * FROM lex UNION ALL SELECT * FROM den)),
-       |f AS (SELECT query_id, neighbor_id, sum(c) AS rrf_micro, count(*) AS n_lists
-       |      FROM u GROUP BY query_id, neighbor_id),
-       |rr AS (SELECT query_id, neighbor_id,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |              ORDER BY rrf_micro DESC, neighbor_id) AS INT) AS rnk,
-       |         CAST(n_lists AS BIGINT) AS n_lists,
-       |         CAST(rrf_micro AS BIGINT) AS rrf_micro FROM f)""".stripMargin
+       |$rrfFusedCtes""".stripMargin
 
   /** RM3-lite pseudo-relevance feedback: the oracle replays the full
     * two-pass chain — first retrieval (the shared [[bm25BatchCtes]]),
@@ -5882,9 +5804,7 @@ object LlmDataQueries {
     "retrieval_prf_expand",
     (s, dir) => {
       val d = QuerySupport.table(s, dir, "documents")
-      val q = d.filter(col("doc_id") % 53 === 0 && col("doc_id") < 5000)
-        .select(col("doc_id").as("query_id"),
-          slice(split(col("text"), " "), 1, 6).as("query_terms"))
+      val q = knownItemQueries(d)
       TextAnalysis.bm25PrfExpand(d, q, k = 5)
         .orderBy("query_id", "rank")
     },
@@ -6128,6 +6048,62 @@ object LlmDataQueries {
          |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin
     })
 
+  /** The HLL oracles' register CTEs over `t(<keys>token)`, for
+    * interpolation into a `stripMargin` string: md5 per token, the
+    * bucket from its first 16 bits mod 64, the capped leading-zero rank
+    * of the next 112 bits, and each register's max rank as
+    * `bk(<keys>b, mr)`. `keys` is empty or a column list ending in ", ".
+    */
+  private def hllRegisterCtes(keys: String): String = {
+    val d = "(strpos('0123456789abcdef', substr(st, 1, 1)) - 1)"
+    val hv = hexDecode4("h", posFn = "strpos", substrFn = "substr")
+    s"""hh AS (SELECT ${keys}md5(token) AS h FROM t),
+       |sx AS (SELECT $keys($hv) % 64 AS b, ltrim(substr(h, 5, 28), '0') AS st FROM hh),
+       |rr AS (SELECT ${keys}b, CASE WHEN st = '' THEN 30
+       |         ELSE least(30, (28 - length(st)) * 4 +
+       |           (CASE WHEN $d >= 8 THEN 0 WHEN $d >= 4 THEN 1
+       |                 WHEN $d >= 2 THEN 2 ELSE 3 END) + 1) END AS rho
+       |       FROM sx),
+       |bk AS (SELECT ${keys}b, max(rho) AS mr FROM rr GROUP BY ${keys}b),"""
+  }
+
+  /** The registers' two sums, `nb` (buckets seen) and `zp` (Σ 2^(30 - mr)),
+    * as select items over `mr`.
+    */
+  private val hllRegisterSums =
+    """CAST(count(*) AS BIGINT) AS nb,
+      |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp"""
+
+  /** Σ 2^-register in 2^30 fixed point: empty buckets count 2^0 each. */
+  private val hllZScaled = "zp + (64 - nb) * (1::BIGINT << 30)"
+
+  /** The m = 64 estimate `alpha_64 · m² / Z` in one pre-scaled integer
+    * division over `z_scaled`.
+    */
+  private val hllEstimate = "(1890844672::BIGINT * (1::BIGINT << 30)) // (650790 * z_scaled)"
+
+  /** The day-grain events HLL oracles: per-day registers over
+    * `events.user_id`, then `mid` (CTEs that define `es(grp, nb, zp)`
+    * and the exact audit `ex(grp, exact_distinct)`), then the shared
+    * estimate and relative-error tail.
+    */
+  private def eventsDayHllSql(mid: String): String =
+    s"""WITH t AS (SELECT epoch_us(ts) // 86400000000 AS grp,
+       |        CAST(user_id AS VARCHAR) AS token FROM events),
+       |${hllRegisterCtes("grp, ")}
+       |$mid
+       |zz AS (SELECT grp, nb AS n_buckets_seen,
+       |         $hllZScaled AS z_scaled FROM es),
+       |ee AS (SELECT grp, n_buckets_seen, z_scaled,
+       |         $hllEstimate
+       |           AS est_distinct
+       |       FROM zz)
+       |SELECT ee.grp AS "group", n_buckets_seen, z_scaled, est_distinct,
+       |  exact_distinct,
+       |  abs(est_distinct - exact_distinct) * 1000000
+       |    // greatest(exact_distinct, 1) AS abs_err_micro
+       |FROM ee JOIN ex USING (grp) ORDER BY "group"""".stripMargin
+
   /** Deterministic HLL distinct-estimate audit: the oracle replays the
     * md5-derived 64-register sketch digit-for-digit (bucket, capped
     * leading-zero rank, integer max-combine, one pre-scaled integer
@@ -6138,33 +6114,21 @@ object LlmDataQueries {
     "text_vocab_hll",
     (s, dir) => TextAnalysis.vocabHllAudit(
       QuerySupport.table(s, dir, "documents")),
-    Some {
-      val d = "(strpos('0123456789abcdef', substr(st, 1, 1)) - 1)"
-      val hv = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |hh AS (SELECT md5(token) AS h FROM t),
-         |sx AS (SELECT ($hv) % 64 AS b, ltrim(substr(h, 5, 28), '0') AS st FROM hh),
-         |rr AS (SELECT b, CASE WHEN st = '' THEN 30
-         |         ELSE least(30, (28 - length(st)) * 4 +
-         |           (CASE WHEN $d >= 8 THEN 0 WHEN $d >= 4 THEN 1
-         |                 WHEN $d >= 2 THEN 2 ELSE 3 END) + 1) END AS rho
-         |       FROM sx),
-         |bk AS (SELECT b, max(rho) AS mr FROM rr GROUP BY b),
-         |zz AS (SELECT CAST(count(*) AS BIGINT) AS nb,
-         |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp
+    Some(s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
+         |${hllRegisterCtes("")}
+         |zz AS (SELECT $hllRegisterSums
          |       FROM bk),
          |ex AS (SELECT CAST(count(DISTINCT token) AS BIGINT) AS exact_distinct FROM t),
-         |zs AS (SELECT nb, zp + (64 - nb) * (1::BIGINT << 30) AS z_scaled FROM zz),
+         |zs AS (SELECT nb, $hllZScaled AS z_scaled FROM zz),
          |es AS (SELECT nb, z_scaled,
-         |         (1890844672::BIGINT * (1::BIGINT << 30)) // (650790 * z_scaled)
+         |         $hllEstimate
          |           AS est_distinct
          |       FROM zs)
          |SELECT CAST(64 AS BIGINT) AS m, nb AS n_buckets_seen, z_scaled,
          |  est_distinct, exact_distinct,
          |  abs(est_distinct - exact_distinct) * 1000000
          |    // greatest(exact_distinct, 1) AS abs_err_micro
-         |FROM es CROSS JOIN ex""".stripMargin
-    })
+         |FROM es CROSS JOIN ex""".stripMargin))
 
   /** Per-source HLL + register-max union: the oracle replays the
     * per-source sketch and merges registers the same way; the union
@@ -6176,34 +6140,22 @@ object LlmDataQueries {
     * hash equality against this SAME SQL is the mergeability PROOF
     * (shard registers max-merged == registers of the whole corpus).
     */
-  private lazy val hllSourcesOracleSql: String = {
-      val d = "(strpos('0123456789abcdef', substr(st, 1, 1)) - 1)"
-      val hv = hexDecode4("h", posFn = "strpos", substrFn = "substr")
+  private lazy val hllSourcesOracleSql: String =
       s"""WITH t AS (SELECT source, unnest(string_split(text, ' ')) AS token FROM documents),
-         |hh AS (SELECT source, md5(token) AS h FROM t),
-         |sx AS (SELECT source, ($hv) % 64 AS b, ltrim(substr(h, 5, 28), '0') AS st FROM hh),
-         |rr AS (SELECT source, b, CASE WHEN st = '' THEN 30
-         |         ELSE least(30, (28 - length(st)) * 4 +
-         |           (CASE WHEN $d >= 8 THEN 0 WHEN $d >= 4 THEN 1
-         |                 WHEN $d >= 2 THEN 2 ELSE 3 END) + 1) END AS rho
-         |       FROM sx),
-         |bk AS (SELECT source, b, max(rho) AS mr FROM rr GROUP BY source, b),
-         |es AS (SELECT source, CAST(count(*) AS BIGINT) AS nb,
-         |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp
+         |${hllRegisterCtes("source, ")}
+         |es AS (SELECT source, $hllRegisterSums
          |       FROM bk GROUP BY source),
          |un AS (SELECT b, max(mr) AS mr FROM bk GROUP BY b),
-         |eu AS (SELECT CAST(count(*) AS BIGINT) AS nb,
-         |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp
+         |eu AS (SELECT $hllRegisterSums
          |       FROM un),
          |al AS (SELECT source, nb, zp FROM es
          |       UNION ALL SELECT '__union', nb, zp FROM eu),
          |zz AS (SELECT source, nb AS n_buckets_seen,
-         |         zp + (64 - nb) * (1::BIGINT << 30) AS z_scaled FROM al)
+         |         $hllZScaled AS z_scaled FROM al)
          |SELECT source, n_buckets_seen, z_scaled,
-         |  (1890844672::BIGINT * (1::BIGINT << 30)) // (650790 * z_scaled)
+         |  $hllEstimate
          |    AS est_distinct
          |FROM zz ORDER BY source""".stripMargin
-  }
 
   private val textVocabHllSources = CatalogEntry(
     "text_vocab_hll_sources",
@@ -6642,53 +6594,30 @@ object LlmDataQueries {
          |FROM rk WHERE rank <= 100 ORDER BY rank""".stripMargin
     })
 
+  /** `events` as (user_id, day): the day-grain HLL entries' input. */
+  private def eventUserDays(s: SparkSession, dir: String): DataFrame = {
+    val raw = QuerySupport.table(s, dir, "events")
+    raw
+      .select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us"))
+      .select(col("user_id"),
+        graft.enrich.TimeSeriesOps.floorDivCol("t_us", 86400000000L)
+          .as("day"))
+  }
+
   /** Daily-active-users by HLL sketch with exact audit: 64 integer
     * registers per day instead of a per-day distinct-user shuffle;
     * the oracle replays the sketch per bucket digit-for-digit.
     */
   private val eventsDauHll = CatalogEntry(
     "events_dau_hll",
-    (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw
-        .select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us"))
-        .select(col("user_id"),
-          graft.enrich.TimeSeriesOps.floorDivCol("t_us", 86400000000L)
-            .as("day"))
-      TextAnalysis.hllDistinctByGroup(ev,
-          groupCol = "day", valueCol = "user_id")
-        .orderBy("group")
-    },
-    Some {
-      val d = "(strpos('0123456789abcdef', substr(st, 1, 1)) - 1)"
-      val hv = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH t AS (SELECT epoch_us(ts) // 86400000000 AS grp,
-         |        CAST(user_id AS VARCHAR) AS token FROM events),
-         |hh AS (SELECT grp, md5(token) AS h FROM t),
-         |sx AS (SELECT grp, ($hv) % 64 AS b, ltrim(substr(h, 5, 28), '0') AS st FROM hh),
-         |rr AS (SELECT grp, b, CASE WHEN st = '' THEN 30
-         |         ELSE least(30, (28 - length(st)) * 4 +
-         |           (CASE WHEN $d >= 8 THEN 0 WHEN $d >= 4 THEN 1
-         |                 WHEN $d >= 2 THEN 2 ELSE 3 END) + 1) END AS rho
-         |       FROM sx),
-         |bk AS (SELECT grp, b, max(rho) AS mr FROM rr GROUP BY grp, b),
-         |es AS (SELECT grp, CAST(count(*) AS BIGINT) AS nb,
-         |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp
+    (s, dir) => TextAnalysis.hllDistinctByGroup(eventUserDays(s, dir),
+        groupCol = "day", valueCol = "user_id")
+      .orderBy("group"),
+    Some(eventsDayHllSql(
+      s"""es AS (SELECT grp, $hllRegisterSums
          |       FROM bk GROUP BY grp),
          |ex AS (SELECT grp, CAST(count(DISTINCT token) AS BIGINT) AS exact_distinct
-         |       FROM t GROUP BY grp),
-         |zz AS (SELECT grp, nb AS n_buckets_seen,
-         |         zp + (64 - nb) * (1::BIGINT << 30) AS z_scaled FROM es),
-         |ee AS (SELECT grp, n_buckets_seen, z_scaled,
-         |         (1890844672::BIGINT * (1::BIGINT << 30)) // (650790 * z_scaled)
-         |           AS est_distinct
-         |       FROM zz)
-         |SELECT ee.grp AS "group", n_buckets_seen, z_scaled, est_distinct,
-         |  exact_distinct,
-         |  abs(est_distinct - exact_distinct) * 1000000
-         |    // greatest(exact_distinct, 1) AS abs_err_micro
-         |FROM ee JOIN ex USING (grp) ORDER BY "group"""".stripMargin
-    })
+         |       FROM t GROUP BY grp),""")))
 
   /** Rolling 7-day distinct users by HLL register merge: the oracle
     * replays the per-day sketch, the trailing register-wise max, and
@@ -6696,53 +6625,40 @@ object LlmDataQueries {
     */
   private val eventsWauRolling = CatalogEntry(
     "events_wau_rolling",
-    (s, dir) => {
-      val raw = QuerySupport.table(s, dir, "events")
-      val ev = raw
-        .select(col("user_id"), QuerySupport.tsMicros(raw).as("t_us"))
-        .select(col("user_id"),
-          graft.enrich.TimeSeriesOps.floorDivCol("t_us", 86400000000L)
-            .as("day"))
-      TextAnalysis.hllDistinctRolling(ev,
-          groupCol = "day", valueCol = "user_id", windowSize = 7)
-        .orderBy("group")
-    },
-    Some {
-      val d = "(strpos('0123456789abcdef', substr(st, 1, 1)) - 1)"
-      val hv = hexDecode4("h", posFn = "strpos", substrFn = "substr")
-      s"""WITH t AS (SELECT epoch_us(ts) // 86400000000 AS grp,
-         |        CAST(user_id AS VARCHAR) AS token FROM events),
-         |hh AS (SELECT grp, md5(token) AS h FROM t),
-         |sx AS (SELECT grp, ($hv) % 64 AS b, ltrim(substr(h, 5, 28), '0') AS st FROM hh),
-         |rr AS (SELECT grp, b, CASE WHEN st = '' THEN 30
-         |         ELSE least(30, (28 - length(st)) * 4 +
-         |           (CASE WHEN $d >= 8 THEN 0 WHEN $d >= 4 THEN 1
-         |                 WHEN $d >= 2 THEN 2 ELSE 3 END) + 1) END AS rho
-         |       FROM sx),
-         |bk AS (SELECT grp, b, max(rho) AS mr FROM rr GROUP BY grp, b),
-         |dy AS (SELECT DISTINCT grp AS d FROM t),
+    (s, dir) => TextAnalysis.hllDistinctRolling(eventUserDays(s, dir),
+        groupCol = "day", valueCol = "user_id", windowSize = 7)
+      .orderBy("group"),
+    Some(eventsDayHllSql(
+      s"""dy AS (SELECT DISTINCT grp AS d FROM t),
          |bk7 AS (SELECT dy.d AS grp, b, max(mr) AS mr FROM bk
          |        JOIN dy ON bk.grp BETWEEN dy.d - 6 AND dy.d GROUP BY dy.d, b),
-         |es AS (SELECT grp, CAST(count(*) AS BIGINT) AS nb,
-         |         CAST(coalesce(sum(1::BIGINT << (30 - mr)), 0) AS BIGINT) AS zp
+         |es AS (SELECT grp, $hllRegisterSums
          |       FROM bk7 GROUP BY grp),
          |ud AS (SELECT DISTINCT grp, token FROM t),
          |ex AS (SELECT dy.d AS grp, CAST(count(DISTINCT token) AS BIGINT)
          |         AS exact_distinct
          |       FROM ud JOIN dy ON ud.grp BETWEEN dy.d - 6 AND dy.d
-         |       GROUP BY dy.d),
-         |zz AS (SELECT grp, nb AS n_buckets_seen,
-         |         zp + (64 - nb) * (1::BIGINT << 30) AS z_scaled FROM es),
-         |ee AS (SELECT grp, n_buckets_seen, z_scaled,
-         |         (1890844672::BIGINT * (1::BIGINT << 30)) // (650790 * z_scaled)
-         |           AS est_distinct
-         |       FROM zz)
-         |SELECT ee.grp AS "group", n_buckets_seen, z_scaled, est_distinct,
-         |  exact_distinct,
-         |  abs(est_distinct - exact_distinct) * 1000000
-         |    // greatest(exact_distinct, 1) AS abs_err_micro
-         |FROM ee JOIN ex USING (grp) ORDER BY "group"""".stripMargin
-    })
+         |       GROUP BY dy.d),""")))
+
+  /** The bootstrap oracles' replicate weights over `doc_id`: per
+    * replicate b, the md5 draw `boot<b>:<id>` as a micro-uniform and
+    * `w<b>` = the count of Poisson thresholds it reaches.
+    */
+  private lazy val bootstrapWeightsSql: String = (1 to bootstrapReps).map { b =>
+    val md5s = s"md5('boot$b:' || CAST(doc_id AS VARCHAR))"
+    val hi = hexDecode4(s"substr($md5s, 1, 4)", posFn = "strpos", substrFn = "substr")
+    val lo = hexDecode4(s"substr($md5s, 5, 4)", posFn = "strpos", substrFn = "substr")
+    val u = s"((($hi) * 65536 + ($lo)) * 1000000) // 4294967296"
+    val w = poissonCumMicro
+      .map(t => s"(CASE WHEN ($u) >= $t THEN 1 ELSE 0 END)")
+      .mkString(" + ")
+    s"($w) AS w$b"
+  }.mkString(", ")
+
+  /** Each replicate's weighted sums `sw<b>`, `sx<b>` over `w<b>` and `x`. */
+  private lazy val bootstrapSumsSql: String = (1 to bootstrapReps).map(b =>
+    s"CAST(sum(w$b) AS BIGINT) AS sw$b, " +
+      s"CAST(sum(w$b * x) AS BIGINT) AS sx$b").mkString(", ")
 
   /** Poisson-bootstrap replicate means of per-doc token count: B
     * replicates in one scan; the oracle replays every md5 draw,
@@ -6755,29 +6671,15 @@ object LlmDataQueries {
           .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")))
       .orderBy("rep"),
     Some {
-      val reps = bootstrapReps
-      val wSel = (1 to reps).map { b =>
-        val md5s = s"md5('boot$b:' || CAST(doc_id AS VARCHAR))"
-        val hi = hexDecode4(s"substr($md5s, 1, 4)", posFn = "strpos", substrFn = "substr")
-        val lo = hexDecode4(s"substr($md5s, 5, 4)", posFn = "strpos", substrFn = "substr")
-        val u = s"((($hi) * 65536 + ($lo)) * 1000000) // 4294967296"
-        val w = poissonCumMicro
-          .map(t => s"(CASE WHEN ($u) >= $t THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        s"($w) AS w$b"
-      }.mkString(", ")
-      val aggSel = (1 to reps).map(b =>
-        s"CAST(sum(w$b) AS BIGINT) AS sw$b, " +
-          s"CAST(sum(w$b * x) AS BIGINT) AS sx$b").mkString(", ")
-      val unions = (0 to reps).map(b =>
+      val unions = (0 to bootstrapReps).map(b =>
         s"SELECT $b AS rep, sw$b AS sum_w, sx$b AS sum_wx FROM a")
         .mkString(" UNION ALL ")
       s"""WITH d AS (SELECT doc_id,
          |        CAST(len(string_split(text, ' ')) AS BIGINT) AS x
          |      FROM documents),
-         |w AS (SELECT doc_id, x, $wSel FROM d),
+         |w AS (SELECT doc_id, x, $bootstrapWeightsSql FROM d),
          |a AS (SELECT CAST(count(*) AS BIGINT) AS sw0,
-         |        CAST(sum(x) AS BIGINT) AS sx0, $aggSel FROM w),
+         |        CAST(sum(x) AS BIGINT) AS sx0, $bootstrapSumsSql FROM w),
          |u AS ($unions)
          |SELECT CAST(rep AS BIGINT) AS rep, sum_w, sum_wx,
          |  sum_wx * 1000000 // greatest(sum_w, 1) AS mean_micro
@@ -6796,29 +6698,15 @@ object LlmDataQueries {
         groupCol = "source")
       .orderBy("group", "rep"),
     Some {
-      val reps = bootstrapReps
-      val wSel = (1 to reps).map { b =>
-        val md5s = s"md5('boot$b:' || CAST(doc_id AS VARCHAR))"
-        val hi = hexDecode4(s"substr($md5s, 1, 4)", posFn = "strpos", substrFn = "substr")
-        val lo = hexDecode4(s"substr($md5s, 5, 4)", posFn = "strpos", substrFn = "substr")
-        val u = s"((($hi) * 65536 + ($lo)) * 1000000) // 4294967296"
-        val w = poissonCumMicro
-          .map(t => s"(CASE WHEN ($u) >= $t THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-        s"($w) AS w$b"
-      }.mkString(", ")
-      val aggSel = (1 to reps).map(b =>
-        s"CAST(sum(w$b) AS BIGINT) AS sw$b, " +
-          s"CAST(sum(w$b * x) AS BIGINT) AS sx$b").mkString(", ")
-      val unions = (0 to reps).map(b =>
+      val unions = (0 to bootstrapReps).map(b =>
         s"SELECT grp, $b AS rep, sw$b AS sum_w, sx$b AS sum_wx FROM a")
         .mkString(" UNION ALL ")
       s"""WITH d AS (SELECT doc_id, source AS grp,
          |        CAST(len(string_split(text, ' ')) AS BIGINT) AS x
          |      FROM documents),
-         |w AS (SELECT doc_id, grp, x, $wSel FROM d),
+         |w AS (SELECT doc_id, grp, x, $bootstrapWeightsSql FROM d),
          |a AS (SELECT grp, CAST(count(*) AS BIGINT) AS sw0,
-         |        CAST(sum(x) AS BIGINT) AS sx0, $aggSel FROM w GROUP BY grp),
+         |        CAST(sum(x) AS BIGINT) AS sx0, $bootstrapSumsSql FROM w GROUP BY grp),
          |u AS ($unions)
          |SELECT grp AS "group", CAST(rep AS BIGINT) AS rep, sum_w, sum_wx,
          |  sum_wx * 1000000 // greatest(sum_w, 1) AS mean_micro
@@ -7015,11 +6903,6 @@ object LlmDataQueries {
       .orderBy("k"),
     Some {
       val kmax = 5
-      val dots = (0 until ivfCentroids).map { k =>
-        val lit = latticeTerms(0L, k).mkString(", ")
-        s"list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * ([$lit])[i]))"
-      }.mkString(",\n  ")
-      val masked = s"list_transform(range(1, ${ivfCentroids + 1}), i -> CASE WHEN i = b1 THEN -1e18 ELSE dots[i] END)"
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |n AS MATERIALIZED (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
          |bp AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -7028,10 +6911,10 @@ object LlmDataQueries {
          |br AS MATERIALIZED (SELECT query_id, neighbor_id,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
          |      FROM bp QUALIFY rnk <= $kmax),
-         |d AS (SELECT vec_id, v, nrm, [$dots] AS dots FROM n),
+         |d AS (SELECT vec_id, v, nrm, [${latticeDotsSql(ivfCentroids)}] AS dots FROM n),
          |a AS MATERIALIZED (SELECT vec_id, v, nrm, dots, list_position(dots, list_aggregate(dots, 'max')) AS b1 FROM d),
          |q AS (SELECT vec_id, v, nrm, b1,
-         |        list_position($masked, list_aggregate($masked, 'max')) AS b2
+         |        ${secondBucketSql(ivfCentroids, "dots")} AS b2
          |      FROM a WHERE vec_id < $annQueryIds),
          |pr AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, unnest([b1, b2]) AS bucket FROM q),
          |cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
@@ -7174,6 +7057,22 @@ object LlmDataQueries {
            |  CAST(cum_events * 1000000 // tot.ne AS BIGINT) AS cum_events_ppm
            |FROM pick, tot ORDER BY decile""".stripMargin))
 
+  /** The quality-weight oracles' CTEs: each document's words `w`, its
+    * counts `mq`, and its heuristic quality in micro-units `qv(doc_id, qm)`.
+    */
+  private val qualityMicroCtes =
+    s"""w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+      |mq AS (SELECT doc_id, len(w) AS n_tokens,
+      |        len(list_distinct(w)) AS n_distinct,
+      |        len(list_filter(w, t -> t IN ${inList(LlmDataParams.stopwords)})) AS n_stop
+      |      FROM w),
+      |qv AS (SELECT doc_id,
+      |        CAST(floor((0.4 * (n_distinct / n_tokens)
+      |          + 0.3 * (1.0 - n_stop / n_tokens)
+      |          + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
+      |          AS BIGINT) AS qm
+      |      FROM mq),"""
+
   /** Quality-signal redundancy audit: Spearman rank correlation
     * between the heuristic quality score and unigram surprisal —
     * the number a curation stack reads before stacking two filters
@@ -7200,17 +7099,7 @@ object LlmDataQueries {
         .select(col("col_a"), col("col_b"), col("n_rows"),
           r6(col("rho")).as("rho"))
     },
-    Some(s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            |mq AS (SELECT doc_id, len(w) AS n_tokens,
-            |        len(list_distinct(w)) AS n_distinct,
-            |        len(list_filter(w, t -> t IN ${inList(LlmDataParams.stopwords)})) AS n_stop
-            |      FROM w),
-            |qv AS (SELECT doc_id,
-            |        CAST(floor((0.4 * (n_distinct / n_tokens)
-            |          + 0.3 * (1.0 - n_stop / n_tokens)
-            |          + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
-            |          AS BIGINT) AS qm
-            |      FROM mq),
+    Some(s"""WITH $qualityMicroCtes
             |$surprisalCtes,
             |j0 AS MATERIALIZED (SELECT qv.qm, a.s AS su
             |      FROM qv JOIN a USING (doc_id)),
@@ -7258,17 +7147,7 @@ object LlmDataQueries {
         .select(col("n_rows"), col("n_pos"), col("sum_w"), col("sum_w2"),
           r6(col("ess")).as("ess"), r6(col("ess_ratio")).as("ess_ratio"))
     },
-    Some(s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-            |mq AS (SELECT doc_id, len(w) AS n_tokens,
-            |        len(list_distinct(w)) AS n_distinct,
-            |        len(list_filter(w, t -> t IN ${inList(LlmDataParams.stopwords)})) AS n_stop
-            |      FROM w),
-            |qv AS (SELECT doc_id,
-            |        CAST(floor((0.4 * (n_distinct / n_tokens)
-            |          + 0.3 * (1.0 - n_stop / n_tokens)
-            |          + 0.3 * least(1.0, n_tokens / 50.0)) * 1000000.0 + 0.5)
-            |          AS BIGINT) AS qm
-            |      FROM mq),
+    Some(s"""WITH $qualityMicroCtes
             |a AS (SELECT count(*) AS n_rows,
             |        sum(CASE WHEN qm > 0 THEN 1 ELSE 0 END) AS n_pos,
             |        sum(qm) AS sum_w, sum(qm * qm) AS sum_w2 FROM qv),

@@ -1,6 +1,6 @@
 package graft.llmdata
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import LlmDataParams._
@@ -602,7 +602,17 @@ object TextAnalysis {
       .filter(col("n_grams") > 0)
       .select(col(idCol), col("__sel"))
       .localCheckpoint(true)
-    val f = sel.select(col(idCol), explode(col("__sel")).as("fp"))
+    sharedFingerprints(sel.select(col(idCol), explode(col("__sel")).as("fp")),
+      idCol, maxBucket, minShared)
+  }
+
+  /** The winnow operators' candidate step over `(idCol, fp)` rows: the
+    * fingerprint-keyed self-join, with every fingerprint held by more
+    * than `maxBucket` rows capped out of pairing, keeping the pairs
+    * that share at least `minShared`. Output: (doc_a, doc_b, n_shared).
+    */
+  private def sharedFingerprints(f: DataFrame, idCol: String,
+                                 maxBucket: Int, minShared: Int): DataFrame = {
     val stats = f.groupBy("fp").agg(count(lit(1)).as("__n"))
     val fk = f.join(stats, "fp").filter(col("__n") <= maxBucket)
     fk.select(col("fp"), col(idCol).as("doc_a"))
@@ -657,15 +667,8 @@ object TextAnalysis {
       .localCheckpoint(true)
     val sizes = sel.select(col(idCol),
       size(col("__set")).cast("long").as("n_fp"))
-    val f = sel.select(col(idCol), explode(col("__set")).as("fp"))
-    val stats = f.groupBy("fp").agg(count(lit(1)).as("__n"))
-    val fk = f.join(stats, "fp").filter(col("__n") <= maxBucket)
-    fk.select(col("fp"), col(idCol).as("doc_a"))
-      .join(fk.select(col("fp"), col(idCol).as("doc_b")), "fp")
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    sharedFingerprints(sel.select(col(idCol), explode(col("__set")).as("fp")),
+        idCol, maxBucket, minShared)
       .join(sizes.select(col(idCol).as("doc_a"), col("n_fp").as("n_fp_a")), "doc_a")
       .join(sizes.select(col(idCol).as("doc_b"), col("n_fp").as("n_fp_b")), "doc_b")
       .withColumn("containment_a_micro", expr("n_shared * 1000000 div n_fp_a"))
@@ -1005,15 +1008,7 @@ object TextAnalysis {
     */
   def bigramSurprisal(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    val bi = docs
-      .filter(col(textCol).isNotNull)
-      .withColumn("__w", split(col(textCol), " "))
-      .filter(org.apache.spark.sql.functions.size(col("__w")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(1, size(__w) - 1), i -> " +
-          "struct(concat(element_at(__w, i), ' ', element_at(__w, i + 1)) AS bg, " +
-          "element_at(__w, i) AS w1))")).as("__b"))
-      .select(col(idCol), col("__b.bg").as("bg"), col("__b.w1").as("w1"))
+    val bi = docBigrams(docs, idCol, textCol)
       // deliberately NOT persisted: the three consumers re-run the
       // scan+explode (cheap codegen'd projections, no shuffle), and a
       // corpus-sized cache of two strings per bigram is exactly the
@@ -1033,6 +1028,20 @@ object TextAnalysis {
         col("surprisal_unats").cast("double") / lit(1000000.0) / col("n_bigrams"))
       .withColumn("bits_per_bigram", col("avg_nats") / log(lit(2.0)))
   }
+
+  /** The bigram surprisal scorers' words window: one `(idCol, bg, w1)`
+    * row per adjacent word pair of each non-null text with at least two
+    * words (`bg` = "w1 w2", `w1` its prefix word).
+    */
+  private def docBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame = docs
+    .filter(col(textCol).isNotNull)
+    .withColumn("__w", split(col(textCol), " "))
+    .filter(org.apache.spark.sql.functions.size(col("__w")) >= 2)
+    .select(col(idCol), explode(expr(
+      "transform(sequence(1, size(__w) - 1), i -> " +
+        "struct(concat(element_at(__w, i), ' ', element_at(__w, i + 1)) AS bg, " +
+        "element_at(__w, i) AS w1))")).as("__b"))
+    .select(col(idCol), col("__b.bg").as("bg"), col("__b.w1").as("w1"))
 
   /** HELD-OUT bigram surprisal — the generalization twin of
     * [[bigramSurprisal]] (which scores the corpus under a model of
@@ -1062,24 +1071,15 @@ object TextAnalysis {
                              idCol: String = "doc_id",
                              textCol: String = "text"): DataFrame = {
     require(holdoutMod > 1, s"holdoutMod must be > 1: $holdoutMod")
-    def bigrams(d: DataFrame) = d
-      .filter(col(textCol).isNotNull)
-      .withColumn("__w", split(col(textCol), " "))
-      .filter(org.apache.spark.sql.functions.size(col("__w")) >= 2)
-      .select(col(idCol), explode(expr(
-        "transform(sequence(1, size(__w) - 1), i -> " +
-          "struct(concat(element_at(__w, i), ' ', element_at(__w, i + 1)) AS bg, " +
-          "element_at(__w, i) AS w1))")).as("__b"))
-      .select(col(idCol), col("__b.bg").as("bg"), col("__b.w1").as("w1"))
     val train = docs.filter(col(idCol) % holdoutMod =!= 0)
     val test = docs.filter(col(idCol) % holdoutMod === 0)
-    val tb = bigrams(train)
+    val tb = docBigrams(train, idCol, textCol)
     val c12 = tb.groupBy("bg").agg(count(lit(1)).as("c12"))
     val c1 = tb.groupBy("w1").agg(count(lit(1)).as("c1"))
     val vocab = train
       .select(explode(split(col(textCol), " ")).as("__t"))
       .agg(count_distinct(col("__t")).as("v"))
-    bigrams(test)
+    docBigrams(test, idCol, textCol)
       .join(c12, Seq("bg"), "left")
       .join(c1, Seq("w1"), "left")
       .na.fill(0L, Seq("c12", "c1"))
@@ -1398,30 +1398,14 @@ object TextAnalysis {
                textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val qt = broadcast(queryTerms.distinct.toDF("term"))
     val tokens = docs
       .select(col(idCol), explode(split(col(textCol), " ")).as("term"))
       .persist() // shared by the corpus stats pass and the tf join
     val stats = tokens.groupBy(idCol).agg(count(lit(1)).as("dl"))
     val corpus = stats.agg(count(lit(1)).as("n_docs"),
       sum("dl").cast("double").as("tot_tokens"))
-    val df = tokens.join(qt, "term")
-      .groupBy("term").agg(count_distinct(col(idCol)).as("df"))
-    val tf = tokens.join(qt, "term")
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val scored = tf
-      .join(broadcast(df), "term")
-      .join(stats, idCol)
-      .crossJoin(broadcast(corpus))
-      .withColumn("idf", log(
-        (col("n_docs").cast("double") - col("df") + lit(0.5))
-          / (col("df").cast("double") + lit(0.5)) + lit(1.0)))
-      .withColumn("avgdl", col("tot_tokens") / col("n_docs"))
-      .withColumn("contrib_micro", floor(
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0))
-          / (col("tf").cast("double")
-            + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
-          * lit(1000000.0) + lit(0.5)).cast("long"))
+    val scored = bm25Contrib(tokens, stats, corpus,
+        queryTerms.distinct.toDF("term"), k1, b, idCol)
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_hit_terms"),
         sum("contrib_micro").as("bm25_micro"))
@@ -1649,26 +1633,35 @@ object TextAnalysis {
           .orderBy(col("c").desc, col("term"))).cast("long"))
       .withColumn("__x", log(col("r").cast("double")))
       .withColumn("__y", log(col("c").cast("double")))
-      .select(
-        floor(col("__x") * 1000000.0 + 0.5).cast("long").as("qx"),
-        floor(col("__y") * 1000000.0 + 0.5).cast("long").as("qy"),
-        floor(col("__x") * col("__y") * 1000000.0 + 0.5).cast("long").as("qxy"),
-        floor(col("__x") * col("__x") * 1000000.0 + 0.5).cast("long").as("qxx"))
-      .agg(count(lit(1)).as("n"), sum("qx").as("sx"), sum("qy").as("sy"),
-        sum("qxy").as("sxy"), sum("qxx").as("sxx"))
-    head.crossJoin(totals)
+    logLogMoments(head).crossJoin(totals)
       .select(col("n").as("n_types_fit"), col("n_types_total"),
         col("n_tokens"),
-        // one fixed-shape double expression over exact integers:
-        // slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2), alpha = -slope.
-        // Scale care: qxy/qxx carry ONE 1e6 factor while qx*qy / qx^2
-        // carry two, so the n* terms rescale by 1e6 to match.
-        (-((col("n").cast("double") * col("sxy").cast("double") * lit(1000000.0)
-            - col("sx").cast("double") * col("sy").cast("double"))
-          / (col("n").cast("double") * col("sxx").cast("double") * lit(1000000.0)
-            - col("sx").cast("double") * col("sx").cast("double"))))
-          .as("alpha"))
+        (-logLogSlope).as("alpha"))
   }
+
+  /** The log-log least-squares fits' exact moments: each row's `__x`,
+    * `__y`, their product and `__x`² quantized once to micro-units,
+    * summed as (n, sx, sy, sxy, sxx).
+    */
+  private def logLogMoments(df: DataFrame): DataFrame = df
+    .select(
+      floor(col("__x") * 1000000.0 + 0.5).cast("long").as("qx"),
+      floor(col("__y") * 1000000.0 + 0.5).cast("long").as("qy"),
+      floor(col("__x") * col("__y") * 1000000.0 + 0.5).cast("long").as("qxy"),
+      floor(col("__x") * col("__x") * 1000000.0 + 0.5).cast("long").as("qxx"))
+    .agg(count(lit(1)).as("n"), sum("qx").as("sx"), sum("qy").as("sy"),
+      sum("qxy").as("sxy"), sum("qxx").as("sxx"))
+
+  /** The slope over [[logLogMoments]], one fixed-shape double expression
+    * over exact integers: (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2). Scale care:
+    * qxy/qxx carry ONE 1e6 factor while qx*qy / qx^2 carry two, so the
+    * n* terms rescale by 1e6 to match.
+    */
+  private def logLogSlope: Column =
+    (col("n").cast("double") * col("sxy").cast("double") * lit(1000000.0)
+      - col("sx").cast("double") * col("sy").cast("double")) /
+      (col("n").cast("double") * col("sxx").cast("double") * lit(1000000.0)
+        - col("sx").cast("double") * col("sx").cast("double"))
 
   /** Top-k vocabulary TOKEN COVERAGE — the tokenizer-sizing dual of
     * [[zipfFit]]/[[heapsFit]]: for each cutoff k, what share of all
@@ -1814,25 +1807,14 @@ object TextAnalysis {
   }
 
   def heapsFit(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val sums = docs
+    val sums = logLogMoments(docs
       .withColumn("__w", split(col(textCol), " "))
       .select(size(col("__w")).cast("long").as("nt"),
         size(array_distinct(col("__w"))).cast("long").as("nd"))
       .filter(col("nt") >= 1L && col("nd") >= 1L)
       .withColumn("__x", log(col("nt").cast("double")))
-      .withColumn("__y", log(col("nd").cast("double")))
-      .select(
-        floor(col("__x") * 1000000.0 + 0.5).cast("long").as("qx"),
-        floor(col("__y") * 1000000.0 + 0.5).cast("long").as("qy"),
-        floor(col("__x") * col("__y") * 1000000.0 + 0.5).cast("long").as("qxy"),
-        floor(col("__x") * col("__x") * 1000000.0 + 0.5).cast("long").as("qxx"))
-      .agg(count(lit(1)).as("n"), sum("qx").as("sx"), sum("qy").as("sy"),
-        sum("qxy").as("sxy"), sum("qxx").as("sxx"))
-    val beta =
-      (col("n").cast("double") * col("sxy").cast("double") * lit(1000000.0)
-        - col("sx").cast("double") * col("sy").cast("double")) /
-        (col("n").cast("double") * col("sxx").cast("double") * lit(1000000.0)
-          - col("sx").cast("double") * col("sx").cast("double"))
+      .withColumn("__y", log(col("nd").cast("double"))))
+    val beta = logLogSlope
     sums.select(col("n").as("n_docs_fit"), beta.as("beta"),
       // intercept ln K = (Sy - beta * Sx) / (n * 1e6); K = exp(ln K)
       exp((col("sy").cast("double") - beta * col("sx").cast("double"))
@@ -2984,15 +2966,24 @@ object TextAnalysis {
                      valueCol: String = "n_tokens",
                      reps: Int = bootstrapReps): DataFrame = {
     require(reps >= 1, s"reps must be >= 1, got $reps")
-    var d = docs.select(col(idCol).cast("string").as("__id"),
-      col(valueCol).cast("long").as("__x"))
-    (1 to reps).foreach { b =>
+    poissonReplicates(docs.select(col(idCol).cast("string").as("__id"),
+      col(valueCol).cast("long").as("__x")), Nil, reps)
+  }
+
+  /** The bootstrap operators' replicates over `d` (`__id`, `__x` and the
+    * `keys`): replicate b weighs each row by its md5 Poisson draw, and
+    * one aggregate per key takes rep 0's unweighted (count, sum) and each
+    * replicate's weighted pair, stacked to (B+1) rows per key —
+    * (keys, rep, sum_w, sum_wx, mean_micro).
+    */
+  private def poissonReplicates(d: DataFrame, keys: Seq[String], reps: Int): DataFrame = {
+    val weighted = (1 to reps).foldLeft(d) { (acc, b) =>
       // conv()->bigint, NOT the 16-bit hexDecode4 pair: the int
       // `hi * 65536` product would wrap 32-bit Spark arithmetic that
       // DuckDB silently promotes (the sampleWeightedTopK spelling)
       val u32 = s"cast(conv(substring(md5(concat('boot$b:', __id)), " +
         "1, 8), 16, 10) as bigint)"
-      d = d
+      acc
         .withColumn(s"__u$b", expr(s"(($u32) * 1000000) div 4294967296"))
         .withColumn(s"__w$b", poissonCumMicro
           .map(t => when(col(s"__u$b") >= t, 1L).otherwise(0L))
@@ -3003,11 +2994,12 @@ object TextAnalysis {
         (1 to reps).flatMap(b => Seq(
           sum(col(s"__w$b")).as(s"__sw$b"),
           sum(col(s"__w$b") * col("__x")).as(s"__sx$b")))
-    val wide = d.agg(aggs.head, aggs.tail: _*)
+    val wide = weighted.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val stacked = (0 to reps)
       .map(b => s"$b, __sw$b, __sx$b").mkString(", ")
     wide
-      .select(expr(s"stack(${reps + 1}, $stacked) AS (rep, sum_w, sum_wx)"))
+      .select(keys.map(col) :+
+        expr(s"stack(${reps + 1}, $stacked) AS (rep, sum_w, sum_wx)"): _*)
       .withColumn("rep", col("rep").cast("long"))
       .withColumn("mean_micro",
         expr("sum_wx * 1000000 div greatest(sum_w, 1)"))
@@ -3030,32 +3022,9 @@ object TextAnalysis {
                             valueCol: String = "n_tokens",
                             reps: Int = bootstrapReps): DataFrame = {
     require(reps >= 1, s"reps must be >= 1, got $reps")
-    var d = docs.select(col(groupCol).as("group"),
+    poissonReplicates(docs.select(col(groupCol).as("group"),
       col(idCol).cast("string").as("__id"),
-      col(valueCol).cast("long").as("__x"))
-    (1 to reps).foreach { b =>
-      val u32 = s"cast(conv(substring(md5(concat('boot$b:', __id)), " +
-        "1, 8), 16, 10) as bigint)"
-      d = d
-        .withColumn(s"__u$b", expr(s"(($u32) * 1000000) div 4294967296"))
-        .withColumn(s"__w$b", poissonCumMicro
-          .map(t => when(col(s"__u$b") >= t, 1L).otherwise(0L))
-          .reduce(_ + _))
-    }
-    val aggs =
-      Seq(count(lit(1)).as("__sw0"), sum(col("__x")).as("__sx0")) ++
-        (1 to reps).flatMap(b => Seq(
-          sum(col(s"__w$b")).as(s"__sw$b"),
-          sum(col(s"__w$b") * col("__x")).as(s"__sx$b")))
-    val wide = d.groupBy("group").agg(aggs.head, aggs.tail: _*)
-    val stacked = (0 to reps)
-      .map(b => s"$b, __sw$b, __sx$b").mkString(", ")
-    wide
-      .select(col("group"),
-        expr(s"stack(${reps + 1}, $stacked) AS (rep, sum_w, sum_wx)"))
-      .withColumn("rep", col("rep").cast("long"))
-      .withColumn("mean_micro",
-        expr("sum_wx * 1000000 div greatest(sum_w, 1)"))
+      col(valueCol).cast("long").as("__x")), Seq("group"), reps)
   }
 
   /** Rolling-window grouped HLL distinct-count — the WAU/MAU-class

@@ -152,14 +152,6 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got("nullk").isEmpty)
   }
 
-  test("one shuffle: a single window exchange on the key") {
-    val trades = Seq((1L, 12L)).toDF("t_key", "t_t")
-    val plan = asof(trades).queryExecution.executedPlan.toString
-    // exactly one hash-partitioned exchange (the window's), no join node
-    assert("hashpartitioning".r.findAllIn(plan).size == 1, plan)
-    assert(!plan.contains("Join"), plan)
-  }
-
   // ------------------------------------------------------ asofNearest
 
   private def nearest(trades: org.apache.spark.sql.DataFrame) =
@@ -207,11 +199,23 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got("nullk").isEmpty)
   }
 
-  test("nearest join keeps the family's one-exchange plan") {
+  test("every as-of variant keeps the family's one-exchange plan") {
     val trades = Seq((1L, 12L)).toDF("t_key", "t_t")
-    val plan = nearest(trades).queryExecution.executedPlan.toString
-    // both directional windows ride ONE exchange and ONE sort
-    assert("hashpartitioning".r.findAllIn(plan).size == 1, plan)
-    assert(!plan.contains("Join"), plan)
+    val variants = Map(
+      "backward" -> asof(trades),
+      "forward" -> AsOfJoin.asofForward(trades, quotes,
+        "t_key", "t_t", "q_key", "q_t", Seq("price")),
+      "backward tolerance" -> AsOfJoin.asofBackwardTolerance(trades, quotes,
+        "t_key", "t_t", "q_key", "q_t", Seq("price"), 5L),
+      "forward tolerance" -> AsOfJoin.asofForwardTolerance(trades, quotes,
+        "t_key", "t_t", "q_key", "q_t", Seq("price"), 5L),
+      "nearest" -> nearest(trades))
+    for ((name, df) <- variants) {
+      val plan = df.queryExecution.executedPlan.toString
+      // exactly one hash-partitioned exchange (the window's, shared by
+      // nearest's two directional windows) and no join node
+      assert("hashpartitioning".r.findAllIn(plan).size == 1, s"$name: $plan")
+      assert(!plan.contains("Join"), s"$name: $plan")
+    }
   }
 }

@@ -102,6 +102,14 @@ class JoinEngineSpec extends SparkSpec {
     assert(e2.limitedAssignment(cands).size == 3)
   }
 
+  test("unlimited profile refuses a candidate set above maxCandidates, naming profile and count") {
+    JoinEngine.checkUnlimitedCandidates("high_volume", 5_000_000L)
+    val err = intercept[IllegalArgumentException](
+      JoinEngine.checkUnlimitedCandidates("high_volume", 5_000_001L))
+    assert(err.getMessage.contains("profile high_volume"), err.getMessage)
+    assert(err.getMessage.contains("5000001 candidate pairs"), err.getMessage)
+  }
+
   test("windowed assignment divergence vs exact greedy is bounded and characterized") {
     // VERDICT r10 §next-7: quantify the documented approximation.
     // (a) The divergence mechanism, minimally: greedy can accept a pair
