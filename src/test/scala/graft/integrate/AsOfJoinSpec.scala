@@ -199,23 +199,29 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got("nullk").isEmpty)
   }
 
-  test("every as-of variant keeps the family's one-exchange plan") {
+  // exactly one hash-partitioned exchange (the window's) and no join node
+  private def assertOneExchange(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert("hashpartitioning".r.findAllIn(plan).size == 1, s"$name: $plan")
+    assert(!plan.contains("Join"), s"$name: $plan")
+  }
+
+  test("one shuffle: a single window exchange on the key") {
     val trades = Seq((1L, 12L)).toDF("t_key", "t_t")
-    val variants = Map(
+    val variants = Seq(
       "backward" -> asof(trades),
       "forward" -> AsOfJoin.asofForward(trades, quotes,
         "t_key", "t_t", "q_key", "q_t", Seq("price")),
       "backward tolerance" -> AsOfJoin.asofBackwardTolerance(trades, quotes,
         "t_key", "t_t", "q_key", "q_t", Seq("price"), 5L),
       "forward tolerance" -> AsOfJoin.asofForwardTolerance(trades, quotes,
-        "t_key", "t_t", "q_key", "q_t", Seq("price"), 5L),
-      "nearest" -> nearest(trades))
-    for ((name, df) <- variants) {
-      val plan = df.queryExecution.executedPlan.toString
-      // exactly one hash-partitioned exchange (the window's, shared by
-      // nearest's two directional windows) and no join node
-      assert("hashpartitioning".r.findAllIn(plan).size == 1, s"$name: $plan")
-      assert(!plan.contains("Join"), s"$name: $plan")
-    }
+        "t_key", "t_t", "q_key", "q_t", Seq("price"), 5L))
+    for ((name, df) <- variants) assertOneExchange(name, df)
+  }
+
+  test("nearest join keeps the family's one-exchange plan") {
+    val trades = Seq((1L, 12L)).toDF("t_key", "t_t")
+    // both directional windows ride ONE exchange and ONE sort
+    assertOneExchange("nearest", nearest(trades))
   }
 }
