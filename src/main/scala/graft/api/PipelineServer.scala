@@ -12,6 +12,8 @@ import graft.load.Reports
   * pipeline_service.py):
   *
   *   POST /pipeline/run            artifact-driven run request -> {run_id}
+  *                                 (400 with the parse error for a
+  *                                 body that does not parse)
   *   GET  /pipeline/status/{id}    RunStatus JSON
   *   GET  /pipeline/progress/{id}  SSE stream of stage events (the
   *                                 reference's WebSocket push; replays
@@ -66,8 +68,10 @@ class PipelineServer(service: PipelineService, port: Int = 0) {
     (ex.getRequestMethod, path.split("/").filter(_.nonEmpty).toList) match {
       case ("POST", List("pipeline", "run")) =>
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val runId = service.createRun(RunRequestJson.parse(body))
-        send(ex, 200, s"""{"run_id": "$runId"}""")
+        val request = try RunRequestJson.parse(body) catch {
+          case e: Exception => return send(ex, 400, errorJson(e))
+        }
+        send(ex, 200, s"""{"run_id": "${service.createRun(request)}"}""")
       case ("GET", List("pipeline", "status", id)) =>
         service.getStatus(id) match {
           case Some(st) => send(ex, 200, Reports.toJson(st))

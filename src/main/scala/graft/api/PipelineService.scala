@@ -196,6 +196,7 @@ object RunRequestJson {
     *  "key_features": [...], "quality_profile": "balanced"}
     * `semantic_keywords` ride the plan (contracts.py:21-26), so the
     * serialized request is self-contained for the semantic check.
+    * An integer parameter outside the Int range fails, naming it.
     */
   def parse(body: String): RunRequest = {
     val j = JsonMethods.parse(body)
@@ -207,7 +208,9 @@ object RunRequestJson {
           parameters = (r \ "parameters") match {
             case JObject(fields) => fields.map { case (k, v) => k -> (v match {
               case JString(s) => s
-              case JInt(i) => i.toInt
+              case JInt(i) if i.isValidInt => i.toInt
+              case JInt(i) => throw new IllegalArgumentException(
+                s"parameter '$k': $i is outside the int range")
               case JDouble(d) => d
               case JBool(b) => b
               case other => other.toString

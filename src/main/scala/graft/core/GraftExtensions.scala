@@ -2,30 +2,19 @@ package graft.core
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.integrate.PairFeaturesExpression
+import graft.integrate.{PairFeaturesExpression, ValidatorConfig}
 import graft.llmdata.{DotProductExpression, GopherSignalsExpression,
   MinHashSignatureExpression, MinKGramHashExpression, MaxGramFreqExpression,
-  PiiScanExpression, QuantizeInt8Expression, SimHashExpression,
+  PiiScanExpression, QuantizeInt8Expression, SimHashExpression, TextAnalysis,
   TokenStatsExpression, WinnowSelectExpression}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * Catalyst expressions as SQL functions, so `spark.sql(...)` users
   * (and SQL-only surfaces like thriftserver/notebooks) reach the same
-  * codegen kernels the DataFrame API uses:
-  *
-  *   - `graft_dot(a, b)`              — left-fold dot product
-  *   - `graft_minhash(shingles, k)`   — k-hash MinHash signature
-  *   - `graft_pair_features(a, b)`    — the 26-feature join kernel
-  *   - `graft_token_stats(text)`      — [n_ws_tokens, n_bpe_tokens]
-  *   - `graft_pii_scan(text)`         — (n_emails, n_phones, redacted)
-  *   - `graft_simhash(text, bits)`    — SimHash over distinct tokens
-  *   - `graft_quantize_int8(v)`       — (scale, q_csv, max_abs_err)
-  *   - `graft_fingerprint_mink(text, gram, stride, k)` — min-k sketch id
-  *   - `graft_max_gram_freq(words, k)` — max k-gram frequency
-  *   - `graft_winnow_select(shingles, gram, window)` — winnowed hashes
-  *   - `graft_gopher_signals(text)`   — the 9 Gopher-rule counters
+  * codegen kernels the DataFrame API uses. [[GraftExtensions.functions]]
+  * is the one table of them; `DESCRIBE FUNCTION` shows each usage.
   *
   * (Kernels whose config is a string collection — the token-profile
   * marker sets — stay DataFrame-only; SQL literals can't carry the
@@ -41,115 +30,77 @@ import graft.llmdata.{DotProductExpression, GopherSignalsExpression,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name, f.usage, ""),
+        f.build))
+    }
+}
 
-  private def intLit(fn: String, arg: Expression, what: String): Int = arg match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $what must be an int literal, got $other")
+object GraftExtensions {
+
+  /** The arguments of one call, for a builder: `intLit(i)` is argument
+    * `i` as an int literal, named after its parameter when it is not one.
+    */
+  private[core] final class Args(fn: String, params: Seq[String], args: Seq[Expression]) {
+    def apply(i: Int): Expression = args(i)
+    def intLit(i: Int): Int = args(i) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$fn: ${params(i)} must be an int literal, got $other")
+    }
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - sequential dot product of two double arrays"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_dot expects (array, array)")
-        DotProductExpression(args(0), args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      info("graft_minhash",
-        "graft_minhash(shingles, k) - k-hash MinHash signature (hex strings)"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_minhash expects (array<string>, int literal)")
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash: k must be an int literal, got $other")
-        }
-        MinHashSignatureExpression(args(0), k)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pair_features"),
-      info("graft_pair_features",
-        "graft_pair_features(a, b) - 26-feature similarity-join kernel struct"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_pair_features expects (array, array)")
-        PairFeaturesExpression(args(0), args(1),
-          eps = 1e-10, closeTol = 0.1, veryCloseTol = 0.01)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_stats"),
-      info("graft_token_stats",
-        "graft_token_stats(text) - [n_ws_tokens, n_bpe_tokens] in one byte scan"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_token_stats expects (string)")
-        TokenStatsExpression(args(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pii_scan"),
-      info("graft_pii_scan",
-        "graft_pii_scan(text) - struct(n_emails, n_phones, redacted)"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_pii_scan expects (string)")
-        PiiScanExpression(args(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gopher_signals"),
-      info("graft_gopher_signals",
-        "graft_gopher_signals(text) - the 9 Gopher-rule counters in one byte scan"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_gopher_signals expects (string)")
-        GopherSignalsExpression(args(0), graft.llmdata.TextAnalysis.gopherStops)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      info("graft_simhash",
-        "graft_simhash(text, bits) - SimHash signature over distinct tokens"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_simhash expects (string, int literal)")
-        SimHashExpression(args(0), intLit("graft_simhash", args(1), "bits"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_quantize_int8"),
-      info("graft_quantize_int8",
-        "graft_quantize_int8(v) - struct(scale, q_csv, max_abs_err)"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_quantize_int8 expects (array<double>)")
-        QuantizeInt8Expression(args(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint_mink"),
-      info("graft_fingerprint_mink",
-        "graft_fingerprint_mink(text, gram, stride, k) - min-k gram-hash sketch id"),
-      (args: Seq[Expression]) => {
-        require(args.size == 4,
-          "graft_fingerprint_mink expects (string, int literal, int literal, int literal)")
-        MinKGramHashExpression(args(0),
-          intLit("graft_fingerprint_mink", args(1), "gram"),
-          intLit("graft_fingerprint_mink", args(2), "stride"),
-          intLit("graft_fingerprint_mink", args(3), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_max_gram_freq"),
-      info("graft_max_gram_freq",
-        "graft_max_gram_freq(words, k) - frequency of the most frequent word k-gram"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_max_gram_freq expects (array<string>, int literal)")
-        MaxGramFreqExpression(args(0), intLit("graft_max_gram_freq", args(1), "k"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_select"),
-      info("graft_winnow_select",
-        "graft_winnow_select(shingles, gram, window) - winnowed fingerprint hashes"),
-      (args: Seq[Expression]) => {
-        require(args.size == 3,
-          "graft_winnow_select expects (array<string>, int literal, int literal)")
-        WinnowSelectExpression(args(0),
-          intLit("graft_winnow_select", args(1), "gram"),
-          intLit("graft_winnow_select", args(2), "window"))
-      }))
+  /** One SQL function: `name(params) - what` is its usage, and
+    * `params` also fixes its arity.
+    */
+  private[core] final class SqlFunction(val name: String, params: String, what: String)(
+      kernel: Args => Expression) {
+    private val paramNames = params.split(", ").toSeq
+    def usage: String = s"$name($params) - $what"
+    def build(args: Seq[Expression]): Expression = {
+      require(args.size == paramNames.size,
+        s"$name expects ${paramNames.size} arguments ($params), got ${args.size}")
+      kernel(new Args(name, paramNames, args))
+    }
   }
+
+  private val balanced = ValidatorConfig.balanced
+
+  private[core] val functions: Seq[SqlFunction] = Seq(
+    new SqlFunction("graft_dot", "a, b",
+      "sequential dot product of two double arrays")(
+      a => DotProductExpression(a(0), a(1))),
+    new SqlFunction("graft_minhash", "shingles, k",
+      "k-hash MinHash signature (hex strings)")(
+      a => MinHashSignatureExpression(a(0), a.intLit(1))),
+    new SqlFunction("graft_pair_features", "a, b",
+      "26-feature similarity-join kernel struct")(
+      a => PairFeaturesExpression(a(0), a(1),
+        balanced.epsilon, balanced.closeTolerance, balanced.veryCloseTolerance)),
+    new SqlFunction("graft_token_stats", "text",
+      "[n_ws_tokens, n_bpe_tokens] in one byte scan")(
+      a => TokenStatsExpression(a(0))),
+    new SqlFunction("graft_pii_scan", "text",
+      "struct(n_emails, n_phones, redacted)")(
+      a => PiiScanExpression(a(0))),
+    new SqlFunction("graft_gopher_signals", "text",
+      "the 9 Gopher-rule counters in one byte scan")(
+      a => GopherSignalsExpression(a(0), TextAnalysis.gopherStops)),
+    new SqlFunction("graft_simhash", "text, bits",
+      "SimHash signature over distinct tokens")(
+      a => SimHashExpression(a(0), a.intLit(1))),
+    new SqlFunction("graft_quantize_int8", "v",
+      "struct(scale, q_csv, max_abs_err)")(
+      a => QuantizeInt8Expression(a(0))),
+    new SqlFunction("graft_fingerprint_mink", "text, gram, stride, k",
+      "min-k gram-hash sketch id")(
+      a => MinKGramHashExpression(a(0), a.intLit(1), a.intLit(2), a.intLit(3))),
+    new SqlFunction("graft_max_gram_freq", "words, k",
+      "frequency of the most frequent word k-gram")(
+      a => MaxGramFreqExpression(a(0), a.intLit(1))),
+    new SqlFunction("graft_winnow_select", "shingles, gram, window",
+      "winnowed fingerprint hashes")(
+      a => WinnowSelectExpression(a(0), a.intLit(1), a.intLit(2))))
 }

@@ -1,11 +1,11 @@
 package graft.integrate
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import graft.llmdata.BinaryKernel
 
 /** The 26-feature row-pair kernel (reference: validator/join.py:96-197)
   * as a single Catalyst expression: two double arrays in, one 26-field
@@ -19,11 +19,9 @@ import org.apache.spark.sql.types._
   * order bit-compatible with the generated DuckDB oracle
   * (left-associated sums, population std, two-pass deviations).
   *
-  * Codegen: the generated code calls [[compute]] through a reference
-  * object — the kernel itself is a plain JVM method (JIT-compiled
-  * tight loops), while the surrounding stage (cross join -> generate
-  * -> filter -> project) stays inside whole-stage codegen instead of
-  * falling back to interpreted rows as CodegenFallback would.
+  * Codegen: the [[BinaryKernel]] chassis calls [[compute]] from the
+  * generated code, so the surrounding stage (cross join -> generate
+  * -> filter -> project) stays inside whole-stage codegen.
   *
   * Null array elements become NaN (like the reference's float
   * conversion of missing pandas values); downstream filtering skips
@@ -35,20 +33,15 @@ case class PairFeaturesExpression(
     eps: Double,
     closeTol: Double,
     veryCloseTol: Double)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def dataType: DataType =
     StructType(JoinEngine.featureCols.map(StructField(_, DoubleType, nullable = false)))
-
-  override def nullIntolerant: Boolean = true
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   override protected def nullSafeEval(leftVal: Any, rightVal: Any): Any =
     compute(leftVal.asInstanceOf[ArrayData], rightVal.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("kernel", this, classOf[PairFeaturesExpression].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $kernel.compute($a, $b);")
-  }
 
   def compute(leftVal: ArrayData, rightVal: ArrayData): InternalRow = {
     val a = toDoubles(leftVal)

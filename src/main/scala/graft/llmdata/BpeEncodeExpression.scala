@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -29,18 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class BpeEncodeExpression(child: Expression,
                                merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpeEncode expects a string word, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -75,12 +66,6 @@ case class BpeEncodeExpression(child: Expression,
     i = 0
     while (i < n) { arr(i) = UTF8String.fromString(syms(i)); i += 1 }
     new GenericArrayData(arr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("bpeEncode", this,
-      classOf[BpeEncodeExpression].getName)
-    nullSafeCodeGen(ctx, ev, w => s"${ev.value} = $kernel.compute($w);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

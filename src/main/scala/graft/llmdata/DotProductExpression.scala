@@ -1,11 +1,10 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Sequential left-fold dot product over two `array<double>` columns.
   *
@@ -18,10 +17,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * which the oracle queries rely on.
   */
 case class DotProductExpression(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -35,11 +35,6 @@ case class DotProductExpression(left: Expression, right: Expression)
       i += 1
     }
     s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("dot", this, classOf[DotProductExpression].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $kernel.compute($a, $b);")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -42,21 +41,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    length) via a per-stopword presence bitmask.
   */
 case class GopherSignalsExpression(child: Expression, stops: Seq[String])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(stops.size <= 62, "stop list packs into one Long presence bitmask")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gopherSignals expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   /** stop word -> its presence bit. */
   @transient private lazy val stopBit: java.util.HashMap[UTF8String, Integer] = {
@@ -147,12 +138,6 @@ case class GopherSignalsExpression(child: Expression, stops: Seq[String])
       nWords, codePoints - spaces, alphaWords, hashChars, ellipsisRuns,
       nLines, bulletLines, ellipsisLines,
       java.lang.Long.bitCount(stopsSeen).toLong))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("gopherSignals", this,
-      classOf[GopherSignalsExpression].getName)
-    nullSafeCodeGen(ctx, ev, str => s"${ev.value} = $kernel.compute($str);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

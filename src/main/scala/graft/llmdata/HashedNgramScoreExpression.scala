@@ -3,8 +3,7 @@ package graft.llmdata
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -31,20 +30,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * contract edge, not a hot path.
   */
 case class HashedNgramScoreExpression(child: Expression, mod: Int, shift: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(mod >= 1, "hashedNgramScore: mod must be >= 1")
 
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"hashedNgramScore expects array<string> tokens, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override protected def nullableResult: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -81,15 +73,6 @@ case class HashedNgramScoreExpression(child: Expression, mod: Int, shift: Int)
       i += 1
     }
     score
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("ngramScore", this,
-      classOf[HashedNgramScoreExpression].getName)
-    nullSafeCodeGen(ctx, ev, toks => s"""
-      Object r = $kernel.compute($toks);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) r).longValue(); }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

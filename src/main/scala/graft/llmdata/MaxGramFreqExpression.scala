@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -24,20 +23,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * (`concat_ws` semantics), not null-poisoning.
   */
 case class MaxGramFreqExpression(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(k >= 1, "maxGramFreq: k must be >= 1")
 
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"maxGramFreq expects array<string> tokens, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -76,12 +67,6 @@ case class MaxGramFreqExpression(child: Expression, k: Int)
       i += 1
     }
     best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("maxGramFreq", this,
-      classOf[MaxGramFreqExpression].getName)
-    nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $kernel.compute($toks);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -3,8 +3,7 @@ package graft.llmdata
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -22,10 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the DuckDB oracles are untouched.
   */
 case class MinHashSignatureExpression(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullIntolerant: Boolean = true
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   @transient private lazy val prefixes: Array[Array[Byte]] =
     (0 until numHashes).map(k => s"mh$k:".getBytes("UTF-8")).toArray
@@ -67,12 +66,6 @@ case class MinHashSignatureExpression(child: Expression, numHashes: Int)
       i += 1
     }
     new String(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("minhash", this,
-      classOf[MinHashSignatureExpression].getName)
-    nullSafeCodeGen(ctx, ev, sh => s"${ev.value} = $kernel.compute($sh);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

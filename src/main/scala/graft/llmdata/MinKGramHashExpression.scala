@@ -3,8 +3,7 @@ package graft.llmdata
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,21 +29,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat` hits a null `element_at` -> null.
   */
 case class MinKGramHashExpression(child: Expression, gram: Int, stride: Int,
-                                  k: Int) extends UnaryExpression {
+                                  k: Int) extends UnaryKernel {
 
   require(gram >= 1 && stride >= 1 && k >= 1,
     "minKGramHash: gram, stride, k must all be >= 1")
 
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minKGramHash expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def nullableResult: Boolean = true
 
   private val hexDigits = "0123456789abcdef".toCharArray
 
@@ -98,16 +90,6 @@ case class MinKGramHashExpression(child: Expression, gram: Int, stride: Int,
       i += 1
     }
     UTF8String.fromString(hex(md.digest()))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("minKGram", this,
-      classOf[MinKGramHashExpression].getName)
-    nullSafeCodeGen(ctx, ev, t => s"""
-      Object r = $kernel.compute($t);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.unsafe.types.UTF8String) r; }
-    """)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

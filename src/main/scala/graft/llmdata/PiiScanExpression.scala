@@ -2,8 +2,7 @@ package graft.llmdata
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,7 +42,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `[0-9]{3}-[0-9]{3}-[0-9]{4}`: a fixed 12-byte shape tested at
   *     each successive offset.
   */
-case class PiiScanExpression(child: Expression) extends UnaryExpression {
+case class PiiScanExpression(child: Expression) extends UnaryKernel {
   import PiiScanExpression._
 
   override def dataType: DataType = StructType(Seq(
@@ -51,16 +50,7 @@ case class PiiScanExpression(child: Expression) extends UnaryExpression {
     StructField("n_phones", LongType, nullable = false),
     StructField("redacted", StringType, nullable = false)))
 
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"piiScan expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -105,12 +95,6 @@ case class PiiScanExpression(child: Expression) extends UnaryExpression {
     r2.write(mid, prev, mid.length - prev)
     new GenericInternalRow(Array[Any](
       nEmails, nPhones, UTF8String.fromBytes(r2.toByteArray)))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("piiScan", this,
-      classOf[PiiScanExpression].getName)
-    nullSafeCodeGen(ctx, ev, str => s"${ev.value} = $kernel.compute($str);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

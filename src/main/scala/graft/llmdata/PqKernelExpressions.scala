@@ -2,8 +2,7 @@ package graft.llmdata
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -37,7 +36,7 @@ import org.apache.spark.sql.types._
   */
 case class PqCodesExpression(child: Expression,
                              centroids: Seq[Seq[Seq[Long]]],
-                             withTables: Boolean) extends UnaryExpression {
+                             withTables: Boolean) extends UnaryKernel {
 
   require(centroids.nonEmpty && centroids.head.nonEmpty &&
     centroids.head.head.nonEmpty, "pqCodes: empty codebook")
@@ -63,15 +62,7 @@ case class PqCodesExpression(child: Expression,
     StructField("tables",
       ArrayType(ArrayType(LongType, containsNull = true), containsNull = false))))
 
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pqCodes expects array<bigint> int-vectors, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -126,12 +117,6 @@ case class PqCodesExpression(child: Expression,
       if (withTables) new GenericArrayData(tables) else null)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("pqCodes", this,
-      classOf[PqCodesExpression].getName)
-    nullSafeCodeGen(ctx, ev, vi => s"${ev.value} = $kernel.compute($vi);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -151,7 +136,7 @@ case class PqCodesExpression(child: Expression,
   */
 case class CentroidDotScoresExpression(child: Expression,
                                        sums: Seq[Seq[Long]],
-                                       counts: Seq[Long]) extends UnaryExpression {
+                                       counts: Seq[Long]) extends UnaryKernel {
 
   require(sums.nonEmpty && sums.size == counts.size,
     "centroidDotScores: sums/counts size mismatch")
@@ -170,15 +155,7 @@ case class CentroidDotScoresExpression(child: Expression,
   @transient private lazy val cnts: Array[Long] = counts.toArray
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"centroidDotScores expects array<bigint> int-vectors, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -209,12 +186,6 @@ case class CentroidDotScoresExpression(child: Expression,
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("centroidDotScores", this,
-      classOf[CentroidDotScoresExpression].getName)
-    nullSafeCodeGen(ctx, ev, vi => s"${ev.value} = $kernel.compute($vi);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -2,8 +2,7 @@ package graft.llmdata
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType, StructField, StructType}
@@ -28,23 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * cast is `Double#toLong` (NaN -> 0, infinities clamp); an empty
   * vector yields null scale, empty csv, null max_abs_err.
   */
-case class QuantizeInt8Expression(child: Expression) extends UnaryExpression {
+case class QuantizeInt8Expression(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = StructType(Seq(
     StructField("scale", DoubleType, nullable = true),
     StructField("q_csv", StringType, nullable = false),
     StructField("max_abs_err", DoubleType, nullable = true)))
 
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"quantizeInt8 expects array<double>, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   /** array_max ordering: NaN is greatest, nulls skipped. */
   @inline private def maxOrNew(cur: Double, curSet: Boolean, x: Double): Double =
@@ -92,12 +82,6 @@ case class QuantizeInt8Expression(child: Expression) extends UnaryExpression {
       if (scaleSet) scale else null,
       UTF8String.fromString(sb.toString),
       if (errSet) err else null))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("quantizeInt8", this,
-      classOf[QuantizeInt8Expression].getName)
-    nullSafeCodeGen(ctx, ev, arr => s"${ev.value} = $kernel.compute($arr);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

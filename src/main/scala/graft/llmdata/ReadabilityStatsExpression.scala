@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -29,18 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output: array<bigint> [n_tokens, n_sentences, n_syllables].
   */
 case class ReadabilityStatsExpression(child: Expression)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"readabilityStats expects string text, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -66,12 +57,6 @@ case class ReadabilityStatsExpression(child: Expression)
     }
     if (sentences < 1L) sentences = 1L
     new GenericArrayData(Array(tokens, sentences, syllables))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("readabilityStats", this,
-      classOf[ReadabilityStatsExpression].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $kernel.compute($t);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

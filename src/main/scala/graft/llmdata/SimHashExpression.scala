@@ -3,8 +3,7 @@ package graft.llmdata
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,20 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * big-endian), and accumulates all per-bit +-1 counters in the same
   * single pass.
   */
-case class SimHashExpression(child: Expression, bits: Int) extends UnaryExpression {
+case class SimHashExpression(child: Expression, bits: Int) extends UnaryKernel {
   require(bits >= 1 && bits <= 16, s"simhash bits must be in [1,16], got $bits")
 
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -79,12 +70,6 @@ case class SimHashExpression(child: Expression, bits: Int) extends UnaryExpressi
       k += 1
     }
     sig
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("simhash", this,
-      classOf[SimHashExpression].getName)
-    nullSafeCodeGen(ctx, ev, str => s"${ev.value} = $kernel.compute($str);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

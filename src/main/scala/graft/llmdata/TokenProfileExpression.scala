@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, LongType}
@@ -36,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class TokenProfileExpression(child: Expression, stopwords: Seq[String],
                                   markerSets: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   // memberMask packs {stopwords, markerSets...} into an Int bitmask via
   // 1 << bit; past 31 sets the shift wraps silently and membership
@@ -47,16 +46,8 @@ case class TokenProfileExpression(child: Expression, stopwords: Seq[String],
       "memberships are packed into one Int bitmask")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tokenProfile expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   /** token -> bitmask over {bit 0: stopwords, bit i+1: markerSets(i)}. */
   @transient private lazy val memberMask: java.util.HashMap[UTF8String, Integer] = {
@@ -113,12 +104,6 @@ case class TokenProfileExpression(child: Expression, stopwords: Seq[String],
     var k = 0
     while (k < nSets) { out(4 + k) = hits(k + 1); k += 1 }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("tokenProfile", this,
-      classOf[TokenProfileExpression].getName)
-    nullSafeCodeGen(ctx, ev, str => s"${ev.value} = $kernel.compute($str);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -29,18 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    classes both match single code points; a multi-byte sequence
   *    counts once via its leading byte).
   */
-case class TokenStatsExpression(child: Expression) extends UnaryExpression {
+case class TokenStatsExpression(child: Expression) extends UnaryKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case StringType =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"tokenStats expects a string column, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -62,12 +53,6 @@ case class TokenStatsExpression(child: Expression) extends UnaryExpression {
       i += 1
     }
     new GenericArrayData(Array[Any](spaces + 1L, bpe))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("tokenStats", this,
-      classOf[TokenStatsExpression].getName)
-    nullSafeCodeGen(ctx, ev, str => s"${ev.value} = $kernel.compute($str);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

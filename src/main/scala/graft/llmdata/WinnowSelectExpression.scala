@@ -3,8 +3,7 @@ package graft.llmdata
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -37,20 +36,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *     (no doubled separator).
   */
 case class WinnowSelectExpression(child: Expression, gram: Int, window: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(gram >= 1 && window >= 1, "winnow: gram and window must be >= 1")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case other =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"winnow expects array<string> tokens, got $other")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
@@ -110,12 +101,6 @@ case class WinnowSelectExpression(child: Expression, gram: Int, window: Int)
       k += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("winnow", this,
-      classOf[WinnowSelectExpression].getName)
-    nullSafeCodeGen(ctx, ev, toks => s"${ev.value} = $kernel.compute($toks);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

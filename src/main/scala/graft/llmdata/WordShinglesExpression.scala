@@ -1,8 +1,7 @@
 package graft.llmdata
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -32,12 +31,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * it replaces.
   */
 case class WordShinglesExpression(child: Expression, width: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(width >= 1, s"shingle width must be >= 1: $width")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[UTF8String])
@@ -73,12 +72,6 @@ case class WordShinglesExpression(child: Expression, width: Int)
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("shingles", this,
-      classOf[WordShinglesExpression].getName)
-    nullSafeCodeGen(ctx, ev, txt => s"${ev.value} = $kernel.compute($txt);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -173,6 +173,36 @@ class PipelineServerSpec extends SparkSpec {
     }
   }
 
+  test("an out-of-range integer parameter fails parsing, naming the parameter") {
+    val body = runBody("{}").replace("\"limit\": 15", "\"limit\": 4294967301")
+    val e = intercept[IllegalArgumentException](RunRequestJson.parse(body))
+    assert(e.getMessage.contains("'limit'") && e.getMessage.contains("4294967301"))
+    assert(RunRequestJson.parse(runBody("{}")).plan.rankedRequests.head.parameters("limit") == 15)
+  }
+
+  test("POST /pipeline/run answers 400 with the parse error for a bad body") {
+    val service = new PipelineService(spark, Files.createTempDirectory("graft_bad").toString)
+    val server = new PipelineServer(service)
+    val port = server.start()
+    val client = HttpClient.newHttpClient()
+    def post(body: String): HttpResponse[String] = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://localhost:$port/pipeline/run"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    try {
+      val wide = post(runBody("{}").replace("\"limit\": 15", "\"limit\": 4294967301"))
+      assert(wide.statusCode() == 400, wide.body())
+      assert(wide.body().contains("'limit'"))
+      val broken = post("""{"plan": [""")
+      assert(broken.statusCode() == 400, broken.body())
+      assert(broken.body().startsWith("{\"error\""))
+      assert(service.history.isEmpty)
+    } finally {
+      server.stop()
+      service.shutdown()
+    }
+  }
+
   test("failed run leaves unreached stage flags false") {
     val service = new PipelineService(spark, Files.createTempDirectory("graft_fail").toString)
     val server = new PipelineServer(service)

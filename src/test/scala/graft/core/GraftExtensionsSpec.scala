@@ -76,6 +76,16 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(r.getInt(2) >= 1)
   }
 
+  test("every table entry shows its usage and checks its argument count") {
+    assert(GraftExtensions.functions.map(_.name).distinct.size == 11)
+    for (f <- GraftExtensions.functions) {
+      val described = spark.sql(s"DESCRIBE FUNCTION ${f.name}").collect().map(_.getString(0))
+      assert(described.contains(s"Usage: ${f.usage}"), described.mkString("\n"))
+    }
+    val e = intercept[Exception](spark.sql("SELECT graft_dot(array(1.0D))").collect())
+    assert(e.getMessage.contains("graft_dot expects 2 arguments"), e.getMessage)
+  }
+
   test("non-literal int config fails loudly") {
     val e = intercept[Exception] {
       spark.sql("SELECT graft_simhash('a', CAST(rand() * 4 AS INT) + 1)").collect()
